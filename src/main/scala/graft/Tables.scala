@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions.col
 
 /** Loaders for the driver-generated test tables (TESTDATA.md). */
 object Tables {
-  /** Footer-schema memoized ([[graft.storage.ParquetMeta]]): the test
-    * tables are immutable inputs, so re-inferring their schema from
-    * parquet footers on every load was pure per-call driver overhead
-    * (measured 80–90 ms/call at sf0.1). Rows are NOT cached — every
-    * action still scans the files. */
+  /** Listed-relation memoized ([[graft.storage.ParquetMeta]]): the test
+    * tables are immutable inputs, so re-listing them and re-inferring their
+    * schema from parquet footers on every load was pure per-call driver
+    * overhead (measured 80–90 ms/call at sf0.1). Rows are NOT cached —
+    * every action still scans the files. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.storage.ParquetMeta.read(spark, s"$dir/$name.parquet")
 

@@ -348,12 +348,25 @@ final class FilterCompiler(
     exists(r.geoValues(key), pred)
 
   /** Bounds coerce to the column's resolved type (datetime columns accept
-    * epoch-nano numerics and RFC3339-family strings — [[Temporal.boundLit]]);
-    * unknown types compare as plain literals, unchanged. */
+    * epoch-nano numerics and RFC3339-family strings — [[Temporal.boundLit]]).
+    * qdrant reads every numeric range bound as f64 (`Range<FloatPayloadType>`),
+    * so an integral bound compares as a double unless the field is declared
+    * integer (exact `Long` comparison) or temporal (epoch nanos): an
+    * undeclared field's values are JSON text, which a BIGINT literal would
+    * cast strictly (`"49.5"` fails CAST_INVALID_INPUT) and a DOUBLE reads. */
   private def rangeBounds(
       v: Column, dt: Option[DataType],
       gt: Option[Any], gte: Option[Any], lt: Option[Any], lte: Option[Any]): Column = {
-    def b0(b: Any): Column = Temporal.boundLit(dt, b)
+    val exactIntegral = dt.exists {
+      case ByteType | ShortType | IntegerType | LongType | _: DecimalType |
+          DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    def b0(b: Any): Column = Temporal.boundLit(dt, b match {
+      case n: Long if !exactIntegral => n.toDouble
+      case n: Int if !exactIntegral => n.toDouble
+      case other => other
+    })
     val bs = Seq(
       gt.map(b => v > b0(b)), gte.map(b => v >= b0(b)),
       lt.map(b => v < b0(b)), lte.map(b => v <= b0(b))).flatten
@@ -441,7 +454,7 @@ final class FilterCompiler(
     case RangeCond(k, gt, gte, lt, lte) =>
       anyValue(k, v => rangeBounds(v, r.dataTypeOf(k), gt, gte, lt, lte))
     case ValuesCount(k, gt, gte, lt, lte) =>
-      rangeBounds(size(r.values(k)).cast("long"), None, gt, gte, lt, lte)
+      rangeBounds(size(r.values(k)).cast("long"), Some(LongType), gt, gte, lt, lte)
     case GeoBoundingBox(k, tl, br) =>
       // bounds are EXCLUSIVE — a point exactly on an edge does not match
       // (the shared strict predicate, `VectorFunctions.inBboxStrict`)

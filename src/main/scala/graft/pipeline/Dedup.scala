@@ -54,8 +54,8 @@ object Dedup {
     * re-shuffles the pair list. No pair ever forms without a shared
     * shingle, so skew is bounded by shingle document-frequency; hot
     * shingles can be dropped upstream like stopwords. With `minJaccard > 0`
-    * a size-compatibility band (min ≥ t·max) skips provably-unreachable
-    * pairs inside the join. */
+    * a size-compatibility band (round(min/max, 6) ≥ t) skips
+    * provably-unreachable pairs inside the join. */
   /** Default shingle document-frequency cap: a shingle this common carries
     * no dedup signal (it is effectively a stopword phrase) but contributes
     * df² join rows — the one key that straggles or OOMs a 100 TB run. On by
@@ -113,16 +113,19 @@ object Dedup {
       if (c == idCol) "id_b" else if (c == "_n") "nb" else c): _*)
     // Size-compatibility band (r17, guide §2.3 "shuffle fewer bytes"):
     // J = inter/(na+nb-inter) ≤ min(na,nb)/max(na,nb), so when a threshold
-    // is requested, pairs whose set sizes are incompatible (min < t·max)
-    // can NEVER reach it — the conjunct skips them inside the join, before
-    // the exact-overlap aggregation ever counts their co-shingles. Sound
-    // (never drops a qualifying pair); a no-op at t = 0, so the exact
+    // is requested, pairs whose set sizes are incompatible can NEVER reach
+    // it — the conjunct skips them inside the join, before the
+    // exact-overlap aggregation ever counts their co-shingles. The bound is
+    // rounded like the kept Jaccard below (round is monotone, so
+    // round(J, 6) ≥ t implies round(min/max, 6) ≥ t): a pair whose J sits
+    // just under t but rounds up to it survives here as it does unpruned.
+    // Sound (never drops a qualifying pair); a no-op at t = 0, so the exact
     // all-pairs contract of the uncapped entry is untouched.
     val pairCond =
       if (minJaccard > 0.0)
         col("id_a") < col("id_b") &&
-          least(col("na"), col("nb")).cast("double") >=
-            lit(minJaccard) * greatest(col("na"), col("nb")).cast("double")
+          round(least(col("na"), col("nb")).cast("double") /
+            greatest(col("na"), col("nb")).cast("double"), 6) >= lit(minJaccard)
       else col("id_a") < col("id_b")
     val common = a.join(b, "s" +: blockCols)
       .filter(pairCond)

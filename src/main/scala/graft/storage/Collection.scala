@@ -24,10 +24,13 @@ final class Collection(
     val path: String,
     val config: CollectionConfig) {
 
-  /** Footer-schema memoized read ([[ParquetMeta]]) — a fresh DataFrame per
-    * call, but without the 80–115 ms/call driver-side schema re-inference
-    * the bare `spark.read.parquet` pays on every open of an unchanged
-    * table. Every mutation site bumps the path's version. */
+  /** Listed-relation memoized read ([[ParquetMeta]]) — a fresh DataFrame
+    * per call, but without the driver-side footer inference and file
+    * listing (a Spark job once the table has more than 32 partition
+    * directories, as IVF collections do) the bare `spark.read.parquet` pays
+    * on every open of an unchanged table. Every mutation site bumps the
+    * path's version; a directory replaced without a bump is caught by its
+    * modification time. */
   def read(): DataFrame = ParquetMeta.read(spark, path)
 
   /** Read with every declared vector decoded back to the user-visible

@@ -76,43 +76,46 @@ object Streaming {
               TextKernels.shingleHashSetCol(tokensWs(col(textCol)), k),
               bands, rowsPerBand)).as("bkey"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val store: DataFrame =
-            if (new java.io.File(keyStorePath).exists())
-              // footer-schema memoized like every other repeated open —
-              // the per-batch append below bumps the path version
-              graft.storage.ParquetMeta.read(s, keyStorePath)
-            else s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("bkey",
-                  org.apache.spark.sql.types.LongType, nullable = false))))
-          // cross-batch: any key hit against the accepted set drops the doc
-          val dupIds = keys.join(store, "bkey").select(col(idCol)).distinct()
-          val fresh = batch.join(dupIds, Seq(idCol), "left_anti")
-          val freshKeys = keys.join(dupIds, Seq(idCol), "left_anti")
-          // in-batch: cluster on shared band keys, keep-first per component
-          val pairs = freshKeys.as("x").join(freshKeys.as("y"),
-              col("x.bkey") === col("y.bkey") &&
-                col(s"x.$idCol") < col(s"y.$idCol"))
-            .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-            .distinct()
-          // the kept set feeds TWO actions (the collection upsert and the
-          // band-key append below); without pinning, the second action
-          // re-ran the whole per-batch funnel — store read + anti-joins +
-          // pair join + the components aggregation (r17 optimization,
-          // guide §5: reuse only when recomputing costs more than the
-          // memory — micro-batch-sized here, dropped before the batch ends)
-          val reps = graft.pipeline.Dedup
-            .nearDupRepresentatives(fresh, idCol, pairs)
-            .filter(col("keep") === 1).drop("keep", "component")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          collection.upsert(reps)
-          freshKeys.join(reps.select(col(idCol)), Seq(idCol))
-            .select("bkey").distinct()
-            .write.mode("append").parquet(keyStorePath)
-          graft.storage.ParquetMeta.bump(keyStorePath)
-          reps.unpersist()
-          keys.unpersist()
+          // both pins are released on the exception path too
+          try {
+            val store: DataFrame =
+              if (new java.io.File(keyStorePath).exists())
+                // relation-memoized like every other repeated open — the
+                // per-batch append below bumps the path version
+                graft.storage.ParquetMeta.read(s, keyStorePath)
+              else s.createDataFrame(
+                s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                org.apache.spark.sql.types.StructType(Seq(
+                  org.apache.spark.sql.types.StructField("bkey",
+                    org.apache.spark.sql.types.LongType, nullable = false))))
+            // cross-batch: any key hit against the accepted set drops the doc
+            val dupIds = keys.join(store, "bkey").select(col(idCol)).distinct()
+            val fresh = batch.join(dupIds, Seq(idCol), "left_anti")
+            val freshKeys = keys.join(dupIds, Seq(idCol), "left_anti")
+            // in-batch: cluster on shared band keys, keep-first per component
+            val pairs = freshKeys.as("x").join(freshKeys.as("y"),
+                col("x.bkey") === col("y.bkey") &&
+                  col(s"x.$idCol") < col(s"y.$idCol"))
+              .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+              .distinct()
+            // the kept set feeds TWO actions (the collection upsert and the
+            // band-key append below); without pinning, the second action
+            // re-ran the whole per-batch funnel — store read + anti-joins +
+            // pair join + the components aggregation (r17 optimization,
+            // guide §5: reuse only when recomputing costs more than the
+            // memory — micro-batch-sized here, dropped before the batch ends)
+            val reps = graft.pipeline.Dedup
+              .nearDupRepresentatives(fresh, idCol, pairs)
+              .filter(col("keep") === 1).drop("keep", "component")
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              collection.upsert(reps)
+              freshKeys.join(reps.select(col(idCol)), Seq(idCol))
+                .select("bkey").distinct()
+                .write.mode("append").parquet(keyStorePath)
+              graft.storage.ParquetMeta.bump(keyStorePath)
+            } finally reps.unpersist()
+          } finally keys.unpersist()
           ()
         }
       }

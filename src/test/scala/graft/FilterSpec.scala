@@ -62,6 +62,25 @@ class FilterSpec extends SparkTestBase {
     assert(ids(Filter.mustAll(RangeCond("price", gte = Some(10.0)))) == Seq(1L, 2L))
   }
 
+  test("integral range bounds compare as f64 on undeclared fields, exactly on integer fields") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, """{"price":49.5,"n":9007199254740992}"""),
+      (2L, """{"price":50,"n":9007199254740993}"""),
+      (3L, """{"price":75.25,"n":1}"""),
+    ).toDF("id", "payload")
+    // price is undeclared: its values are JSON text and qdrant reads the
+    // bound as f64; n is declared integer, where 2^53 + 1 must stay exact
+    val r = new JsonResolver(col("payload"), Map("n" -> LongType), col("id"))
+    def idsOf(c: Condition): Seq[Long] =
+      df.filter(new FilterCompiler(r).compile(Filter.mustAll(c)))
+        .select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(idsOf(RangeCond("price", gte = Some(50L))) == Seq(2L, 3L))
+    assert(idsOf(RangeCond("price", lt = Some(50))) == Seq(1L))
+    assert(idsOf(RangeCond("price", gt = Some(49L), lte = Some(75L))) == Seq(1L, 2L))
+    assert(idsOf(RangeCond("n", gte = Some(9007199254740993L))) == Seq(2L))
+  }
+
   test("values_count") {
     assert(ids(Filter.mustAll(ValuesCount("city", gte = Some(2L)))) == Seq(2L, 3L, 4L))
   }

@@ -54,6 +54,26 @@ class PipelineSpec extends SparkTestBase {
     assert(math.abs(got((1L, 2L)) - 7.0 / 13.0) < 1e-6)
   }
 
+  test("ngram jaccard band prune keeps a pair whose jaccard rounds up to the threshold") {
+    import spark.implicits._
+    // doc 1's two 3-shingles are a subset of doc 2's three: J = 2/3 exactly,
+    // which rounds to the threshold 0.666667 while sitting just below it
+    val boundary = Seq(
+      (1L, "alpha beta gamma delta"),
+      (2L, "alpha beta gamma delta epsilon"),
+      (3L, "zeta eta theta iota kappa lambda"),
+    ).toDF("doc_id", "text")
+    val t = 0.666667
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toSet
+    val unpruned = pairs(Dedup.ngramJaccardPairs(boundary, "doc_id", "text", k = 3)
+      .filter(col("jaccard") >= t))
+    val pruned = pairs(Dedup.ngramJaccardPairs(boundary, "doc_id", "text", k = 3,
+      minJaccard = t))
+    assert(unpruned == Set((1L, 2L) -> t))
+    assert(pruned == unpruned)
+  }
+
   test("ngram jaccard maxDf drops hot-shingle-only pairs, keeps rare-shingle pairs") {
     import spark.implicits._
     // every doc shares the "common common common" shingle; only 1-2 share rare content

@@ -1119,6 +1119,24 @@ class StoreSpec extends SparkTestBase {
     assert(ids == Set(1L, 2L))
   }
 
+  test("wire integer range bounds: f64 on an undeclared float field, exact on a declared integer") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(), CollectionConfig(idCol = "id",
+        vectors = Seq(VectorConfig("", 2, Dot)), payloadTypes = Map("n" -> LongType)),
+      Seq(
+        (1L, Seq(1f, 0f), """{"price":49.5,"n":9007199254740992}"""),
+        (2L, Seq(0f, 1f), """{"price":50,"n":9007199254740993}"""),
+        (3L, Seq(1f, 1f), """{"price":75.25,"n":1}"""),
+      ).toDF("id", "vector", "payload"))
+    def count(key: String, range: String): Long =
+      c.count(s"""{"filter":{"must":[{"key":"$key","range":$range}]},"exact":true}""")
+        .collect().head.getAs[Any]("cnt").toString.toLong
+    assert(count("price", """{"gte":50}""") == 2L)
+    assert(count("price", """{"lt":50}""") == 1L)
+    assert(count("n", """{"gte":9007199254740993}""") == 1L)
+    assert(count("n", """{"lt":9007199254740993}""") == 2L)
+  }
+
   test("re-create over an existing path drops the stale fieldstats sidecar") {
     import spark.implicits._
     val path = tmpDir()

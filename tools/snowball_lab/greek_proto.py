@@ -11,7 +11,7 @@
 #  - residual rule21: only if test1 AND len>=3 (special exact βι->β λι->λ);
 #    ματα/ματων/ματοσ -> μα first, then one longest-match strip
 #  - rule22 comparatives: unconditional
-import sys, unicodedata
+import os, sys, unicodedata
 
 def norm(w):
     w = w.lower()
@@ -384,7 +384,10 @@ def stem(word):
 
 def main():
     import glob
-    files = sys.argv[1:] or sorted(glob.glob("greek_*.tsv"))
+    # the prefix stress corpus is kept once, with the test resources
+    stress = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+        "..", "..", "src", "test", "resources", "snowball", "greek_prefix_stress.tsv")
+    files = sys.argv[1:] or sorted(glob.glob("greek_*.tsv")) + [stress]
     pairs = []
     for f in files:
         if f.endswith(".tsv"):

@@ -16,6 +16,7 @@
 #    (மரத்தை→மரம், குதிரை stays); ில்/ின்/ால்/ுக்கு→் + VET.
 #  - plural: ுக்கள்→்+UNG; ட்கள்→ள்; ற்கள்→ல்; கள்→∅+gated fix whose
 #    table includes வர்/பர் deletes (மாணவர்கள்→மாண, அவர்கள்→அவர்).
+import os
 import sys
 PU = "்"
 SIGNS = set("ாிீுூெேைொோௌ")
@@ -363,7 +364,9 @@ def stem(word):
     return w
 
 if __name__ == "__main__":
-    tsv = sys.argv[1] if len(sys.argv) > 1 else "tamil_oracle.tsv"
+    tsv = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "..", "..", "src", "test", "resources", "snowball", "tamil.tsv")
     bad = []
     total = 0
     for line in open(tsv):
