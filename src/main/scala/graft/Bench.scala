@@ -431,9 +431,12 @@ object Bench {
     // collector keeps only a 2000-char tail of stdout and the full-surface
     // line outgrew it. The SAME one-line JSON therefore also lands in a
     // sidecar file so the round-over-round comparison always has a parseable
-    // record, whatever the tail budget does to stdout.
+    // record, whatever the tail budget does to stdout. The file is named by
+    // core count and scale factor, so a scaling run at another core count
+    // does not overwrite the main record.
     try {
-      val p = java.nio.file.Paths.get("bench_records/bench_out.json")
+      val sf = new java.io.File(sfDir).getName
+      val p = java.nio.file.Paths.get(s"bench_records/bench_out_c${cpus}_$sf.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }

@@ -33,6 +33,24 @@ final class Collection(
     * modification time. */
   def read(): DataFrame = ParquetMeta.read(spark, path)
 
+  /** The driver-side JSON artifacts beside the table, one [[Sidecar]]
+    * each. IDF and field statistics are derived from the rows and change
+    * only through [[dataChanged]]; quantization params, shard keys and
+    * metadata change only through their own writers. */
+  private[graft] val idfSidecar =
+    new Sidecar[Map[String, Collection.IdfEntry]](spark, path, "sparse_idf")
+  private[graft] val statsSidecar =
+    new Sidecar[graft.filters.Cardinality.FieldStatsSnapshot](spark, path, "fieldstats")
+  private[graft] val quantSidecar = new Sidecar[Map[String, Collection.QuantParams]](
+    spark, path, "quant", Collection.QuantFormats)
+  private[graft] val shardKeySidecar =
+    new Sidecar[org.json4s.JValue](spark, path, "shardkeys")
+  private[graft] val metadataSidecar =
+    new Sidecar[Map[String, String]](spark, path, "metadata")
+
+  private[graft] def sparseIdfPath = idfSidecar.path
+  private[graft] def fieldStatsPath = statsSidecar.path
+
   /** Read with every declared vector decoded back to the user-visible
     * `array<float>` — what retrieval APIs return regardless of the storage
     * element type (the reference decodes at the API boundary too;
@@ -222,16 +240,7 @@ final class Collection(
     fs.delete(dst, true)
     fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
     ParquetMeta.bump(path)
-    // ingest-time statistics go STALE, not eagerly rebuilt: drop the
-    // sidecars and let the first read that needs them recompute lazily
-    // (the reference documents approximate stats as unreliable
-    // mid-indexing, `lib/shard/src/count.rs:14-17`; the former eager IDF
-    // refresh here made every write cost a full-table scan on
-    // idf-modified collections — the r13 scale probe's residual slope)
-    if (sparseDfChange) invalidateSparseIdfStats()
-    fieldStatsCache = None
-    fs.delete(fieldStatsPath, false)
-    ()
+    dataChanged(sparseDfChange)
   }
 
   /** Insert-or-replace whole points: last write wins per id (qdrant upsert,
@@ -253,7 +262,7 @@ final class Collection(
 
   /** The merged-table plan `upsert` writes (exposed for plan-shape tests). */
   private[graft] def upsertPlan(points: DataFrame): DataFrame =
-    applyOp(read(), UpdateOp.Upsert(points))
+    applyOp(new FoldPins)(read(), UpdateOp.Upsert(points))
 
   /** Conditional upsert: replace only points matching `filter`; new ids
     * insert unconditionally (`point_ops.rs:114-115`). */
@@ -300,10 +309,12 @@ final class Collection(
     * table plan, commit with a single atomic write. Each op observes the
     * effects of the ones before it, exactly like the reference's sequential
     * application — but as one Spark job, not N. */
-  def applyBatch(ops: Seq[UpdateOp]): Unit =
-    try write(ops.foldLeft(read())(applyOp),
+  def applyBatch(ops: Seq[UpdateOp]): Unit = {
+    val pins = new FoldPins
+    try write(ops.foldLeft(read())(applyOp(pins)),
       sparseDfChange = Collection.opsChangeSparseDfs(config, ops))
-    finally releaseFoldPins()
+    finally releaseFoldPins(pins)
+  }
 
   /** Whether a batch can change any sparse vector's per-dim document
     * frequencies: point writes/deletes can; payload mutations and
@@ -326,16 +337,17 @@ final class Collection(
     config.shardKeyCol match {
       case Some(sk) if keys.nonEmpty =>
         val scoped = read().filter(col(sk).isin(keys: _*))
-        try writeShardScoped(ops.foldLeft(scoped)(applyOp), sk, keys,
+        val pins = new FoldPins
+        try writeShardScoped(ops.foldLeft(scoped)(applyOp(pins)), sk, keys,
           sparseDfChange = Collection.opsChangeSparseDfs(config, ops))
-        finally releaseFoldPins()
+        finally releaseFoldPins(pins)
       case _ => applyBatch(ops)
     }
 
   /** Scoped twin of [[write]]: same tenant-bucket + layout pipeline, but
     * the tmp→dst swap replaces only the selected keys' partition
     * directories (a key whose rows were all deleted simply loses its
-    * directory). Sidecar caches invalidate exactly like a full write. */
+    * directory). Sidecars change through [[dataChanged]] with the keys. */
   private def writeShardScoped(df0: DataFrame, sk: String,
       keys: Seq[Any], sparseDfChange: Boolean = true): Unit = {
     rewriteCount += 1
@@ -367,12 +379,7 @@ final class Collection(
       fs.rename(st.getPath, new org.apache.hadoop.fs.Path(dstBase, st.getPath.getName)))
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     ParquetMeta.bump(path)
-    // IDF sidecar: refresh ONLY the touched keys' partials when warm
-    // (partition-pruned jobs, bounded by the batch's tenants), stay lazy
-    // when cold, untouched when the batch can't change dfs
-    if (sparseDfChange) refreshSparseIdfScoped(sk, keys)
-    fieldStatsCache = None
-    fs.delete(fieldStatsPath, false)
+    dataChanged(sparseDfChange, shards = keys)
   }
 
   /** Deterministic last-write-wins per id within one batch: the reference
@@ -457,16 +464,7 @@ final class Collection(
       }
     val matchCol = filter.map(f => coalesce(pred(cur, f), lit(false)))
       .getOrElse(lit(false))
-    val probed = localIds match {
-      // literal-count cap (`Collection.InProbeMaxIds` = 10k): past it the
-      // IN expression's own planning cost dominates and the broadcast
-      // semi-join is the better shape anyway (the build side is still
-      // just the batch ids)
-      case Some(ids) if ids.nonEmpty && ids.length <= Collection.InProbeMaxIds =>
-        cur.filter(col(config.idCol).isin(ids: _*))
-      case _ =>
-        cur.join(broadcast(batchIds), Seq(config.idCol), "left_semi")
-    }
+    val probed = probeIds(cur, localIds.filter(_.nonEmpty), batchIds)
     val flags = broadcast(probed
       .select(col(config.idCol), matchCol.as("_mraw"))
       .groupBy(col(config.idCol))
@@ -485,7 +483,20 @@ final class Collection(
     joined.filter(keep).drop("_exists", "_m", "_mraw")
   }
 
-  private def mergeUpsert(cur: DataFrame, points: DataFrame,
+  /** Rows of `df` whose id is among the probed ids. Ids known driver-side,
+    * up to [[Collection.InProbeMaxIds]] of them, compile to a
+    * parquet-pushable `id IN (...)` scan predicate. More ids (the IN
+    * expression's own planning cost would dominate) or ids known only at
+    * execution stream `df` once against the broadcast `idFrame` (one
+    * `idCol` column) in a left-semi join. */
+  private def probeIds(df: DataFrame, ids: Option[Seq[Any]],
+      idFrame: => DataFrame): DataFrame = ids match {
+    case Some(xs) if xs.length <= Collection.InProbeMaxIds =>
+      df.filter(col(config.idCol).isin(xs: _*))
+    case _ => df.join(broadcast(idFrame), Seq(config.idCol), "left_semi")
+  }
+
+  private def mergeUpsert(pins: FoldPins, cur: DataFrame, points: DataFrame,
       mode: UpdateMode, filter: Option[Filter]): DataFrame = {
     // custom sharding: a batch without the shard-key column would
     // unionByName-NULL-fill the partition column, making the points
@@ -529,44 +540,41 @@ final class Collection(
     // executor mid-batch fails the write unrecoverably (acceptable: the
     // data is ≤ batch-sized and the batch simply retries) — and the
     // returned DataFrame has no scope-ended hook, so the fold tracks every
-    // checkpointed op in `foldPins` and applyBatch frees the blocks right
-    // after the single commit instead of waiting for GC.
+    // checkpointed op in its own `pins` and applyBatch frees the blocks
+    // right after the single commit instead of waiting for GC.
     val incoming =
       if (mode == UpdateMode.Upsert && filter.isEmpty) incoming0
       else {
         val pinned = incoming0.localCheckpoint()
-        foldPins += pinned
+        pins += pinned
         pinned
       }
     curW.join(incoming.select(col(config.idCol)), Seq(config.idCol), "left_anti")
       .unionByName(incoming, allowMissingColumns = true)
   }
 
-  /** Checkpointed per-op batches of the CURRENT applyBatch fold — freed
-    * right after the commit (single-writer discipline, like the write
-    * path itself). */
-  private val foldPins =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  /** Checkpointed per-op batches of ONE fold, created by the call that
+    * commits it: a second fold on this instance keeps its own, so it can
+    * never free blocks the first fold still reads. */
+  private type FoldPins = scala.collection.mutable.ArrayBuffer[DataFrame]
 
   /** Free the blocks `mergeUpsert` pinned for the batch that just
     * committed. Dataset.unpersist does not reach a localCheckpoint's RDD,
     * so unpersist the LogicalRDD's backing RDD directly. Safe: after the
     * commit nothing re-executes the fold's intermediate plans. */
-  private def releaseFoldPins(): Unit = {
-    foldPins.foreach { df =>
+  private def releaseFoldPins(pins: FoldPins): Unit =
+    pins.foreach { df =>
       try df.queryExecution.analyzed.collectFirst {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }.foreach(_.unpersist(blocking = false))
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    foldPins.clear()
-  }
 
-  private def applyOp(cur: DataFrame, op: UpdateOp): DataFrame = op match {
+  private def applyOp(pins: FoldPins)(cur: DataFrame, op: UpdateOp): DataFrame = op match {
     case UpdateOp.Upsert(points, mode) =>
-      mergeUpsert(cur, points, mode, None)
+      mergeUpsert(pins, cur, points, mode, None)
     case UpdateOp.UpsertConditional(points, filter, mode) =>
-      mergeUpsert(cur, points, mode, Some(filter))
+      mergeUpsert(pins, cur, points, mode, Some(filter))
     case UpdateOp.DeleteIds(ids) =>
       val cids = graft.filters.FilterCompiler.coerceWireIds(ids,
         cur.schema.fields.find(_.name == config.idCol).map(_.dataType))
@@ -690,7 +698,7 @@ final class Collection(
       case Some(spec) if df.columns.contains(qc) =>
         val qp = quantParams.getOrElse(vectorName,
           throw new IllegalStateException(
-            s"quantization declared for '$vectorName' but no fitted params at $quantParamsPath"))
+            s"quantization declared for '$vectorName' but no fitted params at ${quantSidecar.path}"))
         val (approxScore, approxLargerBetter) =
           Collection.quantApproxScore(spec, qp, col(qc), query, vc.metric)
         if (!rescore) {
@@ -1084,8 +1092,13 @@ final class Collection(
         val probed =
           scala.collection.mutable.Map.empty[Any, org.apache.spark.sql.Row]
         if (ids.nonEmpty) {
-          val df = readDecoded()
-          df.filter(col(config.idCol).isin(ids: _*))
+          // past the IN cap: wire ids (Int or Long) as text, cast to the
+          // column's type; an id the type cannot hold matches nothing
+          val idType = idDataType.getOrElse(
+            org.apache.spark.sql.types.LongType)
+          probeIds(readDecoded(), Some(ids),
+            spark.createDataFrame(ids.map(x => Tuple1(x.toString)))
+              .select(col("_1").try_cast(idType).as(config.idCol)))
             .select((config.idCol +: cols).map(col): _*)
             .collect().foreach(r => probed.update(key(r.get(0)), r))
         }
@@ -1876,7 +1889,7 @@ final class Collection(
           }
         }
       next.write(withCells, sparseDfChange = false)
-      if (quantChanged) next.writeQuantParams(params)
+      if (quantChanged) next.quantSidecar.put(params)
     } else if (layoutChanged) {
       // layout-only PATCH: one rewrite under the new partition/sort rule
       // (write() recomputes declared buckets; stale ones drop here)
@@ -1891,88 +1904,46 @@ final class Collection(
     * `/collections/{c}` — `tests/openapi/test_collection_metadata.py`):
     * arbitrary key-values persisted with the collection config. Patch
     * semantics mirror the reference: present keys merge/overwrite, an
-    * explicit null DELETES the key. Stored as `_metadata.json` beside the
-    * parquet data (driver-side catalog state, like the reference persists
-    * config with the collection). */
-  def updateMetadata(patch: Map[String, Option[String]]): Unit = {
-    val merged = patch.foldLeft(metadata()) {
+    * explicit null DELETES the key. Stored in the `metadata` [[Sidecar]]
+    * beside the parquet data (driver-side catalog state, like the
+    * reference persists config with the collection). */
+  def updateMetadata(patch: Map[String, Option[String]]): Unit =
+    metadataSidecar.put(patch.foldLeft(metadata()) {
       case (m, (k, Some(v))) => m + (k -> v)
       case (m, (k, None)) => m - k
-    }
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        org.json4s.JObject(merged.toSeq.sortBy(_._1)
-          .map { case (k, v) => k -> (org.json4s.JString(v): org.json4s.JValue) }.toList)))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metadataPath, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+    })
 
-  def metadata(): Map[String, String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metadataPath)) Map.empty
-    else {
-      val in = fs.open(metadataPath)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      org.json4s.jackson.JsonMethods.parse(
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)) match {
-        case org.json4s.JObject(fields) =>
-          fields.collect { case (k, org.json4s.JString(v)) => k -> v }.toMap
-        case _ => Map.empty
-      }
-    }
-  }
-
-  private def metadataPath =
-    new org.apache.hadoop.fs.Path(path + "_metadata.json")
+  def metadata(): Map[String, String] = metadataSidecar.get.getOrElse(Map.empty)
 
   // ----------------------------------------------------- shard-key registry
-
-  private[graft] def shardKeysPath =
-    new org.apache.hadoop.fs.Path(path + "_shardkeys.json")
 
   /** Declared shard keys of a custom-sharded collection — the
     * `PUT/GET /collections/{c}/shards` + `POST /shards/delete` surface
     * (`sharding_keys.rs`, routes `src/actix/api/shards_api.rs`).
-    * Persisted as a `_shardkeys.json` sidecar; `None` = no registry (a
+    * Persisted in the `shardkeys` [[Sidecar]] as `{"keys": [...]}`, each
+    * key a JSON string or integer; `None` = no registry (a
     * collection created directly from data with implicit keys — the
     * batch-native analog; writes then accept any key). Once a registry
     * exists, writes naming an undeclared key REJECT with the reference's
     * "Shard key .. not found" (`shard_holder/mod.rs:432`). */
-  def listShardKeys(): Option[Seq[Any]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(shardKeysPath)) None
-    else {
-      val in = fs.open(shardKeysPath)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      org.json4s.jackson.JsonMethods.parse(
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)) \ "keys" match {
-        case org.json4s.JArray(xs) => Some(xs.map {
-          case org.json4s.JString(s) => s
-          case org.json4s.JInt(i) => i.toLong
-          case org.json4s.JLong(l) => l
-          case other => throw new IllegalArgumentException(s"bad shard key $other")
-        })
-        case _ => Some(Nil)
+  def listShardKeys(): Option[Seq[Any]] =
+    shardKeySidecar.get.map(_ \ "keys" match {
+      case org.json4s.JArray(xs) => xs.map {
+        case org.json4s.JString(s) => s
+        case org.json4s.JInt(i) => i.toLong
+        case other => throw new IllegalArgumentException(s"bad shard key $other")
       }
-    }
-  }
+      case _ => Nil
+    })
 
   private def writeShardKeys(keys: Seq[Any]): Unit = {
     import org.json4s._
-    val json = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(JObject("keys" -> JArray(
-        keys.map {
-          case s: String => JString(s): JValue
-          case l: Long => JInt(BigInt(l)): JValue
-          case i: Int => JInt(BigInt(i.toLong)): JValue
-          case other => throw new IllegalArgumentException(s"bad shard key $other")
-        }.toList))))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(shardKeysPath, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    shardKeySidecar.put(JObject("keys" -> JArray(keys.map {
+      case s: String => JString(s): JValue
+      case l: Long => JInt(l): JValue
+      case i: Int => JInt(i): JValue
+      case other => throw new IllegalArgumentException(s"bad shard key $other")
+    }.toList)))
   }
 
   /** `PUT /collections/{c}/shards` (`CreateShardingKey`): declare a shard
@@ -1997,7 +1968,7 @@ final class Collection(
     * drop is a partition-DIRECTORY delete — O(1) filesystem metadata at
     * any scale, no table rewrite (the batch analog of the reference
     * dropping the key's shards wholesale). Sidecars derived from the data
-    * (fieldstats, sparse IDF) recompute. */
+    * change as after a scoped write of that key ([[dataChanged]]). */
   def deleteShardKey(key: Any): Boolean = {
     val sk = config.shardKeyCol.getOrElse(throw new IllegalArgumentException(
       "cannot delete a shard key: the collection has no shard-key column"))
@@ -2025,21 +1996,7 @@ final class Collection(
     }
     victims.foreach(st => fs.delete(st.getPath, true))
     ParquetMeta.bump(path)
-    fieldStatsCache = None
-    fs.delete(fieldStatsPath, false)
-    // IDF sidecar: a sharded-format sidecar just loses the dropped key's
-    // partials — ZERO jobs, matching the O(1) directory drop; anything
-    // else invalidates lazily
-    loadSparseIdf() match {
-      case Some(m) if m.valuesIterator.forall(_.isInstanceOf[Collection.IdfSharded]) =>
-        writeSparseIdfStats(m.map {
-          case (n, Collection.IdfSharded(parts)) =>
-            n -> (Collection.IdfSharded(parts - key.toString): Collection.IdfEntry)
-          case other => other
-        })
-      case Some(_) => invalidateSparseIdfStats()
-      case None => ()
-    }
+    dataChanged(sparseDfChange = true, shards = Seq(key), shardsGone = true)
     // the key WAS declared (the not-found guard above) — report the drop
     // as applied even when no data had landed under it yet
     true
@@ -2054,47 +2011,27 @@ final class Collection(
 
   // ------------------------------------------------------- sparse IDF stats
 
-  private[graft] def sparseIdfPath =
-    new org.apache.hadoop.fs.Path(path + "_sparse_idf.json")
-
-  /** Cached per-name entries; invalidated by df-changing writes. */
-  @transient private var sparseIdfCache: Option[Map[String, Collection.IdfEntry]] = None
-
-  private def loadSparseIdf(): Option[Map[String, Collection.IdfEntry]] =
-    sparseIdfCache.orElse {
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(sparseIdfPath)) None
-      else {
-        val in = fs.open(sparseIdfPath)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-        val m = Collection.parseSparseIdfJson(
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-        sparseIdfCache = Some(m)
-        Some(m)
-      }
-    }
-
   /** Ingest-time IDF statistics for a sparse vector: (N = count of points
     * with a non-null sparse cell — the reference's `indexed_vectors`,
     * `query_context.rs:283-289` — and per-dim document frequencies).
-    * Loaded from the `_sparse_idf.json` artifact (NO Spark job on the warm
-    * path); computed once and persisted when the artifact is missing —
-    * writes INVALIDATE rather than eagerly recompute, the same lazy
-    * contract as the fieldstats sidecar, so a write's cost never scales
-    * with table size for the sidecar's sake. On a custom-sharded
-    * collection the artifact holds PER-SHARD-KEY partial (N, df) maps —
-    * merged driver-side here — so a scoped write refreshes only its
-    * touched tenants ([[writeShardScoped]]). Scale note: the df map is
+    * Loaded from the `sparse_idf` [[Sidecar]] (NO Spark job on the warm
+    * path); computed once and persisted when the entry is missing —
+    * commits INVALIDATE rather than eagerly recompute ([[dataChanged]]),
+    * the same lazy contract as the fieldstats sidecar, so a write's cost
+    * never scales with table size for the sidecar's sake. On a
+    * custom-sharded collection the entry holds PER-SHARD-KEY partial
+    * (N, df) maps — merged driver-side here — so a scoped write refreshes
+    * only its touched tenants. Scale note: the df map is
     * vocabulary-sized — bounded by the token space (BM25 vocabularies are
     * 10⁴–10⁵ dims), not the row count, so the sidecar stays small however
     * large the table. */
   private[graft] def sparseIdfStats(name: String): (Long, Map[Long, Long]) = {
-    val cached = loadSparseIdf()
-    cached.flatMap(_.get(name)).map(Collection.mergeIdfEntry).getOrElse {
+    val cached = idfSidecar.get
+    cached.flatMap(_.get(name)).getOrElse {
       val m = computeSparseIdfStats(read(), Seq(name))
-      writeSparseIdfStats(cached.getOrElse(Map.empty) ++ m)
-      Collection.mergeIdfEntry(m(name))
-    }
+      idfSidecar.put(cached.getOrElse(Map.empty) ++ m)
+      m(name)
+    }.merged
   }
 
   /** One aggregation pass per sparse column: non-null count + exploded
@@ -2125,132 +2062,89 @@ final class Collection(
             .map { case (k, rows) =>
               k -> rows.map(r => dimKey(r.get(1)) -> r.getLong(2)).toMap
             }
-          Collection.IdfSharded(ns.map { case (k, n) =>
-            k -> ((n, dfs.getOrElse(k, Map.empty[Long, Long])))
-          })
+          Collection.IdfEntry(sharded = Some(ns.map { case (k, n) =>
+            k -> Collection.IdfStat(n, dfs.getOrElse(k, Map.empty[Long, Long]))
+          }))
         case _ =>
           val total = nonNull.count()
           val dfs = nonNull.select(explode(col(s"$c.indices")).as("dim"))
             .groupBy(col("dim"))
             .agg(org.apache.spark.sql.functions.count(lit(1)).as("df"))
             .collect().map(r => dimKey(r.get(0)) -> r.getLong(1)).toMap
-          Collection.IdfFlat(total, dfs)
+          Collection.IdfEntry(Some(total), Some(dfs))
       }
       n -> entry
     }.toMap
-
-  private[storage] def writeSparseIdfStats(
-      m: Map[String, Collection.IdfEntry]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(sparseIdfPath, true)
-    try out.write(Collection.sparseIdfJson(m)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    sparseIdfCache = Some(m)
-  }
-
-  /** Drop the IDF sidecar — the LAZY invalidation a df-changing write
-    * performs instead of the former eager full-table recompute (which made
-    * every write on an idf-modified collection cost a whole-table scan —
-    * the r13 scale probe's residual slope). The next read that needs IDF
-    * rebuilds and persists it, exactly like the fieldstats sidecar. */
-  private[storage] def invalidateSparseIdfStats(): Unit = {
-    sparseIdfCache = None
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(sparseIdfPath, false)
-    ()
-  }
 
   /** Eager sidecar build — used at CREATE (the data was just scanned
     * anyway; one more pass while it is hot keeps first reads zero-job). */
   private[storage] def refreshSparseIdfStats(): Unit = {
     val idfNames = config.sparse.filter(_.modifier.contains("idf")).map(_.name)
-    if (idfNames.nonEmpty) writeSparseIdfStats(computeSparseIdfStats(read(), idfNames))
+    if (idfNames.nonEmpty) idfSidecar.put(computeSparseIdfStats(read(), idfNames))
   }
 
-  /** Scoped refresh after [[writeShardScoped]]: when the sidecar is WARM
-    * and sharded-format, recompute partials for ONLY the touched keys —
-    * the aggregation's scan partition-prunes to those directories — and
-    * splice them in; jobs are bounded by the touched partitions, never the
-    * table. Cold or flat-format sidecars just invalidate (lazy rebuild). */
-  private def refreshSparseIdfScoped(sk: String, keys: Seq[Any]): Unit = {
-    val idfNames = config.sparse.filter(_.modifier.contains("idf")).map(_.name)
-    if (idfNames.isEmpty) { invalidateSparseIdfStats(); return }
-    loadSparseIdf() match {
-      case Some(m) if idfNames.forall(n =>
-          m.get(n).forall(_.isInstanceOf[Collection.IdfSharded])) =>
-        // splice ONLY the names already present (and sharded) in the warm
-        // sidecar. A name ABSENT from the map was never built — the lazy
-        // rebuild ([[sparseIdfStats]]) persists one entry per read — and
-        // MUST stay absent: fabricating it from the touched keys' rows
-        // alone would record one tenant's (N, df) as the whole
-        // collection's and silently mis-weight every later IDF query on
-        // that space (the entry would be warm, so never corrected).
-        val present = idfNames.filter(m.contains)
-        if (present.isEmpty) return // nothing spliced — skip the no-op rewrite
-        val touched = keys.map(_.toString).toSet
-        val merged = {
-            val scoped = read().filter(col(sk).isin(keys: _*))
-            val fresh = computeSparseIdfStats(scoped, present)
-            m ++ present.flatMap { n =>
-              val freshParts = fresh.get(n) match {
-                case Some(Collection.IdfSharded(p)) => p
-                case _ => Map.empty[String, (Long, Map[Long, Long])]
-              }
-              m.get(n) match {
-                case Some(Collection.IdfSharded(old)) =>
-                  Some(n -> Collection.IdfSharded(
-                    old.view.filterKeys(k => !touched.contains(k)).toMap ++
-                      freshParts))
-                case _ => None // unreachable under the guard
-              }
-            }.toMap
-          }
-        writeSparseIdfStats(merged)
-      case Some(_) => invalidateSparseIdfStats()
-      case None => () // cold: stays cold, first IDF read rebuilds
+  /** The one invalidation point for the sidecars derived from the rows,
+    * called after every commit. Ingest-time statistics go STALE, not
+    * eagerly rebuilt (the reference documents approximate stats as
+    * unreliable mid-indexing, `lib/shard/src/count.rs:14-17`): field
+    * statistics drop, and the next estimate rebuilds them. The IDF sidecar
+    *  - stays untouched when `sparseDfChange` is false (payload-only and
+    *    dense-vector batches cannot change document frequencies);
+    *  - after a commit that replaced only the `shards` keys' rows, when
+    *    WARM and sharded-format, splices fresh partials for just those keys
+    *    (the aggregation's scan partition-prunes to their directories, so
+    *    jobs are bounded by the touched tenants, never the table; no job at
+    *    all when `shardsGone` — the keys' rows were dropped), and when cold
+    *    stays cold;
+    *  - otherwise drops for a lazy rebuild ([[sparseIdfStats]]) — an
+    *    eager refresh makes every write on an idf-modified collection a
+    *    full-table scan (the r13 scale probe's residual slope). */
+  private def dataChanged(sparseDfChange: Boolean, shards: Seq[Any] = Nil,
+      shardsGone: Boolean = false): Unit = {
+    if (sparseDfChange) (shards, idfSidecar.get) match {
+      case (Nil, _) => idfSidecar.drop()
+      case (_, None) => ()
+      case (_, Some(m)) if m.valuesIterator.forall(_.sharded.isDefined) =>
+        // splice ONLY the names already present in the warm sidecar. A
+        // name ABSENT from the map was never built — the lazy rebuild
+        // persists one entry per read — and MUST stay absent: fabricating
+        // it from the touched keys' rows alone would record one tenant's
+        // (N, df) as the whole collection's and silently mis-weight every
+        // later IDF query on that space (the entry would be warm, so never
+        // corrected).
+        val touched = shards.map(_.toString).toSet
+        val fresh =
+          if (shardsGone) Map.empty[String, Collection.IdfEntry]
+          else computeSparseIdfStats(
+            read().filter(col(config.shardKeyCol.get).isin(shards: _*)),
+            m.keys.toSeq)
+        idfSidecar.put(m.map { case (n, e) =>
+          n -> Collection.IdfEntry(sharded = Some(
+            e.sharded.get.filter { case (k, _) => !touched(k) } ++
+              fresh.get(n).flatMap(_.sharded).getOrElse(Map.empty)))
+        })
+      case _ => idfSidecar.drop()
     }
+    statsSidecar.drop()
   }
 
   // ------------------------------------------------------- field statistics
 
-  private[graft] def fieldStatsPath =
-    new org.apache.hadoop.fs.Path(path + "_fieldstats.json")
-
-  @transient private var fieldStatsCache:
-      Option[graft.filters.Cardinality.FieldStatsSnapshot] = None
-
   /** Driver-side per-field statistics snapshot for `count` with
     * `exact: false` ([[graft.filters.Cardinality]]) — the analog of the
     * payload field indexes' count structures the reference estimates from.
-    * Loaded from `_fieldstats.json` (zero jobs warm); computed once and
-    * persisted when missing. A mutation deletes the sidecar rather than
-    * eagerly recomputing — estimation is a read-path nicety and the
-    * reference itself documents approximate counts as "unreliable during
-    * the indexing process" (`lib/shard/src/count.rs:14-17`). */
-  private[graft] def fieldStats: graft.filters.Cardinality.FieldStatsSnapshot = {
-    fieldStatsCache.getOrElse {
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      val loaded =
-        if (!fs.exists(fieldStatsPath)) None
-        else {
-          val in = fs.open(fieldStatsPath)
-          val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-          Some(Collection.parseFieldStatsJson(
-            new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
-        }
-      val snap = loaded.getOrElse {
-        val computed = computeFieldStats()
-        val out = fs.create(fieldStatsPath, true)
-        try out.write(Collection.fieldStatsJson(computed)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        computed
-      }
-      fieldStatsCache = Some(snap)
-      snap
+    * Loaded from the `fieldstats` [[Sidecar]] (zero jobs warm); computed
+    * once and persisted when missing. A commit drops the sidecar
+    * ([[dataChanged]]) rather than eagerly recomputing — estimation is a
+    * read-path nicety and the reference itself documents approximate
+    * counts as "unreliable during the indexing process"
+    * (`lib/shard/src/count.rs:14-17`). */
+  private[graft] def fieldStats: graft.filters.Cardinality.FieldStatsSnapshot =
+    statsSidecar.get.getOrElse {
+      val computed = computeFieldStats()
+      statsSidecar.put(computed)
+      computed
     }
-  }
 
   /** Build the statistics snapshot — the batch analog of the reference's
     * field-index build collecting per-value postings. Bounded output: the
@@ -2292,16 +2186,6 @@ final class Collection(
         config.payloadTypes.toSeq.sortBy(_._1)
       else Seq.empty
 
-    // env-gated per-job timing (diagnostics for the probe; zero cost off)
-    def timed[A](label: String)(body: => A): A =
-      if (!sys.env.contains("GRAFT_STATS_TIMING")) body
-      else {
-        val t0 = System.nanoTime()
-        val a = body
-        System.err.println(f"[fieldstats] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        a
-      }
-
     // JOB 1 — total row count + non-null counts per vector column, over
     // the raw scan (parquet prunes to just these columns; null counting
     // never touches the payload)
@@ -2311,8 +2195,7 @@ final class Collection(
         .filter { case (_, c) => df.columns.contains(c) }
     val vecAggs = vecCols.map { case (n, c) => cnt(col(c)).as(s"vec_$n") }
     val baseAggs = Seq(cnt(lit(1)).as("_total")) ++ vecAggs
-    val baseRow = timed("base-agg")(
-      df.agg(baseAggs.head, baseAggs.tail: _*).collect()(0))
+    val baseRow = df.agg(baseAggs.head, baseAggs.tail: _*).collect()(0)
     def rowLong(row: org.apache.spark.sql.Row, name: String): Long =
       Option(row.getAs[Any](name)).fold(0L)(_.toString.toLong)
     val total = rowLong(baseRow, "_total")
@@ -2352,8 +2235,7 @@ final class Collection(
             sum(when(fc.condition(graft.model.IsEmpty(k)), 1L).otherwise(0L))
               .as(s"empty_$k"))
         }
-        val row = timed("null-agg")(
-          pp.agg(nullAggs.head, nullAggs.tail: _*).collect()(0))
+        val row = pp.agg(nullAggs.head, nullAggs.tail: _*).collect()(0)
         declared.map { case (k, _) =>
           k -> NullStats(rowLong(row, s"null_$k"), rowLong(row, s"empty_$k"))
         }.toMap
@@ -2387,19 +2269,19 @@ final class Collection(
         val pairs = longForm(valueFields, (_, v) => v.cast("string")).distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val perField = timed("val-agg")(pairs.groupBy(col("_k"))
+          val perField = pairs.groupBy(col("_k"))
             .agg(cnt(lit(1)).as("vals"), countDistinct(col("_v")).as("uniq"),
               countDistinct(col("_id")).as("pts"))
-            .collect())
+            .collect()
             .map(rw => rw.getString(0) ->
               ((rw.getLong(1), rw.getLong(2), rw.getLong(3)))).toMap
           val topW = org.apache.spark.sql.expressions.Window
             .partitionBy(col("_k")).orderBy(desc("c"), asc("_v"))
-          val heads = timed("val-topk")(pairs.groupBy(col("_k"), col("_v"))
+          val heads = pairs.groupBy(col("_k"), col("_v"))
             .agg(cnt(lit(1)).as("c"))
             .withColumn("_rn", row_number().over(topW))
             .filter(col("_rn") <= Collection.StatsTopK)
-            .collect())
+            .collect()
             .groupBy(_.getString(0))
             .map { case (k, rows) =>
               k -> rows.map(rw => rw.getString(1) -> rw.getLong(2)).toSeq }
@@ -2446,13 +2328,13 @@ final class Collection(
         try {
           // two-level: per-(field, point) partials fold into per-field
           // bounds + value/point counts + max-values-per-point in ONE job
-          val meta = timed("hist-meta")(nums.groupBy(col("_k"), col("_id"))
+          val meta = nums.groupBy(col("_k"), col("_id"))
             .agg(cnt(lit(1)).as("n"), min(col("_v")).as("mn"), max(col("_v")).as("mx"))
             .groupBy(col("_k"))
             .agg(min(col("mn")).as("lo"), max(col("mx")).as("hi"),
               sum(col("n")).as("vals"), cnt(lit(1)).as("pts"),
               max(col("n")).as("maxVpp"))
-            .collect())
+            .collect()
             .map(rw => rw.getString(0) -> ((rw.getDouble(1), rw.getDouble(2),
               rw.getLong(3), rw.getLong(4), rw.getLong(5)))).toMap
           val b = Collection.StatsBuckets
@@ -2466,12 +2348,12 @@ final class Collection(
                 Seq(lit(k), lit(lo)) }: _*)
               val wM = map(spread.toSeq.flatMap { case (k, (lo, hi, _, _, _)) =>
                 Seq(lit(k), lit((hi - lo) / b.toDouble)) }: _*)
-              timed("hist-bkts")(nums.filter(col("_k").isin(spread.keys.toSeq: _*))
+              nums.filter(col("_k").isin(spread.keys.toSeq: _*))
                 .groupBy(col("_k"), least(lit(b - 1),
                   floor((col("_v") - element_at(loM, col("_k"))) /
                     element_at(wM, col("_k"))).cast("int")).as("_b"))
                 .agg(cnt(lit(1)).as("c"))
-                .collect())
+                .collect()
                 .map(rw => (rw.getString(0), rw.getInt(1)) -> rw.getLong(2)).toMap
             }
           meta.map { case (k, (lo, hi, totalValues, pts, maxVpp)) =>
@@ -2495,8 +2377,7 @@ final class Collection(
       .map(sk => df.schema(sk).dataType == StringType)
     val shardStats: Map[String, ValueStats] = config.shardKeyCol
       .filter(df.columns.contains).map { sk =>
-        val perKey = timed("shard-agg")(
-          df.groupBy(col(sk)).agg(cnt(lit(1)).as("c")).collect())
+        val perKey = df.groupBy(col(sk)).agg(cnt(lit(1)).as("c")).collect()
           .filter(!_.isNullAt(0))
           .map(rw => rw.get(0).toString -> rw.getAs[Long]("c")).toSeq
         val totalVals = perKey.map(_._2).sum
@@ -2513,13 +2394,11 @@ final class Collection(
       declared.collect {
         case (k, _: StructType) if df.columns.contains(config.geoCellCol(k)) =>
           val cellC = col(config.geoCellCol(k))
-          val rows = timed(s"geo-agg") {
-            df.filter(cellC.isNotNull)
-              .groupBy(substring(cellC, 1,
-                graft.index.GeoIndex.StatsPrecision).as("_c"))
-              .agg(cnt(lit(1)).as("c"))
-              .collect()
-          }
+          val rows = df.filter(cellC.isNotNull)
+            .groupBy(substring(cellC, 1,
+              graft.index.GeoIndex.StatsPrecision).as("_c"))
+            .agg(cnt(lit(1)).as("c"))
+            .collect()
           val (multi, cells) = rows.partition(
             _.getString(0) == graft.index.GeoIndex.MultiCell)
           k -> graft.filters.Cardinality.GeoStats(
@@ -2544,29 +2423,12 @@ final class Collection(
 
   // ------------------------------------------------------- quantization
 
-  private[storage] def quantParamsPath =
-    new org.apache.hadoop.fs.Path(path + "_quant.json")
-
-  /** Fitted quantization params, loaded from the driver-side catalog file
-    * written at create (like the reference persists quantization alongside
-    * the segment). Empty when no vector declares quantization. */
-  private[graft] lazy val quantParams: Map[String, Collection.QuantParams] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(quantParamsPath)) Map.empty
-    else {
-      val in = fs.open(quantParamsPath)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      Collection.parseQuantJson(
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-    }
-  }
-
-  private[storage] def writeQuantParams(m: Map[String, Collection.QuantParams]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(quantParamsPath, true)
-    try out.write(Collection.quantJson(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** Fitted quantization params from the `quant` [[Sidecar]], written at
+    * create and by a quantization PATCH (like the reference persists
+    * quantization alongside the segment). Empty when no vector declares
+    * quantization. */
+  private[graft] def quantParams: Map[String, Collection.QuantParams] =
+    quantSidecar.get.getOrElse(Map.empty)
 
   /** Recompute quantized columns for incoming rows from the PERSISTED
     * params (never refit — a micro-batch must quantize in the same space
@@ -2750,9 +2612,10 @@ final class Collection(
 }
 
 object Collection {
-  /** Largest local-batch id list the admission probe compiles to an
-    * `id IN (...)` scan predicate; beyond it the IN expression's own
-    * planning cost dominates and the broadcast semi-join takes over. */
+  /** Largest driver-side id list a by-id probe (upsert admission, bulk
+    * by-id resolution) compiles to an `id IN (...)` scan predicate; beyond
+    * it the IN expression's own planning cost dominates and the broadcast
+    * semi-join takes over. */
   val InProbeMaxIds = 10000
 
   /** Create/overwrite a collection from a points DataFrame; declared
@@ -2810,14 +2673,11 @@ object Collection {
     // the fieldstats file in particular is rebuilt LAZILY, so without this
     // delete the first `exact:false` count/facet would serve the PREVIOUS
     // collection's statistics (caught by the r11 scale probe: the 500×
-    // re-create answered estimates from the 100× sidecar). The mutation
-    // path (`write`) already drops it on every rewrite.
-    val cfs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    cfs.delete(coll.fieldStatsPath, false)
-    cfs.delete(coll.shardKeysPath, false)
-    if (params.isEmpty) cfs.delete(coll.quantParamsPath, false)
-    if (params.nonEmpty) coll.writeQuantParams(params)
+    // re-create answered estimates from the 100× sidecar). The data
+    // sidecars go through the same invalidation as every commit.
+    coll.dataChanged(sparseDfChange = true)
+    coll.shardKeySidecar.drop()
+    if (params.isEmpty) coll.quantSidecar.drop() else coll.quantSidecar.put(params)
     coll.refreshSparseIdfStats()
     coll
   }
@@ -3124,6 +2984,12 @@ object Collection {
         codebooks.map(_.map(_.toArray).toArray).toArray)
   }
 
+  /** Codec settings of the quantization [[Sidecar]]: each stored params
+    * object names its [[QuantParams]] case in a short type hint. */
+  private[storage] val QuantFormats: org.json4s.Formats =
+    org.json4s.DefaultFormats + org.json4s.ShortTypeHints(
+      List(classOf[ScalarQP], classOf[BinaryQP], classOf[PqQP]))
+
   private[storage] def fitQuantParams(
       config: CollectionConfig, points: DataFrame): Map[String, QuantParams] =
     config.vectors.flatMap { vc =>
@@ -3220,72 +3086,31 @@ object Collection {
       case _ => false
     }
 
-  /** Sidecar entry for one sparse name: flat (N, per-dim df) on an
-    * unsharded collection; per-shard-key partials on a custom-sharded one
-    * so scoped writes refresh only their touched tenants. Dims are LONG —
-    * the reference's dim space is the full u32 (`sparse_vector.rs:17-22`),
-    * which Int cannot carry. */
-  sealed trait IdfEntry
-  final case class IdfFlat(n: Long, dfs: Map[Long, Long]) extends IdfEntry
-  final case class IdfSharded(parts: Map[String, (Long, Map[Long, Long])])
-      extends IdfEntry
+  /** (N, per-dim df) of one sparse vector over a set of points. Dims are
+    * LONG — the reference's dim space is the full u32
+    * (`sparse_vector.rs:17-22`), which Int cannot carry. */
+  final case class IdfStat(n: Long, df: Map[Long, Long])
 
-  /** Collapse an entry to the collection-wide (N, df) view a query needs:
-    * shard-key partials sum driver-side (each point lives in exactly one
-    * shard, so the partial counts are disjoint). */
-  private[storage] def mergeIdfEntry(e: IdfEntry): (Long, Map[Long, Long]) = e match {
-    case IdfFlat(n, dfs) => (n, dfs)
-    case IdfSharded(parts) =>
-      val n = parts.valuesIterator.map(_._1).sum
-      val dfs = parts.valuesIterator.map(_._2)
-        .foldLeft(Map.empty[Long, Long]) { (acc, m) =>
-          m.foldLeft(acc) { case (a, (d, c)) => a.updated(d, a.getOrElse(d, 0L) + c) }
-        }
-      (n, dfs)
-  }
+  /** IDF sidecar entry for one sparse name: flat `n`/`df` on an unsharded
+    * collection; per-shard-key partials in `sharded` on a custom-sharded
+    * one, so scoped writes refresh only their touched tenants. Each form
+    * sets only its own fields, so it stores as `{"n", "df"}` or
+    * `{"sharded"}`. */
+  final case class IdfEntry(
+      n: Option[Long] = None,
+      df: Option[Map[Long, Long]] = None,
+      sharded: Option[Map[String, IdfStat]] = None) {
 
-  private[storage] def sparseIdfJson(m: Map[String, IdfEntry]): String = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    def statObj(n: Long, dfs: Map[Long, Long]): JObject = JObject(
-      "n" -> JLong(n),
-      "df" -> JObject(dfs.toSeq.sortBy(_._1)
-        .map { case (dim, c) => dim.toString -> (JLong(c): JValue) }.toList))
-    val fields = m.toSeq.sortBy(_._1).map {
-      case (name, IdfFlat(n, dfs)) => name -> (statObj(n, dfs): JValue)
-      case (name, IdfSharded(parts)) =>
-        name -> (JObject("sharded" -> JObject(parts.toSeq.sortBy(_._1)
-          .map { case (k, (n, dfs)) => k -> (statObj(n, dfs): JValue) }.toList)): JValue)
-    }
-    JsonMethods.compact(JsonMethods.render(JObject(fields.toList)))
-  }
-
-  private[storage] def parseSparseIdfJson(s: String): Map[String, IdfEntry] = {
-    import org.json4s._
-    def long(v: JValue): Long = v match {
-      case JInt(x) => x.toLong
-      case JLong(x) => x
-      case other => throw new IllegalArgumentException(s"bad idf count: $other")
-    }
-    def stat(o: JValue): (Long, Map[Long, Long]) = {
-      val dfs = (o \ "df") match {
-        case JObject(dims) => dims.map { case (d, c) => d.toLong -> long(c) }.toMap
-        case _ => Map.empty[Long, Long]
-      }
-      (long(o \ "n"), dfs)
-    }
-    org.json4s.jackson.JsonMethods.parse(s) match {
-      case JObject(fields) => fields.map {
-        case (name, o: JObject) =>
-          (o \ "sharded") match {
-            case JObject(parts) =>
-              name -> (IdfSharded(parts.map { case (k, p) => k -> stat(p) }.toMap): IdfEntry)
-            case _ => name -> (IdfFlat(stat(o)._1, stat(o)._2): IdfEntry)
-          }
-        case (name, other) =>
-          throw new IllegalArgumentException(s"bad idf entry $name: $other")
-      }.toMap
-      case _ => Map.empty
+    /** The collection-wide (N, df) view a query needs: shard-key partials
+      * sum driver-side (each point lives in exactly one shard, so the
+      * partial counts are disjoint). */
+    def merged: (Long, Map[Long, Long]) = sharded match {
+      case None => (n.getOrElse(0L), df.getOrElse(Map.empty))
+      case Some(parts) =>
+        (parts.valuesIterator.map(_.n).sum,
+          parts.valuesIterator.map(_.df).foldLeft(Map.empty[Long, Long]) { (acc, m) =>
+            m.foldLeft(acc) { case (a, (d, c)) => a.updated(d, a.getOrElse(d, 0L) + c) }
+          })
     }
   }
 
@@ -3294,186 +3119,6 @@ object Collection {
     * table size. */
   private[graft] val StatsTopK = 4096
   private[graft] val StatsBuckets = 64
-
-  private[storage] def fieldStatsJson(
-      s: graft.filters.Cardinality.FieldStatsSnapshot): String = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    def lmap(m: Map[String, Long]): JObject =
-      JObject(m.toSeq.sortBy(_._1).map { case (k, v) => k -> (JLong(v): JValue) }.toList)
-    val values = JObject(s.values.toSeq.sortBy(_._1).map { case (k, v) =>
-      k -> (JObject(
-        "points" -> JLong(v.indexedPoints), "vals" -> JLong(v.valuesCount),
-        "uniq" -> JLong(v.uniqueValues), "counts" -> lmap(v.counts),
-        "tail_uniq" -> JLong(v.tailUnique),
-        "tail_vals" -> JLong(v.tailValues)): JValue)
-    }.toList)
-    val hist = JObject(s.hist.toSeq.sortBy(_._1).map { case (k, h) =>
-      k -> (JObject(
-        "points" -> JLong(h.indexedPoints), "vals" -> JLong(h.totalValues),
-        "max_vpp" -> JLong(h.maxValuesPerPoint),
-        "lo" -> JDouble(h.lo), "hi" -> JDouble(h.hi),
-        "buckets" -> JArray(h.buckets.toList.map(JLong(_): JValue))): JValue)
-    }.toList)
-    val nulls = JObject(s.nulls.toSeq.sortBy(_._1).map { case (k, n) =>
-      k -> (JObject("null" -> JLong(n.isNullCount),
-        "empty" -> JLong(n.isEmptyCount)): JValue)
-    }.toList)
-    val geo = JObject(s.geo.toSeq.sortBy(_._1).map { case (k, g) =>
-      k -> (JObject("multi" -> JLong(g.multiPoints),
-        "cells" -> lmap(g.cellCounts)): JValue)
-    }.toList)
-    JsonMethods.compact(JsonMethods.render(JObject(
-      "total" -> JLong(s.total),
-      "vectors" -> lmap(s.vectorCounts),
-      "values" -> values,
-      "hist" -> hist,
-      "nulls" -> nulls,
-      "geo" -> geo,
-      "string_typed" -> JArray(s.stringTyped.toList.sorted.map(JString(_): JValue)),
-      "bool_typed" -> JArray(s.boolTyped.toList.sorted.map(JString(_): JValue)),
-      "int_typed" -> JArray(s.intTyped.toList.sorted.map(JString(_): JValue)),
-      "date_typed" -> JArray(s.dateTyped.toList.sorted.map(JString(_): JValue)))))
-  }
-
-  private[storage] def parseFieldStatsJson(
-      str: String): graft.filters.Cardinality.FieldStatsSnapshot = {
-    import graft.filters.Cardinality._
-    import org.json4s._
-    def long(v: JValue): Long = v match {
-      case JInt(x) => x.toLong
-      case JLong(x) => x
-      case other => throw new IllegalArgumentException(s"bad stats count: $other")
-    }
-    def dbl(v: JValue): Double = v match {
-      case JDouble(x) => x
-      case JDecimal(x) => x.toDouble
-      case JInt(x) => x.toDouble
-      case JLong(x) => x.toDouble
-      case other => throw new IllegalArgumentException(s"bad stats number: $other")
-    }
-    def lmap(v: JValue): Map[String, Long] = v match {
-      case JObject(fs) => fs.map { case (k, c) => k -> long(c) }.toMap
-      case _ => Map.empty
-    }
-    def strs(v: JValue): Set[String] = v match {
-      case JArray(xs) => xs.collect { case JString(x) => x }.toSet
-      case _ => Set.empty
-    }
-    val o = org.json4s.jackson.JsonMethods.parse(str)
-    val values = (o \ "values") match {
-      case JObject(fs) => fs.map { case (k, jv) =>
-        k -> ValueStats(long(jv \ "points"), long(jv \ "vals"),
-          long(jv \ "uniq"), lmap(jv \ "counts"),
-          long(jv \ "tail_uniq"), long(jv \ "tail_vals"))
-      }.toMap
-      case _ => Map.empty[String, ValueStats]
-    }
-    val hist = (o \ "hist") match {
-      case JObject(fs) => fs.map { case (k, jv) =>
-        val buckets = (jv \ "buckets") match {
-          case JArray(xs) => xs.map(long)
-          case _ => Nil
-        }
-        k -> HistStats(long(jv \ "points"), long(jv \ "vals"),
-          long(jv \ "max_vpp"), dbl(jv \ "lo"), dbl(jv \ "hi"), buckets)
-      }.toMap
-      case _ => Map.empty[String, HistStats]
-    }
-    val nulls = (o \ "nulls") match {
-      case JObject(fs) => fs.map { case (k, jv) =>
-        k -> NullStats(long(jv \ "null"), long(jv \ "empty"))
-      }.toMap
-      case _ => Map.empty[String, NullStats]
-    }
-    val geo = (o \ "geo") match {
-      case JObject(fs) => fs.map { case (k, jv) =>
-        k -> GeoStats(long(jv \ "multi"), lmap(jv \ "cells"))
-      }.toMap
-      case _ => Map.empty[String, GeoStats]
-    }
-    FieldStatsSnapshot(long(o \ "total"), lmap(o \ "vectors"), values, hist,
-      nulls, strs(o \ "string_typed"), strs(o \ "bool_typed"),
-      strs(o \ "int_typed"), strs(o \ "date_typed"), geo)
-  }
-
-  private[storage] def quantJson(m: Map[String, QuantParams]): String = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val fields = m.toSeq.sortBy(_._1).map {
-      case (n, ScalarQP(mn, mx)) =>
-        n -> (JObject("kind" -> JString("scalar"),
-          "min" -> JDouble(mn), "max" -> JDouble(mx)): JValue)
-      case (n, BinaryQP(mean, std)) =>
-        n -> (JObject("kind" -> JString("binary"),
-          "mean" -> JArray(mean.toList.map(JDouble(_))),
-          "std" -> JArray(std.toList.map(JDouble(_)))): JValue)
-      case (n, PqQP(subDim, books)) =>
-        n -> (JObject("kind" -> JString("product"),
-          "sub_dim" -> JInt(subDim),
-          "codebooks" -> JArray(books.toList.map(b =>
-            JArray(b.toList.map(cent =>
-              JArray(cent.toList.map(JDouble(_)))))))): JValue)
-    }
-    JsonMethods.compact(JsonMethods.render(JObject(fields.toList)))
-  }
-
-  private[storage] def parseQuantJson(s: String): Map[String, QuantParams] = {
-    import org.json4s._
-    org.json4s.jackson.JsonMethods.parse(s) match {
-      case JObject(fields) => fields.map {
-        case (n, o: JObject) => (o \ "kind") match {
-          case JString("scalar") =>
-            def d(k: String) = (o \ k) match {
-              case JDouble(x) => x
-              case JInt(x) => x.toDouble
-              case JLong(x) => x.toDouble
-              case other => throw new IllegalArgumentException(s"bad $k: $other")
-            }
-            n -> (ScalarQP(d("min"), d("max")): QuantParams)
-          case JString("binary") =>
-            def ds(k: String) = (o \ k) match {
-              case JArray(xs) => xs.map {
-                case JDouble(x) => x
-                case JInt(x) => x.toDouble
-                case JLong(x) => x.toDouble
-                case other => throw new IllegalArgumentException(s"bad $k elem: $other")
-              }
-              case _ => Nil
-            }
-            n -> (BinaryQP(ds("mean"), ds("std")): QuantParams)
-          case JString("product") =>
-            def dd(v: JValue): Double = v match {
-              case JDouble(x) => x
-              case JInt(x) => x.toDouble
-              case JLong(x) => x.toDouble
-              case other => throw new IllegalArgumentException(s"bad codebook value: $other")
-            }
-            val subDim = (o \ "sub_dim") match {
-              case JInt(x) => x.toInt
-              case JLong(x) => x.toInt
-              case other => throw new IllegalArgumentException(s"bad sub_dim: $other")
-            }
-            val books = (o \ "codebooks") match {
-              case JArray(bs) => bs.map {
-                case JArray(cs) => cs.map {
-                  case JArray(vs) => vs.map(dd)
-                  case other => throw new IllegalArgumentException(s"bad centroid: $other")
-                }
-                case other => throw new IllegalArgumentException(s"bad codebook: $other")
-              }
-              case other => throw new IllegalArgumentException(s"bad codebooks: $other")
-            }
-            n -> (PqQP(subDim, books): QuantParams)
-          case other =>
-            throw new IllegalArgumentException(s"unknown quant kind $other")
-        }
-        case (n, other) =>
-          throw new IllegalArgumentException(s"bad quant entry $n: $other")
-      }.toMap
-      case _ => Map.empty
-    }
-  }
 
   /** Ingest-time validation (the reference rejects malformed points at the
     * request: dimension `test_vector_dimension_validation.py`, sparse

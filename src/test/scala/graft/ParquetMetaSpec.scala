@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.model.Dot
@@ -38,28 +36,14 @@ class ParquetMetaSpec extends SparkTestBase {
   private lazy val ivfPath = tmpDir()
   private lazy val ivf = Collection.create(spark, ivfPath, cfg, points(0L, Cells * 10))
 
-  /** Spark jobs started while `body` runs (listener events drain async). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(1500)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a warm read of a 64-cell IVF collection starts no Spark job") {
     ivf.read()
     val cellDirs = new java.io.File(ivfPath).list().count(_.startsWith(s"$cellCol="))
     assert(cellDirs > 32, s"need more cell dirs than the parallel-listing threshold, got $cellDirs")
     // control: an unmemoized open lists the cell directories with a job
-    val fresh = jobsDuring(spark.read.parquet(ivfPath))
+    val (fresh, _) = jobsDuring(spark.read.parquet(ivfPath))
     assert(fresh >= 1, "a fresh read of > 32 partition dirs should list them with a job")
-    val warm = jobsDuring(ivf.read())
+    val (warm, _) = jobsDuring(ivf.read())
     assert(warm == 0, s"warm read ran $warm Spark jobs (expected 0)")
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,26 @@ trait SparkTestBase extends AnyFunSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** Spark jobs started while `body` runs: the count and each job's short
+    * call site. Listener events arrive asynchronously, so the jobs are
+    * read after a drain window. */
+  def jobsDuring[A](body: => A): (Int, Seq[String]) = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        sites.add(Option(js.properties.getProperty("callSite.short")).getOrElse("?"))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(1500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val all = sites.toArray(Array.empty[String]).toSeq
+    (all.length, all)
   }
 }
 

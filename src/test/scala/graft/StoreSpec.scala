@@ -689,21 +689,13 @@ class StoreSpec extends SparkTestBase {
     // warm: a FRESH instance estimates purely from the sidecar — the whole
     // point of exact=false at 100 TB is zero distributed work
     val warm = new Collection(spark, path, cfg)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = jobsDuring {
       val e2 = warm.estimateCount(
         Some(Filter.mustAll(MatchValue("city", "Berlin"))))
       assert(e2 == est)
-      Thread.sleep(1500) // listener bus drain window
-      assert(jobs.get() == 0,
-        s"warm estimate ran ${jobs.get()} Spark jobs (expected 0)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"warm estimate ran $jobs Spark jobs (expected 0)")
     // IsNull is exact from the null stats
     assert(c.estimateCount(Some(Filter.mustAll(IsNullCond("price")))) ==
       graft.filters.Cardinality.CardEst(1L, 1L, 1L))
@@ -736,22 +728,14 @@ class StoreSpec extends SparkTestBase {
       cold.mkString(","))
     val warm = new Collection(spark, path, c.config)
     warm.facet(body).collect() // warm the fresh instance's sidecar read
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = jobsDuring {
       val again = warm.facet(body)
       // the frame is a driver-local relation: materializing it must not
       // launch any distributed work
       assert(again.collect().length == 3)
-      Thread.sleep(1500) // listener bus drain window
-      assert(jobs.get() == 0,
-        s"warm filtered facet estimate ran ${jobs.get()} Spark jobs (expected 0)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"warm filtered facet estimate ran $jobs Spark jobs (expected 0)")
   }
 
   test("sparse MMR under an IDF modifier weights the relevance like its prefetch") {
@@ -836,20 +820,12 @@ class StoreSpec extends SparkTestBase {
     assert(band.min <= 2L && 2L <= band.max)
     // warm: fresh instance, sidecar only, zero jobs
     val warm = new Collection(spark, path, shardCfg)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = jobsDuring {
       assert(warm.count("""{"shard_key": "sb", "exact": false}""")
         .head().getLong(0) == 1L)
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"warm shard estimate ran ${jobs.get()} Spark jobs (expected 0)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"warm shard estimate ran $jobs Spark jobs (expected 0)")
   }
 
   test("facet exact=false (the default) serves from the sidecar: exact top-K, zero jobs warm") {
@@ -869,21 +845,13 @@ class StoreSpec extends SparkTestBase {
     assert(exact == approx)
     // warm default-exact facet: zero Spark jobs (toDF on a driver Seq
     // plans locally; collect of a LocalRelation launches no job)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = jobsDuring {
       val warm = c.facet("""{"key": "city", "limit": 3}""")
         .collect().map(_.getString(0)).toSeq
       assert(warm == Seq("Berlin", "London", "Moscow"))
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"warm facet estimate ran ${jobs.get()} Spark jobs (expected 0)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"warm facet estimate ran $jobs Spark jobs (expected 0)")
     // filtered exact=false serves per-value ESTIMATES (approximate by
     // contract, like the reference's approx_facet); exact:true keeps the
     // scan's true counts
@@ -926,20 +894,12 @@ class StoreSpec extends SparkTestBase {
       .collect().map(r => (r.getBoolean(0), r.getLong(1))).toSeq
     assert(bools == Seq(true -> 3L, false -> 2L))
     // warm typed facets: zero Spark jobs — LocalRelation collect only
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = jobsDuring {
       c.facet("""{"key": "n", "limit": 3}""").collect()
       c.facet("""{"key": "hot", "limit": 2}""").collect()
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"warm typed facet estimate ran ${jobs.get()} Spark jobs (expected 0)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"warm typed facet estimate ran $jobs Spark jobs (expected 0)")
   }
 
   test("facet estimate falls back to the SCAN when the truncated head is " +
@@ -964,42 +924,34 @@ class StoreSpec extends SparkTestBase {
     val head1 = c.facet("""{"key": "n", "limit": 1}""")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(head1 == Seq(0L -> 3L))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // SAFE: the selected head ends above the boundary count → sidecar
+    // SAFE: the selected head ends above the boundary count → sidecar
+    val (jobs, _) = jobsDuring {
       assert(c.facet("""{"key": "n", "limit": 1}""")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
         Seq(0L -> 3L))
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"boundary-safe warm facet ran ${jobs.get()} Spark jobs (expected 0)")
-      // UNSAFE: limit 2 reaches the count-1 boundary tie → exact scan
-      // (jobs > 0), typed tie order picks the numerically smallest value
+    }
+    assert(jobs == 0,
+      s"boundary-safe warm facet ran $jobs Spark jobs (expected 0)")
+    // UNSAFE: limit 2 reaches the count-1 boundary tie → exact scan
+    // (jobs > 0), typed tie order picks the numerically smallest value
+    val (unsafeJobs, _) = jobsDuring {
       val unsafe = c.facet("""{"key": "n", "limit": 2}""")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      Thread.sleep(1500)
       assert(unsafe == Seq(0L -> 3L, 1L -> 1L), unsafe.mkString(","))
-      val afterUnsafe = jobs.get()
-      assert(afterUnsafe > 0,
-        "boundary-unsafe facet must fall back to the exact scan")
-      // FILTERED estimate on a truncated head (tailUnique > 0): must also
-      // take the scan — an unseen tail value could out-rank the head
+    }
+    assert(unsafeJobs > 0,
+      "boundary-unsafe facet must fall back to the exact scan")
+    // FILTERED estimate on a truncated head (tailUnique > 0): must also
+    // take the scan — an unseen tail value could out-rank the head
+    val (filteredJobs, _) = jobsDuring {
       val filtered = c.facet(
         """{"key": "n", "limit": 2,
           |  "filter": {"must": [{"key": "n", "range": {"gte": 1}}]}}""".stripMargin)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      Thread.sleep(1500)
       assert(filtered == Seq(1L -> 1L, 2L -> 1L), filtered.mkString(","))
-      assert(jobs.get() > afterUnsafe,
-        "filtered estimate over a truncated head must fall back to the scan")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(filteredJobs > 0,
+      "filtered estimate over a truncated head must fall back to the scan")
   }
 
   test("sparse IDF stats persist at ingest; the warm query path plans with zero Spark jobs") {
@@ -1022,32 +974,21 @@ class StoreSpec extends SparkTestBase {
     // warm path: a FRESH instance (cold cache) must build the IDF-weighted
     // plan purely from the sidecar — no count/aggregate job at plan time
     val warm = new Collection(spark, path, cfg)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        sites.add(Option(js.properties.getProperty("callSite.short")).getOrElse("?"))
-        ()
-      }
+    // baseline: a bare read() plan (parquet schema inference may itself
+    // run a small footer-reading job — that is not the IDF path)
+    val (baseline, baseSites) = jobsDuring(warm.read())
+    var plan: org.apache.spark.sql.DataFrame = null
+    val (planJobs, planSites) = jobsDuring {
+      plan = warm.knnSparse("txt", Seq(1, 9), Seq(1.0, 1.0), k = 2)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // baseline: a bare read() plan (parquet schema inference may itself
-      // run a small footer-reading job — that is not the IDF path)
-      warm.read()
-      Thread.sleep(1500) // listener bus drain window
-      val baseline = jobs.get()
-      val plan = warm.knnSparse("txt", Seq(1, 9), Seq(1.0, 1.0), k = 2)
-      Thread.sleep(1500)
-      assert(jobs.get() == 2 * baseline,
-        s"warm IDF plan construction ran ${jobs.get() - 2 * baseline} EXTRA " +
-          s"Spark jobs beyond the scan plan (expected 0): " +
-          sites.toArray.mkString(", "))
-      // and the weights are the persisted-stats weights
-      val top = plan.collect()
-      assert(top.nonEmpty)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = baseline + planJobs
+    assert(jobs == 2 * baseline,
+      s"warm IDF plan construction ran ${jobs - 2 * baseline} EXTRA " +
+        s"Spark jobs beyond the scan plan (expected 0): " +
+        (baseSites ++ planSites).mkString(", "))
+    // and the weights are the persisted-stats weights
+    val top = plan.collect()
+    assert(top.nonEmpty)
     // mutations refresh the sidecar: delete point 3 → df(9) drops out
     c.deleteByIds(Seq(3L))
     assert(c.sparseIdfStats("txt") == ((2L, Map(1 -> 2L, 5 -> 1L))))
@@ -1286,31 +1227,61 @@ class StoreSpec extends SparkTestBase {
     assert(err("""{"query": {"recommend": {"positive": [777, 5]}}}""")
       .contains("No point with id 777"))
     // happy path: many ids, ONE resolution job, examples excluded from hits
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = c.query(
+    var df: org.apache.spark.sql.DataFrame = null
+    val (resolveJobs, _) = jobsDuring {
+      df = c.query(
         """{"query": {"recommend": {"positive": [1, 2, 3], "negative": [4]}},
           |  "limit": 10}""".stripMargin)
-      // listener delivery is async: wait until the count is stable
-      var last = -1
-      var waited = 0
-      while (jobs.get() != last && waited < 5000) {
-        last = jobs.get(); Thread.sleep(200); waited += 200
+    }
+    assert(resolveJobs <= 2,
+      s"by-id resolution should be ONE bulk probe, saw $resolveJobs jobs")
+    val ids = df.collect().map(_.getLong(0)).toSet
+    assert(Set(1L, 2L, 3L, 4L).intersect(ids).isEmpty,
+      s"referenced ids must be excluded from results: $ids")
+    assert(ids.nonEmpty)
+  }
+
+  test("bulk by-id resolution past InProbeMaxIds probes by semi-join, not an IN over the cap") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    val n = Collection.InProbeMaxIds + 1
+    // second component id % 7: the five ids past the referenced range
+    // score distinctly against the average of the referenced vectors
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id", vectors = Seq(VectorConfig("", 2, Dot))),
+      spark.range(n + 5L).toDF("id")
+        .withColumn("vector", array(lit(1.0f), (col("id") % 7).cast("float"))))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.add(qe.optimizedPlan); ()
       }
-      val resolveJobs = jobs.get()
-      assert(resolveJobs <= 2,
-        s"by-id resolution should be ONE bulk probe, saw $resolveJobs jobs")
-      val ids = df.collect().map(_.getLong(0)).toSet
-      assert(Set(1L, 2L, 3L, 4L).intersect(ids).isEmpty,
-        s"referenced ids must be excluded from results: $ids")
-      assert(ids.nonEmpty)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df = try {
+      val q = c.query(s"""{"query": {"recommend": {"positive": [${
+        (0 until n).mkString(", ")}]}}, "limit": 3}""")
+      Thread.sleep(1500) // listener bus drain window
+      q
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "the by-id probe should have executed")
+    val inSizes = plans.toArray(Array.empty[LogicalPlan]).toSeq.flatMap(
+      _.flatMap(_.expressions).flatMap(_.collect {
+        case i: In => i.list.length
+        case i: InSet => i.hset.size
+      }))
+    assert(inSizes.forall(_ <= Collection.InProbeMaxIds),
+      s"IN lists over the cap were planned: ${inSizes.filter(_ > Collection.InProbeMaxIds)}")
+    // the average of the referenced vectors is (1, mean(id % 7)); the
+    // referenced ids themselves are excluded from the hits
+    val mean = (0 until n).map(_ % 7).sum.toDouble / n
+    val expect = Seq(n + 1L, n.toLong, n + 4L)
+      .map(id => id -> (1.0 + mean * (id % 7)))
+    val got = df.collect().map(r => r.getLong(0) -> r.getAs[Double]("score")).toSeq
+    assert(got.map(_._1) == expect.map(_._1), got.mkString(","))
+    got.zip(expect).foreach { case ((_, g), (_, e)) => assert(math.abs(g - e) < 1e-5) }
   }
 
   test("id widening is symmetric: numeric points onto a string-id table compare as strings") {
@@ -1489,21 +1460,12 @@ class StoreSpec extends SparkTestBase {
     // 2. warm stats on a FRESH instance: served from the persisted sidecar,
     //    ZERO Spark jobs
     val warm = new Collection(spark, path, cfg)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (jobs, _) = jobsDuring {
       val (n, dfs) = warm.sparseIdfStats("txt")
-      Thread.sleep(1500)
       assert((n, dfs) == ((3L, Map(1L -> 2L, 5L -> 2L, 9L -> 1L))))
-      assert(jobs.get() == 0,
-        s"warm sidecar read ran ${jobs.get()} Spark jobs (expected 0)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"warm sidecar read ran $jobs Spark jobs (expected 0)")
 
     // 3. a SCOPED upsert into tenant a refreshes ONLY a's partial. Proof by
     //    corruption: poison tenant b's stored partial; a scoped write must
