@@ -683,13 +683,8 @@ final class Collection(
     // are pruned at the directory listing, never scanned. It ANDs with the
     // payload filter on the same scan, and composes with the quantized
     // two-phase below (probe-pruned ADC + exact rescore = IVFADC).
-    val annPred: Option[Column] =
-      (if (exact) None else vc.ann).flatMap { spec =>
-        ivfModel(vectorName).map { m =>
-          val cells = m.probe(query, math.min(nprobe.getOrElse(spec.nprobe), m.k))
-          col(config.cellCol(vectorName)).isin(cells: _*)
-        }
-      }
+    val annPred: Option[Column] = probedCells(vectorName, query, exact, nprobe)
+      .map(cells => col(config.cellCol(vectorName)).isin(cells: _*))
     val pred = Some(annPred.foldLeft(
       filter.map(f => new FilterCompiler(resolver(df)).compile(f))
         .fold(guard)(_ && guard))(_ && _))
@@ -744,6 +739,18 @@ final class Collection(
           pred, k, offset, scoreThreshold)
     }
   }
+
+  /** The IVF cells a nearest search probes on a declared-IVF vector: the
+    * query's `nprobe` nearest centroids, `nprobe` being the request's
+    * `hnsw_ef` or else the declared default, capped at the cell count.
+    * None (scan every cell) for `exact`, an undeclared index or an
+    * untrained model. */
+  private def probedCells(vectorName: String, query: Seq[Double],
+      exact: Boolean, nprobe: Option[Int]): Option[Seq[Int]] =
+    (if (exact) None else config.vectorConfig(vectorName).ann).flatMap { spec =>
+      ivfModel(vectorName).map(m =>
+        m.probe(query, math.min(nprobe.getOrElse(spec.nprobe), m.k)))
+    }
 
   /** Config-routed sparse nearest-k over a named sparse vector column
     * (struct<indices: array<int>, values: array<float>>, sorted unique
@@ -918,13 +925,22 @@ final class Collection(
     * once; the reduction is map-side bounded ([[graft.ops.Search.batchRank]]
     * — ≤ k rows per mapper per query cross the wire). Float16/Uint8
     * currently support the Dot metric in batch form (the reference's
-    * dominant batch-scoring path). */
+    * dominant batch-scoring path).
+    *
+    * `filter` applies to every query. `cells` prunes a declared-IVF
+    * vector: it names the `queries` column holding each query's probed
+    * cells (`array<int>`) and gives the union of those cells. The scan
+    * reads only the union (a `PartitionFilters` entry), and each query is
+    * scored only over its own cells, so it ranks exactly the points
+    * [[knn]] would for it alone. */
   def knnBatch(
       vectorName: String,
       queries: DataFrame,
       queryIdCol: String,
       queryVecCol: String,
-      k: Int = 10): DataFrame = {
+      k: Int = 10,
+      filter: Option[Filter] = None,
+      cells: Option[(String, Seq[Int])] = None): DataFrame = {
     val vc = config.vectorConfig(vectorName)
     val stored = col(config.vectorCol(vectorName))
     val qv = col(queryVecCol)
@@ -939,8 +955,17 @@ final class Collection(
         throw new IllegalArgumentException(
           s"batch knn: unsupported datatype/metric combination $dt/$m")
     }
-    val scored = read().filter(stored.isNotNull).crossJoin(broadcast(queries))
-      .withColumn("score", round(score, 6))
+    val df = read()
+    val guard = stored.isNotNull
+    val cellCol = col(config.cellCol(vectorName))
+    val pred = filter.map(f => new FilterCompiler(resolver(df)).compile(f))
+      .fold(guard)(_ && guard)
+    val pairs = df.filter(cells.fold(pred) { case (_, union) =>
+      pred && cellCol.isin(union: _*)
+    }).crossJoin(broadcast(queries))
+    val scored = cells.fold(pairs) { case (qCells, _) =>
+      pairs.filter(array_contains(col(qCells), cellCol))
+    }.withColumn("score", round(score, 6))
     graft.ops.Search.batchRank(scored, queryIdCol, config.idCol, k,
       vc.metric.largerBetter)
   }
@@ -1162,14 +1187,29 @@ final class Collection(
       sparseLookupResolve: Option[
         (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])] = None)
       : DataFrame = {
-    import graft.api.RequestCodec
+    val q = bulkResolve(lookupCtx(lookupResolve, sparseLookupResolve))(c =>
+      graft.api.RequestCodec.parseQueryRequest(json, c))
+    enrich(executeParsed(admitted(q)), org.json4s.jackson.JsonMethods.parse(json))
+  }
+
+  /** [[wireCtx]] with a host's `lookup_from` resolvers installed. */
+  private def lookupCtx(
+      lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
+        => Either[Seq[Double], Seq[Seq[Double]]]],
+      sparseLookupResolve: Option[
+        (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])])
+      : graft.api.RequestCodec.Ctx = {
     val ctx0 = wireCtx
     val ctx1 = lookupResolve.fold(ctx0)(f => ctx0.copy(resolveLookup = f))
-    val ctx = sparseLookupResolve.fold(ctx1)(f =>
-      ctx1.copy(resolveSparseLookup = f))
-    val q = bulkResolve(ctx)(c => RequestCodec.parseQueryRequest(json, c))
-    val hits = executeParsed(q)
-    enrich(hits, org.json4s.jackson.JsonMethods.parse(json))
+    sparseLookupResolve.fold(ctx1)(f => ctx1.copy(resolveSparseLookup = f))
+  }
+
+  /** A request's `with_payload` asks for payload (the query API default
+    * is off). */
+  private def wantsPayload(o: org.json4s.JValue): Boolean = {
+    import org.json4s._
+    val wpJ = o \ "with_payload"
+    wpJ != JNothing && wpJ != JNull && wpJ != JBool(false)
   }
 
   /** `with_payload` / `with_vector` response enrichment (`ScoredPoint`
@@ -1178,11 +1218,9 @@ final class Collection(
     * set — the enrichment join never shuffles the big side. Defaults match
     * the reference's query API: payload and vector both OFF unless asked. */
   private def enrich(hits: DataFrame, o: org.json4s.JValue): DataFrame = {
-    import org.json4s._
     val wpJ = o \ "with_payload"
     val wvJ = o \ "with_vector"
-    val wantPayload = wpJ != JNothing && wpJ != JNull && wpJ != JBool(false) &&
-      hits.columns.contains(config.idCol) &&
+    val wantPayload = wantsPayload(o) && hits.columns.contains(config.idCol) &&
       !hits.columns.contains(config.payloadCol)
     // `true` returns EVERY declared vector, dense AND sparse (the
     // reference's `ScoredPoint.vector` carries the full named map); a
@@ -1211,8 +1249,9 @@ final class Collection(
     }
   }
 
-  private def executeParsed(q0: graft.ops.PointQuery.Query): DataFrame = {
-    import graft.ops.PointQuery
+  /** The gates a parsed request passes before it executes; returns the
+    * request with its referenced-id exclusion merged into the filter. */
+  private def admitted(q0: graft.ops.PointQuery.Query): graft.ops.PointQuery.Query = {
     // strict-mode gate BEFORE execution (`query_api.rs:31-110`,
     // `operations/verification/`): the declared collection limits reject
     // over-limit requests with the reference's 403 semantics. Runs on the
@@ -1221,13 +1260,22 @@ final class Collection(
     // reference injects after verification, `collection_query.rs:701-705`).
     config.strictMode.foreach(sm =>
       graft.api.StrictMode.verifyQuery(q0, sm, config.payloadTypes.keySet))
-    val q = PointQuery.resolveExclusion(q0)
+    val q = graft.ops.PointQuery.resolveExclusion(q0)
     // `params.idf` gate: the knob changes scoring, so it REJECTS anywhere
     // it cannot apply — only an idf-modified sparse space qualifies
     // (`query_context.rs:31-39`; `test_sparse_idf_corpus.py::
     // test_idf_params_require_idf_modifier`). Checked per node, root and
     // prefetches alike.
     verifyIdfParams(q)
+    q
+  }
+
+  /** Execute an [[admitted]] request: a plain Nearest root on a
+    * quantized or IVF vector takes [[knn]], a sparse root without prefetch
+    * or `params.idf` takes [[knnSparse]], everything else the DAG
+    * executor. */
+  private def executeParsed(q: graft.ops.PointQuery.Query): DataFrame = {
+    import graft.ops.PointQuery
     (q.scoring, q.prefetches) match {
       case (PointQuery.Nearest(vcol, _, qv), Nil)
           if config.vectors.exists(vc =>
@@ -1348,40 +1396,107 @@ final class Collection(
       lookupTable, lookupResolve, sparseLookupResolve)
 
   /** Legacy `/batch` forms (`SearchRequestBatch.searches`,
-    * `RecommendRequestBatch.searches`, `DiscoverRequestBatch.searches`) —
-    * results tagged by request position like [[queryBatch]]. */
-  def searchBatch(json: String, kind: String = "search"): DataFrame = {
-    val searches = graft.api.RequestCodec.arr(
-      org.json4s.jackson.JsonMethods.parse(json) \ "searches")
-    require(searches.nonEmpty, s"legacy $kind batch must carry at least one search")
-    searches.zipWithIndex.map { case (node, i) =>
-      query(graft.api.RequestCodec.legacyToQuery(
-        org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(node)), kind))
-        .withColumn("req", lit(i))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
+    * `RecommendRequestBatch.searches`, `DiscoverRequestBatch.searches`):
+    * each body rewrites to the universal query form and the batch runs
+    * like [[queryBatch]]. */
+  def searchBatch(json: String, kind: String = "search"): DataFrame =
+    runBatch(searchesOf(json, s"legacy $kind batch")
+      .map(graft.api.RequestCodec.legacyToQuery(_, kind)), wireCtx)
 
   /** `POST /collections/{c}/points/query/batch` (`QueryRequestBatch`):
-    * independent requests answered in one call, each through the same
-    * routing as [[query]] (fast paths included); results union tagged by
-    * request position in `req`. */
+    * independent requests answered in one call, like qdrant's
+    * `query_batch`. By-id inputs of the whole batch resolve through one
+    * probe. A *plain nearest* search — a Nearest root without prefetch on
+    * a Float32, non-multivector, unquantized vector, with `offset` 0, no
+    * `score_threshold`, and neither `with_payload` nor `with_vector` —
+    * shares one scan with the other plain nearest searches of the batch
+    * that have the same vector, filter, `exact`, `hnsw_ef` and `limit`
+    * ([[knnBatch]]; on a declared-IVF vector the scan reads the union of
+    * the group's probed cells). Every other search runs through the same
+    * routing as [[query]]. Either way each search gets the ids, scores and
+    * tie order [[query]] gives it. Rows are (id, score[, payload/vector
+    * columns], req), `req` being the search's position: grouped by
+    * ascending `req`, in rank order within each. */
   def queryBatch(json: String,
       lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
         => Either[Seq[Double], Seq[Seq[Double]]]] = None,
       sparseLookupResolve: Option[
         (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])] = None)
-      : DataFrame = {
-    import graft.api.RequestCodec
-    val searches = RequestCodec.arr(
-      org.json4s.jackson.JsonMethods.parse(json) \ "searches")
-    require(searches.nonEmpty, "query batch must carry at least one search")
-    searches.zipWithIndex.map { case (node, i) =>
-      query(org.json4s.jackson.JsonMethods.compact(
-        org.json4s.jackson.JsonMethods.render(node)), lookupResolve,
-        sparseLookupResolve)
-        .withColumn("req", lit(i))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+      : DataFrame =
+    runBatch(searchesOf(json, "query batch"),
+      lookupCtx(lookupResolve, sparseLookupResolve))
+
+  /** The `searches` bodies of a batch request, each as compact JSON. */
+  private def searchesOf(json: String, what: String): Seq[String] = {
+    import org.json4s.jackson.JsonMethods
+    val searches = graft.api.RequestCodec.arr(JsonMethods.parse(json) \ "searches")
+    require(searches.nonEmpty, s"$what must carry at least one search")
+    searches.map(n => JsonMethods.compact(JsonMethods.render(n)))
+  }
+
+  /** What the plain nearest searches of one shared scan have in common. */
+  private case class NearestGroupKey(vectorName: String, filter: Option[Filter],
+      exact: Boolean, hnswEf: Option[Int], limit: Int)
+
+  /** The shared-scan key and query vector of an [[admitted]] search, if it
+    * is plain nearest (see [[queryBatch]]). */
+  private def plainNearest(q: graft.ops.PointQuery.Query, o: org.json4s.JValue)
+      : Option[(NearestGroupKey, Seq[Double])] = q.scoring match {
+    case graft.ops.PointQuery.Nearest(vcol, _, qv)
+        if q.prefetches.isEmpty && q.offset == 0 && q.limit > 0 &&
+          q.scoreThreshold.isEmpty && !wantsPayload(o) &&
+          withVectorColsOf(o \ "with_vector").isEmpty =>
+      config.vectors.find(vc => config.vectorCol(vc.name) == vcol)
+        .filter(vc => vc.datatype == Float32 && !vc.multivector &&
+          vc.quantization.isEmpty)
+        .map { vc =>
+          val sp = q.params.getOrElse(graft.ops.PointQuery.SearchParams())
+          (NearestGroupKey(vc.name, q.filter, sp.exact, sp.hnswEf, q.limit), qv)
+        }
+    case _ => None
+  }
+
+  /** One scan for a group of plain nearest searches, given as (req, query
+    * vector): each probes its own IVF cells, the scan reads their union.
+    * Rows are (id, score, req, _rank). */
+  private def nearestGroup(key: NearestGroupKey,
+      members: Seq[(Int, Seq[Double])]): DataFrame = {
+    val cells = members.map { case (_, qv) =>
+      probedCells(key.vectorName, qv, key.exact, key.hnswEf)
+    }
+    val queries = spark.createDataFrame(members.zip(cells).map {
+      case ((req, qv), c) => (req, qv, c.getOrElse(Nil))
+    }).toDF("_req", "_qv", "_qcells")
+    knnBatch(key.vectorName, queries, "_req", "_qv", key.limit, key.filter,
+      if (cells.forall(_.isDefined))
+        Some(("_qcells", cells.flatten.flatten.distinct.sorted))
+      else None)
+      .select(col(config.idCol), col("score"), col("_req").as("req"),
+        col("rank").cast("long").as("_rank"))
+  }
+
+  /** [[queryBatch]] over parsed-out bodies. */
+  private def runBatch(bodies: Seq[String],
+      ctx: graft.api.RequestCodec.Ctx): DataFrame = {
+    val qs = bulkResolve(ctx)(c =>
+      bodies.map(graft.api.RequestCodec.parseQueryRequest(_, c))).map(admitted)
+    val wire = bodies.map(org.json4s.jackson.JsonMethods.parse(_))
+    val plain = qs.zip(wire).map { case (q, o) => plainNearest(q, o) }
+    val groups = plain.zipWithIndex
+      .collect { case (Some((key, qv)), req) => key -> (req, qv) }
+      .groupMap(_._1)(_._2).toSeq.filter(_._2.length > 1)
+    val grouped = groups.flatMap(_._2.map(_._1)).toSet
+    // a single search's rows arrive in rank order; the id keeps that order
+    val singles = qs.indices.filterNot(grouped).map(req =>
+      req -> enrich(executeParsed(qs(req)), wire(req))
+        .withColumn("req", lit(req))
+        .withColumn("_rank", monotonically_increasing_id()))
+    val shared = groups.map { case (key, members) =>
+      members.head._1 -> nearestGroup(key, members)
+    }
+    (singles ++ shared).sortBy(_._1).map(_._2)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .coalesce(1).sortWithinPartitions("req", "_rank").drop("_rank")
   }
 
   /** `POST /collections/{c}/points/count` (`count_api.rs:17`).

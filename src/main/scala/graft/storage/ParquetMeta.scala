@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) partition
   *    directories is listed by a Spark JOB: an unmemoized open of an IVF
   *    collection with 64 cell directories starts one ~290 ms job of 64
-  *    tasks (4 cores, 50k points), and an 8-query `queryBatch` opens it 8
-  *    times.
+  *    tasks (4 cores, 50k points), and a `queryBatch` opens it once per
+  *    shared nearest scan plus once per other search.
   * The query catalogs and the request paths re-open the same unchanged
   * tables and collection directories many times per call. At cluster scale
   * the same cost is an object-store LIST + footer GET per query against an

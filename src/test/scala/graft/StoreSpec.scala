@@ -1241,6 +1241,25 @@ class StoreSpec extends SparkTestBase {
     assert(ids.nonEmpty)
   }
 
+  test("a by-id query batch resolves every search's ids with one probe") {
+    val c = mk(tmpDir())
+    def byId(ids: Seq[Long]): String = ids
+      .map(id => s"""{"query": $id, "limit": 2}""")
+      .mkString("""{"searches": [""", ",", "]}")
+    c.queryBatch(byId(Seq(1L))).collect()
+    val (one, _) = jobsDuring(c.queryBatch(byId(Seq(1L))))
+    var df: org.apache.spark.sql.DataFrame = null
+    val (four, sites) = jobsDuring { df = c.queryBatch(byId(Seq(1L, 2L, 3L, 1L))) }
+    assert(one >= 1, "the by-id probe should run eagerly")
+    assert(four == one,
+      s"4-search by-id batch ran $four eager jobs, a 1-search batch $one: $sites")
+    // each search still excludes only its own referenced id
+    val hits = df.collect().map(r => r.getAs[Int]("req") -> r.getAs[Long]("id"))
+    assert(hits.groupMap(_._1)(_._2).map { case (req, ids) =>
+      req -> ids.toSet }.toSeq.sortBy(_._1) ==
+      Seq(0 -> Set(2L, 3L), 1 -> Set(1L, 3L), 2 -> Set(1L, 2L), 3 -> Set(2L, 3L)))
+  }
+
   test("bulk by-id resolution past InProbeMaxIds probes by semi-join, not an IN over the cap") {
     import org.apache.spark.sql.catalyst.expressions.{In, InSet}
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
