@@ -91,6 +91,13 @@ trait FieldResolver {
     * the reference posting EVERY point of an array value into its geohash
     * postings (`field_index/geo_index/mod.rs`). */
   def geoIndexCells(key: String): Option[Column] = None
+
+  /** The raw JSON payload column and the type `key`'s values read as, when
+    * a match or range condition on `key` may first stream-scan the raw
+    * text for its one scalar ([[PayloadScalar]]) and parse only the rows
+    * that scan cannot decide. Defined by a raw-payload [[JsonResolver]] on
+    * a plain dotted key; None everywhere else. */
+  def rawPayload(key: String): Option[(Column, DataType)] = None
 }
 
 object FieldResolver {
@@ -129,6 +136,8 @@ class ForwardingResolver(private[filters] val inner: FieldResolver)
     inner.geoIndexCell(key)
   override def geoIndexCells(key: String): Option[Column] =
     inner.geoIndexCells(key)
+  override def rawPayload(key: String): Option[(Column, DataType)] =
+    inner.rawPayload(key)
 }
 
 /** Resolver for collections whose payload fields are typed top-level columns
@@ -261,9 +270,50 @@ final class FilterCompiler(
 
   def condition(c: Condition): Column =
     scalarPushable(c).getOrElse {
-      val base = coalesce(cond0(c), lit(false))
+      // the streamed scalar decides the rows it can, cond0 every other row
+      val base = coalesce(streamed(c).toSeq ++ Seq(cond0(c), lit(false)): _*)
       geoPrune(c).fold(base)(_ && base)
     }
+
+  /** Streaming fast path over a raw JSON payload: the condition's own
+    * predicate applied to the key's one scalar as [[PayloadScalar]] reads
+    * it. The read is NULL whenever the key does not hold exactly one JSON
+    * scalar of the compared kind (or the document would not parse), and a
+    * comparison with NULL is NULL, so [[condition]]'s `coalesce` hands
+    * those rows to the VARIANT path. Where it is not NULL, the scalar is the
+    * value the VARIANT path compares, so both paths agree on every row:
+    *  - string literals on a string key read a JSON string;
+    *  - integer literals or numeric bounds on an integer key read a JSON
+    *    integer that fits a long;
+    *  - numeric bounds on a string or float key read any JSON number as a
+    *    double (a string element is cast to double by the comparison).
+    * Any other literal kind or declared type keeps the VARIANT path alone. */
+  private def streamed(c: Condition): Option[Column] = {
+    def all(vs: Seq[Any])(p: Any => Boolean) = vs.nonEmpty && vs.forall(p)
+    def isInt(v: Any) = v match { case _: Long | _: Int => true; case _ => false }
+    // a match reads the kind of its literals, on a key of that type
+    def matchKind(vs: Seq[Any]): PartialFunction[DataType, Int] = {
+      case LongType if all(vs)(isInt) => PayloadScan.Lng
+      case StringType if all(vs)(_.isInstanceOf[String]) => PayloadScan.Str
+    }
+    val rangeKind: PartialFunction[DataType, Int] = {
+      case LongType => PayloadScan.Lng
+      case StringType | DoubleType => PayloadScan.Dbl
+    }
+    def read(k: String, kind: PartialFunction[DataType, Int])(
+        pred: Column => Column): Option[Column] =
+      r.rawPayload(k).flatMap { case (payload, t) =>
+        kind.lift(t).map(kd => pred(PayloadScalar.column(payload, k, kd)))
+      }
+    c match {
+      case MatchValue(k, v) => read(k, matchKind(Seq(v)))(_ === lit(v))
+      case MatchAny(k, vs) => read(k, matchKind(vs))(_.isin(vs: _*))
+      case RangeCond(k, gt, gte, lt, lte)
+          if all(Seq(gt, gte, lt, lte).flatten)(v => isInt(v) || v.isInstanceOf[Double]) =>
+        read(k, rangeKind)(v => rangeBounds(v, r.dataTypeOf(k), gt, gte, lt, lte))
+      case _ => None
+    }
+  }
 
   /** Geo conditions on a key with a declared geo index AND a bounded
     * geohash cell-membership conjunct in FRONT of the exact strict check

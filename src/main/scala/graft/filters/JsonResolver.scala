@@ -17,6 +17,9 @@ import org.apache.spark.sql.types._
   *
   * Implementation: Spark 4 VARIANT — `parse_json` once, `try_variant_get`
   * per key; `is_variant_null` distinguishes explicit JSON null from absence.
+  * A raw (not `preParsed`) resolver also offers [[rawPayload]], so match and
+  * range conditions on plain keys first try a streaming scalar read
+  * ([[PayloadScalar]]) and parse only the rows it leaves undecided.
   */
 final class JsonResolver(
     payloadCol: Column,
@@ -162,6 +165,12 @@ final class JsonResolver(
 
   def id: Column = idColumn
   def vector(name: String): Column = vectorCols.getOrElse(name, lit(null))
+
+  /** The unparsed payload and the values' read type `t` for a plain dotted
+    * key; a pre-parsed resolver has no raw text to scan. */
+  override def rawPayload(key: String): Option[(Column, DataType)] =
+    if (preParsed || !PayloadScan.plainKey(key)) None
+    else Some((payloadCol, types.getOrElse(key, StringType)))
 
   override def dataTypeOf(key: String): Option[DataType] = types.get(key).map {
     case ArrayType(e, _) => e

@@ -43,6 +43,17 @@ abstract class VecBinaryFold extends BinaryExpression with ImplicitCastInputType
   /** Java source for one step: acc += f(a, b) given double a, b. */
   protected def stepCode(acc: String, a: String, b: String): String
   protected def step(acc: Double, a: Double, b: Double): Double
+  /** The step as a [[VecKernels.foldLit]] selector. */
+  protected def kind: Int
+
+  /** The right side as primitive doubles when it is a foldable literal (a
+    * search's query vector), read with the same element accessor the
+    * generated loop uses. */
+  @transient private lazy val literalQuery: Option[Array[Double]] =
+    VecKernels.literal(right).map { q =>
+      val rf = elemIsFloat(right)
+      Array.tabulate(q.numElements())(i => if (rf) q.getFloat(i).toDouble else q.getDouble(i))
+    }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val la = l.asInstanceOf[ArrayData]
@@ -60,7 +71,22 @@ abstract class VecBinaryFold extends BinaryExpression with ImplicitCastInputType
     acc
   }
 
+  /** A literal query calls the static [[VecKernels.foldLit]], which the JIT
+    * compiles once for every request's generated class (a by-id request
+    * inlines its excluded ids, so each one compiles a fresh class, whose
+    * own loop would start out interpreted). Column against column keeps
+    * the generated loop, measured faster there. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    literalQuery match {
+      case Some(q) =>
+        val ref = ctx.addReferenceObj("query", q, "double[]")
+        val lf = elemIsFloat(left)
+        nullSafeCodeGen(ctx, ev, (l, _) =>
+          s"${ev.value} = graft.functions.VecKernels.foldLit($l, $lf, $ref, $kind);")
+      case None => loopCode(ctx, ev)
+    }
+
+  private def loopCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
@@ -84,6 +110,7 @@ abstract class VecBinaryFold extends BinaryExpression with ImplicitCastInputType
 
 /** Σ aᵢ·bᵢ */
 case class VecDot(left: Expression, right: Expression) extends VecBinaryFold {
+  protected def kind: Int = VecKernels.DotKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += $a * $b;"
   protected def step(acc: Double, a: Double, b: Double): Double = acc + a * b
@@ -93,6 +120,7 @@ case class VecDot(left: Expression, right: Expression) extends VecBinaryFold {
 
 /** Σ (aᵢ−bᵢ)² */
 case class VecL2Sq(left: Expression, right: Expression) extends VecBinaryFold {
+  protected def kind: Int = VecKernels.L2SqKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += ($a - $b) * ($a - $b);"
   protected def step(acc: Double, a: Double, b: Double): Double =
@@ -103,6 +131,7 @@ case class VecL2Sq(left: Expression, right: Expression) extends VecBinaryFold {
 
 /** Σ |aᵢ−bᵢ| */
 case class VecL1(left: Expression, right: Expression) extends VecBinaryFold {
+  protected def kind: Int = VecKernels.L1Kind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += java.lang.Math.abs($a - $b);"
   protected def step(acc: Double, a: Double, b: Double): Double =
@@ -146,6 +175,71 @@ case class CentroidArgmin(child: Expression, centroids: Seq[Seq[Double]])
 
 object VecKernels {
   private def expr(c: Column) = GraftShim.expression(c)
+
+  /** Step selectors of the literal-query kernels: Σ a·b, Σ (a−b)², Σ |a−b|. */
+  final val DotKind = 0
+  final val L2SqKind = 1
+  final val L1Kind = 2
+
+  /** A fold's right side evaluated once when it is a non-null foldable
+    * literal (a search's query vector), else None. */
+  private[functions] def literal(e: Expression): Option[ArrayData] =
+    if (!e.foldable) None else Option(e.eval().asInstanceOf[ArrayData])
+
+  /** Literal-query kernel of [[VecBinaryFold]]: the same sequential double
+    * fold over min(|v|, |q|) elements as the generated loop, so scores are
+    * bit-identical. */
+  def foldLit(v: ArrayData, isFloat: Boolean, q: Array[Double], kind: Int): Double = {
+    val n = math.min(v.numElements(), q.length)
+    var acc = 0.0
+    var i = 0
+    if (isFloat) kind match {
+      case DotKind => while (i < n) { acc += v.getFloat(i).toDouble * q(i); i += 1 }
+      case L2SqKind =>
+        while (i < n) { val d = v.getFloat(i).toDouble - q(i); acc += d * d; i += 1 }
+      case _ => while (i < n) { acc += math.abs(v.getFloat(i).toDouble - q(i)); i += 1 }
+    } else kind match {
+      case DotKind => while (i < n) { acc += v.getDouble(i) * q(i); i += 1 }
+      case L2SqKind => while (i < n) { val d = v.getDouble(i) - q(i); acc += d * d; i += 1 }
+      case _ => while (i < n) { acc += math.abs(v.getDouble(i) - q(i)); i += 1 }
+    }
+    acc
+  }
+
+  /** Literal-query kernel of [[VecF16Fold]]: halves decode inline. */
+  def f16FoldLit(halfBits: ArrayData, q: Array[Double], kind: Int): Double = {
+    val n = math.min(halfBits.numElements(), q.length)
+    var acc = 0.0
+    var i = 0
+    kind match {
+      case DotKind =>
+        while (i < n) { acc += F16.toFloat(halfBits.getShort(i)).toDouble * q(i); i += 1 }
+      case L2SqKind =>
+        while (i < n) {
+          val d = F16.toFloat(halfBits.getShort(i)).toDouble - q(i); acc += d * d; i += 1
+        }
+      case _ =>
+        while (i < n) {
+          acc += math.abs(F16.toFloat(halfBits.getShort(i)).toDouble - q(i)); i += 1
+        }
+    }
+    acc
+  }
+
+  /** Literal-query kernel of [[VecU8Fold]]: exact long arithmetic over the
+    * u8 values (`q` holds the query bytes already masked to 0..255). */
+  def u8FoldLit(v: ArrayData, q: Array[Long], kind: Int): Long = {
+    val n = math.min(v.numElements(), q.length)
+    var acc = 0L
+    var i = 0
+    kind match {
+      case DotKind => while (i < n) { acc += (v.getByte(i).toLong & 0xFFL) * q(i); i += 1 }
+      case L2SqKind =>
+        while (i < n) { val d = (v.getByte(i).toLong & 0xFFL) - q(i); acc += d * d; i += 1 }
+      case _ => while (i < n) { acc += math.abs((v.getByte(i).toLong & 0xFFL) - q(i)); i += 1 }
+    }
+    acc
+  }
 
   /** Kernel for [[CentroidArgmin]]: sequential-double L2 per centroid,
     * first index of the minimum (ties keep the earlier centroid, matching
@@ -484,6 +578,13 @@ abstract class VecF16Fold extends BinaryExpression {
   /** Java source for one step given double a (decoded half), b. */
   protected def stepCode(acc: String, a: String, b: String): String
   protected def step(acc: Double, a: Double, b: Double): Double
+  /** The step as a [[VecKernels.f16FoldLit]] selector. */
+  protected def kind: Int
+
+  @transient private lazy val literalQuery: Option[Array[Double]] =
+    VecKernels.literal(right).map { q =>
+      Array.tabulate(q.numElements())(i => if (rIsFloat) q.getFloat(i).toDouble else q.getDouble(i))
+    }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val la = l.asInstanceOf[ArrayData]
@@ -498,7 +599,17 @@ abstract class VecF16Fold extends BinaryExpression {
     }
     acc
   }
+  /** Literal query: the static kernel (see [[VecBinaryFold]]). */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    literalQuery match {
+      case Some(q) =>
+        val ref = ctx.addReferenceObj("query", q, "double[]")
+        nullSafeCodeGen(ctx, ev, (l, _) =>
+          s"${ev.value} = graft.functions.VecKernels.f16FoldLit($l, $ref, $kind);")
+      case None => loopCode(ctx, ev)
+    }
+
+  private def loopCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
@@ -521,6 +632,7 @@ abstract class VecF16Fold extends BinaryExpression {
 
 /** Σ half(aᵢ)·bᵢ */
 case class VecF16Dot(left: Expression, right: Expression) extends VecF16Fold {
+  protected def kind: Int = VecKernels.DotKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += $a * $b;"
   protected def step(acc: Double, a: Double, b: Double): Double = acc + a * b
@@ -530,6 +642,7 @@ case class VecF16Dot(left: Expression, right: Expression) extends VecF16Fold {
 
 /** Σ (half(aᵢ)−bᵢ)² */
 case class VecF16L2Sq(left: Expression, right: Expression) extends VecF16Fold {
+  protected def kind: Int = VecKernels.L2SqKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += ($a - $b) * ($a - $b);"
   protected def step(acc: Double, a: Double, b: Double): Double =
@@ -540,6 +653,7 @@ case class VecF16L2Sq(left: Expression, right: Expression) extends VecF16Fold {
 
 /** Σ |half(aᵢ)−bᵢ| */
 case class VecF16L1(left: Expression, right: Expression) extends VecF16Fold {
+  protected def kind: Int = VecKernels.L1Kind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += java.lang.Math.abs($a - $b);"
   protected def step(acc: Double, a: Double, b: Double): Double =
@@ -629,6 +743,11 @@ abstract class VecU8Fold extends BinaryExpression {
   /** Java source for one step given long a, b. */
   protected def stepCode(acc: String, a: String, b: String): String
   protected def step(acc: Long, a: Long, b: Long): Long
+  /** The step as a [[VecKernels.u8FoldLit]] selector. */
+  protected def kind: Int
+
+  @transient private lazy val literalQuery: Option[Array[Long]] =
+    VecKernels.literal(right).map(q => Array.tabulate(q.numElements())(i => q.getByte(i).toLong & 0xFFL))
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val la = l.asInstanceOf[ArrayData]
@@ -642,7 +761,17 @@ abstract class VecU8Fold extends BinaryExpression {
     }
     acc
   }
+  /** Literal query: the static kernel (see [[VecBinaryFold]]). */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    literalQuery match {
+      case Some(q) =>
+        val ref = ctx.addReferenceObj("query", q, "long[]")
+        nullSafeCodeGen(ctx, ev, (l, _) =>
+          s"${ev.value} = graft.functions.VecKernels.u8FoldLit($l, $ref, $kind);")
+      case None => loopCode(ctx, ev)
+    }
+
+  private def loopCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
@@ -666,6 +795,7 @@ abstract class VecU8Fold extends BinaryExpression {
   * the RAW 0..255 values, matching the reference's byte metrics
   * (`lib/segment/src/spaces/metric_uint/`). */
 case class VecU8Dot(left: Expression, right: Expression) extends VecU8Fold {
+  protected def kind: Int = VecKernels.DotKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += $a * $b;"
   protected def step(acc: Long, a: Long, b: Long): Long = acc + a * b
@@ -674,6 +804,7 @@ case class VecU8Dot(left: Expression, right: Expression) extends VecU8Fold {
 }
 
 case class VecU8L2Sq(left: Expression, right: Expression) extends VecU8Fold {
+  protected def kind: Int = VecKernels.L2SqKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += ($a - $b) * ($a - $b);"
   protected def step(acc: Long, a: Long, b: Long): Long = acc + (a - b) * (a - b)
@@ -682,6 +813,7 @@ case class VecU8L2Sq(left: Expression, right: Expression) extends VecU8Fold {
 }
 
 case class VecU8L1(left: Expression, right: Expression) extends VecU8Fold {
+  protected def kind: Int = VecKernels.L1Kind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += java.lang.Math.abs($a - $b);"
   protected def step(acc: Long, a: Long, b: Long): Long = acc + math.abs(a - b)

@@ -173,6 +173,8 @@ final class Collection(
             else base.dataTypeOf(key)
           override def geoValues(key: String): Column =
             if (key == sk) values(key) else base.geoValues(key)
+          override def rawPayload(key: String) =
+            if (key == sk) None else base.rawPayload(key)
         }
     }
   }

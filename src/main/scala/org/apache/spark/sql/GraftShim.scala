@@ -3,9 +3,9 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` Column↔Expression conversions (Spark 4 moved
-  * the classic constructors behind the connect/classic split). Only used by
-  * graft.functions.VecKernels to expose custom codegen expressions as
-  * Columns. */
+  * the classic constructors behind the connect/classic split). Used by
+  * graft.functions.VecKernels and graft.filters.PayloadScalar to expose
+  * custom codegen expressions as Columns. */
 object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

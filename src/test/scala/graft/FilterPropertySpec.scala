@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.filters.{FilterCompiler, JsonResolver}
+import graft.filters.{FilterCompiler, JsonResolver, PayloadScalar}
 import graft.model._
 
 /** Property-based filter-algebra fidelity (the reference's proptest
@@ -55,16 +55,57 @@ class FilterPropertySpec extends SparkTestBase {
     parts.mkString("{", ",", "}")
   }
 
+  // Raw payloads the streaming scalar read (`filters.PayloadScan`)
+  // must decline or decide exactly as the VARIANT path does, each with the
+  // values the engine reads from it. Documents try_parse_json rejects read
+  // as all-absent.
+  private def absent(id: Long): Row4 = (id, None, None, None, Seq())
+  private val edgeDocs: Seq[(String, Row4)] = Seq(
+    ("""{"city":"Berlin","price":9.0,"city":"Paris"}""", absent(11L)), // duplicate key
+    ("""{"city":"Paris","items":[{"q":1.0,"tag":"x","tag":"y"}]}""", absent(12L)), // nested
+    ("""{"city":"Rome","meta":{"a":1,"b":{"a":2,"a":3}}}""", absent(13L)), // nested
+    ("""{"city":"Berlin","price":10.0""", absent(14L)), // malformed
+    // trailing text: try_parse_json reads the first document
+    ("""{"city":"London","price":9.5} {"city":"Paris"}""", (15L, Some("London"), Some(9.5), None, Seq())),
+    // a numeric string on a float key reads as its number (a VARIANT cast)
+    ("""{"city":"Rome","price":"5"}""", (16L, Some("Rome"), Some(5.0), None, Seq())),
+    ("""{"city":"5","price":5}""", (17L, Some("5"), Some(5.0), None, Seq())),
+    ("""{"price":5.0,"bio":"fox"}""", (18L, None, Some(5.0), Some("fox"), Seq())),
+    ("""{"price":5e0,"city":"Moscow"}""", (19L, Some("Moscow"), Some(5.0), None, Seq())),
+    ("""{"price":123456789012345678901234567890,"city":"Berlin"}""",
+      (20L, Some("Berlin"), Some(BigDecimal("123456789012345678901234567890").toDouble), None, Seq())),
+    ("""{"price":-9223372036854775809,"city":"London"}""", // below Long.MinValue
+      (21L, Some("London"), Some(BigDecimal("-9223372036854775809").toDouble), None, Seq())),
+    // JSON escapes: a quote, two ASCII code points, one non-ASCII
+    ("{\"city\":\"Lo\\\"ndon\\u0021\",\"bio\":\"quick \\u0066ox\"}",
+      (22L, Some("Lo\"ndon!"), None, Some("quick fox"), Seq())),
+    ("{\"city\":\"Z\\u00fcrich\",\"price\":11.0}", (23L, Some("Z\u00fcrich"), Some(11.0), None, Seq())),
+    ("{\"city\":\"Paris \u00e9t\u00e9\",\"bio\":\"the fox\"}", // raw non-ASCII
+      (24L, Some("Paris \u00e9t\u00e9"), None, Some("the fox"), Seq())),
+    ("""{"city":null,"price":null,"bio":null}""", (25L, Some(null), Some(null), Some(null), Seq())),
+    ("""{"city":[],"price":[],"bio":"dog"}""", (26L, Some(Seq()), Some(Seq()), Some("dog"), Seq())),
+    ("""{"city":"Berlin","price":{"v":10.0}}""", (27L, Some("Berlin"), Some(Map("v" -> 10.0)), None, Seq())),
+    ("""{"bio":"brown dog","price":{"price":9.5},"items":[{"q":5.0,"tag":"x"}]}""",
+      (28L, None, Some(Map("price" -> 9.5)), Some("brown dog"), Seq((5.0, "x")))),
+  )
+
+  private lazy val allRows: Seq[Row4] = rows ++ edgeDocs.map(_._2)
+
   private lazy val df: DataFrame = {
     import spark.implicits._
-    rows.map { case (id, c, p, b, it) => (id, jsonOf(c, p, b, it)) }
+    (rows.map { case (id, c, p, b, it) => (id, jsonOf(c, p, b, it)) } ++
+      edgeDocs.map { case (json, row) => (row._1, json) })
       .toDF("id", "payload").cache()
   }
 
-  private lazy val resolver = new JsonResolver(
-    col("payload"),
-    Map("city" -> StringType, "price" -> DoubleType, "bio" -> StringType,
-      "items.q" -> DoubleType, "items.tag" -> StringType), col("id"))
+  private val types = Map("city" -> StringType, "price" -> DoubleType, "bio" -> StringType,
+    "items.q" -> DoubleType, "items.tag" -> StringType)
+
+  private lazy val resolver = new JsonResolver(col("payload"), types, col("id"))
+
+  /** The VARIANT-only path: the same conditions over a parsed payload. */
+  private lazy val parsedResolver =
+    new JsonResolver(col("parsed"), types, col("id"), preParsed = true)
 
   // ---- reference evaluator (independent of the Spark path) ----
 
@@ -93,12 +134,14 @@ class FilterPropertySpec extends SparkTestBase {
       case _ => false
     }
 
-  private def inRange(v: Double, gt: Option[Any], gte: Option[Any],
-      lt: Option[Any], lte: Option[Any]): Boolean =
+  private def inRange(v0: Any, gt: Option[Any], gte: Option[Any],
+      lt: Option[Any], lte: Option[Any]): Boolean = v0.isInstanceOf[Double] && {
+    val v = v0.asInstanceOf[Double]
     gt.forall(b => v > b.asInstanceOf[Double]) &&
       gte.forall(b => v >= b.asInstanceOf[Double]) &&
       lt.forall(b => v < b.asInstanceOf[Double]) &&
       lte.forall(b => v <= b.asInstanceOf[Double])
+  }
 
   private def evalCond(row: Row4, c: Condition): Boolean =
     c match {
@@ -121,7 +164,7 @@ class FilterPropertySpec extends SparkTestBase {
       case MatchPrefix(k, p) =>
         valuesOf(row, k).exists(_.asInstanceOf[String].startsWith(p))
       case RangeCond(k, gt, gte, lt, lte) =>
-        valuesOf(row, k).exists(v => inRange(v.asInstanceOf[Double], gt, gte, lt, lte))
+        valuesOf(row, k).exists(v => inRange(v, gt, gte, lt, lte))
       case ValuesCount(k, gt, gte, lt, lte) =>
         val n = valuesOf(row, k).size.toLong
         gt.forall(n > _) && gte.forall(n >= _) && lt.forall(n < _) && lte.forall(n <= _)
@@ -216,18 +259,44 @@ class FilterPropertySpec extends SparkTestBase {
     } yield Filter(must.take(nMust), should.take(nShould), minShould, mustNot.take(nNot))
   }
 
+  // deterministic sampling: fixed seeds, so failures reproduce exactly
+  private lazy val filters: Seq[Filter] = {
+    val gen = genFilter(2)
+    (1 to 60).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i.toLong)))
+  }
+
+  private def ids(d: DataFrame, pred: org.apache.spark.sql.Column): Set[Long] =
+    d.filter(pred).select("id").collect().map(_.getLong(0)).toSet
+
   test("compiled filters agree with the reference evaluator on every row") {
     val compiler = new FilterCompiler(resolver)
-    val gen = genFilter(2)
-    // deterministic sampling: fixed seeds, so failures reproduce exactly
-    val filters = (1 to 60).flatMap(i =>
-      gen.apply(Gen.Parameters.default, Seed(i.toLong)))
     assert(filters.size >= 55, "generator failed too often")
     for (f <- filters) {
-      val got = df.filter(compiler.compile(f))
-        .select("id").collect().map(_.getLong(0)).toSet
-      val expect = rows.filter(evalFilter(_, f)).map(_._1).toSet
+      val got = ids(df, compiler.compile(f))
+      val expect = allRows.filter(evalFilter(_, f)).map(_._1).toSet
       assert(got == expect, s"\nfilter: $f\nspark: $got\nmodel: $expect")
+    }
+  }
+
+  test("streamed payload scalars agree with the VARIANT-only path on every row") {
+    val raw = new FilterCompiler(resolver)
+    val parsed = new FilterCompiler(parsedResolver)
+    val withParsed = df.withColumn("parsed", try_parse_json(col("payload")))
+    // the match and range leaves the stream reads, beside the whole trees
+    val leaves = Seq[Condition](
+      MatchValue("city", "Berlin"), MatchValue("city", "5"), MatchValue("city", "Lo\"ndon!"),
+      MatchValue("city", "Z\u00fcrich"), MatchAny("city", Seq("Rome", "Paris \u00e9t\u00e9", "London")),
+      RangeCond("price", gte = Some(5.0), lte = Some(5.0)), RangeCond("price", gt = Some(1e20)),
+      RangeCond("price", lt = Some(-1e18)), RangeCond("price", gte = Some(9L), lt = Some(10L)),
+      NestedCond("items", Filter(must = Seq(MatchValue("tag", "x"), RangeCond("q", gte = Some(5.0))))))
+    val planned = df.filter(raw.compile(Filter(must = Seq(MatchValue("city", "Berlin")))))
+      .queryExecution.optimizedPlan
+    assert(planned.exists(_.expressions.exists(_.exists(_.isInstanceOf[PayloadScalar]))),
+      "a raw-payload match must read the streamed scalar:\n" + planned)
+    for (f <- leaves.map(c => Filter(must = Seq(c))) ++ filters) {
+      val fast = ids(withParsed, raw.compile(f))
+      val variant = ids(withParsed, parsed.compile(f))
+      assert(fast == variant, s"\nfilter: $f\nstreamed: $fast\nvariant: $variant")
     }
   }
 }
