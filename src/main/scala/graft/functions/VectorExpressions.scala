@@ -206,41 +206,6 @@ object VecKernels {
     acc
   }
 
-  /** Literal-query kernel of [[VecF16Fold]]: halves decode inline. */
-  def f16FoldLit(halfBits: ArrayData, q: Array[Double], kind: Int): Double = {
-    val n = math.min(halfBits.numElements(), q.length)
-    var acc = 0.0
-    var i = 0
-    kind match {
-      case DotKind =>
-        while (i < n) { acc += F16.toFloat(halfBits.getShort(i)).toDouble * q(i); i += 1 }
-      case L2SqKind =>
-        while (i < n) {
-          val d = F16.toFloat(halfBits.getShort(i)).toDouble - q(i); acc += d * d; i += 1
-        }
-      case _ =>
-        while (i < n) {
-          acc += math.abs(F16.toFloat(halfBits.getShort(i)).toDouble - q(i)); i += 1
-        }
-    }
-    acc
-  }
-
-  /** Literal-query kernel of [[VecU8Fold]]: exact long arithmetic over the
-    * u8 values (`q` holds the query bytes already masked to 0..255). */
-  def u8FoldLit(v: ArrayData, q: Array[Long], kind: Int): Long = {
-    val n = math.min(v.numElements(), q.length)
-    var acc = 0L
-    var i = 0
-    kind match {
-      case DotKind => while (i < n) { acc += (v.getByte(i).toLong & 0xFFL) * q(i); i += 1 }
-      case L2SqKind =>
-        while (i < n) { val d = (v.getByte(i).toLong & 0xFFL) - q(i); acc += d * d; i += 1 }
-      case _ => while (i < n) { acc += math.abs((v.getByte(i).toLong & 0xFFL) - q(i)); i += 1 }
-    }
-    acc
-  }
-
   /** Kernel for [[CentroidArgmin]]: sequential-double L2 per centroid,
     * first index of the minimum (ties keep the earlier centroid, matching
     * `array_position(arr, array_min(arr)) - 1`). */
@@ -578,13 +543,6 @@ abstract class VecF16Fold extends BinaryExpression {
   /** Java source for one step given double a (decoded half), b. */
   protected def stepCode(acc: String, a: String, b: String): String
   protected def step(acc: Double, a: Double, b: Double): Double
-  /** The step as a [[VecKernels.f16FoldLit]] selector. */
-  protected def kind: Int
-
-  @transient private lazy val literalQuery: Option[Array[Double]] =
-    VecKernels.literal(right).map { q =>
-      Array.tabulate(q.numElements())(i => if (rIsFloat) q.getFloat(i).toDouble else q.getDouble(i))
-    }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val la = l.asInstanceOf[ArrayData]
@@ -599,17 +557,7 @@ abstract class VecF16Fold extends BinaryExpression {
     }
     acc
   }
-  /** Literal query: the static kernel (see [[VecBinaryFold]]). */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    literalQuery match {
-      case Some(q) =>
-        val ref = ctx.addReferenceObj("query", q, "double[]")
-        nullSafeCodeGen(ctx, ev, (l, _) =>
-          s"${ev.value} = graft.functions.VecKernels.f16FoldLit($l, $ref, $kind);")
-      case None => loopCode(ctx, ev)
-    }
-
-  private def loopCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
@@ -632,7 +580,6 @@ abstract class VecF16Fold extends BinaryExpression {
 
 /** Σ half(aᵢ)·bᵢ */
 case class VecF16Dot(left: Expression, right: Expression) extends VecF16Fold {
-  protected def kind: Int = VecKernels.DotKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += $a * $b;"
   protected def step(acc: Double, a: Double, b: Double): Double = acc + a * b
@@ -642,7 +589,6 @@ case class VecF16Dot(left: Expression, right: Expression) extends VecF16Fold {
 
 /** Σ (half(aᵢ)−bᵢ)² */
 case class VecF16L2Sq(left: Expression, right: Expression) extends VecF16Fold {
-  protected def kind: Int = VecKernels.L2SqKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += ($a - $b) * ($a - $b);"
   protected def step(acc: Double, a: Double, b: Double): Double =
@@ -653,7 +599,6 @@ case class VecF16L2Sq(left: Expression, right: Expression) extends VecF16Fold {
 
 /** Σ |half(aᵢ)−bᵢ| */
 case class VecF16L1(left: Expression, right: Expression) extends VecF16Fold {
-  protected def kind: Int = VecKernels.L1Kind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += java.lang.Math.abs($a - $b);"
   protected def step(acc: Double, a: Double, b: Double): Double =
@@ -743,11 +688,6 @@ abstract class VecU8Fold extends BinaryExpression {
   /** Java source for one step given long a, b. */
   protected def stepCode(acc: String, a: String, b: String): String
   protected def step(acc: Long, a: Long, b: Long): Long
-  /** The step as a [[VecKernels.u8FoldLit]] selector. */
-  protected def kind: Int
-
-  @transient private lazy val literalQuery: Option[Array[Long]] =
-    VecKernels.literal(right).map(q => Array.tabulate(q.numElements())(i => q.getByte(i).toLong & 0xFFL))
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val la = l.asInstanceOf[ArrayData]
@@ -761,17 +701,7 @@ abstract class VecU8Fold extends BinaryExpression {
     }
     acc
   }
-  /** Literal query: the static kernel (see [[VecBinaryFold]]). */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    literalQuery match {
-      case Some(q) =>
-        val ref = ctx.addReferenceObj("query", q, "long[]")
-        nullSafeCodeGen(ctx, ev, (l, _) =>
-          s"${ev.value} = graft.functions.VecKernels.u8FoldLit($l, $ref, $kind);")
-      case None => loopCode(ctx, ev)
-    }
-
-  private def loopCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
@@ -795,7 +725,6 @@ abstract class VecU8Fold extends BinaryExpression {
   * the RAW 0..255 values, matching the reference's byte metrics
   * (`lib/segment/src/spaces/metric_uint/`). */
 case class VecU8Dot(left: Expression, right: Expression) extends VecU8Fold {
-  protected def kind: Int = VecKernels.DotKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += $a * $b;"
   protected def step(acc: Long, a: Long, b: Long): Long = acc + a * b
@@ -804,7 +733,6 @@ case class VecU8Dot(left: Expression, right: Expression) extends VecU8Fold {
 }
 
 case class VecU8L2Sq(left: Expression, right: Expression) extends VecU8Fold {
-  protected def kind: Int = VecKernels.L2SqKind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += ($a - $b) * ($a - $b);"
   protected def step(acc: Long, a: Long, b: Long): Long = acc + (a - b) * (a - b)
@@ -813,7 +741,6 @@ case class VecU8L2Sq(left: Expression, right: Expression) extends VecU8Fold {
 }
 
 case class VecU8L1(left: Expression, right: Expression) extends VecU8Fold {
-  protected def kind: Int = VecKernels.L1Kind
   protected def stepCode(acc: String, a: String, b: String): String =
     s"$acc += java.lang.Math.abs($a - $b);"
   protected def step(acc: Long, a: Long, b: Long): Long = acc + math.abs(a - b)

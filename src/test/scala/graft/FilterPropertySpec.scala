@@ -67,8 +67,6 @@ class FilterPropertySpec extends SparkTestBase {
     ("""{"city":"Berlin","price":10.0""", absent(14L)), // malformed
     // trailing text: try_parse_json reads the first document
     ("""{"city":"London","price":9.5} {"city":"Paris"}""", (15L, Some("London"), Some(9.5), None, Seq())),
-    // a numeric string on a float key reads as its number (a VARIANT cast)
-    ("""{"city":"Rome","price":"5"}""", (16L, Some("Rome"), Some(5.0), None, Seq())),
     ("""{"city":"5","price":5}""", (17L, Some("5"), Some(5.0), None, Seq())),
     ("""{"price":5.0,"bio":"fox"}""", (18L, None, Some(5.0), Some("fox"), Seq())),
     ("""{"price":5e0,"city":"Moscow"}""", (19L, Some("Moscow"), Some(5.0), None, Seq())),
@@ -89,14 +87,26 @@ class FilterPropertySpec extends SparkTestBase {
       (28L, None, Some(Map("price" -> 9.5)), Some("brown dog"), Seq((5.0, "x")))),
   )
 
+  // Payloads on which the engine knowingly departs from qdrant, so the
+  // reference evaluator does not judge them; only the streamed and VARIANT
+  // paths are checked against each other there. A numeric string on a float
+  // key: the VARIANT cast reads `"5"` as 5.0 and a range matches it, where
+  // qdrant matches no string against a range.
+  private val divergentDocs: Seq[(Long, String)] = Seq(
+    16L -> """{"city":"Rome","price":"5"}""")
+
   private lazy val allRows: Seq[Row4] = rows ++ edgeDocs.map(_._2)
 
-  private lazy val df: DataFrame = {
+  private def frame(docs: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
-    (rows.map { case (id, c, p, b, it) => (id, jsonOf(c, p, b, it)) } ++
-      edgeDocs.map { case (json, row) => (row._1, json) })
-      .toDF("id", "payload").cache()
+    docs.toDF("id", "payload").cache()
   }
+
+  private lazy val df: DataFrame =
+    frame(rows.map { case (id, c, p, b, it) => (id, jsonOf(c, p, b, it)) } ++
+      edgeDocs.map { case (json, row) => (row._1, json) })
+
+  private lazy val agreementDf: DataFrame = df.union(frame(divergentDocs))
 
   private val types = Map("city" -> StringType, "price" -> DoubleType, "bio" -> StringType,
     "items.q" -> DoubleType, "items.tag" -> StringType)
@@ -281,7 +291,7 @@ class FilterPropertySpec extends SparkTestBase {
   test("streamed payload scalars agree with the VARIANT-only path on every row") {
     val raw = new FilterCompiler(resolver)
     val parsed = new FilterCompiler(parsedResolver)
-    val withParsed = df.withColumn("parsed", try_parse_json(col("payload")))
+    val withParsed = agreementDf.withColumn("parsed", try_parse_json(col("payload")))
     // the match and range leaves the stream reads, beside the whole trees
     val leaves = Seq[Condition](
       MatchValue("city", "Berlin"), MatchValue("city", "5"), MatchValue("city", "Lo\"ndon!"),

@@ -1,0 +1,72 @@
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+
+/** Task CPU per request kind and formatted plans on an `api_mixed`-shaped
+  * collection (perfbench's generator, seed 1, 50k points, `local[4]`).
+  *
+  * For each kind of perfbench's `ReadMix`: 2 warm-up requests, then 8
+  * requests with fresh parameters (stream 7, n = 2..9), each answer checked
+  * against the model; prints the median summed `executorCpuTime` and wall
+  * time per kind. The first measured `count_exact`, `scroll_filtered` and
+  * `recommend` requests also write their formatted plan, and `recommend`
+  * its generated code.
+  *
+  * Args: `<outdir> <tag>`; writes `<kind>_<tag>.txt`,
+  * `recommend_codegen_<tag>.txt` and `cpu_<tag>.txt` into `<outdir>` and
+  * the collection under `<outdir>/collection_<tag>`. Run by `run.sh`. */
+object PlanCap {
+  def main(args: Array[String]): Unit = {
+    val out = new java.io.File(args(0)); out.mkdirs()
+    val tag = args(1)
+    val spark = SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val n = 50000
+    val model = new perfbench.Model(1L, perfbench.PayloadCollection.Clusters, n + 64)
+    (0 until n).foreach(i => model.put(i, 0))
+    val path = new java.io.File(out, s"collection_$tag").getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    val (coll, _) = perfbench.PayloadCollection.create(spark, model, n, path)
+    val cpu = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) cpu.addAndGet(e.taskMetrics.executorCpuTime)
+    })
+    val planned = Set("count_exact", "scroll_filtered", "recommend")
+    def write(name: String, txt: String): Unit =
+      java.nio.file.Files.write(new java.io.File(out, name).toPath, txt.getBytes("UTF-8"))
+    val rows = for ((k, ix) <- perfbench.ReadMix.Kinds.zipWithIndex) yield {
+      for (i <- 0 until 2) perfbench.ReadMix.request(model, ix, 7L, i).call(coll).collect()
+      org.apache.spark.PerfbenchBus.drain(spark.sparkContext)
+      val runs = (2 until 10).map { i =>
+        val req = perfbench.ReadMix.request(model, ix, 7L, i)
+        cpu.set(0)
+        val t0 = System.nanoTime()
+        val df = req.call(coll)
+        val got = df.collect()
+        val wall = (System.nanoTime() - t0) / 1e6
+        org.apache.spark.PerfbenchBus.drain(spark.sparkContext)
+        req.check(got).foreach(m => println(s"[plancap] WRONG $k: $m"))
+        if (i == 2 && planned(k)) {
+          write(s"${k}_$tag.txt", df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+          if (k == "recommend") write(s"${k}_codegen_$tag.txt",
+            org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan))
+        }
+        (cpu.get() / 1e6, wall)
+      }
+      val cs = runs.map(_._1).sorted; val ws = runs.map(_._2).sorted
+      f"$k%-20s task_cpu_ms median ${cs(cs.length / 2)}%.0f (min ${cs.head}%.0f max ${cs.last}%.0f)" +
+        f" wall_ms median ${ws(ws.length / 2)}%.0f"
+    }
+    val txt = rows.mkString("\n")
+    println(txt)
+    write(s"cpu_$tag.txt", txt + "\n")
+    spark.stop()
+  }
+}
