@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,10 +30,10 @@ import org.apache.spark.sql.functions._
   *
   * Round-7 hygiene (per round-6 review — recorded totals swung ±30-50%
   * on machine contention with no evidence in the record):
-  *  - Pinned launch command: `tools/bench_local.sh` (java -Xmx16g
-  *    -XX:+UseG1GC, the build.sbt --add-opens set, classes + /opt/spark/jars
-  *    on the classpath, SPARK_GRAFT_SF_DIR env). Numbers from any other
-  *    launch are not comparable.
+  *  - Pinned launch command: `tools/bench_local.sh` (java @tools/jvm.opts
+  *    -Xmx16g -XX:+UseG1GC, classes + $SPARK_HOME/jars on the classpath,
+  *    SPARK_GRAFT_SF_DIR env). Numbers from any other launch are not
+  *    comparable.
   *  - Contention sentinel: a fixed no-op job (sum over a 16M range) is
   *    timed immediately before and after the measured passes, with the
   *    1-minute /proc/loadavg at both points, emitted as `sentinel` in the
@@ -225,29 +226,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Round-17 measurement fix (r16 verdict "What's wrong" #1): shuffle
-      // partitions track the requested core count instead of a hardcoded
-      // 32, so the driver's low-core scaling run no longer schedules
-      // 32-way shuffles on 8 cores — at 32 cpus (the main record) this is
-      // the value every earlier round used, so totals stay comparable.
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Every partitionless window in the engine ranks an audited, bounded
-    // (≤ k+offset rows) candidate list — see Fusion/Search scaladocs — so
-    // WindowExec's blanket single-partition warning is pure noise here, and
-    // a wall of it would bury any future warning that matters. Silence just
-    // that logger; everything else stays at WARN.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
 
     def run(n: String): Unit =
       operatorOnly.getOrElse(n, SparkEntry.queries(n))(spark, sfDir).count(): Unit
@@ -280,6 +260,9 @@ object Bench {
         jobCounter.incrementAndGet(); ()
       }
     })
+    // jobs started so far, read once every posted event has been delivered
+    // (called outside the timed interval)
+    def jobs(): Long = { GraftBus.drain(spark.sparkContext); jobCounter.get() }
     def gcMs(): Long = {
       var t = 0L
       val it = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.iterator()
@@ -314,9 +297,9 @@ object Bench {
     // Pass 1: cold (alphabetical, one run each — matches rounds 1-3 protocol;
     // warm-up queries excluded, their first touch already happened above).
     val cold = names.filterNot(warmup.contains).map { n =>
-      val j0 = jobCounter.get(); val g0 = gcMs()
+      val j0 = jobs(); val g0 = gcMs()
       val r = time(() => run(n))
-      coldJobs(n) = jobCounter.get() - j0
+      coldJobs(n) = jobs() - j0
       coldGcMs(n) = gcMs() - g0
       n -> r
     }.toMap
@@ -325,9 +308,9 @@ object Bench {
     // Passes 2..4: warm; median per query.
     val warmRuns = (1 to warmReps).map { rep =>
       names.map { n =>
-        val j0 = jobCounter.get(); val g0 = gcMs()
+        val j0 = jobs(); val g0 = gcMs()
         val r = time(() => run(n))
-        if (rep == 1) { warm1Jobs(n) = jobCounter.get() - j0; warm1GcMs(n) = gcMs() - g0 }
+        if (rep == 1) { warm1Jobs(n) = jobs() - j0; warm1GcMs(n) = gcMs() - g0 }
         n -> r
       }.toMap
     }

@@ -178,16 +178,7 @@ object IvfRecallProbe {
     val probeSettings = sys.env.getOrElse("SPARK_GRAFT_IVF_PROBES", "1,2,4,8,16,32,64")
       .split(",").map(_.trim.toInt).toSeq
     val singleReps = sys.env.getOrElse("SPARK_GRAFT_IVF_SINGLE_REPS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val t0 = System.nanoTime()
     val model = ensureArtifacts(spark, dir, n, kCells, clusters)

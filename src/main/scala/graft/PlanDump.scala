@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-capture tool for the optimization rounds: writes
@@ -8,10 +7,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *   PlanDump <sfDir> <outDir> [key ...]      (no keys = every declared key)
   *
-  * Uses the SAME session settings as graft.Bench so the captured plans are
-  * the plans the bench times. Queries whose builder is side-effecting
-  * (collection fixtures) still run their builds; only the final DataFrame's
-  * plan is captured.
+  * Builds its session through [[GraftSession]], as graft.Bench does, so the
+  * captured plans are the plans the bench times. Queries whose builder is
+  * side-effecting (collection fixtures) still run their builds; only the
+  * final DataFrame's plan is captured.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,16 +19,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val keys = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     for (k <- keys) {
       try {
         val df = SparkEntry.queries(k)(spark, sfDir)

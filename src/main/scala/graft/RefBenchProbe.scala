@@ -75,7 +75,6 @@ object RefBenchProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_REFBENCH_DIR", "/tmp/graft_runtime/refbench")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nSparseQ = sys.env.getOrElse("SPARK_GRAFT_REFBENCH_SPARSE_QUERIES", "2048").toInt
     // comma list of fixture sections to run (dense,sparse,filtered) — the
     // full probe exceeds single-shot time budgets, and each section's JSON
@@ -83,14 +82,7 @@ object RefBenchProbe {
     val sections = sys.env.getOrElse("SPARK_GRAFT_REFBENCH_SECTIONS",
         "dense,sparse,filtered,facet,multivec")
       .split(",").map(_.trim).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def ensure(path: String)(df: => DataFrame): DataFrame = {
       if (!new java.io.File(path).exists())

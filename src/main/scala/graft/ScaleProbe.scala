@@ -437,24 +437,10 @@ object ScaleProbe {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"target/scaledata_m$mult")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmReps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // r17: shuffle width tracks the requested core count (like the bench
-      // since r17) so an 8-core scaling run schedules 8-way shuffles — a
-      // hardcoded 32 made low-core runs unmeasurable for §2 scaling
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE: driver heap cannot be set here — in local mode the driver JVM
-      // is already running when the builder executes. Launch with -Xmx
-      // (e.g. `java -Xmx16g ... graft.ScaleProbe`, as SCALEPROBE_r05.md's
-      // run instructions do).
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the driver heap is fixed at launch (java -Xmx16g ... graft.ScaleProbe,
+    // as SCALEPROBE_r05.md's run instructions do)
+    val spark = GraftSession.local()
 
     val docsOut = new java.io.File(s"$outDir/documents.parquet")
     if (!docsOut.exists()) {

@@ -72,7 +72,7 @@ object PayloadScalar {
   * every level, and reads the leaf token the way the VARIANT builder and
   * `try_variant_get` would:
   *
-  *  - `Str`: a JSON string of ASCII text → that text (the builder stores
+  *  - `Str`: a JSON string → that text (the builder stores
   *    `getText().getBytes(UTF_8)`, which `UTF8String.fromString` repeats);
   *  - `Lng`: a JSON integer that fits a long → `getLongValue` (the builder
   *    stores exactly that);
@@ -82,8 +82,11 @@ object PayloadScalar {
   *
   * Any other shape — a document that is not one object, a duplicate key,
   * malformed or trailing text, a path through a non-object, an array,
-  * null, an object, a non-ASCII string or a scalar of another kind at the
-  * key, an absent key — returns null. */
+  * null, an object or a scalar of another kind at the key, an absent key —
+  * returns null.
+  *
+  * Both paths agree on non-ASCII strings only under a UTF-8 default charset
+  * (see [[graft.GraftSession]]), which every launch gets from `tools/jvm.opts`. */
 object PayloadScan {
   final val Str = 0
   final val Lng = 1
@@ -99,23 +102,12 @@ object PayloadScan {
 
   /** A key the VARIANT path reads as `$.` + key with one object step per
     * dot-separated segment: printable ASCII without brackets or quotes, no
-    * empty segment (Spark's path parser treats those differently, and
-    * non-ASCII keys meet the charset caveat of [[asciiOnly]]). */
+    * empty segment (Spark's path parser treats those differently; other
+    * keys stay on the VARIANT path). */
   def plainKey(key: String): Boolean =
     key.nonEmpty && key.split("\\.", -1).forall(s =>
       s.nonEmpty && s.forall(ch => ch > ' ' && ch < 0x7f &&
         ch != '[' && ch != ']' && ch != '\'' && ch != '"'))
-
-  /** Spark's VARIANT reader decodes stored strings with the JVM's default
-    * charset (`VariantUtil` uses `new String(bytes, off, len)`), so under a
-    * non-UTF-8 default a non-ASCII value reads back as replacement
-    * characters. A non-ASCII string is left to the VARIANT path so both
-    * paths agree whatever the JVM's charset. */
-  private def asciiOnly(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) { if (s.charAt(i) >= 0x80) return false; i += 1 }
-    true
-  }
 
   def stringAt(payload: UTF8String, path: Array[String]): UTF8String =
     scan(payload, path, Str).asInstanceOf[UTF8String]
@@ -159,11 +151,7 @@ object PayloadScan {
 
   private def leaf(p: JsonParser, t: JsonToken, kind: Int): AnyRef = kind match {
     case Str =>
-      if (t != JsonToken.VALUE_STRING) null
-      else {
-        val text = p.getText
-        if (asciiOnly(text)) UTF8String.fromString(text) else null
-      }
+      if (t != JsonToken.VALUE_STRING) null else UTF8String.fromString(p.getText)
     case Lng =>
       if (t == JsonToken.VALUE_NUMBER_INT && (p.getNumberType == JsonParser.NumberType.INT ||
           p.getNumberType == JsonParser.NumberType.LONG)) {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Deploy-time wiring (new sessions):
   * {{{
   *   spark.sql.extensions=graft.functions.GraftExtensions
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or: graft.GraftSession.local(), which injects it
   * }}}
   * For an existing session, [[GraftFunctions.register]] installs the same
   * builders into the live FunctionRegistry.

@@ -111,7 +111,7 @@ object Search {
     * per row, no sort); other id types use the window form, which Spark
     * ≥ 3.5 also bounds below the exchange via `WindowGroupLimit(Partial)`
     * but pays a per-partition sort of all scored rows first (measured
-    * 2-3× slower at 1M×64q — `graft.KnnBatchProbe`, SCALEPROBE_r09.md;
+    * 2-3× slower at 1M×64q — SCALEPROBE_r09.md;
     * shuffle volume is partitions×Q×k for BOTH, never N×Q). */
   def batchRank(
       scored: DataFrame,

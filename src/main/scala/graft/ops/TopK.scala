@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * the exchange for `row_number() <= k` filters) but pays a per-partition
   * sort of all N×Q scored rows first; this aggregator replaces that sort
   * with an O(log k) heap insert per row, at the cost of leaving
-  * whole-stage codegen for the aggregation. Which wins is an empirical
-  * question — `graft.KnnBatchProbe` measures both; see SCALEPROBE_r09.md.
+  * whole-stage codegen for the aggregation. SCALEPROBE_r09.md measured
+  * both: this aggregator wins.
   *
   * Buffer: a binary min-heap (root = current evictee candidate) in a plain
   * Array[Double] of (score, id-bits) pairs — primitive, kryo-friendly, and

@@ -12,9 +12,9 @@ import graft.functions.{GraftExtensions, GraftFunctions, VecDot}
 class ExtensionsSpec extends SparkTestBase {
 
   private lazy val ext: SparkSession = {
-    // SparkTestBase builds the shared session with
-    // `.withExtensions(new GraftExtensions)` — the spark.sql.extensions
-    // deployment path. newSession() rebuilds SessionState from the SAME
+    // SparkTestBase builds the shared session through GraftSession, which
+    // injects `new GraftExtensions` — the spark.sql.extensions deployment
+    // path. newSession() rebuilds SessionState from the SAME
     // extensions object, so the fresh registry below contains the graft_*
     // functions ONLY if GraftExtensions.apply actually injected them:
     // no GraftFunctions.register call anywhere in this suite.

@@ -309,4 +309,14 @@ class FilterPropertySpec extends SparkTestBase {
       assert(fast == variant, s"\nfilter: $f\nstreamed: $fast\nvariant: $variant")
     }
   }
+
+  test("a non-ASCII string matches on the VARIANT-only path") {
+    // Spark's VARIANT reader decodes strings with the JVM's default charset;
+    // the test JVM gets UTF-8 from tools/jvm.opts, as every launch does
+    val d = frame(Seq(1L -> "{\"n\":\"\u00e9\"}", 2L -> """{"n":"e"}"""))
+      .withColumn("parsed", try_parse_json(col("payload")))
+    val variant = new FilterCompiler(
+      new JsonResolver(col("parsed"), Map("n" -> StringType), col("id"), preParsed = true))
+    assert(ids(d, variant.compile(Filter(must = Seq(MatchValue("n", "\u00e9"))))) == Set(1L))
+  }
 }

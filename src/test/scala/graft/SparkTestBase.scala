@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +21,7 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** Spark jobs started while `body` runs: the count and each job's short
     * call site. Listener events arrive asynchronously, so the jobs are
-    * read after a drain window. */
+    * read once the listener bus has delivered every posted event. */
   def jobsDuring[A](body: => A): (Int, Seq[String]) = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -32,7 +33,7 @@ trait SparkTestBase extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      Thread.sleep(1500)
+      GraftBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     val all = sites.toArray(Array.empty[String]).toSeq
     (all.length, all)
@@ -40,20 +41,7 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the deployment shape: extensions injected at session build — the
-      // path ExtensionsSpec asserts (a newSession() must resolve graft_*
-      // from the injected registry with NO explicit register call)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // the deployment shape, extensions included: ExtensionsSpec asserts a
+  // newSession() resolves graft_* from the injected registry
+  lazy val session: SparkSession = GraftSession.local(4)
 }

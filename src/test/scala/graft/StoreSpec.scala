@@ -1282,7 +1282,7 @@ class StoreSpec extends SparkTestBase {
     val df = try {
       val q = c.query(s"""{"query": {"recommend": {"positive": [${
         (0 until n).mkString(", ")}]}}, "limit": 3}""")
-      Thread.sleep(1500) // listener bus drain window
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       q
     } finally spark.listenerManager.unregister(listener)
     assert(!plans.isEmpty, "the by-id probe should have executed")

@@ -8,11 +8,10 @@
 #   ./tools/bench_local.sh                    # sf0.1 (the driver's per-round SF)
 #   ./tools/bench_local.sh /root/testdata/sf0.01
 set -e
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 SF=${1:-/root/testdata/sf0.1}
-ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
-[ -d /root/repo/target/scala-2.13/classes/stopwords ] || \
-  cp -r /root/repo/src/main/resources/* /root/repo/target/scala-2.13/classes/
-SPARK_GRAFT_SF_DIR="$SF" java $ADD_OPENS -Xmx16g -XX:+UseG1GC \
-  -Dspark.ui.enabled=false \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+[ -d "$ROOT/target/scala-2.13/classes/stopwords" ] || \
+  cp -r "$ROOT"/src/main/resources/* "$ROOT/target/scala-2.13/classes/"
+SPARK_GRAFT_SF_DIR="$SF" java @"$ROOT/tools/jvm.opts" -Xmx16g -XX:+UseG1GC \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME}/jars/*" \
   graft.Bench

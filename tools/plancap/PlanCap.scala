@@ -1,4 +1,3 @@
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -19,14 +18,7 @@ object PlanCap {
   def main(args: Array[String]): Unit = {
     val out = new java.io.File(args(0)); out.mkdirs()
     val tag = args(1)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(4)
     val n = 50000
     val model = new perfbench.Model(1L, perfbench.PayloadCollection.Clusters, n + 64)
     (0 until n).foreach(i => model.put(i, 0))

@@ -3,6 +3,10 @@
 #
 #   tools/plancap/run.sh <checkout> <tag> <outdir>
 #
+# PlanCap builds its session with the checkout's graft.GraftSession.local(4),
+# so <checkout> must contain GraftSession; the JVM starts with
+# `java @tools/jvm.opts`, like every engine launch.
+#
 # <checkout> must hold a perfbench build (.bench_build/perfbench/engine.jar
 # and bench.jar): run `python3 perfbench/run.py --workload api_mixed --seed 1
 # --seconds 1` there first. Compare two commits by running this once per
@@ -21,10 +25,4 @@ CP="$B/engine.jar:$B/bench.jar:$B/resources.jar:$SPARK_JARS/*"
 mkdir -p "$OUT/cls_$TAG"
 java -Xss8m -Xmx2g -cp "$SPARK_JARS/*" scala.tools.nsc.Main -nowarn \
   -d "$OUT/cls_$TAG" -classpath "$CP" "$HERE/PlanCap.scala"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util \
-    java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs \
-    sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-java $OPENS -Xmx4g -cp "$OUT/cls_$TAG:$CP" PlanCap "$OUT" "$TAG"
+java @"$HERE/../jvm.opts" -Xmx4g -cp "$OUT/cls_$TAG:$CP" PlanCap "$OUT" "$TAG"

@@ -1,17 +1,16 @@
 #!/bin/bash
 # Build classpath run of graft.Verify + DuckDB compare, at sf0.01 by default.
 set -e
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
-ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 # raw-java classpath runs skip sbt's copyResources; make sure /stopwords et
 # al. are present next to the classes (cheap no-op when already copied)
-[ -d /root/repo/target/scala-2.13/classes/stopwords ] || \
-  cp -r /root/repo/src/main/resources/* /root/repo/target/scala-2.13/classes/
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+[ -d "$ROOT/target/scala-2.13/classes/stopwords" ] || \
+  cp -r "$ROOT"/src/main/resources/* "$ROOT/target/scala-2.13/classes/"
+SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java @"$ROOT/tools/jvm.opts" -Xmx8g \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME}/jars/*" \
   graft.Verify "$SF" "$OUT" 2>/tmp/verify_stderr.log || { tail -30 /tmp/verify_stderr.log; exit 1; }
 grep -E "\[verify\]" /tmp/verify_stderr.log || true
-python3 /root/repo/tools/compare.py "$SF" "$OUT"
+python3 "$ROOT/tools/compare.py" "$SF" "$OUT"
