@@ -286,7 +286,7 @@ final class FilterCompiler(
     *  - integer literals or numeric bounds on an integer key read a JSON
     *    integer that fits a long;
     *  - numeric bounds on a string or float key read any JSON number as a
-    *    double (a string element is cast to double by the comparison).
+    *    double (the VARIANT path try-casts a string element to double).
     * Any other literal kind or declared type keeps the VARIANT path alone. */
   private def streamed(c: Condition): Option[Column] = {
     def all(vs: Seq[Any])(p: Any => Boolean) = vs.nonEmpty && vs.forall(p)
@@ -435,9 +435,27 @@ final class FilterCompiler(
       case Some(_) => lit(false)
     }
 
+  /** `v`, a value of `key`, read as type `t` of the literals it is
+    * compared with. A key read as STRING (undeclared keys on the VARIANT
+    * path) holds JSON values of every kind; an implicit ANSI cast to the
+    * literal's type would throw CAST_INVALID_INPUT on the first value of
+    * another kind (`5.5` under an integer match, `"abc"` or `{"a":5}`
+    * under a range). A try-cast makes that value NULL, so it does not
+    * match — qdrant's `condition_checker.rs` skips a value of another
+    * kind. */
+  private def asKind(key: String, v: Column, t: DataType): Column =
+    if (t != StringType && r.dataTypeOf(key).forall(_ == StringType)) v.try_cast(t)
+    else v
+
+  private def litType(v: Any): DataType =
+    org.apache.spark.sql.catalyst.expressions.Literal(v).dataType
+
   private def cond0(c: Condition): Column = c match {
-    case MatchValue(k, value) => anyValue(k, _ === lit(value))
-    case MatchAny(k, vs) => anyValue(k, _.isin(vs: _*))
+    case MatchValue(k, value) =>
+      anyValue(k, v => asKind(k, v, litType(value)) === lit(value))
+    case MatchAny(k, vs) =>
+      val t = vs.headOption.fold[DataType](StringType)(litType)
+      anyValue(k, v => asKind(k, v, t).isin(vs: _*))
     case MatchExcept(k, vs) => anyValue(k, !_.isin(vs: _*))
     case MatchText(k, text) => textIndexes.get(k) match {
       case Some(cfg) =>
@@ -502,7 +520,10 @@ final class FilterCompiler(
     }
     case MatchPrefix(k, p) => anyValue(k, _.startsWith(p))
     case RangeCond(k, gt, gte, lt, lte) =>
-      anyValue(k, v => rangeBounds(v, r.dataTypeOf(k), gt, gte, lt, lte))
+      // numeric bounds on a STRING-read key compare as doubles (rangeBounds)
+      val numeric = Seq(gt, gte, lt, lte).flatten.forall(_.isInstanceOf[Number])
+      anyValue(k, v => rangeBounds(if (numeric) asKind(k, v, DoubleType) else v,
+        r.dataTypeOf(k), gt, gte, lt, lte))
     case ValuesCount(k, gt, gte, lt, lte) =>
       rangeBounds(size(r.values(k)).cast("long"), Some(LongType), gt, gte, lt, lte)
     case GeoBoundingBox(k, tl, br) =>

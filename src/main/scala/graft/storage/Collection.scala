@@ -199,15 +199,30 @@ final class Collection(
     idTypeCache
   }
 
-  /** Tmp-dir + rename swap: Spark cannot overwrite a path still lazily read
-    * in the same plan; on a lakehouse table this is simply MERGE/DELETE. */
-  /** `sparseDfChange`: whether the batch can have changed any sparse
+  /** Commit `df0` as the table's new contents: tmp-dir + rename swap (Spark
+    * cannot overwrite a path still lazily read in the same plan; on a
+    * lakehouse table this is simply MERGE/DELETE), laid out by
+    * [[Collection.layout]].
+    *
+    * `balance`: the commit brings in rows from outside the table (an
+    * upsert), so on an un-partitioned table its rows are hash-distributed
+    * on the id into one partition per core and the commit writes one
+    * balanced file per core. Without it the write keeps the fold's own
+    * partitioning, and after a few upserts that is one large file plus the
+    * batches' small ones: Spark's split planner (`openCostInBytes`, 4 MB)
+    * packs those into ONE scan task, so every later fold and read ran on
+    * one core. Commits that only rewrite the table's own rows (payload and
+    * delete batches, index builds, `compact`) skip the shuffle: they keep
+    * the file set the last balanced commit left, and a shuffle of a
+    * table-sized rewrite costs more than it saves.
+    *
+    * `sparseDfChange`: whether the batch can have changed any sparse
     * vector's document frequencies — payload-only mutations, dense-vector
     * ops, compaction and index/layout rewrites cannot, so they keep the
     * IDF sidecar intact (zero invalidation, zero recompute). Defaults to
     * the safe answer. */
   private def write(df0: DataFrame, targetFiles: Option[Int] = None,
-      sparseDfChange: Boolean = true): Unit = {
+      sparseDfChange: Boolean = true, balance: Boolean = false): Unit = {
     rewriteCount += 1
     idTypeCache = None
     val tmp = path + "__tmp"
@@ -218,17 +233,15 @@ final class Collection(
     val df = Collection.withIndexProjections(config,
       Collection.withTenantBuckets(config, df0))
     val pc = Collection.partitionCols(config, df.columns)
-    // hash-repartition on the partition columns first: one task owns each
-    // key, so every partition directory gets O(1) files instead of one per
-    // write task (64 cells × 32 tasks = 2048 tiny files otherwise — the
-    // file-listing overhead was measured to swamp the probe pruning win).
-    // Either way the rows land id-CLUSTERED (range partition / sort within
-    // the directory task), so parquet min/max row-group stats make
-    // retrieve-by-id and scroll-offset scans prune to O(k) row groups
-    // instead of the full table — the batch analog of the reference's O(1)
-    // id tracker. Costs one extra shuffle (+ range-sampling pass) per
-    // rewrite; a write path is batch, the id lookup path is interactive.
-    val laid = Collection.layout(config, df, targetFiles)
+    // partitioned tables hash-repartition on the partition columns first:
+    // one task owns each key, so every partition directory gets O(1) files
+    // instead of one per write task (64 cells × 32 tasks = 2048 tiny files
+    // otherwise — the file-listing overhead was measured to swamp the probe
+    // pruning win). Either way the rows land id-SORTED within each write
+    // task, so parquet min/max row-group stats make retrieve-by-id and
+    // scroll-offset scans prune to O(k) row groups instead of the full
+    // table — the batch analog of the reference's O(1) id tracker.
+    val laid = Collection.layout(config, df, targetFiles, balance)
     val w = laid.write.mode(SaveMode.Overwrite)
     (if (pc.isEmpty) w else w.partitionBy(pc: _*)).parquet(tmp)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -248,11 +261,12 @@ final class Collection(
   /** Insert-or-replace whole points: last write wins per id (qdrant upsert,
     * `lib/shard/src/operations/point_ops.rs:111-126`).
     *
-    * Plan shape (the 100 TB consideration): the existing table is anti-joined
-    * against just the incoming ids and unioned with the batch — the big side
-    * shuffles only if the join does, and with a broadcastable batch (the
-    * common case: micro-batch ≪ table) it does not shuffle at all. The
-    * full-table `Window.partitionBy(id)` alternative is correct but pays a
+    * Plan shape (the 100 TB consideration): the existing table drops the
+    * incoming ids and is unioned with the batch. A driver-side batch (every
+    * wire upsert) drops them with an `id NOT IN (...)` scan filter; any
+    * other batch anti-joins the table against its ids, broadcast when the
+    * batch is small. Neither shuffles the table. The full-table
+    * `Window.partitionBy(id)` alternative is correct but pays a
     * whole-table shuffle per batch. On a lakehouse table this is MERGE INTO. */
   def upsert(points: DataFrame): Unit = applyBatch(Seq(UpdateOp.Upsert(points)))
 
@@ -314,7 +328,11 @@ final class Collection(
   def applyBatch(ops: Seq[UpdateOp]): Unit = {
     val pins = new FoldPins
     try write(ops.foldLeft(read())(applyOp(pins)),
-      sparseDfChange = Collection.opsChangeSparseDfs(config, ops))
+      sparseDfChange = Collection.opsChangeSparseDfs(config, ops),
+      balance = ops.exists {
+        case _: UpdateOp.Upsert | _: UpdateOp.UpsertConditional => true
+        case _ => false
+      })
     finally releaseFoldPins(pins)
   }
 
@@ -407,13 +425,9 @@ final class Collection(
     // wire batches are LOCAL relations — their id-uniqueness check needs no
     // Spark job (the guard agg was one job per upsert op; a chained
     // points/batch body paid it N times)
-    val dupFree: Boolean = points.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val idx = lr.output.indexWhere(_.name == config.idCol)
-        val dt = lr.output(idx).dataType
-        val ids = lr.data.map(_.get(idx, dt))
-        ids.distinct.length == ids.length
-      case _ =>
+    val dupFree: Boolean = localIds(points) match {
+      case Some(ids) => ids.distinct.length == ids.length
+      case None =>
         val row = points.agg(
           org.apache.spark.sql.functions.count(lit(1)).as("n"),
           count_distinct(idc).as("nd")).head()
@@ -455,18 +469,10 @@ final class Collection(
     // row groups instead of streaming the whole table through a semi-join
     // (r16 optimization round; the semi-join stays as the fallback for
     // DataFrame-API batches whose ids only exist at execution)
-    val localIds: Option[Seq[Any]] =
-      batchIds.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          val dt = lr.output.head.dataType
-          val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(dt)
-          Some(lr.data.map(r => conv(r.get(0, dt))).distinct)
-        case _ => None
-      }
     val matchCol = filter.map(f => coalesce(pred(cur, f), lit(false)))
       .getOrElse(lit(false))
-    val probed = probeIds(cur, localIds.filter(_.nonEmpty), batchIds)
+    val probed = probeIds(cur,
+      localIds(incoming).map(_.distinct).filter(_.nonEmpty), batchIds)
     val flags = broadcast(probed
       .select(col(config.idCol), matchCol.as("_mraw"))
       .groupBy(col(config.idCol))
@@ -484,6 +490,19 @@ final class Collection(
     }
     joined.filter(keep).drop("_exists", "_m", "_mraw")
   }
+
+  /** The id column of `df` in row order, when it is known driver-side:
+    * `df`'s ids optimize to a LocalRelation (every wire batch does). None
+    * for a batch whose ids exist only at execution. */
+  private def localIds(df: DataFrame): Option[Seq[Any]] =
+    df.select(col(config.idCol)).queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val dt = lr.output.head.dataType
+        val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(dt)
+        Some(lr.data.map(r => conv(r.get(0, dt))))
+      case _ => None
+    }
 
   /** Rows of `df` whose id is among the probed ids. Ids known driver-side,
     * up to [[Collection.InProbeMaxIds]] of them, compile to a
@@ -551,8 +570,16 @@ final class Collection(
         pins += pinned
         pinned
       }
-    curW.join(incoming.select(col(config.idCol)), Seq(config.idCol), "left_anti")
-      .unionByName(incoming, allowMissingColumns = true)
+    // A driver-side batch drops the replaced rows with an `id NOT IN (...)`
+    // filter: the left-anti join's broadcast cost every wire upsert its own
+    // job. Other batches keep the anti-join.
+    val kept = localIds(incoming) match {
+      case Some(ids) if ids.length <= Collection.InProbeMaxIds =>
+        curW.filter(!col(config.idCol).isin(ids.distinct: _*))
+      case _ =>
+        curW.join(incoming.select(col(config.idCol)), Seq(config.idCol), "left_anti")
+    }
+    kept.unionByName(incoming, allowMissingColumns = true)
   }
 
   /** Checkpointed per-op batches of ONE fold, created by the call that
@@ -2799,16 +2826,27 @@ object Collection {
     coll
   }
 
-  /** Physical row layout of a table write. Un-partitioned tables
-    * range-partition by id and sort within; partitioned tables (shard key
-    * / IVF cells) keep the one-task-per-directory hash layout and sort by
+  /** Physical row layout of a table write. Un-partitioned tables sort by
+    * id within each write task; partitioned tables (shard key / IVF cells)
+    * keep the one-task-per-directory hash layout and sort by
     * (partition cols, id) within the task — in both shapes every parquet
     * row group covers a narrow id span, so `id IN (...)` /
     * `id >= offset` scans skip row groups via min/max stats (PushedFilters
-    * at the scan; `StoreSpec` pins the pruning). */
+    * at the scan; `StoreSpec` pins the pruning).
+    *
+    * How an un-partitioned write spreads its rows over tasks:
+    *  - `targetFiles = Some(n)` (`compact`): range-partition by id into
+    *    `n` tasks, so files hold disjoint id spans;
+    *  - `balance` (a commit that brings in rows, see [[Collection.write]]):
+    *    hash-partition by id into exactly `defaultParallelism` tasks — one
+    *    balanced file per core, so the next fold and every read scan one
+    *    split per core. The count is explicit because AQE does not
+    *    coalesce a repartition that names one;
+    *  - otherwise the input's own partitioning, with no shuffle: a rewrite
+    *    of the table's own rows keeps the file set it read. */
   private[storage] def layout(
       config: CollectionConfig, df: DataFrame,
-      targetFiles: Option[Int]): DataFrame = {
+      targetFiles: Option[Int], balance: Boolean = false): DataFrame = {
     val pc = partitionCols(config, df.columns)
     val id = col(config.idCol)
     // declared principal fields order rows BEFORE the id tiebreak: range
@@ -2822,20 +2860,22 @@ object Collection {
     // postings (`field_index/geo_index/`), bought with the same widened
     // id-lookup spans as `is_principal`.
     val psort = principalSortCols(config, df) ++ geoCellSortCols(config, df)
-    if (pc.isEmpty)
-      // Local id sort only — NO range shuffle. Row-group min/max stats
-      // become narrow-span because row groups follow the sorted order
-      // inside each file, so id lookups and scroll-offset scans still
-      // skip almost every row group; file-level spans may overlap, which
-      // costs only footer reads. The full range-cluster variant was
-      // measured at sf0.1 and rejected: the per-write sampling+shuffle
-      // inflated every mutation entry ~2× and (un-numbered) let AQE fold
-      // small tables into ONE file, serializing every later scan.
-      // `compact(targetFiles)` — an explicit maintenance rewrite — is
-      // where the globally-disjoint range layout is applied deliberately.
-      targetFiles.fold(df)(n => df.repartitionByRange(n, id))
-        .sortWithinPartitions(psort :+ id: _*)
-    else
+    if (pc.isEmpty) {
+      // Row-group min/max stats are narrow-span because row groups follow
+      // the sorted order inside each file, so id lookups and scroll-offset
+      // scans skip almost every row group; file-level spans may overlap,
+      // which costs only footer reads. A range shuffle on every write was
+      // measured at sf0.1 and rejected (its sampling pass inflated every
+      // mutation entry ~2×); `compact` is where the disjoint range layout
+      // is applied deliberately.
+      val spread = targetFiles match {
+        case Some(n) => df.repartitionByRange(n, id)
+        case None if balance =>
+          df.repartition(df.sparkSession.sparkContext.defaultParallelism, id)
+        case None => df
+      }
+      spread.sortWithinPartitions(psort :+ id: _*)
+    } else
       // (partition key, id-hash salt) shuffle instead of the bare key:
       // a HOT cell/shard splits across ≤ `writeSalt` write tasks, so one
       // skewed key cannot serialize its whole directory through a single

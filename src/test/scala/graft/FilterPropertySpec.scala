@@ -310,6 +310,28 @@ class FilterPropertySpec extends SparkTestBase {
     }
   }
 
+  test("an undeclared key's values of another kind do not match, and never throw") {
+    // undeclared keys read as STRING on the VARIANT path; qdrant's
+    // `condition_checker.rs` skips a value whose kind the condition does
+    // not compare (a fraction under an integer match, a string or an
+    // object under a range). `parse_json` stores 5.0 as the integer 5, so
+    // only a true fraction stands for the f64 case here.
+    val d = frame(Seq(1L -> """{"n":5.5}""", 2L -> """{"n":5}""",
+      3L -> """{"n":"abc"}""", 4L -> """{"n":{"a":5}}""",
+      5L -> """{"n":[5,"x",7.5]}""", 6L -> """{"n":6}""", 7L -> """{"m":5}"""))
+      .withColumn("parsed", try_parse_json(col("payload")))
+    val raw = new FilterCompiler(new JsonResolver(col("payload"), Map.empty, col("id")))
+    val variant = new FilterCompiler(
+      new JsonResolver(col("parsed"), Map.empty, col("id"), preParsed = true))
+    val expected = Seq[(Condition, Set[Long])](
+      MatchValue("n", 5L) -> Set(2L, 5L),
+      MatchAny("n", Seq(5L, 6L)) -> Set(2L, 5L, 6L),
+      RangeCond("n", gte = Some(5.0)) -> Set(1L, 2L, 5L, 6L),
+      RangeCond("n", gt = Some(4L), lt = Some(5.5)) -> Set(2L, 5L))
+    for ((c, want) <- expected; (name, fc) <- Seq("raw" -> raw, "variant" -> variant))
+      assert(ids(d, fc.compile(Filter(must = Seq(c)))) == want, s"$name: $c")
+  }
+
   test("a non-ASCII string matches on the VARIANT-only path") {
     // Spark's VARIANT reader decodes strings with the JVM's default charset;
     // the test JVM gets UTF-8 from tools/jvm.opts, as every launch does

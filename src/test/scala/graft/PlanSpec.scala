@@ -357,6 +357,22 @@ class PlanSpec extends SparkTestBase {
     assert(merged.filter(col("id") < 10).count() == incoming.count())
   }
 
+  test("a local upsert batch drops replaced ids by NOT IN — no anti-join, no broadcast") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/coll"
+    val coll = graft.storage.Collection.create(spark, path,
+      graft.sources.CollectionConfig(idCol = "id", payloadCol = "payload"),
+      (1L to 100L).map(i => (i, s"""{"n":$i}""")).toDF("id", "payload"))
+    val merged = coll.upsertPlan(
+      Seq((5L, """{"n":0}"""), (500L, """{"n":1}""")).toDF("id", "payload"))
+    val p = plan(merged)
+    assert(!p.contains("LeftAnti") && !p.contains("BroadcastExchange"),
+      "a local batch must not join the table:\n" + p.take(1200))
+    assert(merged.count() == 101)
+    assert(merged.filter(col("id") === 5L).select("payload").as[String]
+      .collect().toSeq == Seq("""{"n":0}"""))
+  }
+
   test("group-by search selects top groups via orderBy+limit, not a global window") {
     val e = Tables.load(spark, sf, "documents")
     val r = new graft.filters.TypedResolver(e.schema, "doc_id")

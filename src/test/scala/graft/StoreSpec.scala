@@ -666,6 +666,39 @@ class StoreSpec extends SparkTestBase {
     assert(after.size == 2 && after(0)._2 < after(1)._1)
   }
 
+  test("wire upserts commit one balanced, id-sorted file per core") {
+    import spark.implicits._
+    val path = tmpDir()
+    val c = Collection.create(spark, path, cfg, (1L to 2000L).map(i =>
+      (i, Seq(i.toFloat, 0f, 0f, 0f), s"""{"price":${i % 100}.0}"""))
+      .toDF("id", "vector", "payload"))
+    // 5 wire batches of 100: the first two replace ids, the rest insert
+    for (b <- 0 until 5) {
+      val pts = (1 to 100).map { j =>
+        s"""{"id": ${1800 + 100 * b + j}, "vector": [$j.0, 1.0, 0.0, 0.0],
+           |  "payload": {"price": 1.0}}""".stripMargin
+      }.mkString(",")
+      graft.api.UpdateBridge.applyJson(c,
+        s"""{"operations": [{"upsert": {"points": [$pts]}}]}""")
+    }
+    val cores = spark.sparkContext.defaultParallelism
+    assert(c.dataFileCount() == cores)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(path), true)
+    val perFile = Seq.newBuilder[Seq[Long]]
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet"))
+        perFile += spark.read.parquet(f.toString).select("id")
+          .collect().map(_.getLong(0)).toSeq
+    }
+    val files = perFile.result()
+    files.foreach(ids => assert(ids == ids.sorted, "ids not sorted within a file"))
+    val sizes = files.map(_.length)
+    assert(sizes.max <= 2 * sizes.min, s"unbalanced files: $sizes")
+    assert(sizes.sum == 2300 && files.flatten.distinct.length == 2300)
+  }
+
   test("field stats persist for exact=false counts; the warm estimate runs ZERO Spark jobs") {
     import spark.implicits._
     val path = tmpDir()
