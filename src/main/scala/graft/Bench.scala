@@ -200,15 +200,15 @@ object Bench {
       f16Path = s"/tmp/graft_runtime/bench_f16_$sane"
       u8Path = s"/tmp/graft_runtime/bench_u8_$sane"
       val e = Tables.load(s, dir, "embeddings")
-      e.select(col("vec_id"), VectorCodec.toF16(col("embedding")).as("vh"))
-        .write.mode("overwrite").parquet(f16Path)
-      graft.storage.ParquetMeta.bump(f16Path)
+      graft.storage.ParquetMeta.write(
+        e.select(col("vec_id"), VectorCodec.toF16(col("embedding")).as("vh")),
+        f16Path, "overwrite")
       // u8 storage holds RAW byte-range values (`x as u8`) — project the
       // unit-scale embeddings into the byte domain like the catalog entry
       val bscale = VectorCodec.byteDomain(col("embedding"))
-      e.select(col("vec_id"), VectorCodec.toU8(bscale).as("v8"))
-        .write.mode("overwrite").parquet(u8Path)
-      graft.storage.ParquetMeta.bump(u8Path)
+      graft.storage.ParquetMeta.write(
+        e.select(col("vec_id"), VectorCodec.toU8(bscale).as("v8")),
+        u8Path, "overwrite")
       q7 = Tables.embeddingOf(s, dir, 7L)
       q7b = s.read.parquet(u8Path).filter(col("vec_id") === 7L).head().getSeq[Byte](1)
       q13b = VectorCodec.encodeU8(VectorCodec.byteDomainSeq(

@@ -444,17 +444,14 @@ object ScaleProbe {
 
     val docsOut = new java.io.File(s"$outDir/documents.parquet")
     if (!docsOut.exists()) {
-      genDocuments(spark, Tables.load(spark, baseDir, "documents"), mult)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-      genEmbeddings(spark, Tables.load(spark, baseDir, "embeddings"), mult)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-      // these paths are later read through Tables.load → ParquetMeta:
-      // rewriting them without a bump would serve a stale memoized schema
-      // to a build+probe run sharing one JVM (r16 advice)
-      graft.storage.ParquetMeta.bump(s"$outDir/documents.parquet")
-      graft.storage.ParquetMeta.bump(s"$outDir/embeddings.parquet")
+      graft.storage.ParquetMeta.write(
+        genDocuments(spark, Tables.load(spark, baseDir, "documents"), mult)
+          .repartition(32),
+        s"$outDir/documents.parquet", "overwrite")
+      graft.storage.ParquetMeta.write(
+        genEmbeddings(spark, Tables.load(spark, baseDir, "embeddings"), mult)
+          .repartition(32),
+        s"$outDir/embeddings.parquet", "overwrite")
     }
     val nd = Tables.load(spark, outDir, "documents").count()
     val ne = Tables.load(spark, outDir, "embeddings").count()

@@ -63,13 +63,10 @@ object UpdateBridge {
       }
     }
     val prefix = acc.result()
-    if (prefix.nonEmpty) ledger.shardScope match {
-      // every applied op provably touches only these keys' partition
-      // directories → partition-scoped rewrite (one tenant's cost, not
-      // the table's)
-      case Some(keys) => coll.applyBatchScoped(prefix, keys)
-      case None => coll.applyBatch(prefix)
-    }
+    // when every applied op provably touches only some keys' partition
+    // directories, the rewrite is scoped to them (one tenant's cost, not
+    // the table's)
+    if (prefix.nonEmpty) coll.applyBatch(prefix, ledger.shardScope.getOrElse(Nil))
     failure.foreach(throw _)
   }
 

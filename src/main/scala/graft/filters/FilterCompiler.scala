@@ -442,7 +442,7 @@ final class FilterCompiler(
     * another kind (`5.5` under an integer match, `"abc"` or `{"a":5}`
     * under a range). A try-cast makes that value NULL, so it does not
     * match — qdrant's `condition_checker.rs` skips a value of another
-    * kind. */
+    * kind ([[cond0]]'s `MatchExcept` reads that NULL as a match). */
   private def asKind(key: String, v: Column, t: DataType): Column =
     if (t != StringType && r.dataTypeOf(key).forall(_ == StringType)) v.try_cast(t)
     else v
@@ -456,7 +456,14 @@ final class FilterCompiler(
     case MatchAny(k, vs) =>
       val t = vs.headOption.fold[DataType](StringType)(litType)
       anyValue(k, v => asKind(k, v, t).isin(vs: _*))
-    case MatchExcept(k, vs) => anyValue(k, !_.isin(vs: _*))
+    case MatchExcept(k, vs) =>
+      // a value of another kind is not among `vs`, so it matches
+      // (qdrant's `Match::Except` arm); a JSON null never does
+      val t = vs.headOption.fold[DataType](StringType)(litType)
+      anyValue(k, v => v.isNotNull && {
+        val x = asKind(k, v, t)
+        x.isNull || !x.isin(vs: _*)
+      })
     case MatchText(k, text) => textIndexes.get(k) match {
       case Some(cfg) =>
         // ALL analyzed query tokens ∈ the analyzed value token set. An

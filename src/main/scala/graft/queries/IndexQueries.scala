@@ -503,10 +503,9 @@ object IndexQueries {
         val e = emb(s, dir)
         def tok(n: Int) =
           array((0 until n).map(i => slice(col("embedding"), i * 16 + 1, 16)): _*)
-        e.select(col("vec_id"),
-            when(col("vec_id") % 2 === 0, tok(4)).otherwise(tok(2)).as("vector_tok"))
-          .write.mode("overwrite").parquet(path)
-        graft.storage.ParquetMeta.bump(path)
+        graft.storage.ParquetMeta.write(e.select(col("vec_id"),
+            when(col("vec_id") % 2 === 0, tok(4)).otherwise(tok(2)).as("vector_tok")),
+          path, "overwrite")
         path
       })
       val stored = graft.storage.ParquetMeta.read(s, path)

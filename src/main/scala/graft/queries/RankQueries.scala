@@ -114,11 +114,10 @@ object RankQueries {
       // rewrite the stored layout on every call — r16 optimization round,
       // result rows unchanged)
       mvecRecPaths.computeIfAbsent(path, { _ =>
-        emb(s, dir).select(col("vec_id"),
+        graft.storage.ParquetMeta.write(emb(s, dir).select(col("vec_id"),
             array(slice(col("embedding"), 1, 32), slice(col("embedding"), 33, 32))
-              .as("vector_tok"))
-          .write.mode("overwrite").parquet(path)
-        graft.storage.ParquetMeta.bump(path)
+              .as("vector_tok")),
+          path, "overwrite")
         path
       })
       val stored = graft.storage.ParquetMeta.read(s, path)

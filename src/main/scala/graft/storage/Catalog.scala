@@ -68,8 +68,8 @@ final class Catalog(spark: SparkSession, root: String) {
   def delete(name: String): Boolean = {
     if (!exists(name)) false
     else {
+      ParquetMeta.delete(spark, dataPath(name))
       fs.delete(collDir(name), true)
-      ParquetMeta.bump(dataPath(name))
       aliases.removeCollection(name)
       true
     }

@@ -28,9 +28,9 @@ final class Collection(
     * per call, but without the driver-side footer inference and file
     * listing (a Spark job once the table has more than 32 partition
     * directories, as IVF collections do) the bare `spark.read.parquet` pays
-    * on every open of an unchanged table. Every mutation site bumps the
-    * path's version; a directory replaced without a bump is caught by its
-    * modification time. */
+    * on every open of an unchanged table. Every commit moves the path's
+    * version ([[ParquetMeta.replace]]); a directory replaced outside
+    * [[ParquetMeta]] is caught by its modification time. */
   def read(): DataFrame = ParquetMeta.read(spark, path)
 
   /** The driver-side JSON artifacts beside the table, one [[Sidecar]]
@@ -69,7 +69,8 @@ final class Collection(
     * persisted params. Type-gated, so already-encoded columns (reads of
     * the stored table) pass through untouched — encoding is idempotent. */
   private def encodeVectors(df: DataFrame): DataFrame =
-    attachIvf(attachQuant(Collection.encodeVectors(config, df)))
+    Collection.withIndexColumns(config, Collection.encodeVectors(config, df),
+      quantParams.get, vc => ivfModel(vc.name))
 
   /** Physical vector columns a request's `with_vector` selects
     * ([[graft.api.RequestCodec.parseWithVector]]): `true` = every declared
@@ -199,10 +200,21 @@ final class Collection(
     idTypeCache
   }
 
-  /** Commit `df0` as the table's new contents: tmp-dir + rename swap (Spark
-    * cannot overwrite a path still lazily read in the same plan; on a
-    * lakehouse table this is simply MERGE/DELETE), laid out by
-    * [[Collection.layout]].
+  /** Commit `df0` as the table's new contents: the one write path of every
+    * collection mutation (update batches, index and layout rewrites,
+    * `compact`, config PATCHes and `create`). Tenant buckets and
+    * payload-index projections are recomputed, the rows are laid out by
+    * [[Collection.layout]] and written to a staging directory, and
+    * [[ParquetMeta.replace]] swaps them in (Spark cannot overwrite a path
+    * still lazily read in the same plan; on a lakehouse table this is
+    * simply MERGE/DELETE) and invalidates the memoized listing. The
+    * derived sidecars then change through [[dataChanged]].
+    *
+    * `keys`: when non-empty, `df0` holds exactly the rows of these shard
+    * keys, and the swap replaces only their partition directories (a key
+    * whose rows were all deleted simply loses its directory); the rest of
+    * the table is neither read nor rewritten, and the sidecars change for
+    * these keys only.
     *
     * `balance`: the commit brings in rows from outside the table (an
     * upsert), so on an un-partitioned table its rows are hash-distributed
@@ -221,8 +233,9 @@ final class Collection(
     * ops, compaction and index/layout rewrites cannot, so they keep the
     * IDF sidecar intact (zero invalidation, zero recompute). Defaults to
     * the safe answer. */
-  private def write(df0: DataFrame, targetFiles: Option[Int] = None,
-      sparseDfChange: Boolean = true, balance: Boolean = false): Unit = {
+  private def commit(df0: DataFrame, keys: Seq[Any] = Nil,
+      targetFiles: Option[Int] = None, sparseDfChange: Boolean = true,
+      balance: Boolean = false): Unit = {
     rewriteCount += 1
     idTypeCache = None
     val tmp = path + "__tmp"
@@ -233,6 +246,8 @@ final class Collection(
     val df = Collection.withIndexProjections(config,
       Collection.withTenantBuckets(config, df0))
     val pc = Collection.partitionCols(config, df.columns)
+    require(keys.isEmpty || pc.headOption.exists(config.shardKeyCol.contains),
+      "a scoped commit needs the shard key as the leading partition column")
     // partitioned tables hash-repartition on the partition columns first:
     // one task owns each key, so every partition directory gets O(1) files
     // instead of one per write task (64 cells × 32 tasks = 2048 tiny files
@@ -241,21 +256,23 @@ final class Collection(
     // task, so parquet min/max row-group stats make retrieve-by-id and
     // scroll-offset scans prune to O(k) row groups instead of the full
     // table — the batch analog of the reference's O(1) id tracker.
-    val laid = Collection.layout(config, df, targetFiles, balance)
-    val w = laid.write.mode(SaveMode.Overwrite)
+    val w = Collection.layout(config, df, targetFiles, balance)
+      .write.mode(SaveMode.Overwrite)
     (if (pc.isEmpty) w else w.partitionBy(pc: _*)).parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // bump BEFORE the destructive swap as well as after: a reader racing
-    // the delete→rename window must not apply the memoized OLD schema to
-    // the NEW files (a spurious extra inference is harmless; a stale schema
-    // is not). Single-writer is still the assumed discipline — see
-    // ParquetMeta's doc — this just removes the one observable race.
-    ParquetMeta.bump(path)
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-    ParquetMeta.bump(path)
-    dataChanged(sparseDfChange)
+    ParquetMeta.replace(spark, path, Some(tmp),
+      if (keys.isEmpty) None else Some(keyDirs(keys)))
+    dataChanged(sparseDfChange, shards = keys)
+  }
+
+  /** Selects the partition directories of the shard keys `keys` by name:
+    * `<shard key>=<escaped value>`, matched on the unescaped tail so simple
+    * and escaped names both resolve. */
+  private def keyDirs(keys: Seq[Any]): String => Boolean = {
+    val sk = config.shardKeyCol.get
+    val wanted = keys.map(_.toString).toSet
+    n => n.startsWith(s"$sk=") && wanted(
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(n.stripPrefix(s"$sk=")))
   }
 
   /** Insert-or-replace whole points: last write wins per id (qdrant upsert,
@@ -324,82 +341,31 @@ final class Collection(
     * `src/actix/api/update_api.rs:324`): fold every op into one evolving
     * table plan, commit with a single atomic write. Each op observes the
     * effects of the ones before it, exactly like the reference's sequential
-    * application — but as one Spark job, not N. */
-  def applyBatch(ops: Seq[UpdateOp]): Unit = {
+    * application — but as one Spark job, not N.
+    *
+    * `keys` restricts the batch to a set of shard keys when the caller can
+    * prove every op only touches rows under them (the wire bridge can — a
+    * custom-sharded collection rejects keyless updates, and upsert targets
+    * + the moved-away homes of upserted ids come from its existence
+    * probe): the fold reads ONLY those partition directories
+    * (partition-pruned scan) and the commit swaps ONLY them. A per-tenant
+    * update on a 100 TB table then costs one tenant's rewrite, not the
+    * table's — the batch analog of the reference routing updates to the
+    * selected key's shards (`toc/point_ops.rs:489-521`). Ignored when the
+    * collection isn't custom-sharded. */
+  def applyBatch(ops: Seq[UpdateOp], keys: Seq[Any] = Nil): Unit = {
+    val scope = if (config.shardKeyCol.isDefined) keys else Nil
+    val cur =
+      if (scope.isEmpty) read()
+      else read().filter(col(config.shardKeyCol.get).isin(scope: _*))
     val pins = new FoldPins
-    try write(ops.foldLeft(read())(applyOp(pins)),
+    try commit(ops.foldLeft(cur)(applyOp(pins)), scope,
       sparseDfChange = Collection.opsChangeSparseDfs(config, ops),
       balance = ops.exists {
         case _: UpdateOp.Upsert | _: UpdateOp.UpsertConditional => true
         case _ => false
       })
     finally releaseFoldPins(pins)
-  }
-
-  /** Whether a batch can change any sparse vector's per-dim document
-    * frequencies: point writes/deletes can; payload mutations and
-    * dense-vector ops cannot (they never touch a sparse cell), so the IDF
-    * sidecar survives them untouched. */
-  private[storage] def sparseDfsChange(ops: Seq[UpdateOp]): Boolean =
-    Collection.opsChangeSparseDfs(config, ops)
-
-  /** Batch apply RESTRICTED to a set of shard keys: when the caller can
-    * prove every op only touches rows under `keys` (the wire bridge can —
-    * a custom-sharded collection rejects keyless updates, and upsert
-    * targets + the moved-away homes of upserted ids come from its
-    * existence probe), the fold reads ONLY those partition directories
-    * (partition-pruned scan) and the commit swaps ONLY them. A per-tenant
-    * update on a 100 TB table then costs one tenant's rewrite, not the
-    * table's — the batch analog of the reference routing updates to the
-    * selected key's shards (`toc/point_ops.rs:489-521`). Falls back to
-    * the whole-table path when the collection isn't custom-sharded. */
-  def applyBatchScoped(ops: Seq[UpdateOp], keys: Seq[Any]): Unit =
-    config.shardKeyCol match {
-      case Some(sk) if keys.nonEmpty =>
-        val scoped = read().filter(col(sk).isin(keys: _*))
-        val pins = new FoldPins
-        try writeShardScoped(ops.foldLeft(scoped)(applyOp(pins)), sk, keys,
-          sparseDfChange = Collection.opsChangeSparseDfs(config, ops))
-        finally releaseFoldPins(pins)
-      case _ => applyBatch(ops)
-    }
-
-  /** Scoped twin of [[write]]: same tenant-bucket + layout pipeline, but
-    * the tmp→dst swap replaces only the selected keys' partition
-    * directories (a key whose rows were all deleted simply loses its
-    * directory). Sidecars change through [[dataChanged]] with the keys. */
-  private def writeShardScoped(df0: DataFrame, sk: String,
-      keys: Seq[Any], sparseDfChange: Boolean = true): Unit = {
-    rewriteCount += 1
-    idTypeCache = None
-    val tmp = path + "__tmp"
-    val df = Collection.withIndexProjections(config,
-      Collection.withTenantBuckets(config, df0))
-    val pc = Collection.partitionCols(config, df.columns)
-    require(pc.headOption.contains(sk),
-      "scoped write needs the shard key as the leading partition column")
-    Collection.layout(config, df, None)
-      .write.mode(SaveMode.Overwrite).partitionBy(pc: _*).parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dstBase = new org.apache.hadoop.fs.Path(path)
-    val wanted = keys.map(_.toString).toSet
-    def keyDirs(base: org.apache.hadoop.fs.Path) =
-      fs.listStatus(base).filter { st =>
-        st.isDirectory && {
-          val n = st.getPath.getName
-          n.startsWith(s"$sk=") && wanted.contains(
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(n.stripPrefix(s"$sk=")))
-        }
-      }
-    // bump before AND after the directory swap — same race note as write()
-    ParquetMeta.bump(path)
-    keyDirs(dstBase).foreach(st => fs.delete(st.getPath, true))
-    keyDirs(new org.apache.hadoop.fs.Path(tmp)).foreach(st =>
-      fs.rename(st.getPath, new org.apache.hadoop.fs.Path(dstBase, st.getPath.getName)))
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    ParquetMeta.bump(path)
-    dataChanged(sparseDfChange, shards = keys)
   }
 
   /** Deterministic last-write-wins per id within one batch: the reference
@@ -1573,6 +1539,51 @@ final class Collection(
     val spec = graft.api.RequestCodec.parseFacetRequest(json, config.shardKeyCol)
     spec.filter.foreach(fl => config.strictMode.foreach(sm =>
       graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)))
+    import org.apache.spark.sql.types._
+    import graft.filters.Cardinality.{FieldStatsSnapshot, ValueStats}
+    // The two statistics-served answers below share their rendering: the
+    // key's value type from the snapshot (an integer key casts back to the
+    // CURRENTLY declared width, the exact scan's value type; a since-retyped
+    // field has none and takes the scan), the (count desc, typed value)
+    // order, and the typed (value, cnt) frame of the top `limit`. `pairs`
+    // gives the (value, count) pairs to rank, or None to decline; `keep`
+    // may decline the selected head.
+    def fromStats(
+        pairs: (DataType, FieldStatsSnapshot, ValueStats) => Option[Seq[(String, Long)]],
+        keep: (DataType, ValueStats, Seq[(String, Long)]) => Boolean = (_, _, _) => true)
+        : Option[DataFrame] = {
+      val snap = fieldStats
+      def elemType(t: DataType): DataType = t match {
+        case ArrayType(e, _) => e
+        case other => other
+      }
+      val render: Option[DataType] =
+        if (snap.stringTyped.contains(spec.key)) Some(StringType)
+        else if (snap.boolTyped.contains(spec.key)) Some(BooleanType)
+        else if (snap.intTyped.contains(spec.key))
+          config.payloadTypes.get(spec.key).map(elemType)
+            .filter(t => t == LongType || t == IntegerType)
+        else None
+      for {
+        t <- render
+        vs <- snap.values.get(spec.key)
+        ps <- pairs(t, snap, vs)
+        sel = (t match {
+          case BooleanType => ps.sortBy { case (v, c) => (-c, v.toBoolean) }
+          case LongType | IntegerType => ps.sortBy { case (v, c) => (-c, v.toLong) }
+          case _ => ps.sortBy { case (v, c) => (-c, v) }
+        }).take(spec.limit)
+        if keep(t, vs, sel)
+      } yield {
+        import spark.implicits._
+        t match {
+          case BooleanType => sel.map { case (v, c) => (v.toBoolean, c) }.toDF("value", "cnt")
+          case LongType => sel.map { case (v, c) => (v.toLong, c) }.toDF("value", "cnt")
+          case IntegerType => sel.map { case (v, c) => (v.toInt, c) }.toDF("value", "cnt")
+          case _ => sel.toDF("value", "cnt")
+        }
+      }
+    }
     // `exact: false` (the DEFAULT, `facets.rs:23-24`) on an unfiltered
     // key of ANY facetable type — keyword, integer, bool, uuid (uuid
     // payload values are canonical strings, so they ride the string path;
@@ -1591,50 +1602,11 @@ final class Collection(
     val snapServed: Option[DataFrame] =
       if (spec.exact || spec.filter.nonEmpty ||
           spec.limit > Collection.StatsTopK) None
-      else {
-        import org.apache.spark.sql.types._
-        val snap = fieldStats
-        def elemType(t: DataType): DataType = t match {
-          case ArrayType(e, _) => e
-          case other => other
-        }
-        val render: Option[DataType] =
-          if (snap.stringTyped.contains(spec.key)) Some(StringType)
-          else if (snap.boolTyped.contains(spec.key)) Some(BooleanType)
-          else if (snap.intTyped.contains(spec.key))
-            // cast back to the CURRENTLY declared integer width (the exact
-            // scan's value type); a since-retyped field falls to the scan
-            config.payloadTypes.get(spec.key).map(elemType)
-              .filter(t => t == LongType || t == IntegerType)
-          else None
-        render.flatMap { t =>
-          snap.values.get(spec.key).flatMap { vs =>
-            import spark.implicits._
-            val sorted: Seq[(String, Long)] = t match {
-              case BooleanType =>
-                vs.counts.toSeq.sortBy { case (v, c) => (-c, v.toBoolean) }
-              case LongType | IntegerType =>
-                vs.counts.toSeq.sortBy { case (v, c) => (-c, v.toLong) }
-              case _ => vs.counts.toSeq.sortBy { case (v, c) => (-c, v) }
-            }
-            val sel = sorted.take(spec.limit)
-            val headMin = if (vs.counts.isEmpty) 0L else vs.counts.values.min
-            val typedReorder = t != StringType
-            val boundarySafe = vs.tailUnique == 0L || !typedReorder ||
-              (sel.length == spec.limit && sel.last._2 > headMin)
-            if (!boundarySafe) None
-            else Some(t match {
-              case BooleanType =>
-                sel.map { case (v, c) => (v.toBoolean, c) }.toDF("value", "cnt")
-              case LongType =>
-                sel.map { case (v, c) => (v.toLong, c) }.toDF("value", "cnt")
-              case IntegerType =>
-                sel.map { case (v, c) => (v.toInt, c) }.toDF("value", "cnt")
-              case _ => sel.toDF("value", "cnt")
-            })
-          }
-        }
-      }
+      else fromStats((_, _, vs) => Some(vs.counts.toSeq), { (t, vs, sel) =>
+        val headMin = if (vs.counts.isEmpty) 0L else vs.counts.values.min
+        vs.tailUnique == 0L || t == StringType ||
+          (sel.length == spec.limit && sel.last._2 > headMin)
+      })
     // `exact: false` WITH a filter: per-value ESTIMATES from the same
     // statistics snapshot instead of the exact scan — the estimator analog
     // of the reference's approximate facet (`local_shard/facet.rs:23-95`
@@ -1649,52 +1621,19 @@ final class Collection(
     // `exact: false` MAY be cheaper, never that it must be).
     val filteredEstimate: Option[DataFrame] =
       if (spec.exact || spec.filter.isEmpty) None
-      else {
-        import org.apache.spark.sql.types._
-        val snap = fieldStats
-        def elemType(t: DataType): DataType = t match {
-          case ArrayType(e, _) => e
-          case other => other
+      else fromStats { (t, snap, vs) =>
+        def typed(v: String): Any = t match {
+          case BooleanType => v.toBoolean
+          case LongType | IntegerType => v.toLong
+          case _ => v
         }
-        val render: Option[DataType] =
-          if (snap.stringTyped.contains(spec.key)) Some(StringType)
-          else if (snap.boolTyped.contains(spec.key)) Some(BooleanType)
-          else if (snap.intTyped.contains(spec.key))
-            config.payloadTypes.get(spec.key).map(elemType)
-              .filter(t => t == LongType || t == IntegerType)
-          else None
-        render.flatMap { t =>
-          snap.values.get(spec.key).filter(_.tailUnique == 0L).map { vs =>
-            import spark.implicits._
-            def typed(v: String): Any = t match {
-              case BooleanType => v.toBoolean
-              case LongType | IntegerType => v.toLong
-              case _ => v
-            }
-            val est = vs.counts.keys.toSeq.map { v =>
-              val merged = graft.model.Filter.mergeOpts(spec.filter,
-                Some(graft.model.Filter(must =
-                  Seq(graft.model.MatchValue(spec.key, typed(v)))))).get
-              v -> graft.filters.Cardinality.estimateFilter(merged, snap).exp
-            }.filter(_._2 > 0L)
-            val sorted = t match {
-              case BooleanType => est.sortBy { case (v, c) => (-c, v.toBoolean) }
-              case LongType | IntegerType =>
-                est.sortBy { case (v, c) => (-c, v.toLong) }
-              case _ => est.sortBy { case (v, c) => (-c, v) }
-            }
-            val sel = sorted.take(spec.limit)
-            t match {
-              case BooleanType =>
-                sel.map { case (v, c) => (v.toBoolean, c) }.toDF("value", "cnt")
-              case LongType =>
-                sel.map { case (v, c) => (v.toLong, c) }.toDF("value", "cnt")
-              case IntegerType =>
-                sel.map { case (v, c) => (v.toInt, c) }.toDF("value", "cnt")
-              case _ => sel.toDF("value", "cnt")
-            }
-          }
-        }
+        if (vs.tailUnique != 0L) None
+        else Some(vs.counts.keys.toSeq.map { v =>
+          val merged = graft.model.Filter.mergeOpts(spec.filter,
+            Some(graft.model.Filter(must =
+              Seq(graft.model.MatchValue(spec.key, typed(v)))))).get
+          v -> graft.filters.Cardinality.estimateFilter(merged, snap).exp
+        }.filter(_._2 > 0L))
       }
     snapServed.orElse(filteredEstimate).getOrElse {
       val df = read()
@@ -1999,46 +1938,24 @@ final class Collection(
       val params =
         if (quantChanged) Collection.fitQuantParams(nc, stripped)
         else quantParams
-      val withQuant = nc.vectors.filter(_.quantization.isDefined)
-        .foldLeft(stripped) { (acc, vc) =>
-          val vcol = nc.vectorCol(vc.name)
-          if (!acc.columns.contains(vcol)) acc
-          else acc.withColumn(nc.quantCol(vc.name),
-            when(col(vcol).isNotNull,
-              Collection.quantEncodeExpr(vc, params(vc.name), col(vcol)))
-              .otherwise(lit(null)))
-        }
       // IVF: retrain on the CURRENT corpus when the spec changed (the
       // reference re-optimizes segments in the background after an index
       // PATCH); unchanged specs keep their persisted centroids so cell
       // ids stay stable across the rewrite
-      val withCells = nc.vectors.filter(_.ann.isDefined)
-        .foldLeft(withQuant) { (acc, vc) =>
-          val vcol = nc.vectorCol(vc.name)
-          if (!acc.columns.contains(vcol)) acc
-          else {
-            val specChanged = config.vectors.find(_.name == vc.name)
-              .forall(_.ann != vc.ann)
-            val m =
-              if (specChanged)
-                graft.index.IvfIndex.buildAndPersist(
-                  stripped, vcol, vc.ann.get.cells, next.ivfPath(vc.name))
-              else next.ivfModel(vc.name).getOrElse(
-                graft.index.IvfIndex.buildAndPersist(
-                  stripped, vcol, vc.ann.get.cells, next.ivfPath(vc.name)))
-            acc.withColumn(nc.cellCol(vc.name),
-              when(col(vcol).isNotNull,
-                graft.index.IvfIndex.assignExpr(col(vcol), m))
-                .otherwise(lit(null).cast("int")))
-          }
-        }
-      next.write(withCells, sparseDfChange = false)
+      def retrain(vc: graft.sources.VectorConfig) =
+        graft.index.IvfIndex.buildAndPersist(
+          stripped, nc.vectorCol(vc.name), vc.ann.get.cells, next.ivfPath(vc.name))
+      val withCells = Collection.withIndexColumns(nc, stripped, n => Some(params(n)), vc =>
+        Some(
+          if (config.vectors.find(_.name == vc.name).forall(_.ann != vc.ann)) retrain(vc)
+          else next.ivfModel(vc.name).getOrElse(retrain(vc))))
+      next.commit(withCells, sparseDfChange = false)
       if (quantChanged) next.quantSidecar.put(params)
     } else if (layoutChanged) {
       // layout-only PATCH: one rewrite under the new partition/sort rule
-      // (write() recomputes declared buckets; stale ones drop here)
+      // (commit() recomputes declared buckets; stale ones drop here)
       val cur = read()
-      next.write(cur.columns.filter(_.startsWith("tenantb_"))
+      next.commit(cur.columns.filter(_.startsWith("tenantb_"))
         .foldLeft(cur)(_ drop _), sparseDfChange = false)
     }
     next
@@ -2112,7 +2029,7 @@ final class Collection(
     * drop is a partition-DIRECTORY delete — O(1) filesystem metadata at
     * any scale, no table rewrite (the batch analog of the reference
     * dropping the key's shards wholesale). Sidecars derived from the data
-    * change as after a scoped write of that key ([[dataChanged]]). */
+    * change as after a scoped commit of that key ([[dataChanged]]). */
   def deleteShardKey(key: Any): Boolean = {
     val sk = config.shardKeyCol.getOrElse(throw new IllegalArgumentException(
       "cannot delete a shard key: the collection has no shard-key column"))
@@ -2121,25 +2038,12 @@ final class Collection(
         .collect().map(_.get(0)).toSeq)
     if (!keys.contains(key)) throw new IllegalArgumentException(
       s"Not found: Shard key $key not found")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     // Retire the key from the registry FIRST: a failure mid-drop then
     // leaves an undeclared key with orphan data (re-creatable, and its
     // directories are re-droppable) rather than a declared key whose data
     // is gone — the safer inconsistency.
     writeShardKeys(keys.filterNot(_ == key))
-    // partition directories are named <col>=<escaped value>; match on the
-    // unescaped tail so simple and escaped names both resolve
-    val base = new org.apache.hadoop.fs.Path(path)
-    val victims = fs.listStatus(base).filter { st =>
-      st.isDirectory && {
-        val n = st.getPath.getName
-        n.startsWith(s"$sk=") &&
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(n.stripPrefix(s"$sk=")) == key.toString
-      }
-    }
-    victims.foreach(st => fs.delete(st.getPath, true))
-    ParquetMeta.bump(path)
+    ParquetMeta.replace(spark, path, staged = None, Some(keyDirs(Seq(key))))
     dataChanged(sparseDfChange = true, shards = Seq(key), shardsGone = true)
     // the key WAS declared (the not-found guard above) — report the drop
     // as applied even when no data had landed under it yet
@@ -2574,22 +2478,6 @@ final class Collection(
   private[graft] def quantParams: Map[String, Collection.QuantParams] =
     quantSidecar.get.getOrElse(Map.empty)
 
-  /** Recompute quantized columns for incoming rows from the PERSISTED
-    * params (never refit — a micro-batch must quantize in the same space
-    * as the existing storage). */
-  private def attachQuant(df: DataFrame): DataFrame =
-    config.vectors.filter(_.quantization.isDefined).foldLeft(df) { (acc, vc) =>
-      val vcol = config.vectorCol(vc.name)
-      val qc = config.quantCol(vc.name)
-      (if (acc.columns.contains(vcol)) quantParams.get(vc.name) else None) match {
-        case Some(qp) =>
-          acc.withColumn(qc,
-            when(col(vcol).isNotNull, Collection.quantEncodeExpr(vc, qp, col(vcol)))
-              .otherwise(lit(null)))
-        case None => acc
-      }
-    }
-
   // ------------------------------------------------------- IVF ANN
 
   /** Centroid-model artifact path for a declared [[graft.sources.IvfSpec]]
@@ -2603,21 +2491,6 @@ final class Collection(
     * before any PATCH rewrite). */
   private[graft] def ivfModel(name: String): Option[graft.index.IvfIndex.Model] =
     graft.index.IvfIndex.loadCached(ivfPath(name))
-
-  /** (Re)assign IVF cell columns for incoming rows from the PERSISTED
-    * centroids (never retrain — a micro-batch must land in the same cell
-    * space as the existing partitions). */
-  private def attachIvf(df: DataFrame): DataFrame =
-    config.vectors.filter(_.ann.isDefined).foldLeft(df) { (acc, vc) =>
-      val vcol = config.vectorCol(vc.name)
-      (if (acc.columns.contains(vcol)) ivfModel(vc.name) else None) match {
-        case Some(m) =>
-          acc.withColumn(config.cellCol(vc.name),
-            when(col(vcol).isNotNull, graft.index.IvfIndex.assignExpr(col(vcol), m))
-              .otherwise(lit(null).cast("int")))
-        case None => acc
-      }
-    }
 
   /** Collection statistics + declared schema — the `GET /collections/{c}`
     * surface (`CollectionInfo`, `lib/collection/src/operations/types.rs:215`):
@@ -2658,7 +2531,7 @@ final class Collection(
     * to `targetFiles` well-sized files so scans stop paying per-file open
     * cost. On a lakehouse this is OPTIMIZE/compaction. */
   def compact(targetFiles: Int = 1): Unit =
-    write(read(), targetFiles = Some(targetFiles), sparseDfChange = false)
+    commit(read(), targetFiles = Some(targetFiles), sparseDfChange = false)
 
   /** Number of parquet data files currently backing the collection. */
   def dataFileCount(): Int = {
@@ -2681,7 +2554,7 @@ final class Collection(
     val cur = read()
     val c = config.vectorCol(name)
     require(!cur.columns.contains(c), s"vector column '$c' already exists")
-    write(cur.withColumn(c,
+    commit(cur.withColumn(c,
       values.getOrElse(lit(null).cast(
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))),
       sparseDfChange = false)
@@ -2689,7 +2562,7 @@ final class Collection(
 
   /** Drop a named vector column collection-wide (`vector_name_api.rs:57`). */
   def dropVectorColumn(name: String): Unit =
-    write(read().drop(config.vectorCol(name)), sparseDfChange = false)
+    commit(read().drop(config.vectorCol(name)), sparseDfChange = false)
 
   /** Materialize the projection column(s) for a declared payload field —
     * the "create payload index" operation (`update_api.rs:371`,
@@ -2698,12 +2571,12 @@ final class Collection(
     * parsing JSON. Column name: `idx_<key>`; a geo-schema key additionally
     * materializes its `geocell_<key>` prune column
     * ([[Collection.indexProjection]]). The actual values are (re)computed
-    * inside [[write]]'s rematerialization pass — this call just
+    * inside [[commit]]'s rematerialization pass — this call just
     * establishes the columns and pays the one rewrite. */
   def buildPayloadIndex(key: String): Unit = {
     val t = config.payloadTypes.getOrElse(key,
       throw new IllegalArgumentException(s"no declared type for payload key '$key'"))
-    write(Collection.applyIndexProjection(config, key, t, read()),
+    commit(Collection.applyIndexProjection(config, key, t, read()),
       sparseDfChange = false)
   }
 
@@ -2737,14 +2610,14 @@ final class Collection(
         if (flags.isPrincipal) (config.principalKeys :+ key).distinct
         else config.principalKeys)
     val next = new Collection(spark, path, nc)
-    next.write(Collection.applyIndexProjection(nc, key, t, read()),
+    next.commit(Collection.applyIndexProjection(nc, key, t, read()),
       sparseDfChange = false)
     next
   }
 
   /** Drop a payload index's column(s) (`update_api.rs:407`). */
   def dropPayloadIndex(key: String): Unit =
-    write(read().drop(config.idxCol(key)).drop(config.geoCellCol(key))
+    commit(read().drop(config.idxCol(key)).drop(config.geoCellCol(key))
       .drop(config.geoCellsCol(key)),
       sparseDfChange = false)
 
@@ -2773,57 +2646,57 @@ object Collection {
     // job of SURVEY.md §2.6); params persist beside the table so every
     // later micro-batch quantizes in the SAME space
     val params = fitQuantParams(config, points)
-    val enc = encodeVectors(config, points)
-    val withQuant = config.vectors.filter(_.quantization.isDefined)
-      .foldLeft(enc) { (acc, vc) =>
-        val vcol = config.vectorCol(vc.name)
-        if (!acc.columns.contains(vcol)) acc
-        else acc.withColumn(config.quantCol(vc.name),
-          when(col(vcol).isNotNull,
-            quantEncodeExpr(vc, params(vc.name), col(vcol)))
-            .otherwise(lit(null)))
-      }
     // declared IVF: train centroids on the initial corpus (always a fresh
     // fit — create replaces the data, a stale model must not leak in),
-    // persist beside the table, and materialize the cell column the write
-    // below PARTITIONS by — the physical layout a probe query prunes.
+    // persist beside the table, and materialize the cell column the commit
+    // PARTITIONS by — the physical layout a probe query prunes.
     val coll0 = new Collection(spark, path, config)
-    val withCells = config.vectors.filter(_.ann.isDefined)
-      .foldLeft(withQuant) { (acc, vc) =>
-        val vcol = config.vectorCol(vc.name)
-        if (!acc.columns.contains(vcol)) acc
-        else {
-          require(vc.datatype == Float32,
-            s"ann index on '${vc.name}' requires Float32 storage (got ${vc.datatype})")
-          val m = graft.index.IvfIndex.buildAndPersist(
-            points, vcol, vc.ann.get.cells, coll0.ivfPath(vc.name))
-          acc.withColumn(config.cellCol(vc.name),
-            when(col(vcol).isNotNull, graft.index.IvfIndex.assignExpr(col(vcol), m))
-              .otherwise(lit(null).cast("int")))
-        }
-      }
-    val withTb = withTenantBuckets(config, withCells)
-    val pc = partitionCols(config, withTb.columns)
-    // one task per partition key → O(1) files per partition directory,
-    // rows id-clustered for row-group pruning (see Collection.write /
-    // Collection.layout — same layout rule)
-    val laid = layout(config, withTb, None)
-    val w = laid.write.mode(SaveMode.Overwrite)
-    (if (pc.isEmpty) w else w.partitionBy(pc: _*)).parquet(path)
-    ParquetMeta.bump(path)
-    val coll = new Collection(spark, path, config)
-    // create REPLACES the collection at `path`: stale driver-side sidecars
-    // from a previous collection there must not leak into the new one —
-    // the fieldstats file in particular is rebuilt LAZILY, so without this
-    // delete the first `exact:false` count/facet would serve the PREVIOUS
+    val withCells = withIndexColumns(config, encodeVectors(config, points),
+      n => Some(params(n)), { vc =>
+        require(vc.datatype == Float32,
+          s"ann index on '${vc.name}' requires Float32 storage (got ${vc.datatype})")
+        Some(graft.index.IvfIndex.buildAndPersist(
+          points, config.vectorCol(vc.name), vc.ann.get.cells, coll0.ivfPath(vc.name)))
+      })
+    // create REPLACES the collection at `path`: the commit drops the stale
+    // data sidecars of a previous collection there like every commit does
+    // — the fieldstats file in particular is rebuilt LAZILY, so without
+    // that the first `exact:false` count/facet would serve the PREVIOUS
     // collection's statistics (caught by the r11 scale probe: the 500×
-    // re-create answered estimates from the 100× sidecar). The data
-    // sidecars go through the same invalidation as every commit.
-    coll.dataChanged(sparseDfChange = true)
+    // re-create answered estimates from the 100× sidecar). The returned
+    // instance is a fresh one, with no rewrite counted.
+    coll0.commit(withCells)
+    val coll = new Collection(spark, path, config)
     coll.shardKeySidecar.drop()
     if (params.isEmpty) coll.quantSidecar.drop() else coll.quantSidecar.put(params)
     coll.refreshSparseIdfStats()
     coll
+  }
+
+  /** Add the quantized column of every quantized vector, encoded with
+    * `quant(name)`, then the IVF cell column of every ann vector, assigned
+    * by `cells(vector)`; a vector whose column is absent from `df`, or
+    * whose params or model are `None`, gets none. Create fits both on the
+    * initial corpus, a config PATCH refits or reuses them, and incoming
+    * rows reuse the persisted ones. */
+  private[storage] def withIndexColumns(config: CollectionConfig, df: DataFrame,
+      quant: String => Option[QuantParams],
+      cells: graft.sources.VectorConfig => Option[graft.index.IvfIndex.Model]): DataFrame = {
+    def present(acc: DataFrame, vc: graft.sources.VectorConfig) =
+      acc.columns.contains(config.vectorCol(vc.name))
+    val withQuant = config.vectors.filter(_.quantization.isDefined).foldLeft(df) { (acc, vc) =>
+      val vcol = col(config.vectorCol(vc.name))
+      (if (present(acc, vc)) quant(vc.name) else None).fold(acc)(qp =>
+        acc.withColumn(config.quantCol(vc.name),
+          when(vcol.isNotNull, quantEncodeExpr(vc, qp, vcol)).otherwise(lit(null))))
+    }
+    config.vectors.filter(_.ann.isDefined).foldLeft(withQuant) { (acc, vc) =>
+      val vcol = col(config.vectorCol(vc.name))
+      (if (present(acc, vc)) cells(vc) else None).fold(acc)(m =>
+        acc.withColumn(config.cellCol(vc.name),
+          when(vcol.isNotNull, graft.index.IvfIndex.assignExpr(vcol, m))
+            .otherwise(lit(null).cast("int"))))
+    }
   }
 
   /** Physical row layout of a table write. Un-partitioned tables sort by
@@ -2837,7 +2710,7 @@ object Collection {
     * How an un-partitioned write spreads its rows over tasks:
     *  - `targetFiles = Some(n)` (`compact`): range-partition by id into
     *    `n` tasks, so files hold disjoint id spans;
-    *  - `balance` (a commit that brings in rows, see [[Collection.write]]):
+    *  - `balance` (a commit that brings in rows, see `commit`):
     *    hash-partition by id into exactly `defaultParallelism` tasks — one
     *    balanced file per core, so the next fold and every read scan one
     *    split per core. The count is explicit because AQE does not

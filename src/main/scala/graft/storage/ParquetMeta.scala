@@ -34,12 +34,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * An entry is valid only while the files it listed are unchanged. It is
   * keyed on:
-  *  - the path's [[version]], which every table-mutation site bumps through
-  *    [[bump]] ([[Collection]]'s `write`/`writeShardScoped`/`deleteShardKey`,
-  *    `Collection.create`, [[Catalog.delete]]);
+  *  - the path's [[version]]. Only this object's writers change files
+  *    under a path, and each one advances its version: [[replace]] (every
+  *    [[Collection]] commit and shard-key drop), [[write]] (a plain
+  *    DataFrame write, any mode) and [[delete]];
   *  - the modification time of the root directory (one `getFileStatus`, no
   *    listing), so a writer that replaces or appends to the directory
-  *    without bumping — a test fixture, another JVM — is still seen;
+  *    outside these functions — a test fixture, another JVM — is still
+  *    seen;
   *  - the session, since a relation belongs to the session that listed it.
   * A stale entry makes the next read re-list and re-infer from the new
   * footers (id-type widening on upsert is the case that exercises this).
@@ -58,13 +60,54 @@ private[graft] object ParquetMeta {
   def version(path: String): Long =
     versions.getOrDefault(path, 0L)
 
-  /** Invalidate the memoized relation for `path` — MUST be called by every
-    * code path that creates, rewrites, or deletes data under it. */
-  def bump(path: String): Unit = {
+  private def bump(path: String): Unit = {
     versions.merge(path, 1L, (a, b) => a + b)
     relations.remove(path)
     ()
   }
+
+  /** Replace files under the table at `path`, staged in the directory
+    * `staged` (moved in, then removed) or, when `None`, dropped outright.
+    * `dirs` narrows the swap to the child directories of `path` whose
+    * names it accepts; the rest of the table stays. `None` replaces the
+    * whole directory.
+    *
+    * The version moves BEFORE the destructive swap as well as after: a
+    * reader racing the delete→rename window must not apply the memoized
+    * OLD schema to the NEW files (a spurious extra inference is harmless;
+    * a stale schema is not). Single-writer is still the assumed discipline;
+    * this just removes the one observable race. */
+  def replace(spark: SparkSession, path: String, staged: Option[String],
+      dirs: Option[String => Boolean]): Unit = {
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    bump(path)
+    dirs match {
+      case None =>
+        fs.delete(dst, true)
+        staged.foreach(t => fs.rename(new Path(t), dst))
+      case Some(sel) =>
+        def picked(base: Path) =
+          fs.listStatus(base).filter(st => st.isDirectory && sel(st.getPath.getName))
+        picked(dst).foreach(st => fs.delete(st.getPath, true))
+        staged.foreach { t =>
+          picked(new Path(t)).foreach(st =>
+            fs.rename(st.getPath, new Path(dst, st.getPath.getName)))
+          fs.delete(new Path(t), true)
+        }
+    }
+    bump(path)
+  }
+
+  /** `df.write.mode(mode).parquet(path)`, then invalidate `path`. */
+  def write(df: DataFrame, path: String, mode: String): Unit = {
+    df.write.mode(mode).parquet(path)
+    bump(path)
+  }
+
+  /** Delete the table at `path` and invalidate it. */
+  def delete(spark: SparkSession, path: String): Unit =
+    replace(spark, path, staged = None, dirs = None)
 
   /** Read `path` as parquet over the memoized relation when current —
     * skipping per-call listing and footer inference — or list, infer and

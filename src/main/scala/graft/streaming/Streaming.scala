@@ -80,8 +80,7 @@ object Streaming {
           try {
             val store: DataFrame =
               if (new java.io.File(keyStorePath).exists())
-                // relation-memoized like every other repeated open — the
-                // per-batch append below bumps the path version
+                // relation-memoized like every other repeated open
                 graft.storage.ParquetMeta.read(s, keyStorePath)
               else s.createDataFrame(
                 s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -110,10 +109,10 @@ object Streaming {
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
               collection.upsert(reps)
-              freshKeys.join(reps.select(col(idCol)), Seq(idCol))
-                .select("bkey").distinct()
-                .write.mode("append").parquet(keyStorePath)
-              graft.storage.ParquetMeta.bump(keyStorePath)
+              graft.storage.ParquetMeta.write(
+                freshKeys.join(reps.select(col(idCol)), Seq(idCol))
+                  .select("bkey").distinct(),
+                keyStorePath, "append")
             } finally reps.unpersist()
           } finally keys.unpersist()
           ()

@@ -327,7 +327,9 @@ class FilterPropertySpec extends SparkTestBase {
       MatchValue("n", 5L) -> Set(2L, 5L),
       MatchAny("n", Seq(5L, 6L)) -> Set(2L, 5L, 6L),
       RangeCond("n", gte = Some(5.0)) -> Set(1L, 2L, 5L, 6L),
-      RangeCond("n", gt = Some(4L), lt = Some(5.5)) -> Set(2L, 5L))
+      RangeCond("n", gt = Some(4L), lt = Some(5.5)) -> Set(2L, 5L),
+      // qdrant's `Match::Except` matches a value of another kind
+      MatchExcept("n", Seq(5L, 6L)) -> Set(1L, 3L, 4L, 5L))
     for ((c, want) <- expected; (name, fc) <- Seq("raw" -> raw, "variant" -> variant))
       assert(ids(d, fc.compile(Filter(must = Seq(c)))) == want, s"$name: $c")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Dot
 import graft.sources.{CollectionConfig, IvfSpec, VectorConfig}
-import graft.storage.{Collection, ParquetMeta}
+import graft.storage.{Catalog, Collection, ParquetMeta}
 
 /** The listed-relation memo behind every repeated table open: a warm read
   * of an unchanged table lists nothing, yet each read is a fresh plan that
@@ -76,6 +76,41 @@ class ParquetMetaSpec extends SparkTestBase {
     c.upsert(points(10000L, 3))
     assert(c.read().count() == Cells * 2L + 3)
     assert(c.read().filter(col("id") >= 10000L).count() == 3L)
+  }
+
+  test("a warm read sees a shard-scoped update, a shard-key drop and a re-created collection") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cat = new Catalog(spark, Files.createTempDirectory("graft_meta").toString)
+    val scfg = CollectionConfig(idCol = "id", vectors = Seq(VectorConfig("", 2, Dot)),
+      shardKeyCol = Some("shard_key"))
+    def frame(idType: DataType, rows: Row*) = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType(Seq(StructField("id", idType),
+        StructField("vector", ArrayType(FloatType)), StructField("payload", StringType),
+        StructField("shard_key", StringType))))
+    val c = cat.create("s", scfg, frame(LongType,
+      Row(1L, Array(1f, 0f), "{}", "a"), Row(2L, Array(0f, 1f), "{}", "b")))
+    def ids(coll: Collection): Set[Any] = coll.read().select("id").collect().map(_.get(0)).toSet
+    // each mutation runs against a warm memo and must move the path's version
+    def afterWarmRead(mutate: => Unit): Unit = {
+      assert(c.read().count() >= 0L)
+      val v = ParquetMeta.version(c.path)
+      mutate
+      assert(ParquetMeta.version(c.path) > v)
+    }
+    val bDir = new java.io.File(c.path, "shard_key=b")
+    val bFiles = bDir.list().toSet
+    afterWarmRead(graft.api.UpdateBridge.applyJson(c, """{"operations": [{"upsert": {
+      |"points": [{"id": 3, "vector": [1.0, 1.0], "shard_key": "a"}]}}]}""".stripMargin))
+    assert(bDir.list().toSet == bFiles, "the update should have been scoped to key a")
+    assert(ids(c) == Set(1L, 2L, 3L))
+    afterWarmRead(c.deleteShardKey("a"))
+    assert(ids(c) == Set(2L))
+    afterWarmRead(cat.delete("s"))
+    val again = cat.create("s", scfg, frame(StringType,
+      Row("u1", Array(1f, 0f), "{}", "a")))
+    assert(again.read().schema("id").dataType == StringType)
+    assert(ids(again) == Set("u1"))
   }
 
   test("a directory overwritten without a bump is seen through its modification time") {

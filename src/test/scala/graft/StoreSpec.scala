@@ -1170,7 +1170,7 @@ class StoreSpec extends SparkTestBase {
     import spark.implicits._
     import graft.storage.UpdateOp
     val c = mk(tmpDir())
-    assert(c.rewriteCount == 0L) // create() writes outside the mutation path
+    assert(c.rewriteCount == 0L) // create() commits on its own bootstrap instance
     c.applyBatch(Seq(
       UpdateOp.Upsert(Seq((4L, Seq(0f, 0f, 0f, 1f), """{"city":"Rome"}"""))
         .toDF("id", "vector", "payload")),

@@ -18,7 +18,7 @@ time (executor run time, ms),
 bytes written, and the job's label: the call site of the SQL action it
 belongs to, marked `[broadcast]` for a broadcast exchange's job. `--match`
 keeps only the jobs whose label or stage names contain TEXT (for example
-`Collection.scala:246` for the commit write, or `broadcast`).
+`Collection.scala:261` for the commit write, or `broadcast`).
 """
 import argparse
 import json
