@@ -79,102 +79,27 @@ final class Catalog(spark: SparkSession, root: String) {
     * `lookup_from` (`LookupLocation`, `schema.rs:608-613`): vector-input
     * ids on the request resolve against the NAMED sibling collection —
     * its declared named vector and, when it is custom-sharded, only the
-    * selected shard-key partitions (a directory-pruned point read). This
-    * is the dispatcher-level wiring of the reference (`query.rs:456-546`
-    * resolves lookups through the table-of-content). */
+    * selected shard-key partitions (a directory-pruned point read), all
+    * of one sibling's ids in one probe ([[Collection.query]]). This is the
+    * dispatcher-level wiring of the reference (`query.rs:456-546` resolves
+    * lookups through the table-of-content). */
   def query(name: String, json: String): DataFrame =
-    get(name).query(json, Some(lookupResolver), Some(sparseLookupResolver))
+    get(name).query(json, Some(lookupCollection))
 
   /** `query/batch` with the same catalog-resolved `lookup_from`. */
   def queryBatch(name: String, json: String): DataFrame =
-    get(name).queryBatch(json, Some(lookupResolver), Some(sparseLookupResolver))
+    get(name).queryBatch(json, Some(lookupCollection))
 
-  /** Dense/multivector `lookup_from` resolve — the foreign collection's
-    * named space by kind (a MULTIVECTOR space resolves the matrix, like
-    * any matrix input; `fetch_vectors.rs:173-183` resolves referenced
-    * vectors of any kind), shard-scoped when `lookup_from.shard_key` is
-    * given, with the reference's resolution-failure error shapes. */
-  /** Open the `lookup_from` collection with the reference's error shape —
-    * `test_query_full.py:443` pins "Not found: Collection .. not found"
-    * for a lookup naming an absent collection (root AND nested). */
+  /** Open the `lookup_from` or `with_lookup` collection with the
+    * reference's error shape — `test_query_full.py:443` pins "Not found:
+    * Collection .. not found" for a lookup naming an absent collection
+    * (root AND nested). */
   private def lookupCollection(name: String): Collection = {
     val resolved = aliases.resolve(name)
     if (!exists(resolved)) throw new IllegalArgumentException(
       s"Not found: Collection $name not found")
     get(resolved)
   }
-
-  private def lookupResolver: (graft.api.RequestCodec.LookupFrom, Any)
-      => Either[Seq[Double], Seq[Seq[Double]]] =
-    (lf, id) => {
-      import org.apache.spark.sql.functions.{col, lit}
-      val other = lookupCollection(lf.collection)
-      val vname = lf.vector.getOrElse("")
-      // absent vector name → the reference's "Wrong input" shape
-      // (`test_query_full.py:466` — `vector_not_found_error`)
-      val vc = other.config.vectors.find(_.name == vname)
-        .getOrElse(throw new IllegalArgumentException(
-          s"Wrong input: Not existing vector name error: $vname"))
-      val df0 = other.readDecoded()
-      val df = (other.config.shardKeyCol, lf.shardKeys) match {
-        case (Some(sk), keys) if keys.nonEmpty =>
-          df0.filter(col(sk).isin(keys: _*))
-        case _ => df0
-      }
-      val rows = graft.filters.FilterCompiler.idMatch(
-          col(other.config.idCol), id,
-          df.schema.fields.find(_.name == other.config.idCol).map(_.dataType))
-        .map(p => df.filter(p).select(other.config.vectorCol(vname)).take(1))
-        .getOrElse(Array.empty[org.apache.spark.sql.Row])
-      if (rows.isEmpty) throw new IllegalArgumentException(
-        s"Not found: No point with id $id found")
-      if (rows(0).isNullAt(0)) throw new IllegalArgumentException(
-        s"""Not found: Vector with name "$vname" for point $id""")
-      if (vc.multivector)
-        Right(rows(0).getSeq[scala.collection.Seq[Float]](0)
-          .map(_.toSeq.map(_.toDouble)).toSeq)
-      else
-        Left(rows(0).getSeq[Float](0).toSeq.map(_.toDouble))
-    }
-
-  /** Sparse `lookup_from` resolve (`fetch_vectors.rs:301` fetches
-    * referenced vectors of ANY kind from the lookup collection): the
-    * foreign collection's declared sparse space by name, shard-scoped when
-    * a `lookup_from.shard_key` is given. */
-  private def sparseLookupResolver:
-      (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double]) =
-    (lf, id) => {
-      import org.apache.spark.sql.functions.{col, lit}
-      val other = lookupCollection(lf.collection)
-      val vname = lf.vector.getOrElse(throw new IllegalArgumentException(
-        s"lookup_from ${lf.collection}: a sparse lookup needs an explicit " +
-          "vector name (sparse vectors are always named)"))
-      if (!other.config.sparse.exists(_.name == vname))
-        throw new IllegalArgumentException(
-          s"Wrong input: Not existing vector name error: $vname")
-      val scol = other.config.sparseCol(vname)
-      val df0 = other.readDecoded()
-      val df = (other.config.shardKeyCol, lf.shardKeys) match {
-        case (Some(sk), keys) if keys.nonEmpty =>
-          df0.filter(col(sk).isin(keys: _*))
-        case _ => df0
-      }
-      val rows = graft.filters.FilterCompiler.idMatch(
-          col(other.config.idCol), id,
-          df.schema.fields.find(_.name == other.config.idCol).map(_.dataType))
-        .map(p => df.filter(p)
-          .select(col(s"$scol.indices"), col(s"$scol.values")).take(1))
-        .getOrElse(Array.empty[org.apache.spark.sql.Row])
-      if (rows.isEmpty) throw new IllegalArgumentException(
-        s"Not found: No point with id $id found")
-      if (rows(0).isNullAt(0)) throw new IllegalArgumentException(
-        s"""Not found: Vector with name "$vname" for point $id""")
-      (rows(0).getSeq[Any](0).map {
-        case i: Int => i.toLong
-        case l: Long => l
-      }.toSeq,
-        rows(0).getSeq[Float](1).toSeq.map(_.toDouble))
-    }
 
   /** `POST /points/query/groups` with the lookup collection resolved
     * through the catalog ([[Collection.queryGroups]] `with_lookup`) and
@@ -183,8 +108,7 @@ final class Catalog(spark: SparkSession, root: String) {
   def queryGroups(name: String, json: String): DataFrame =
     get(name).queryGroups(json,
       lookupTable = n => lookupCollection(n).readDecoded(),
-      lookupResolve = Some(lookupResolver),
-      sparseLookupResolve = Some(sparseLookupResolver))
+      siblings = Some(lookupCollection))
 
   /** Legacy `/points/{search,recommend}/groups` through the catalog:
     * the `with_lookup` collection resolves against siblings (by name or
@@ -196,8 +120,7 @@ final class Catalog(spark: SparkSession, root: String) {
   def recommendGroups(name: String, json: String): DataFrame =
     get(name).recommendGroups(json,
       lookupTable = n => lookupCollection(n).readDecoded(),
-      lookupResolve = Some(lookupResolver),
-      sparseLookupResolve = Some(sparseLookupResolver))
+      siblings = Some(lookupCollection))
 
   /** PATCH /collections/{name}: persist the updated config (the caller
     * builds it via `RequestCodec.parseCollectionUpdate`) and apply any

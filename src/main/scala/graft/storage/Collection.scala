@@ -188,17 +188,13 @@ final class Collection(
     * (asserted in StoreSpec). */
   private[graft] var rewriteCount: Long = 0L
 
-  /** Spark type of the stored id column, memoized — callers were paying a
-    * parquet file-listing + schema read per lookup. Invalidated on every
-    * rewrite: an upsert can WIDEN the column to string (mixed NumId+Uuid
-    * collections). */
-  private var idTypeCache: Option[org.apache.spark.sql.types.DataType] = None
-  private[graft] def idDataType: Option[org.apache.spark.sql.types.DataType] = {
-    if (idTypeCache.isEmpty)
-      idTypeCache = read().schema.fields
-        .find(_.name == config.idCol).map(_.dataType)
-    idTypeCache
-  }
+  /** Spark type of the stored id column, from the schema [[ParquetMeta]]
+    * memoizes (no job while the table is unchanged). An upsert can WIDEN
+    * the column to string (mixed NumId+Uuid collections); any instance's
+    * commit moves the memo's version, so every instance over the path
+    * sees the widened type. */
+  private[graft] def idDataType: Option[org.apache.spark.sql.types.DataType] =
+    read().schema.fields.find(_.name == config.idCol).map(_.dataType)
 
   /** Commit `df0` as the table's new contents: the one write path of every
     * collection mutation (update batches, index and layout rewrites,
@@ -237,7 +233,6 @@ final class Collection(
       targetFiles: Option[Int] = None, sparseDfChange: Boolean = true,
       balance: Boolean = false): Unit = {
     rewriteCount += 1
-    idTypeCache = None
     val tmp = path + "__tmp"
     // tenant buckets AND payload-index projections recompute from the
     // CURRENT payload on every write — a payload mutation moves the row to
@@ -965,16 +960,9 @@ final class Collection(
       vc.metric.largerBetter)
   }
 
-  /** The server-handler analog of `POST /collections/{c}/points/query`
-    * (`src/actix/api/query_api.rs:31`): parse a REST body against THIS
-    * collection's declared schema and execute it. Spaces come from the
-    * config (dense named/unnamed + sparse + shard-key column), by-id
-    * vector inputs resolve against the table's default dense vector, and
-    * wire `SearchParams` route a plain Nearest root through the
-    * quantization-aware two-phase search; every other shape runs through
-    * the generic DAG executor over the decoded table. */
-  /** Wire-codec context for this collection's declared schema — shared by
-    * every one-call handler ([[query]], [[queryBatch]], [[queryGroups]]). */
+  /** Wire-codec context for this collection's declared schema: its vector
+    * spaces (dense named/unnamed + sparse), shard-key field and name.
+    * [[bulkResolve]] installs the by-id hooks. */
   private def wireCtx: graft.api.RequestCodec.Ctx = {
     import graft.api.RequestCodec
     val spaces =
@@ -985,18 +973,6 @@ final class Collection(
           sc.name -> RequestCodec.VectorSpace(config.sparseCol(sc.name),
             graft.model.Dot, sparse = true)).toMap
     RequestCodec.Ctx(spaces,
-      resolveId = (name, id) => {
-        // by-id examples resolve FROM THE `using` SPACE — the reference
-        // keys `resolve_referenced_vectors` by the request's vector name
-        // (`recommendations.rs`); resolving the default vector for a named
-        // space would silently score the wrong embedding
-        val vc = denseSpaceOf(name, id)
-        denseFromRow(vc, resolveRow(id, config.vectorCol(vc.name), name))
-      },
-      resolveSparseId = (name, id) => {
-        val sc = sparseSpaceOf(name, id)
-        sparseFromRow(resolveRow(id, config.sparseCol(sc.name), name))
-      },
       shardKeyField = config.shardKeyCol,
       // this collection's catalog name (the Catalog lays data out as
       // `collections/<name>/points`; a standalone collection's name is its
@@ -1012,8 +988,10 @@ final class Collection(
       })
   }
 
-  /** Space validation shared by the per-id and bulk by-id resolvers, with
-    * the reference's unknown-name error shapes. */
+  /** Space validation of a same-collection by-id reference, with the
+    * reference's unknown-name error shapes. By-id examples resolve FROM
+    * THE `using` SPACE — the reference keys `resolve_referenced_vectors`
+    * by the request's vector name (`recommendations.rs`). */
   private def denseSpaceOf(name: String, id: Any): graft.sources.VectorConfig =
     config.vectors.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
@@ -1024,179 +1002,133 @@ final class Collection(
       throw new IllegalArgumentException(
         s"vector-input id $id: no sparse vector named '$name' to resolve it against"))
 
-  /** Stored-row → wire-value conversions shared by the per-id and bulk
-    * resolvers (the single-field row carries the example's vector column). */
-  private def denseFromRow(vc: graft.sources.VectorConfig,
-      row: org.apache.spark.sql.Row): Either[Seq[Double], Seq[Seq[Double]]] =
-    if (vc.multivector)
-      Right(row.getSeq[scala.collection.Seq[Float]](0)
-        .map(_.toSeq.map(_.toDouble)).toSeq)
-    else
-      Left(row.getSeq[Float](0).toSeq.map(_.toDouble))
-
-  private def sparseFromRow(
-      row: org.apache.spark.sql.Row): (Seq[Long], Seq[Double]) = {
-    val s = row.getStruct(0)
-    (s.getSeq[Any](0).map {
-      case i: Int => i.toLong
-      case l: Long => l
-    }.toSeq, s.getSeq[Float](1).toSeq.map(_.toDouble))
+  /** The stored cells that `refs` ((vector column, wire id) pairs) name,
+    * read with one [[probeIds]] probe — an `id IN (...)` scan predicate up
+    * to [[Collection.InProbeMaxIds]] ids, a broadcast semi-join past it —
+    * scoped to the shard keys `keys` on a custom-sharded collection. */
+  private def probeCells(refs: Seq[(String, Any)], keys: Seq[Any]): Collection.Probed = {
+    val idType = idDataType
+    val ids = graft.filters.FilterCompiler.coerceWireIds(refs.map(_._2).distinct, idType)
+    val rows =
+      if (ids.isEmpty) Map.empty[Any, org.apache.spark.sql.Row]
+      else {
+        val df = readDecoded()
+        val scoped = (config.shardKeyCol, keys) match {
+          case (Some(sk), ks) if ks.nonEmpty => df.filter(col(sk).isin(ks: _*))
+          case _ => df
+        }
+        // past the IN cap: wire ids (Int or Long) as text, cast to the
+        // column's type; an id the type cannot hold matches nothing
+        probeIds(scoped, Some(ids),
+          spark.createDataFrame(ids.map(x => Tuple1(x.toString)))
+            .select(col("_1").try_cast(idType.getOrElse(
+              org.apache.spark.sql.types.LongType)).as(config.idCol)))
+          .select((config.idCol +: refs.map(_._1).distinct).map(col): _*)
+          .collect().map(r => Collection.idKey(r.get(0)) -> r).toMap
+      }
+    Collection.Probed(idType, rows)
   }
 
-  /** Two-pass bulk by-id example resolution (guide §2.4 — remove repeated
-    * per-id Spark jobs): recommend/discover/context/feedback/MMR requests
-    * naming N points used to pay one bounded probe job PER referenced id
-    * (the reference instead bulk-fetches referenced vectors per request,
-    * `fetch_vectors.rs`). A dry parse records every same-collection
-    * (vector column, id) pair while answering with shape-correct dummies
-    * (exact declared dims, so the parser's dim checks behave identically),
-    * then ONE id-IN-pruned probe fetches every referenced row, and the
-    * request re-parses with resolvers answering from the probed map.
+  /** By-id resolution: the vectors of every point a request references —
+    * recommend/discover/context/feedback/MMR examples and nearest-by-id —
+    * in this collection or in a `lookup_from` sibling that `siblings`
+    * opens. qdrant, too, resolves them all before it builds the scoring
+    * query, one retrieve per (collection, shard selector)
+    * (`query.rs:456-546`, `fetch_vectors.rs`).
     *
-    * Error semantics are EXACTLY the single-pass path's: the second parse
-    * runs the same parser in the same order, so the FIRST missing id in
-    * parse order still raises the reference's "No point with id .. found"
-    * (pinned by api_query_by_id_errors / catalog_lookup_from_errors, plus
-    * the multi-missing-id ordering test in StoreSpec). If the DRY parse
-    * itself throws anything (a validation error — or, defensively, a
-    * dummy-induced failure), the request falls back to the original
-    * per-id parse, reproducing the original behavior bit-for-bit.
-    * Foreign `lookup_from` resolves stay per-id (their collection is
-    * opaque here) but memoize across passes and duplicate ids — results
-    * AND failures — so no request pays more lookup jobs than before. */
-  private def bulkResolve[A](ctx: graft.api.RequestCodec.Ctx)
+    * The request parses twice. The dry parse records each reference under
+    * its source (this collection, or a sibling with the shard keys its
+    * `lookup_from` selects) and answers it with a dummy cell shaped like
+    * the space it names, so the parser's dim checks behave as on the real
+    * vector. The real parse then answers from one [[probeCells]] probe per
+    * source, run when it first reaches a reference to that source.
+    *
+    * Errors come out in parse order, as a per-id resolver raises them: the
+    * FIRST missing id names the not-found error ([[Collection.Probed]];
+    * pinned by api_query_by_id_errors / catalog_lookup_from_errors and
+    * StoreSpec's ordering test). A dry parse that throws leaves the
+    * references before the failure recorded; the real parse answers those
+    * and fails where the dry one did. A sibling that cannot be opened or
+    * probed fails at the first reference to it. A reference the dry parse
+    * did not record is probed on its own, so the answer never rests on the
+    * dry parse having seen every reference. */
+  private def bulkResolve[A](siblings: Option[String => Collection])
       (parse: graft.api.RequestCodec.Ctx => A): A = {
-    import graft.api.RequestCodec.LookupFrom
-    val lkMemo = scala.collection.mutable.Map.empty[
-      (LookupFrom, Any), scala.util.Try[Either[Seq[Double], Seq[Seq[Double]]]]]
-    val slkMemo = scala.collection.mutable.Map.empty[
-      (LookupFrom, Any), scala.util.Try[(Seq[Long], Seq[Double])]]
-    val memoCtx = ctx.copy(
-      resolveLookup = (lf, id) => lkMemo.getOrElseUpdate((lf, id),
-        scala.util.Try(ctx.resolveLookup(lf, id))).get,
-      resolveSparseLookup = (lf, id) => slkMemo.getOrElseUpdate((lf, id),
-        scala.util.Try(ctx.resolveSparseLookup(lf, id))).get)
-    val wanted = scala.collection.mutable.LinkedHashSet.empty[(String, Any)]
-    val dryCtx = memoCtx.copy(
-      resolveId = (name, id) => {
-        val vc = denseSpaceOf(name, id)
-        wanted += ((config.vectorCol(vc.name), id))
-        if (vc.multivector) Right(Seq(Seq.fill(vc.dim)(0.0)))
-        else Left(Seq.fill(vc.dim)(0.0))
-      },
-      resolveSparseId = (name, id) => {
-        val sc = sparseSpaceOf(name, id)
-        wanted += ((config.sparseCol(sc.name), id))
-        (Seq(0L), Seq(1.0))
-      })
-    val dry =
-      try Right(parse(dryCtx))
-      catch { case scala.util.control.NonFatal(e) => Left(e) }
-    dry match {
-      // no same-collection by-id inputs were resolved: the dry result IS
-      // the real result (lookup memo entries are real resolves)
-      case Right(r) if wanted.isEmpty => r
-      // dry parse failed — re-run the untouched per-id path so the error
-      // (and any resolution that precedes it in parse order) is original
-      case Left(_) => parse(memoCtx)
-      case Right(_) =>
-        // a LongType id column collects Long but wire ids can arrive Int;
-        // strings (UUID / u64-tail / string-id tables) compare raw
-        def key(x: Any): Any = x match {
-          case i: Int => i.toLong
-          case x => x
-        }
-        val cols = wanted.toSeq.map(_._1).distinct
-        val ids = graft.filters.FilterCompiler.coerceWireIds(
-          wanted.toSeq.map(_._2).distinct, idDataType)
-        val probed =
-          scala.collection.mutable.Map.empty[Any, org.apache.spark.sql.Row]
-        if (ids.nonEmpty) {
-          // past the IN cap: wire ids (Int or Long) as text, cast to the
-          // column's type; an id the type cannot hold matches nothing
-          val idType = idDataType.getOrElse(
-            org.apache.spark.sql.types.LongType)
-          probeIds(readDecoded(), Some(ids),
-            spark.createDataFrame(ids.map(x => Tuple1(x.toString)))
-              .select(col("_1").try_cast(idType).as(config.idCol)))
-            .select((config.idCol +: cols).map(col): _*)
-            .collect().foreach(r => probed.update(key(r.get(0)), r))
-        }
-        val colIdx: Map[String, Int] =
-          cols.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
-        // same error shapes as resolveRow, answered from the probed map
-        def rowFor(id: Any, vecCol: String,
-            vectorName: String): org.apache.spark.sql.Row = {
-          val hit = graft.filters.FilterCompiler
-            .coerceWireIds(Seq(id), idDataType)
-            .headOption.flatMap(k => probed.get(key(k)))
-          val r = hit.getOrElse(throw new IllegalArgumentException(
-            s"Not found: No point with id $id found"))
-          val i = colIdx(vecCol)
-          if (r.isNullAt(i)) throw new IllegalArgumentException(
-            s"""Not found: Vector with name "$vectorName" for point $id""")
-          org.apache.spark.sql.Row(r.get(i))
-        }
-        parse(memoCtx.copy(
-          resolveId = (name, id) => {
-            val vc = denseSpaceOf(name, id)
-            denseFromRow(vc, rowFor(id, config.vectorCol(vc.name), name))
-          },
-          resolveSparseId = (name, id) => {
-            val sc = sparseSpaceOf(name, id)
-            sparseFromRow(rowFor(id, config.sparseCol(sc.name), name))
-          }))
+    import scala.util.Try
+    // None: this collection; Some((name, shard keys)): a `lookup_from` sibling
+    type Source = Option[(String, Seq[Any])]
+    val opened = scala.collection.mutable.Map.empty[String, Try[Collection]]
+    def owner(src: Source): Collection = src.fold(this) { case (name, _) =>
+      opened.getOrElseUpdate(name, Try(siblings.getOrElse(
+        throw new IllegalArgumentException(
+          s"lookup_from $name given but no lookup resolver configured"))(name))).get
     }
+    def unknown(name: String) = new IllegalArgumentException(
+      s"Wrong input: Not existing vector name error: $name")
+    val recorded = scala.collection.mutable.LinkedHashMap.empty[
+      Source, scala.collection.mutable.LinkedHashSet[(String, Any)]]
+    val probes = scala.collection.mutable.Map.empty[Source, Try[Collection.Probed]]
+    // the by-id hooks over `answer(source, column, id, vector name,
+    // dummy)`, which gives the reference's stored cell
+    def ctxOf(answer: (Source, String, Any, String, => Any) => Any) = {
+      def dense(src: Source, vc: graft.sources.VectorConfig, id: Any) =
+        Collection.denseValue(vc, answer(src, owner(src).config.vectorCol(vc.name),
+          id, vc.name, Collection.denseDummy(vc)))
+      def sparse(src: Source, name: String, id: Any) =
+        Collection.sparseValue(answer(src, owner(src).config.sparseCol(name),
+          id, name, Collection.SparseDummy))
+      def source(lf: graft.api.RequestCodec.LookupFrom): Source =
+        Some((lf.collection, lf.shardKeys))
+      wireCtx.copy(
+        resolveId = (name, id) => dense(None, denseSpaceOf(name, id), id),
+        resolveSparseId = (name, id) => sparse(None, sparseSpaceOf(name, id).name, id),
+        resolveLookup = (lf, id) => {
+          val name = lf.vector.getOrElse("")
+          dense(source(lf), owner(source(lf)).config.vectors.find(_.name == name)
+            .getOrElse(throw unknown(name)), id)
+        },
+        resolveSparseLookup = (lf, id) => {
+          val name = lf.vector.getOrElse("")
+          if (!owner(source(lf)).config.sparse.exists(_.name == name))
+            throw unknown(name)
+          sparse(source(lf), name, id)
+        })
+    }
+    val dry = Try(parse(ctxOf { (src, c, id, _, dummy) =>
+      recorded.getOrElseUpdate(src,
+        scala.collection.mutable.LinkedHashSet.empty) += ((c, id))
+      dummy
+    }))
+    // nothing recorded: no reference was answered, so the dry outcome is
+    // the real one
+    if (recorded.isEmpty) dry.get
+    else parse(ctxOf { (src, c, id, name, _) =>
+      val keys = src.fold(Seq.empty[Any])(_._2)
+      val probed =
+        if (recorded.get(src).exists(_.contains((c, id))))
+          probes.getOrElseUpdate(src,
+            Try(owner(src).probeCells(recorded(src).toSeq, keys))).get
+        else owner(src).probeCells(Seq((c, id)), keys)
+      probed.cell(c, id, name)
+    })
   }
 
-  /** By-id example resolve with the reference's error shapes
-    * (`test_query_full.py:1428-1444`, issue #5208 regression): a missing
-    * point raises "No point with id .. found" (`CollectionError::
-    * PointNotFound`, `types.rs:913`), a present point lacking the `using`
-    * vector raises the `vector_not_found_error` message
-    * (`collection_query.rs:395-397`) — never a bare NoSuchElement/NPE. */
-  private def resolveRow(id: Any, vecCol: String,
-      vectorName: String): org.apache.spark.sql.Row = {
-    val df = readDecoded()
-    // None = UUID id against a numeric id column: the kinds can never match
-    val rows = graft.filters.FilterCompiler.idMatch(
-        col(config.idCol), id, idDataType)
-      .map(p => df.filter(p).select(col(vecCol)).take(1))
-      .getOrElse(Array.empty[org.apache.spark.sql.Row])
-    if (rows.isEmpty) throw new IllegalArgumentException(
-      s"Not found: No point with id $id found")
-    if (rows(0).isNullAt(0)) throw new IllegalArgumentException(
-      s"""Not found: Vector with name "$vectorName" for point $id""")
-    rows(0)
-  }
-
+  /** The server-handler analog of `POST /collections/{c}/points/query`
+    * (`src/actix/api/query_api.rs:31`): parse a REST body against THIS
+    * collection's declared schema and execute it. Spaces come from the
+    * config (dense named/unnamed + sparse + shard-key column), by-id
+    * vector inputs resolve against the `using` space ([[bulkResolve]]),
+    * and wire `SearchParams` route a plain Nearest root through the
+    * quantization-aware two-phase search; every other shape runs through
+    * the generic DAG executor over the decoded table. */
   def query(json: String): DataFrame = query(json, None)
 
-  /** [[query]] with `lookup_from` resolvers (dense + sparse foreign-id
-    * resolution, `fetch_vectors.rs:301`) — wired by a host that owns a
-    * table catalog ([[Catalog.query]] installs sibling-collection
-    * resolution). */
-  def query(json: String,
-      lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
-        => Either[Seq[Double], Seq[Seq[Double]]]],
-      sparseLookupResolve: Option[
-        (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])] = None)
-      : DataFrame = {
-    val q = bulkResolve(lookupCtx(lookupResolve, sparseLookupResolve))(c =>
-      graft.api.RequestCodec.parseQueryRequest(json, c))
+  /** [[query]] with `lookup_from` ids resolved against the sibling
+    * collections `siblings` opens by name (`fetch_vectors.rs:301`) — wired
+    * by a host that owns a table catalog ([[Catalog.query]]). */
+  def query(json: String, siblings: Option[String => Collection]): DataFrame = {
+    val q = bulkResolve(siblings)(graft.api.RequestCodec.parseQueryRequest(json, _))
     enrich(executeParsed(admitted(q)), org.json4s.jackson.JsonMethods.parse(json))
-  }
-
-  /** [[wireCtx]] with a host's `lookup_from` resolvers installed. */
-  private def lookupCtx(
-      lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
-        => Either[Seq[Double], Seq[Seq[Double]]]],
-      sparseLookupResolve: Option[
-        (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])])
-      : graft.api.RequestCodec.Ctx = {
-    val ctx0 = wireCtx
-    val ctx1 = lookupResolve.fold(ctx0)(f => ctx0.copy(resolveLookup = f))
-    sparseLookupResolve.fold(ctx1)(f => ctx1.copy(resolveSparseLookup = f))
   }
 
   /** A request's `with_payload` asks for payload (the query API default
@@ -1237,11 +1169,8 @@ final class Collection(
         vecCols.map(col): _*)
     val sel = joined.orderBy(col("_ord")).drop("_ord")
     if (!wantPayload) sel
-    else graft.api.RequestCodec.parseWithPayload(wpJ) match {
-      case Some(f) => sel.withColumn(config.payloadCol,
-        f(col(config.payloadCol)))
-      case None => sel.drop(config.payloadCol)
-    }
+    else Collection.selectPayload(sel,
+      graft.api.RequestCodec.parseWithPayload(wpJ), config.payloadCol)
   }
 
   /** The gates a parsed request passes before it executes; returns the
@@ -1291,63 +1220,70 @@ final class Collection(
           .find(sc => config.sparseCol(sc.name) == scol).get.name
         knnSparse(name, qi, qv, q.filter, q.limit, q.offset, q.scoreThreshold)
       case _ =>
-        // The IDF modifier applies in EVERY sparse scoring context — root,
-        // prefetch leaves, rescore parents (`query_context.rs` remaps idf
-        // weights for the whole request) — so the declared modifier folds
-        // into the query weights BEFORE the DAG executes; stored weights
-        // stay raw. (The bare-sparse fast path above weights inside
-        // knnSparse instead.)
-        val idfCols = config.sparse.filter(_.modifier.contains("idf"))
-          .map(sc => config.sparseCol(sc.name) -> sc.name).toMap
-        def applyIdf(node: PointQuery.Query): PointQuery.Query = {
-          // a node-level `params.idf.corpus` re-scopes the statistics to
-          // the corpus filter's matches; "global"/absent uses the
-          // collection-wide sidecar stats
-          val corpus: Option[graft.model.Filter] =
-            node.params.flatMap(_.idf).flatten
-          def weigh(name: String, qi2: Seq[Long], qv2: Seq[Double]): Seq[Double] =
-            corpus match {
-              case Some(f) => corpusIdfWeights(name, f, qi2, qv2)
-              case None => idfWeights(name, qi2, qv2)
-            }
-          val scoring = node.scoring match {
-            case PointQuery.SparseStructQ(sc2, qi2, qv2) if idfCols.contains(sc2) =>
-              PointQuery.SparseStructQ(sc2, qi2, weigh(idfCols(sc2), qi2, qv2))
-            case PointQuery.RecommendSparse(sc2, strat, pos, neg)
-                if idfCols.contains(sc2) =>
-              // recommend examples ARE query vectors — the modifier weights
-              // each before the strategy combine (`query_context.rs` remaps
-              // every query-side sparse vector of the request)
-              def w(q: (Seq[Long], Seq[Double])) =
-                (q._1, weigh(idfCols(sc2), q._1, q._2))
-              PointQuery.RecommendSparse(sc2, strat, pos.map(w), neg.map(w))
-            case PointQuery.DiscoverSparse(sc2, target, pairs)
-                if idfCols.contains(sc2) =>
-              def w(q: (Seq[Long], Seq[Double])) =
-                (q._1, weigh(idfCols(sc2), q._1, q._2))
-              PointQuery.DiscoverSparse(sc2, w(target),
-                pairs.map { case (p, n) => (w(p), w(n)) })
-            case PointQuery.ContextSparse(sc2, pairs)
-                if idfCols.contains(sc2) =>
-              def w(q: (Seq[Long], Seq[Double])) =
-                (q._1, weigh(idfCols(sc2), q._1, q._2))
-              PointQuery.ContextSparse(sc2,
-                pairs.map { case (p, n) => (w(p), w(n)) })
-            case PointQuery.MmrSparseQ(sc2, qi2, qv2, lam)
-                if idfCols.contains(sc2) =>
-              // the MMR relevance sims use the same weighted query as its
-              // candidate prefetch — stored pairwise sims stay raw (the
-              // modifier weights QUERY vectors only, `query_context.rs`)
-              PointQuery.MmrSparseQ(sc2, qi2,
-                weigh(idfCols(sc2), qi2, qv2), lam)
-            case other => other
-          }
-          node.copy(scoring = scoring, prefetches = node.prefetches.map(applyIdf))
-        }
-        val qw = if (idfCols.isEmpty) q else applyIdf(q)
         val df = readDecoded()
-        graft.ops.PointQuery.execute(spark, df, config.idCol, resolver(df), qw)
+        graft.ops.PointQuery.execute(spark, df, config.idCol, resolver(df),
+          idfWeighted(q))
     }
+  }
+
+  /** `q` with the IDF modifier folded into its query-side weights. The
+    * modifier applies in EVERY sparse scoring context — root, prefetch
+    * leaves, rescore parents (`query_context.rs` remaps idf weights for the
+    * whole request) — so the declared modifier folds into the query
+    * weights BEFORE the request executes; stored weights stay raw. Both
+    * the DAG branch of [[executeParsed]] and [[queryGroups]] score the
+    * result. (The bare-sparse fast path weights inside [[knnSparse]]
+    * instead.) */
+  private def idfWeighted(q: graft.ops.PointQuery.Query): graft.ops.PointQuery.Query = {
+    import graft.ops.PointQuery
+    val idfCols = config.sparse.filter(_.modifier.contains("idf"))
+      .map(sc => config.sparseCol(sc.name) -> sc.name).toMap
+    def applyIdf(node: PointQuery.Query): PointQuery.Query = {
+      // a node-level `params.idf.corpus` re-scopes the statistics to
+      // the corpus filter's matches; "global"/absent uses the
+      // collection-wide sidecar stats
+      val corpus: Option[graft.model.Filter] =
+        node.params.flatMap(_.idf).flatten
+      def weigh(name: String, qi2: Seq[Long], qv2: Seq[Double]): Seq[Double] =
+        corpus match {
+          case Some(f) => corpusIdfWeights(name, f, qi2, qv2)
+          case None => idfWeights(name, qi2, qv2)
+        }
+      val scoring = node.scoring match {
+        case PointQuery.SparseStructQ(sc2, qi2, qv2) if idfCols.contains(sc2) =>
+          PointQuery.SparseStructQ(sc2, qi2, weigh(idfCols(sc2), qi2, qv2))
+        case PointQuery.RecommendSparse(sc2, strat, pos, neg)
+            if idfCols.contains(sc2) =>
+          // recommend examples ARE query vectors — the modifier weights
+          // each before the strategy combine (`query_context.rs` remaps
+          // every query-side sparse vector of the request)
+          def w(q: (Seq[Long], Seq[Double])) =
+            (q._1, weigh(idfCols(sc2), q._1, q._2))
+          PointQuery.RecommendSparse(sc2, strat, pos.map(w), neg.map(w))
+        case PointQuery.DiscoverSparse(sc2, target, pairs)
+            if idfCols.contains(sc2) =>
+          def w(q: (Seq[Long], Seq[Double])) =
+            (q._1, weigh(idfCols(sc2), q._1, q._2))
+          PointQuery.DiscoverSparse(sc2, w(target),
+            pairs.map { case (p, n) => (w(p), w(n)) })
+        case PointQuery.ContextSparse(sc2, pairs)
+            if idfCols.contains(sc2) =>
+          def w(q: (Seq[Long], Seq[Double])) =
+            (q._1, weigh(idfCols(sc2), q._1, q._2))
+          PointQuery.ContextSparse(sc2,
+            pairs.map { case (p, n) => (w(p), w(n)) })
+        case PointQuery.MmrSparseQ(sc2, qi2, qv2, lam)
+            if idfCols.contains(sc2) =>
+          // the MMR relevance sims use the same weighted query as its
+          // candidate prefetch — stored pairwise sims stay raw (the
+          // modifier weights QUERY vectors only, `query_context.rs`)
+          PointQuery.MmrSparseQ(sc2, qi2,
+            weigh(idfCols(sc2), qi2, qv2), lam)
+        case other => other
+      }
+      node.copy(scoring = scoring, prefetches = node.prefetches.map(applyIdf))
+    }
+    if (idfCols.isEmpty) q else applyIdf(q)
   }
 
   /** Legacy `POST /collections/{c}/points/search` (`SearchRequest`,
@@ -1376,19 +1312,14 @@ final class Collection(
     queryGroups(graft.api.RequestCodec.legacyToQuery(json, "search"), lookupTable)
 
   /** Legacy `POST /points/recommend/groups` (`RecommendGroupsRequest`) —
-    * `lookup_from` resolves through the same optional hooks as
-    * [[queryGroups]]. */
+    * `lookup_from` resolves against `siblings` as in [[queryGroups]]. */
   def recommendGroups(json: String,
       lookupTable: String => DataFrame = n =>
         throw new IllegalArgumentException(
           s"with_lookup collection '$n' needs a lookupTable resolver"),
-      lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
-        => Either[Seq[Double], Seq[Seq[Double]]]] = None,
-      sparseLookupResolve: Option[
-        (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])] = None)
-      : DataFrame =
+      siblings: Option[String => Collection] = None): DataFrame =
     queryGroups(graft.api.RequestCodec.legacyToQuery(json, "recommend"),
-      lookupTable, lookupResolve, sparseLookupResolve)
+      lookupTable, siblings)
 
   /** Legacy `/batch` forms (`SearchRequestBatch.searches`,
     * `RecommendRequestBatch.searches`, `DiscoverRequestBatch.searches`):
@@ -1396,7 +1327,7 @@ final class Collection(
     * like [[queryBatch]]. */
   def searchBatch(json: String, kind: String = "search"): DataFrame =
     runBatch(searchesOf(json, s"legacy $kind batch")
-      .map(graft.api.RequestCodec.legacyToQuery(_, kind)), wireCtx)
+      .map(graft.api.RequestCodec.legacyToQuery(_, kind)), None)
 
   /** `POST /collections/{c}/points/query/batch` (`QueryRequestBatch`):
     * independent requests answered in one call, like qdrant's
@@ -1411,15 +1342,11 @@ final class Collection(
     * routing as [[query]]. Either way each search gets the ids, scores and
     * tie order [[query]] gives it. Rows are (id, score[, payload/vector
     * columns], req), `req` being the search's position: grouped by
-    * ascending `req`, in rank order within each. */
+    * ascending `req`, in rank order within each. `lookup_from` ids resolve
+    * against `siblings` as in [[query]]. */
   def queryBatch(json: String,
-      lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
-        => Either[Seq[Double], Seq[Seq[Double]]]] = None,
-      sparseLookupResolve: Option[
-        (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])] = None)
-      : DataFrame =
-    runBatch(searchesOf(json, "query batch"),
-      lookupCtx(lookupResolve, sparseLookupResolve))
+      siblings: Option[String => Collection] = None): DataFrame =
+    runBatch(searchesOf(json, "query batch"), siblings)
 
   /** The `searches` bodies of a batch request, each as compact JSON. */
   private def searchesOf(json: String, what: String): Seq[String] = {
@@ -1472,8 +1399,8 @@ final class Collection(
 
   /** [[queryBatch]] over parsed-out bodies. */
   private def runBatch(bodies: Seq[String],
-      ctx: graft.api.RequestCodec.Ctx): DataFrame = {
-    val qs = bulkResolve(ctx)(c =>
+      siblings: Option[String => Collection]): DataFrame = {
+    val qs = bulkResolve(siblings)(c =>
       bodies.map(graft.api.RequestCodec.parseQueryRequest(_, c))).map(admitted)
     val wire = bodies.map(org.json4s.jackson.JsonMethods.parse(_))
     val plain = qs.zip(wire).map { case (q, o) => plainNearest(q, o) }
@@ -1494,6 +1421,12 @@ final class Collection(
       .coalesce(1).sortWithinPartitions("req", "_rank").drop("_rank")
   }
 
+  /** Strict mode's filter gate for the read endpoints that take a bare
+    * filter ([[admitted]] gates whole query requests). */
+  private def verifyFilter(filter: Option[Filter]): Unit =
+    for (fl <- filter; sm <- config.strictMode)
+      graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)
+
   /** `POST /collections/{c}/points/count` (`count_api.rs:17`).
     * `exact: true` (the default) scans; `exact: false` serves the
     * cardinality estimate's `exp` from the driver-side statistics
@@ -1503,8 +1436,7 @@ final class Collection(
     * [[graft.filters.Cardinality]]). */
   def count(json: String): DataFrame = {
     val spec = graft.api.RequestCodec.parseCountRequest(json, config.shardKeyCol)
-    spec.filter.foreach(fl => config.strictMode.foreach(sm =>
-      graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)))
+    verifyFilter(spec.filter)
     if (spec.exact) {
       val df = read()
       graft.ops.Reads.count(df, spec.filter, resolver(df))
@@ -1527,8 +1459,7 @@ final class Collection(
     * Zero Spark jobs warm, like the `exact:false` count itself. */
   def countEstimate(json: String): DataFrame = {
     val spec = graft.api.RequestCodec.parseCountRequest(json, config.shardKeyCol)
-    spec.filter.foreach(fl => config.strictMode.foreach(sm =>
-      graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)))
+    verifyFilter(spec.filter)
     val est = graft.filters.Cardinality.estimate(spec.filter, fieldStats)
     import spark.implicits._
     Seq((est.min, est.exp, est.max)).toDF("est_min", "est_exp", "est_max")
@@ -1537,8 +1468,7 @@ final class Collection(
   /** `POST /collections/{c}/facet` (`FacetRequestInternal`). */
   def facet(json: String): DataFrame = {
     val spec = graft.api.RequestCodec.parseFacetRequest(json, config.shardKeyCol)
-    spec.filter.foreach(fl => config.strictMode.foreach(sm =>
-      graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)))
+    verifyFilter(spec.filter)
     import org.apache.spark.sql.types._
     import graft.filters.Cardinality.{FieldStatsSnapshot, ValueStats}
     // The two statistics-served answers below share their rendering: the
@@ -1650,8 +1580,7 @@ final class Collection(
   def scroll(json: String): DataFrame = {
     val spec = graft.api.RequestCodec.parseScrollRequest(json, config.shardKeyCol)
     val df = readDecoded()
-    spec.filter.foreach(fl => config.strictMode.foreach(sm =>
-      graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)))
+    verifyFilter(spec.filter)
     // with_vector (default FALSE, `ScrollRequest`,
     // `lib/collection/src/operations/types.rs:490-537`): true = every
     // named vector (sparse included), a name/list selects; the page scan
@@ -1664,13 +1593,6 @@ final class Collection(
     // forms apply the usual payload transform
     val wpSel = graft.api.RequestCodec.parseWithPayload(
       org.json4s.jackson.JsonMethods.parse(json) \ "with_payload")
-    def shaped(page: DataFrame): DataFrame =
-      if (!page.columns.contains(config.payloadCol)) page
-      else wpSel match {
-        case Some(sel) => page.withColumn(config.payloadCol,
-          sel(col(config.payloadCol)))
-        case None => page.drop(config.payloadCol)
-      }
     // id-offset pagination and order_by are mutually exclusive
     // (`shard_ops.rs:273-276` — order-by pages via `start_from`)
     if (spec.offset.isDefined && spec.orderBy.isDefined)
@@ -1679,7 +1601,7 @@ final class Collection(
           "for paging is to use `order_by.start_from` and a filter to " +
           "exclude the IDs that you've already seen for the " +
           "`order_by.start_from` value")
-    shaped(spec.orderBy match {
+    val page = spec.orderBy match {
       case None =>
         graft.ops.Reads.scrollById(df, config.idCol, spec.filter, resolver(df),
           spec.offset, spec.limit, proj)
@@ -1716,7 +1638,8 @@ final class Collection(
         val wdf = obBase.withColumn("_ob", obCol)
         graft.ops.Reads.scrollByField(wdf, config.idCol, "_ob", ob.asc,
           spec.filter, resolver(wdf), ob.startFrom, spec.limit, proj)
-    })
+    }
+    Collection.selectPayload(page, wpSel, config.payloadCol)
   }
 
   /** `POST /collections/{c}/points` retrieve-by-ids with the
@@ -1734,14 +1657,8 @@ final class Collection(
       vecNames.filter(df.columns.contains)
     val ids = graft.filters.FilterCompiler.coerceWireIds(spec.ids,
       df.schema.fields.find(_.name == config.idCol).map(_.dataType))
-    val base = graft.ops.Reads.retrieve(df, config.idCol, ids, cols)
-    spec.withPayload match {
-      case Some(sel) if df.columns.contains(config.payloadCol) =>
-        base.withColumn(config.payloadCol, sel(col(config.payloadCol)))
-      case None if df.columns.contains(config.payloadCol) =>
-        base.drop(config.payloadCol)
-      case _ => base
-    }
+    Collection.selectPayload(graft.ops.Reads.retrieve(df, config.idCol, ids, cols),
+      spec.withPayload, config.payloadCol)
   }
 
   /** `GET /collections/{c}/points/{id}` — the single-point read
@@ -1778,30 +1695,21 @@ final class Collection(
     * `with_lookup` resolves through `lookupTable` (a catalog hook — tests
     * pass a sibling-collection loader); `lookup_from` (by-id example
     * resolution against a SIBLING collection — `QueryGroupsRequestInternal`
-    * carries it like the flat query) resolves through the optional
-    * dense/sparse hooks [[Catalog.queryGroups]] installs. */
+    * carries it like the flat query) resolves against the sibling
+    * collections `siblings` opens ([[Catalog.queryGroups]] passes its
+    * catalog). */
   def queryGroups(json: String,
       lookupTable: String => DataFrame = n =>
         throw new IllegalArgumentException(
           s"with_lookup collection '$n' needs a lookupTable resolver"),
-      lookupResolve: Option[(graft.api.RequestCodec.LookupFrom, Any)
-        => Either[Seq[Double], Seq[Seq[Double]]]] = None,
-      sparseLookupResolve: Option[
-        (graft.api.RequestCodec.LookupFrom, Any) => (Seq[Long], Seq[Double])] = None)
-      : DataFrame = {
+      siblings: Option[String => Collection] = None): DataFrame = {
     import graft.ops.PointQuery
-    val ctx0 = wireCtx
-    val ctx1 = lookupResolve.fold(ctx0)(f => ctx0.copy(resolveLookup = f))
-    val gctx = sparseLookupResolve.fold(ctx1)(f =>
-      ctx1.copy(resolveSparseLookup = f))
-    val spec = bulkResolve(gctx)(c =>
-      graft.api.RequestCodec.parseGroupRequest(json, c))
-    config.strictMode.foreach(sm =>
-      graft.api.StrictMode.verifyQuery(spec.query, sm, config.payloadTypes.keySet))
-    // referenced-id exclusion applies to grouped queries like any other —
-    // a recommend-by-id groups request whose examples cover every point
-    // must yield ZERO groups (`test_query_full.py:993-1010`)
-    val gq = PointQuery.resolveExclusion(spec.query)
+    val spec = bulkResolve(siblings)(graft.api.RequestCodec.parseGroupRequest(json, _))
+    // the flat query's gates and weighting: strict mode, the referenced-id
+    // exclusion (a recommend-by-id groups request whose examples cover
+    // every point yields ZERO groups, `test_query_full.py:993-1010`), the
+    // `params.idf` gate and the IDF modifier
+    val gq = idfWeighted(admitted(spec.query))
     val df = readDecoded()
     // any scorable leaf can group (reference `query/groups` accepts the
     // full query surface: nearest / recommend / discover / context /
@@ -1839,12 +1747,7 @@ final class Collection(
         def isInternal(c: String) = c.startsWith("quant_") ||
           c.startsWith("ivfcell_") || c.startsWith("idx_") ||
           c.startsWith("tenantb_") || c.startsWith("geocell_")
-        val p1 = spec.lookupWithPayload match {
-          case Some(f) if lk0.columns.contains("payload") =>
-            lk0.withColumn("payload", f(col("payload")))
-          case None if lk0.columns.contains("payload") => lk0.drop("payload")
-          case _ => lk0
-        }
+        val p1 = Collection.selectPayload(lk0, spec.lookupWithPayload, "payload")
         val keepVec: Set[String] = spec.lookupWithVectors match {
           case None => p1.columns.filter(isVec).toSet
           case Some(names) => names.flatMap(n =>
@@ -1877,8 +1780,7 @@ final class Collection(
     val name = spec.using.getOrElse("")
     val vc = config.vectorConfig(name)
     val df = readDecoded()
-    spec.filter.foreach(fl => config.strictMode.foreach(sm =>
-      graft.api.StrictMode.verifyFilter(fl, sm, config.payloadTypes.keySet)))
+    verifyFilter(spec.filter)
     val base = spec.filter
       .map(f => df.filter(pred(df, f))).getOrElse(df)
       .filter(col(config.vectorCol(name)).isNotNull)
@@ -2634,6 +2536,68 @@ object Collection {
     * it the IN expression's own planning cost dominates and the broadcast
     * semi-join takes over. */
   val InProbeMaxIds = 10000
+
+  /** One by-id probe's answer ([[Collection.probeCells]]): the probed rows
+    * by stored id, and the id column's type the wire ids coerce to. */
+  private final case class Probed(idType: Option[org.apache.spark.sql.types.DataType],
+      rows: Map[Any, org.apache.spark.sql.Row]) {
+    /** The stored cell of column `c` for the wire id `id`, with the
+      * reference's error shapes (`test_query_full.py:1428-1444`, issue
+      * #5208 regression): a missing point raises the
+      * `CollectionError::PointNotFound` message (`types.rs:913`), a present
+      * point lacking the vector the `vector_not_found_error` message
+      * (`collection_query.rs:395-397`). */
+    def cell(c: String, id: Any, vectorName: String): Any = {
+      val r = graft.filters.FilterCompiler.coerceWireIds(Seq(id), idType)
+        .headOption.flatMap(k => rows.get(idKey(k)))
+        .getOrElse(throw new IllegalArgumentException(
+          s"Not found: No point with id $id found"))
+      val i = r.fieldIndex(c)
+      if (r.isNullAt(i)) throw new IllegalArgumentException(
+        s"""Not found: Vector with name "$vectorName" for point $id""")
+      r.get(i)
+    }
+  }
+
+  /** A LongType id column collects Long but wire ids can arrive Int;
+    * strings (UUID / u64-tail / string-id tables) compare raw. */
+  private def idKey(x: Any): Any = x match {
+    case i: Int => i.toLong
+    case x => x
+  }
+
+  /** A stored dense cell as its wire value: the vector, or a multivector
+    * space's matrix. */
+  private def denseValue(vc: graft.sources.VectorConfig,
+      cell: Any): Either[Seq[Double], Seq[Seq[Double]]] =
+    if (vc.multivector)
+      Right(cell.asInstanceOf[scala.collection.Seq[scala.collection.Seq[Float]]]
+        .map(_.toSeq.map(_.toDouble)).toSeq)
+    else Left(cell.asInstanceOf[scala.collection.Seq[Float]].toSeq.map(_.toDouble))
+
+  /** A stored sparse cell (`struct<indices, values>`) as its wire value. */
+  private def sparseValue(cell: Any): (Seq[Long], Seq[Double]) = {
+    val s = cell.asInstanceOf[org.apache.spark.sql.Row]
+    (s.getSeq[Any](0).map {
+      case i: Int => i.toLong
+      case l: Long => l
+    }.toSeq, s.getSeq[Float](1).toSeq.map(_.toDouble))
+  }
+
+  /** The dry parse's by-id answers: a cell shaped like the dense space
+    * `vc` (exact declared dims), and one shaped like any sparse space. */
+  private def denseDummy(vc: graft.sources.VectorConfig): Any =
+    if (vc.multivector) Seq(Seq.fill(vc.dim)(0f)) else Seq.fill(vc.dim)(0f)
+  private val SparseDummy: Any = org.apache.spark.sql.Row(Seq(0L), Seq(1f))
+
+  /** `df` with a parsed `with_payload` selector applied to its payload
+    * column `pc`: a selector reshapes it, None drops it, and a frame
+    * without the column passes through. Each endpoint parses its own
+    * default (scroll's and `with_lookup`'s is true, query's false). */
+  private def selectPayload(df: DataFrame,
+      sel: Option[Column => Column], pc: String): DataFrame =
+    if (!df.columns.contains(pc)) df
+    else sel.fold(df.drop(pc))(f => df.withColumn(pc, f(col(pc))))
 
   /** Create/overwrite a collection from a points DataFrame; declared
     * reduced-width vectors are encoded on the way in. */

@@ -70,6 +70,32 @@ class CatalogSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { cat.get("a") }
   }
 
+  test("lookup_from through the catalog: one probe per sibling, errors in parse order") {
+    import spark.implicits._
+    val cat = new Catalog(spark, tmpRoot())
+    cat.create("docs", CollectionConfig(idCol = "id", vectors = Seq(VectorConfig("", 2, Dot))),
+      (1L to 20L).map(i => (i, Seq(1f, i.toFloat))).toDF("id", "vector"))
+    cat.create("ex", CollectionConfig(idCol = "qid", vectors = Seq(VectorConfig("v", 2, Dot))),
+      (101L to 110L).map(i => (i, Seq(1f, (i % 7).toFloat))).toDF("qid", "vector_v"))
+    def recommend(ids: Seq[Long]): String =
+      s"""{"query": {"recommend": {"positive": [${ids.mkString(", ")}]}},
+         |  "lookup_from": {"collection": "ex", "vector": "v"}, "limit": 3}""".stripMargin
+    cat.query("docs", recommend(Seq(101L))).collect()
+    val (one, _) = jobsDuring(cat.query("docs", recommend(Seq(101L))))
+    val (four, sites) = jobsDuring(cat.query("docs", recommend(101L to 104L)))
+    assert(one >= 1, "the sibling probe should run eagerly")
+    assert(four == one, s"4 sibling ids ran $four eager jobs, 1 sibling id $one: $sites")
+    // a missing local id before an absent sibling names the id; with the
+    // order flipped, the absent collection
+    val localMissing = """{"query": {"nearest": 999}}"""
+    val absentSibling = """{"query": {"nearest": 101}, "lookup_from": {"collection": "gone"}}"""
+    def err(prefetches: String*): String = intercept[IllegalArgumentException](
+      cat.query("docs", s"""{"prefetch": [${prefetches.mkString(", ")}],
+         |  "query": {"fusion": "rrf"}, "limit": 3}""".stripMargin)).getMessage
+    assert(err(localMissing, absentSibling).contains("Not found: No point with id 999 found"))
+    assert(err(absentSibling, localMissing).contains("Not found: Collection gone not found"))
+  }
+
   test("catalog update persists the patched config (quantization diff)") {
     import spark.implicits._
     val cat = new Catalog(spark, tmpRoot())

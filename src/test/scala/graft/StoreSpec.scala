@@ -618,6 +618,31 @@ class StoreSpec extends SparkTestBase {
     val rows = gh.collect().map(r => (r.getAs[String]("group_value"), r.getLong(1))).toSeq
     // g=1 best is id 1 (0.5+0.7=1.2 beats 0.9); g=2 only id 3
     assert(rows.toSet == Set(("1", 1L), ("2", 3L)))
+    // the same points in a space with the idf modifier: a grouped hit
+    // scores what the flat query scores for the same id (IDF-weighted,
+    // not the raw 1.2)
+    val ic = Collection.create(spark, tmpDir(),
+      scfg.copy(sparse = Seq(SparseVectorConfig("txt", modifier = Some("idf")))),
+      sc.read())
+    val sparseQ = """"query": {"nearest": {"indices": [1, 5], "values": [1.0, 1.0]}},
+      |  "using": "txt"""".stripMargin
+    val flat = ic.query(s"""{$sparseQ, "limit": 3}""").collect()
+      .map(r => r.getLong(0) -> r.getAs[Double]("score")).toMap
+    val grouped = ic.queryGroups(
+      s"""{$sparseQ, "group_by": "g", "group_size": 1, "limit": 2}""").collect()
+      .map(r => r.getLong(1) -> r.getAs[Double]("score")).toSeq
+    assert(grouped.map(_._1).toSet == Set(1L, 3L) && flat(1L) < 1.0, flat)
+    grouped.foreach { case (id, score) =>
+      assert(math.abs(score - flat(id)) < 1e-9, s"id $id: grouped $score, flat ${flat(id)}")
+    }
+    // `params.idf` on the space WITHOUT the modifier rejects grouped
+    // requests with the flat query's message
+    val idfQ = s"""{$sparseQ, "params": {"idf": "global"}"""
+    val flatErr = intercept[IllegalArgumentException](sc.query(idfQ + "}")).getMessage
+    val groupErr = intercept[IllegalArgumentException](sc.queryGroups(
+      idfQ + """, "group_by": "g", "group_size": 1, "limit": 2}""")).getMessage
+    assert(flatErr.contains("requires a sparse vector with the `idf` modifier"), flatErr)
+    assert(groupErr == flatErr)
   }
 
   test("writes land id-clustered: per-file sorted ids + pushed id filters") {
@@ -1334,6 +1359,22 @@ class StoreSpec extends SparkTestBase {
     val got = df.collect().map(r => r.getLong(0) -> r.getAs[Double]("score")).toSeq
     assert(got.map(_._1) == expect.map(_._1), got.mkString(","))
     got.zip(expect).foreach { case ((_, g), (_, e)) => assert(math.abs(g - e) < 1e-5) }
+  }
+
+  test("an instance sees the id column another instance over the path widened") {
+    val path = tmpDir()
+    val a = mk(path)
+    // `a` reads the numeric id column first...
+    assert(a.getPoint("1").count() == 1)
+    // ...then another instance's UUID upsert widens it to string
+    val b = new Collection(spark, path, cfg)
+    val uuid = "550e8400-e29b-41d4-a716-446655440000"
+    graft.api.UpdateBridge.applyJson(b,
+      s"""{"operations": [{"upsert": {"points": [{"id": "$uuid",
+         |  "vector": [0, 0, 0, 1], "payload": {"city": "Oslo"}}]}}]}""".stripMargin)
+    assert(b.read().schema("id").dataType == StringType)
+    assert(a.getPoint(uuid).count() == 1)
+    assert(a.getPoint("2").count() == 1)
   }
 
   test("id widening is symmetric: numeric points onto a string-id table compare as strings") {
