@@ -60,7 +60,15 @@ object RequestCodec {
         * MaxSim (`TryFrom<VectorInternal> for MultiDenseVectorInternal`,
         * `data_types/vectors.rs:176-190`; e2e `test_multi_vector.py:
         * 287-371`). */
-      multivector: Boolean = false)
+      multivector: Boolean = false,
+      /** storage element type of a dense space — queries score the stored
+        * column in it */
+      datatype: VectorDatatype = Float32,
+      /** a sparse space's `modifier` (`"idf"`) */
+      modifier: Option[String] = None) {
+    /** The space a parsed query carries. */
+    def space: PointQuery.Space = PointQuery.Space(col, metric, datatype, modifier)
+  }
 
   /** Wire `lookup_from` (`LookupLocation` + `ShardKeySelector`,
     * `lib/api/src/rest/schema.rs:608-613,1122-1133`): resolve vector-input
@@ -432,122 +440,67 @@ object RequestCodec {
     Query(scoring, prefetches, filter, limit, offset, threshold, params)
   }
 
-  /** Dense-input dimension check against the declared space
-    * (`OperationError::WrongVectorDimension` — the reference rejects
-    * mis-sized query vectors; a zipped kernel would silently truncate). */
-  private def checkDims(s: Scoring, sp: VectorSpace): Unit = sp.dim match {
-    case None => ()
-    case Some(d) =>
-      def chk(v: Seq[Double]): Unit =
-        if (v.length != d)
-          fail(s"Vector dimension error: expected dim: $d, got ${v.length}")
-      def chkM(m: Seq[Seq[Double]]): Unit = m.foreach(chk)
-      s match {
-        case Nearest(_, _, v) => chk(v)
-        case MaxSimQ(_, _, m) => chkM(m)
-        case RecommendAvg(_, _, p, n) => p.foreach(chk); n.foreach(chk)
-        case RecommendBest(_, _, p, n) => p.foreach(chk); n.foreach(chk)
-        case RecommendSum(_, _, p, n) => p.foreach(chk); n.foreach(chk)
-        case RecommendMulti(_, _, _, p, n) => p.foreach(chkM); n.foreach(chkM)
-        case DiscoverMulti(_, _, t, pairs) =>
-          chkM(t); pairs.foreach { case (p, n) => chkM(p); chkM(n) }
-        case ContextMulti(_, _, pairs) =>
-          pairs.foreach { case (p, n) => chkM(p); chkM(n) }
-        case FeedbackMulti(_, _, t, fb, _, _, _) =>
-          chkM(t); fb.foreach(f => chkM(f._1))
-        case DiscoverQ(_, _, t, pairs) =>
-          chk(t); pairs.foreach { case (p, n) => chk(p); chk(n) }
-        case ContextQ(_, _, pairs) =>
-          pairs.foreach { case (p, n) => chk(p); chk(n) }
-        case FeedbackQ(_, _, t, fb, _, _, _) => chk(t); fb.foreach(f => chk(f._1))
-        case MmrQ(_, _, v, _) => chk(v)
-        case MmrMultiQ(_, _, m, _) => chkM(m)
-        case _ => ()
-      }
-  }
-
   /** `QueryInterface` (`schema.rs:637-674`): raw vector shorthand or one of
-    * the tagged query forms. Returns the scoring plus, for `nearest+mmr`,
-    * the synthesized candidate prefetch. Dense inputs are dimension-checked
-    * against the declared space. */
+    * the tagged query forms, each carrying the node's space and its
+    * query-side vectors. Returns the scoring plus, for `nearest+mmr`, the
+    * synthesized candidate prefetch. */
   private def scoringOf(j: JValue, using: Option[String], ctx: Ctx,
       limit: Int): (Scoring, Option[Query]) = {
-    val r = scoringOf0(j, using, ctx, limit)
-    checkDims(r._1, ctx.space(using))
-    r._2.foreach(q => checkDims(q.scoring, ctx.space(using)))
-    r
-  }
-
-  private def scoringOf0(j: JValue, using: Option[String], ctx: Ctx,
-      limit: Int): (Scoring, Option[Query]) = {
     val sp = ctx.space(using)
+    val space = sp.space
     val name = using.getOrElse("")
-    // a resolved dense/matrix `VectorInput` against this space: a single
-    // dense vector over a MULTIVECTOR space is the legacy-API emulation —
-    // it becomes a 1-token matrix and scores MaxSim
-    // (`TryFrom<VectorInternal> for MultiDenseVectorInternal` expands it,
-    // `data_types/vectors.rs:176-190`; `test_multi_vector.py:287-371`)
-    def denseScoring(in: Either[Seq[Double], Seq[Seq[Double]]]): Scoring =
-      in match {
-        case Left(v) if sp.multivector => MaxSimQ(sp.col, sp.metric, Seq(v))
-        case Left(v) => Nearest(sp.col, sp.metric, v)
-        case Right(m) => MaxSimQ(sp.col, sp.metric, m)
+    // dense inputs are dimension-checked against the declared space
+    // (`OperationError::WrongVectorDimension` — the reference rejects
+    // mis-sized query vectors; a zipped kernel would silently truncate)
+    def dims(v: Seq[Double]): Seq[Double] = {
+      sp.dim.foreach(d => if (v.length != d)
+        fail(s"Vector dimension error: expected dim: $d, got ${v.length}"))
+      v
+    }
+    // a `VectorInput` against this space. Sparse: inline {indices, values}
+    // or an id resolved from the sparse space. Multivector: a matrix, the
+    // stored matrix of an id, or an inline dense vector expanded to a
+    // 1-token matrix (the legacy emulation, `TryFrom<VectorInternal> for
+    // MultiDenseVectorInternal`, `data_types/vectors.rs:176-190`;
+    // `test_multi_vector.py:287-371`). Dense: a vector, or a matrix where
+    // `matrix` allows it (a nearest input, which then scores MaxSim).
+    def input(j: JValue, matrix: Boolean = false): QueryVector =
+      if (sp.sparse) {
+        val (is, vs) = sparseInput(j, ctx, name)
+        SparseVector(is, vs)
+      } else vectorInput(j, ctx, name) match {
+        case Left(v) if sp.multivector => MultiVector(Seq(dims(v)))
+        case Left(v) => DenseVector(dims(v))
+        case Right(m) if sp.multivector || matrix => MultiVector(m.map(dims))
+        case Right(_) => fail("expected a dense vector, got a multi-dense matrix")
       }
-    // an example/target `VectorInput` for a multivector space's custom
-    // queries: by-id = the stored matrix, inline dense = 1-token legacy
-    // expansion, inline nested array = the matrix itself
-    def multiIn(j: JValue): Seq[Seq[Double]] =
-      vectorInput(j, ctx, name) match {
-        case Left(v) => Seq(v)
-        case Right(m) => m
-      }
-    def multiPairOf(j: JValue): (Seq[Seq[Double]], Seq[Seq[Double]]) =
-      (multiIn(j \ "positive"), multiIn(j \ "negative"))
+    def pairOf(j: JValue): (QueryVector, QueryVector) =
+      (input(j \ "positive"), input(j \ "negative"))
+    // a nearest input: a sparse `{indices, values}` is only valid against a
+    // sparse space and a dense array only against a dense one
+    // (`schema.rs:559-567`); an id resolves from the `using` space, sparse
+    // included (`{"query": 7, "using": "sparse-text"}` must succeed,
+    // `tests/openapi/test_query_full.py:1411-1421`)
+    def nearestInput(v: JValue): QueryVector = v match {
+      case o: JObject if (o \ "indices") != JNothing && !sp.sparse =>
+        fail(s"sparse vector input for dense vector '${sp.col}'")
+      case JArray(_) if sp.sparse =>
+        fail(s"dense vector input for sparse vector '${sp.col}'")
+      case _ => input(v, matrix = true)
+    }
     j match {
-      case arr @ JArray(_) =>
-        if (sp.sparse) fail(s"dense vector input for sparse vector '${sp.col}'")
-        (denseScoring(vectorInput(arr, ctx, name)), None)
-      // bare point-id shorthand (`QueryInterface::Nearest(VectorInput)` is
-      // untagged, `schema.rs:637-640`): `"query": 7` / `"query": "<uuid>"`.
-      // Over a sparse `using` the id resolves FROM THE SPARSE SPACE — the
-      // reference's own test requires `{"query": 7, "using": "sparse-text"}`
-      // to succeed (`tests/openapi/test_query_full.py:1411-1421`).
-      case id @ (JInt(_) | JLong(_) | JString(_)) =>
-        if (sp.sparse) {
-          val (is, vs) = sparseInput(id, ctx, name)
-          (SparseStructQ(sp.col, is, vs), None)
-        } else (denseScoring(vectorInput(id, ctx, name)), None)
+      // raw vector and bare point-id shorthand
+      // (`QueryInterface::Nearest(VectorInput)` is untagged,
+      // `schema.rs:637-640`): `"query": [..]` / `7` / `"<uuid>"`
+      case JArray(_) | JInt(_) | JLong(_) | JString(_) =>
+        (Nearest(space, nearestInput(j)), None)
       case o: JObject =>
         val keys = o.obj.map(_._1).toSet
-        if (keys.contains("indices") && !keys.contains("nearest")) {
+        if (keys.contains("indices") && !keys.contains("nearest"))
           // bare sparse-vector shorthand (`VectorInput`, untagged)
-          if (!sp.sparse)
-            fail(s"sparse vector input for dense vector '${sp.col}'")
-          val (is, vs) = sparsePair(
-            arr(o \ "indices").map(sparseIdx), arr(o \ "values").map(num))
-          (SparseStructQ(sp.col, is, vs), None)
-        } else if (keys.contains("nearest")) {
-          val scoring = (o \ "nearest") match {
-            // sparse input `{indices, values}` — only valid against a
-            // sparse named vector (`schema.rs:559-567`)
-            case s: JObject if (s \ "indices") != JNothing =>
-              if (!sp.sparse)
-                fail(s"sparse vector input for dense vector '${sp.col}'")
-              val (is, vs) = sparsePair(
-                arr(s \ "indices").map(sparseIdx),
-                arr(s \ "values").map(num))
-              SparseStructQ(sp.col, is, vs)
-            // sparse `using` + point-id `nearest` resolves from the sparse
-            // space (same contract as the bare-id form above); a dense
-            // array against a sparse space stays an error
-            case id @ (JInt(_) | JLong(_) | JString(_)) if sp.sparse =>
-              val (is, vs) = sparseInput(id, ctx, name)
-              SparseStructQ(sp.col, is, vs)
-            case v =>
-              if (sp.sparse)
-                fail(s"dense vector input for sparse vector '${sp.col}'")
-              denseScoring(vectorInput(v, ctx, name))
-          }
+          (Nearest(space, nearestInput(o)), None)
+        else if (keys.contains("nearest")) {
+          val v = nearestInput(o \ "nearest")
           (o \ "mmr") match {
             case m: JObject =>
               // lambda = 1 - diversity, default 0.5 (`collection_query.rs:481`)
@@ -561,24 +514,10 @@ object RequestCodec {
               }
               // the reference's MMR is vector-kind-agnostic
               // (`lib/shard/src/query/mmr/mod.rs:42-170` works over
-              // `VectorInternal`): a sparse `using` reranks with the sparse
-              // dot as the pairwise similarity
-              scoring match {
-                case Nearest(_, _, qv) =>
-                  (MmrQ(sp.col, sp.metric, qv, lambda),
-                    Some(Query(Nearest(sp.col, sp.metric, qv), limit = candidates)))
-                case sq @ SparseStructQ(sc, qi, qvs) =>
-                  (MmrSparseQ(sc, qi, qvs, lambda),
-                    Some(Query(sq, limit = candidates)))
-                // a multivector `using` (matrix or legacy-dense input)
-                // reranks with MaxSim as both relevance and pairwise sim
-                // (`mmr/mod.rs:102-140`)
-                case mq @ MaxSimQ(_, _, m) =>
-                  (MmrMultiQ(sp.col, sp.metric, m, lambda),
-                    Some(Query(mq, limit = candidates)))
-                case _ => fail("mmr requires a nearest vector query")
-              }
-            case _ => (scoring, None)
+              // `VectorInternal`)
+              (MmrQ(space, v, lambda),
+                Some(Query(Nearest(space, v), limit = candidates)))
+            case _ => (Nearest(space, v), None)
           }
         } else if (keys.contains("recommend")) {
           val r = o \ "recommend"
@@ -593,60 +532,18 @@ object RequestCodec {
           // `test_recommend.py::test_without_positives`)
           if (oneOrMany(r \ "positive").isEmpty && oneOrMany(r \ "negative").isEmpty)
             fail("At least one positive or negative vector/id must be provided")
-          if (sp.sparse) {
-            // sparse `using`: examples are inline {indices, values} or ids
-            // resolved from the sparse space (`recommendations.rs` treats
-            // sparse `VectorInput`s uniformly with dense)
-            val pos = oneOrMany(r \ "positive").map(sparseInput(_, ctx, name))
-            val neg = oneOrMany(r \ "negative").map(sparseInput(_, ctx, name))
-            (RecommendSparse(sp.col, strategy, pos, neg), None)
-          } else if (sp.multivector) {
-            // multivector `using`: examples are token matrices — by-id
-            // resolves the stored matrix, an inline DENSE example expands
-            // to a 1-token matrix (the legacy emulation,
-            // `data_types/vectors.rs:176-190`), an inline nested array is
-            // the matrix itself (`test_recommendation_multivector.py`)
-            val pos = oneOrMany(r \ "positive").map(multiIn)
-            val neg = oneOrMany(r \ "negative").map(multiIn)
-            (RecommendMulti(sp.col, sp.metric, strategy, pos, neg), None)
-          } else {
-            val pos = oneOrMany(r \ "positive").map(denseInput(_, ctx, name))
-            val neg = oneOrMany(r \ "negative").map(denseInput(_, ctx, name))
-            val s = strategy match {
-              case "average_vector" => RecommendAvg(sp.col, sp.metric, pos, neg)
-              case "best_score" => RecommendBest(sp.col, sp.metric, pos, neg)
-              case "sum_scores" => RecommendSum(sp.col, sp.metric, pos, neg)
-            }
-            (s, None)
-          }
+          (Recommend(space, strategy, oneOrMany(r \ "positive").map(input(_)),
+            oneOrMany(r \ "negative").map(input(_))), None)
         } else if (keys.contains("discover")) {
           val d = o \ "discover"
-          if (sp.sparse)
-            (DiscoverSparse(sp.col, sparseInput(d \ "target", ctx, name),
-              oneOrMany(d \ "context").map(sparsePairOf(_, ctx, name))), None)
-          else if (sp.multivector)
-            (DiscoverMulti(sp.col, sp.metric, multiIn(d \ "target"),
-              oneOrMany(d \ "context").map(multiPairOf)), None)
-          else
-            (DiscoverQ(sp.col, sp.metric, denseInput(d \ "target", ctx, name),
-              oneOrMany(d \ "context").map(pairOf(_, ctx, name))), None)
+          (Discover(space, input(d \ "target"),
+            oneOrMany(d \ "context").map(pairOf)), None)
         } else if (keys.contains("context")) {
-          if (sp.sparse)
-            (ContextSparse(sp.col,
-              oneOrMany(o \ "context").map(sparsePairOf(_, ctx, name))), None)
-          else if (sp.multivector)
-            (ContextMulti(sp.col, sp.metric,
-              oneOrMany(o \ "context").map(multiPairOf)), None)
-          else
-            (ContextQ(sp.col, sp.metric,
-              oneOrMany(o \ "context").map(pairOf(_, ctx, name))), None)
+          (Context(space, oneOrMany(o \ "context").map(pairOf)), None)
         } else if (keys.contains("relevance_feedback")) {
           val f = o \ "relevance_feedback"
-          def fbIn(j: JValue): Either[Seq[Double], Seq[Seq[Double]]] =
-            if (sp.multivector) Right(multiIn(j))
-            else Left(denseInput(j, ctx, name))
           val fb = arr(f \ "feedback").map { item =>
-            (fbIn(item \ "example"), num(item \ "score"))
+            (input(item \ "example"), num(item \ "score"))
           }
           // wire validations (`test_relevance_feedback.py:59,82`): an empty
           // feedback list and negative strategy params both reject
@@ -658,12 +555,7 @@ object RequestCodec {
               s"relevance_feedback.strategy.naive.$k: value $v invalid, " +
               "must be 0.0 or larger]")
           }
-          if (sp.multivector)
-            (FeedbackMulti(sp.col, sp.metric, multiIn(f \ "target"),
-              fb.map { case (e, w) => (e.toOption.get, w) }, a, b, c), None)
-          else
-            (FeedbackQ(sp.col, sp.metric, denseInput(f \ "target", ctx, name),
-              fb.map { case (e, w) => (e.left.toOption.get, w) }, a, b, c), None)
+          (Feedback(space, input(f \ "target"), fb, a, b, c), None)
         } else if (keys.contains("order_by")) {
           val s = (o \ "order_by") match {
             case JString(key) => OrderByField(key, asc = true)
@@ -724,14 +616,6 @@ object RequestCodec {
     }
   }
 
-  private def pairOf(j: JValue, ctx: Ctx, name: String): (Seq[Double], Seq[Double]) =
-    (denseInput(j \ "positive", ctx, name), denseInput(j \ "negative", ctx, name))
-
-  private def sparsePairOf(j: JValue, ctx: Ctx, name: String)
-      : ((Seq[Long], Seq[Double]), (Seq[Long], Seq[Double])) =
-    (sparseInput(j \ "positive", ctx, name),
-      sparseInput(j \ "negative", ctx, name))
-
   /** `VectorInput` (`schema.rs:559-567`): dense array, multi-dense matrix,
     * or a point id resolved via the ctx hook AGAINST the node's resolved
     * `using` space (`name`). Left = dense, Right = multi. */
@@ -748,12 +632,6 @@ object RequestCodec {
         fail("sparse vector input is only valid for a sparse named vector " +
           "(`using` a space declared sparse)")
       case other => fail(s"unsupported vector input: $other")
-    }
-
-  private def denseInput(j: JValue, ctx: Ctx, name: String): Seq[Double] =
-    vectorInput(j, ctx, name) match {
-      case Left(v) => v
-      case Right(_) => fail("expected a dense vector, got a multi-dense matrix")
     }
 
   /** A sparse `VectorInput`: inline `{indices, values}` or an example id

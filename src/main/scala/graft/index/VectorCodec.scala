@@ -99,6 +99,13 @@ object VectorCodec {
       x => x.cast("int").bitwiseAND(lit(255)).cast("float"))
   }
 
+  /** [[decode]] of a stored dense or multivector column (each token
+    * decoded); a Float32 column passes through untouched. */
+  def decoded(dt: VectorDatatype, multivector: Boolean, stored: Column): Column =
+    if (dt == Float32) stored
+    else if (multivector) transform(stored, v => decode(dt, v))
+    else decode(dt, stored)
+
   /** f16 score with a COLUMN query (used by the literal path and inside
     * MaxSim lambdas where the query token is a lambda variable). */
   def f16Score(metric: Metric, halfBits: Column, q: Column): Column = metric match {
@@ -178,5 +185,20 @@ object VectorCodec {
           case Euclid    => sqrt(VecKernels.u8L2Sq(stored, q).cast("double"))
           case Manhattan => VecKernels.u8L1(stored, q)
         }
+    }
+
+  /** [[scoreExpr]] in the SIMILARITY orientation, larger-better for every
+    * metric (`Metric::similarity`, what the custom queries combine):
+    * Euclid −Σd² (no sqrt), Manhattan −Σ|d|. Float32 is
+    * [[graft.functions.VectorFunctions.similarity]]; the narrow widths
+    * reuse their fused kernels, Uint8 over the u8-cast query. */
+  def simExpr(dt: VectorDatatype, metric: Metric, stored: Column, query: Seq[Double]): Column =
+    (dt, metric) match {
+      case (Float32, m) =>
+        graft.functions.VectorFunctions.similarity(m, stored, typedlit(query))
+      case (Float16, Euclid) => -VecKernels.f16L2Sq(stored, typedlit(query))
+      case (Uint8, Euclid) => -VecKernels.u8L2Sq(stored, typedlit(encodeU8(query)))
+      case (_, Manhattan) => -scoreExpr(dt, metric, stored, query)
+      case _ => scoreExpr(dt, metric, stored, query)
     }
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.index.VectorCodec
 import graft.model._
+import graft.ops.PointQuery.{DenseVector, MultiVector, QueryVector, Space, SparseVector}
 
 /** Maximal Marginal Relevance diversity rerank.
   *
@@ -49,27 +51,56 @@ object Mmr {
     acc
   }
 
+  /** The vector kind's similarity between two decoded vectors, `a` on the
+    * query side: dense = the metric's internal similarity, sparse = the
+    * intersect-dot, multivector = MaxSim of `a`'s tokens against `b`'s.
+    * MaxSim is asymmetric, and the reference's pairwise step scores the
+    * CANDIDATE as the query side (`scorers[candidate].score_point(selected)`,
+    * `lazy_matrix.rs:56-68`). */
+  private def similarity(metric: Metric)(a: QueryVector, b: QueryVector): Double =
+    (a, b) match {
+      case (DenseVector(x), DenseVector(y)) => simInternal(metric, x.toArray, y.toArray)
+      case (SparseVector(ai, av), SparseVector(bi, bv)) =>
+        sparseDotOf(ai.toArray, av.toArray, bi.toArray, bv.toArray)
+      case (MultiVector(q), MultiVector(s)) =>
+        val stored = s.map(_.toArray)
+        q.foldLeft(0.0)((acc, r) =>
+          acc + stored.iterator.map(t => simInternal(metric, r.toArray, t)).max)
+      case _ =>
+        throw new IllegalArgumentException(s"MMR over mixed vector kinds: $a, $b")
+    }
+
+  /** A candidate's stored vector (column `i` of `r`, already decoded to
+    * f32 elements), as a vector of `like`'s kind. */
+  private def storedVector(like: QueryVector, r: Row, i: Int): QueryVector = like match {
+    case DenseVector(_) => DenseVector(r.getSeq[Float](i).map(_.toDouble).toSeq)
+    case MultiVector(_) =>
+      MultiVector(r.getSeq[scala.collection.Seq[Float]](i)
+        .map(_.map(_.toDouble).toSeq).toSeq)
+    case SparseVector(_, _) =>
+      val s = r.getStruct(i)
+      // stored indices: array<bigint> canonically, array<int> on legacy
+      // directly-seeded tables — promote per element
+      SparseVector(s.getSeq[Any](0).map {
+        case i: Int => i.toLong
+        case l: Long => l
+      }.toSeq, s.getSeq[Float](1).map(_.toDouble).toSeq)
+  }
+
   /** The greedy MMR selection over n candidates: `rel` = sim(query, c),
-    * `pairSimRaw` = sim(c_i, c_j). Returns selected candidate indices in
-    * selection order. Ties break on first-seen (candidate rank order),
-    * which is deterministic given the ordered input. */
+    * `pairSim` = sim(c_i, c_j), computed once per ordered pair. Returns
+    * selected candidate indices in selection order. Ties break on
+    * first-seen (candidate rank order), which is deterministic given the
+    * ordered input. */
   private def greedySelect(n: Int, limit: Int, lambda: Double,
-      rel: Int => Double, pairSimRaw: (Int, Int) => Double,
-      /** dense/sparse similarities are symmetric, so the pair cache keys
-        * by the UNORDERED pair; MaxSim is not — the reference computes
-        * `scorers[candidate].score_point(selected)` (candidate as the
-        * query side, `lazy_matrix.rs:56-68`), so the multivec caller keys
-        * by direction. */
-      symmetric: Boolean = true): Seq[Int] = {
+      rel: Int => Double, pairSimRaw: (Int, Int) => Double): Seq[Int] = {
     val selected = scala.collection.mutable.ArrayBuffer.empty[Int]
     if (n > 0 && limit > 0) {
       if (n < 2) selected += 0
       else {
         val simCache = scala.collection.mutable.Map.empty[(Int, Int), Double]
-        def pairSim(i: Int, j: Int): Double = {
-          val key = if (symmetric && i > j) (j, i) else (i, j)
-          simCache.getOrElseUpdate(key, pairSimRaw(i, j))
-        }
+        def pairSim(i: Int, j: Int): Double =
+          simCache.getOrElseUpdate((i, j), pairSimRaw(i, j))
         val remaining = scala.collection.mutable.LinkedHashSet(0 until n: _*)
         val first = remaining.maxBy(rel)
         selected += first; remaining -= first
@@ -85,9 +116,32 @@ object Mmr {
     selected.toSeq
   }
 
-  private def selectionFrame(spark: SparkSession, idCol: String,
-      idType: DataType, ids: Array[Any], scores: Array[Double],
-      selected: Seq[Int]): DataFrame = {
+  /** `candidates`: (id, score, stored vector of `space`) rows — the
+    * ranked candidates of the underlying query, scores already rounded.
+    * Relevance is [[similarity]] of `query` to each candidate and the
+    * pairwise step [[similarity]] between candidates, over the vectors
+    * decoded from the space's storage width (vectorless candidates must
+    * already be dropped). Returns (id, score, position) in MMR selection
+    * order. */
+  def rerank(
+      spark: SparkSession,
+      candidates: DataFrame,
+      idCol: String,
+      space: Space,
+      query: QueryVector,
+      lambda: Double,
+      limit: Int): DataFrame = {
+    val idType = candidates.schema(idCol).dataType // Long or UUID-string ids
+    val rows = candidates.select(col(idCol), col("score"),
+      VectorCodec.decoded(space.datatype, query.isInstanceOf[MultiVector],
+        col(space.col))).collect()
+    val ids = rows.map(_.get(0))
+    val scores = rows.map(_.getAs[Number](1).doubleValue)
+    val vecs = rows.map(storedVector(query, _, 2))
+    val sim = similarity(space.metric) _
+    val rel = vecs.map(sim(query, _))
+    val selected = greedySelect(rows.length, limit, lambda,
+      rel, (c, s) => sim(vecs(c), vecs(s)))
     val out = selected.zipWithIndex.map { case (idx, pos) =>
       Row(ids(idx), scores(idx), pos + 1)
     }
@@ -96,92 +150,5 @@ object Mmr {
       StructType(Seq(
         StructField(idCol, idType), StructField("score", DoubleType),
         StructField("position", IntegerType))))
-  }
-
-  /** `candidates`: (id, score, vector) rows — the top `candidatesLimit` hits
-    * of the underlying query, scores already rounded. Returns (id, score,
-    * position) in MMR selection order. */
-  def rerank(
-      spark: SparkSession,
-      candidates: DataFrame,
-      idCol: String,
-      vecCol: String,
-      metric: Metric,
-      query: Seq[Double],
-      lambda: Double,
-      limit: Int): DataFrame = {
-    val idType = candidates.schema(idCol).dataType // Long or UUID-string ids
-    val rows = candidates.select(col(idCol), col("score"), col(vecCol)).collect()
-    val ids = rows.map(_.get(0))
-    val scores = rows.map(_.getDouble(1))
-    val vecs = rows.map(_.getSeq[Float](2).toArray.map(_.toDouble))
-    val q = query.toArray
-    val rel = vecs.map(v => simInternal(metric, v, q))
-    val selected = greedySelect(rows.length, limit, lambda,
-      rel, (i, j) => simInternal(metric, vecs(i), vecs(j)))
-    selectionFrame(spark, idCol, idType, ids, scores, selected)
-  }
-
-  /** Multivector-space MMR: `candidates` = (id, score, matrix) rows; both
-    * the relevance and the pairwise similarity are MaxSim
-    * (`mmr/mod.rs:102-140` scores the volatile multi-dense storage with the
-    * standard scorer). Pairwise direction: CANDIDATE matrix as the query
-    * side against the selected matrix (`lazy_matrix.rs:56-68`) — MaxSim is
-    * asymmetric, so the greedy loop must not canonicalize the pair. */
-  def rerankMulti(
-      spark: SparkSession,
-      candidates: DataFrame,
-      idCol: String,
-      vecCol: String,
-      metric: Metric,
-      query: Seq[Seq[Double]],
-      lambda: Double,
-      limit: Int): DataFrame = {
-    val idType = candidates.schema(idCol).dataType
-    val rows = candidates.select(col(idCol), col("score"), col(vecCol)).collect()
-    val ids = rows.map(_.get(0))
-    val scores = rows.map(_.getDouble(1))
-    val mats: Array[Array[Array[Double]]] = rows.map(
-      _.getSeq[scala.collection.Seq[Float]](2)
-        .map(_.iterator.map(_.toDouble).toArray).toArray)
-    val q = query.map(_.toArray).toArray
-    def maxSimOf(qm: Array[Array[Double]], stored: Array[Array[Double]]): Double =
-      qm.foldLeft(0.0)((acc, r) =>
-        acc + stored.iterator.map(t => simInternal(metric, r, t)).max)
-    val rel = mats.map(m => maxSimOf(q, m))
-    val selected = greedySelect(rows.length, limit, lambda,
-      rel, (c, s) => maxSimOf(mats(c), mats(s)), symmetric = false)
-    selectionFrame(spark, idCol, idType, ids, scores, selected)
-  }
-
-  /** Sparse-space MMR: `candidates` = (id, score, _qidx, _qval) rows with
-    * the candidate's stored sparse vector; similarities are the sparse
-    * intersect-dot, both query-to-candidate and pairwise. */
-  def rerankSparse(
-      spark: SparkSession,
-      candidates: DataFrame,
-      idCol: String,
-      qIndices: Seq[Long],
-      qValues: Seq[Double],
-      lambda: Double,
-      limit: Int): DataFrame = {
-    val idType = candidates.schema(idCol).dataType
-    val rows = candidates
-      .select(col(idCol), col("score"), col("_qidx"), col("_qval")).collect()
-    val ids = rows.map(_.get(0))
-    val scores = rows.map(_.getDouble(1))
-    // stored indices: array<bigint> canonically, array<int> on legacy
-    // directly-seeded tables — promote per element
-    val idx = rows.map(_.getSeq[Any](2).iterator.map {
-      case i: Int => i.toLong
-      case l: Long => l
-    }.toArray)
-    val vals = rows.map(_.getSeq[Float](3).toArray.map(_.toDouble))
-    val qi = qIndices.toArray
-    val qv = qValues.toArray
-    val rel = rows.indices.map(i => sparseDotOf(idx(i), vals(i), qi, qv))
-    val selected = greedySelect(rows.length, limit, lambda,
-      rel, (i, j) => sparseDotOf(idx(i), vals(i), idx(j), vals(j)))
-    selectionFrame(spark, idCol, idType, ids, scores, selected)
   }
 }

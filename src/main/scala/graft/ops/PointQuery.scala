@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.filters.{FieldResolver, FilterCompiler}
+import graft.index.VectorCodec
 import graft.model._
 
 /** The universal query API: a prefetch DAG where each node runs its own
@@ -24,85 +25,86 @@ import graft.model._
   */
 object PointQuery {
 
+  /** The vector space a query kind scores against: the stored column, its
+    * metric, its storage element type (`VectorDataConfig.datatype`,
+    * `types.rs:2153` — the scorer reads the stored column in that width)
+    * and, for a sparse space, its `modifier` (`"idf"` weights every
+    * query-side vector, `query_context.rs:278-300`). Whether the space is
+    * dense, sparse or multivector is the kind of the [[QueryVector]]s a
+    * query carries against it. */
+  final case class Space(col: String, metric: Metric,
+      datatype: VectorDatatype = Float32, modifier: Option[String] = None)
+
+  /** A query-side vector — the reference's `VectorInternal`
+    * (`data_types/vectors.rs`): dense, sparse (sorted unique indices) or
+    * a multi-dense token matrix. */
+  sealed trait QueryVector
+  final case class DenseVector(values: Seq[Double]) extends QueryVector
+  final case class SparseVector(indices: Seq[Long], values: Seq[Double]) extends QueryVector
+  final case class MultiVector(rows: Seq[Seq[Double]]) extends QueryVector
+
   sealed trait Scoring
-  final case class Nearest(vecCol: String, metric: Metric, query: Seq[Double]) extends Scoring
-  final case class RecommendBest(vecCol: String, metric: Metric,
-      positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]) extends Scoring
-  final case class RecommendSum(vecCol: String, metric: Metric,
-      positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]) extends Scoring
-  final case class RecommendAvg(vecCol: String, metric: Metric,
-      positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]) extends Scoring
-  final case class DiscoverQ(vecCol: String, metric: Metric,
-      target: Seq[Double], pairs: Seq[(Seq[Double], Seq[Double])]) extends Scoring
-  final case class ContextQ(vecCol: String, metric: Metric,
-      pairs: Seq[(Seq[Double], Seq[Double])]) extends Scoring
-  final case class MaxSimQ(vecCol: String, metric: Metric,
-      queryVecs: Seq[Seq[Double]]) extends Scoring
+  /** One of qdrant's vector query kinds (`QueryEnum`,
+    * `lib/shard/src/query/query_enum.rs:9-16`), generic over the vector it
+    * carries like the reference's: every per-example similarity goes
+    * through [[similarity]], so one case class serves dense, sparse and
+    * multivector spaces and every storage width. */
+  sealed trait VectorScoring extends Scoring {
+    def space: Space
+    /** Every query-side vector of the node. */
+    def vectors: Seq[QueryVector]
+    /** The node with `f` applied to every query-side vector. */
+    def mapVectors(f: QueryVector => QueryVector): VectorScoring
+  }
+  final case class Nearest(space: Space, vector: QueryVector) extends VectorScoring {
+    def vectors: Seq[QueryVector] = Seq(vector)
+    def mapVectors(f: QueryVector => QueryVector): Nearest = copy(vector = f(vector))
+  }
+  /** Recommend, strategy ∈ average_vector / best_score / sum_scores
+    * (`recommendations.rs`, `reco_query.rs`). positives are optional for
+    * best_score / sum_scores (`test_recommendation_multivector.py::
+    * test_multi_best_score_works_with_only_negatives`). */
+  final case class Recommend(space: Space, strategy: String,
+      positives: Seq[QueryVector], negatives: Seq[QueryVector]) extends VectorScoring {
+    def vectors: Seq[QueryVector] = positives ++ negatives
+    def mapVectors(f: QueryVector => QueryVector): Recommend =
+      copy(positives = positives.map(f), negatives = negatives.map(f))
+  }
+  final case class Discover(space: Space, target: QueryVector,
+      pairs: Seq[(QueryVector, QueryVector)]) extends VectorScoring {
+    def vectors: Seq[QueryVector] = target +: pairs.flatMap(p => Seq(p._1, p._2))
+    def mapVectors(f: QueryVector => QueryVector): Discover =
+      copy(target = f(target), pairs = pairs.map(p => (f(p._1), f(p._2))))
+  }
+  final case class Context(space: Space,
+      pairs: Seq[(QueryVector, QueryVector)]) extends VectorScoring {
+    def vectors: Seq[QueryVector] = pairs.flatMap(p => Seq(p._1, p._2))
+    def mapVectors(f: QueryVector => QueryVector): Context =
+      copy(pairs = pairs.map(p => (f(p._1), f(p._2))))
+  }
   /** Relevance feedback, naive strategy (`FeedbackStrategy::Naive`). */
-  final case class FeedbackQ(vecCol: String, metric: Metric,
-      target: Seq[Double], feedback: Seq[(Seq[Double], Double)],
-      a: Double, b: Double, c: Double) extends Scoring
+  final case class Feedback(space: Space, target: QueryVector,
+      feedback: Seq[(QueryVector, Double)],
+      a: Double, b: Double, c: Double) extends VectorScoring {
+    def vectors: Seq[QueryVector] = target +: feedback.map(_._1)
+    def mapVectors(f: QueryVector => QueryVector): Feedback =
+      copy(target = f(target), feedback = feedback.map(p => (f(p._1), p._2)))
+  }
+  /** MMR rescore over prefetch candidates (`lib/shard/src/query/mmr/
+    * mod.rs:42-170`, vector-kind-agnostic like the reference): relevance
+    * is the nearest score, and the pairwise step uses the vector kind's
+    * similarity ([[Mmr.rerank]]). */
+  final case class MmrQ(space: Space, vector: QueryVector,
+      lambda: Double) extends VectorScoring {
+    def vectors: Seq[QueryVector] = Seq(vector)
+    def mapVectors(f: QueryVector => QueryVector): MmrQ = copy(vector = f(vector))
+  }
   /** Sparse-dot leaf over a tokens column: Σ_terms weight·tf(term) — the
     * per-row form of [[graft.index.SparseIndex.search]]'s TF×weight scoring,
     * usable as a prefetch leaf (the sparse half of the canonical hybrid
     * dense+sparse→RRF query, `tests/openapi/test_query.py`). Query terms are
     * few, so the score is one codegen'd projection — no posting join. */
   final case class SparseDotQ(tokensCol: String, terms: Seq[(String, Double)])
-      extends Scoring
-  /** Sparse-dot leaf over a true sparse vector column
-    * (struct<indices: array<int>, values: array<float>>, the
-    * `SparseVector` storage form — `sparse_vector.rs:17-22`). Dot over
-    * intersecting indices, larger-better, only rows with ≥ 1 matching dim
-    * (the posting-join candidate semantics). */
-  final case class SparseStructQ(sparseCol: String,
-      qIndices: Seq[Long], qValues: Seq[Double]) extends Scoring
-  /** Recommend over a SPARSE `using` space (the reference's recommend
-    * accepts sparse example vectors/ids like any `VectorInput`,
-    * `recommendations.rs`): strategy ∈ average_vector / best_score /
-    * sum_scores, combined exactly as the dense forms but with the sparse
-    * intersect-dot as the per-example similarity. Candidates are rows
-    * sharing ≥ 1 dim with ANY example (the merged posting-join set). */
-  final case class RecommendSparse(sparseCol: String, strategy: String,
-      positives: Seq[(Seq[Long], Seq[Double])],
-      negatives: Seq[(Seq[Long], Seq[Double])]) extends Scoring
-  /** Recommend over a MULTIVECTOR `using` space
-    * (`test_recommendation_multivector.py`; the reference's `RecoQuery` is
-    * vector-kind-agnostic): each example is a token matrix — by-id
-    * examples resolve the stored matrix, inline dense examples expand to
-    * 1-token matrices (`TryFrom<VectorInternal> for
-    * MultiDenseVectorInternal`, `data_types/vectors.rs:176-190`) — and
-    * the per-example similarity is MaxSim. `average_vector` merges the
-    * examples into ONE matrix (positives concatenated, negative rows
-    * negated — `recommendations.rs:59-70,121-124`); best_score /
-    * sum_scores combine per-example MaxSim scores like the dense forms. */
-  final case class RecommendMulti(vecCol: String, metric: Metric,
-      strategy: String,
-      positives: Seq[Seq[Seq[Double]]],
-      negatives: Seq[Seq[Seq[Double]]]) extends Scoring
-  /** Discover / Context / relevance feedback over a MULTIVECTOR `using`
-    * space — the reference's custom queries score any vector kind
-    * (`MultiCustomQueryScorer`,
-    * `vector_storage/query_scorer/multi_custom_query_scorer.rs`): the
-    * per-example similarity is MaxSim, combined by the same rank / margin /
-    * weighted-pair formulas as the dense forms. */
-  final case class DiscoverMulti(vecCol: String, metric: Metric,
-      target: Seq[Seq[Double]],
-      pairs: Seq[(Seq[Seq[Double]], Seq[Seq[Double]])]) extends Scoring
-  final case class ContextMulti(vecCol: String, metric: Metric,
-      pairs: Seq[(Seq[Seq[Double]], Seq[Seq[Double]])]) extends Scoring
-  final case class FeedbackMulti(vecCol: String, metric: Metric,
-      target: Seq[Seq[Double]], feedback: Seq[(Seq[Seq[Double]], Double)],
-      a: Double, b: Double, c: Double) extends Scoring
-  /** Discover / Context over a SPARSE `using` space — the same rank /
-    * margin combines as the dense forms, with the sparse intersect-dot as
-    * the per-example similarity (sparse `VectorInput`s are first-class in
-    * the reference's discover surface, `query_enum.rs`). */
-  final case class DiscoverSparse(sparseCol: String,
-      target: (Seq[Long], Seq[Double]),
-      pairs: Seq[((Seq[Long], Seq[Double]), (Seq[Long], Seq[Double]))])
-      extends Scoring
-  final case class ContextSparse(sparseCol: String,
-      pairs: Seq[((Seq[Long], Seq[Double]), (Seq[Long], Seq[Double]))])
       extends Scoring
   final case class OrderByField(field: String, asc: Boolean,
       startFrom: Option[Any] = None) extends Scoring
@@ -117,31 +119,14 @@ object PointQuery {
   final case class FusionQ(kind: String, weights: Option[Seq[Double]] = None,
       rrfK: Option[Int] = None) extends Scoring
   final case class FormulaQ(ast: Formula.Expr, defaultScore: Double = 0.0) extends Scoring
-  final case class MmrQ(vecCol: String, metric: Metric, query: Seq[Double],
-      lambda: Double) extends Scoring
-  /** MMR over a SPARSE `using` space — the reference's MMR is
-    * vector-kind-agnostic (`lib/shard/src/query/mmr/mod.rs:42-170` computes
-    * similarities over `VectorInternal`, sparse included); pairwise sims
-    * are the sparse intersect-dot. */
-  final case class MmrSparseQ(sparseCol: String, qIndices: Seq[Long],
-      qValues: Seq[Double], lambda: Double) extends Scoring
-  /** MMR over a MULTIVECTOR `using` space — the reference's MMR builds a
-    * volatile storage of the candidate matrices and scores with the
-    * standard MaxSim scorer (`mmr/mod.rs:102-140`,
-    * `new_volatile_multi_dense_vector_storage`); pairwise similarity is
-    * MaxSim with the CANDIDATE as the query side
-    * (`LazyMatrix.compute_similarity`: `scorers[i].score_point(j)`). */
-  final case class MmrMultiQ(vecCol: String, metric: Metric,
-      query: Seq[Seq[Double]], lambda: Double) extends Scoring
-
   /** Wire `SearchParams` (`types.rs:573-618`): `exact` / `quantization.
     * ignore` bypass the quantized two-phase route, `quantization.rescore
     * = false` returns the approx ranking without the exact second phase,
-    * `oversampling` sizes the approx candidate pool. `hnsw_ef` and
-    * `indexed_only` are accepted and ignored (serving-index knobs —
-    * BASELINE.json scopes online ANN out). Interpreted by the
-    * quantization-aware executor (`storage/Collection.knn`); inert for
-    * plain-table execution, which is always exact. */
+    * `oversampling` sizes the approx candidate pool, and `hnsw_ef`
+    * overrides the declared IVF nprobe. `indexed_only` is accepted and
+    * ignored. Interpreted by the quantization- and IVF-aware route of a
+    * Nearest root (`storage/Collection.knn`); prefetch leaves and the
+    * other kinds always scan exactly. */
   final case class SearchParams(
       exact: Boolean = false,
       quantIgnore: Boolean = false,
@@ -195,91 +180,116 @@ object PointQuery {
   /** Score expression + larger-better orientation for a scoring LEAF —
     * shared by the DAG executor and the group-by endpoint (any scorable
     * root can group, `query/groups` over nearest/recommend/discover/
-    * context/feedback/maxsim/sparse). */
-  private[graft] def scoringExpr(s: Scoring): (Column, Boolean) = s match {
-    case Nearest(vc, m, qv) =>
-      (Search.scoreExpr(m, col(vc), typedLit(qv)), m.largerBetter)
-    case RecommendAvg(vc, m, pos, neg) =>
-      (Search.scoreExpr(m, col(vc), typedLit(Search.recommendAvgVector(pos, neg))),
-        m.largerBetter)
-    case RecommendBest(vc, m, pos, neg) =>
-      (Search.bestScoreExpr(m, col(vc), pos, neg), true)
-    case RecommendSum(vc, m, pos, neg) =>
-      (Search.sumScoresExpr(m, col(vc), pos, neg), true)
-    case DiscoverQ(vc, m, t, pairs) =>
-      (Search.discoverExpr(m, col(vc), t, pairs), true)
-    case ContextQ(vc, m, pairs) =>
-      (Search.contextExpr(m, col(vc), pairs), true)
-    case MaxSimQ(vc, m, qvs) =>
-      (graft.functions.VectorFunctions.maxSim(m, col(vc), qvs), true)
-    case FeedbackQ(vc, m, t, fb, a, b, c) =>
-      (Search.feedbackNaiveExpr(m, col(vc), t, fb, a, b, c), true)
-    case SparseDotQ(tc, terms) =>
-      (terms.map { case (t, w) =>
-        lit(w) * size(filter(col(tc), x => x === lit(t))).cast("double")
-      }.reduce(_ + _), true)
-    case SparseStructQ(sc, qi, qv) =>
+    * context/feedback). The custom kinds combine per-example
+    * [[similarity]] columns exactly as the reference's `RecoQuery` /
+    * `DiscoveryQuery` / `ContextQuery` / `FeedbackQuery` do, for every
+    * vector kind. */
+  private[graft] def scoringExpr(s: Scoring): (Column, Boolean) = {
+    def sim(sp: Space)(v: QueryVector): Column = similarity(sp, v)._1
+    s match {
+      case Nearest(sp, v) => similarity(sp, v, nearest = true)
+      case Recommend(sp, "average_vector", pos, neg) =>
+        similarity(sp, average(pos, neg), nearest = true)
+      case Recommend(sp, "best_score", pos, neg) =>
+        (Search.bestScoreCombine(pos.map(sim(sp)), neg.map(sim(sp))), true)
+      case Recommend(sp, "sum_scores", pos, neg) =>
+        (Search.sumScoresCombine(pos.map(sim(sp)), neg.map(sim(sp))), true)
+      case Recommend(_, other, _, _) =>
+        throw new IllegalArgumentException(s"unknown recommend strategy '$other'")
+      case Discover(sp, target, pairs) =>
+        (Search.discoverCombine(sim(sp)(target),
+          pairs.map { case (p, n) => (sim(sp)(p), sim(sp)(n)) }), true)
+      case Context(sp, pairs) =>
+        (Search.contextCombine(
+          pairs.map { case (p, n) => (sim(sp)(p), sim(sp)(n)) }), true)
+      case Feedback(sp, target, fb, a, b, c) =>
+        (Search.feedbackNaiveCombine(sim(sp)(target),
+          fb.map { case (v, w) => (sim(sp)(v), w) }, a, b, c), true)
+      case SparseDotQ(tc, terms) =>
+        (terms.map { case (t, w) =>
+          lit(w) * size(filter(col(tc), x => x === lit(t))).cast("double")
+        }.reduce(_ + _), true)
+      case other =>
+        throw new IllegalArgumentException(s"$other is not a scoring leaf")
+    }
+  }
+
+  // ---- vector kinds: the only code that looks at a vector's kind ----
+
+  /** The similarity of the space's STORED column to one query-side vector,
+    * and whether larger is better. Dense vectors score through the
+    * storage width's fused kernel ([[VectorCodec.scoreExpr]] /
+    * [[VectorCodec.simExpr]]; a Uint8 space casts the query to u8 like the
+    * reference's byte scorer, `metric_query_scorer.rs:51`). `nearest` asks
+    * for the user-visible score (Euclid / Manhattan distances,
+    * smaller-better) instead of the larger-better similarity the custom
+    * kinds combine (`Metric::similarity`). Multivectors score MaxSim and
+    * sparse vectors the intersect-dot, larger-better either way. */
+  private[graft] def similarity(sp: Space, v: QueryVector,
+      nearest: Boolean = false): (Column, Boolean) = v match {
+    case DenseVector(x) if nearest =>
+      (VectorCodec.scoreExpr(sp.datatype, sp.metric, col(sp.col), x),
+        sp.metric.largerBetter)
+    case DenseVector(x) =>
+      (VectorCodec.simExpr(sp.datatype, sp.metric, col(sp.col), x), true)
+    case MultiVector(m) =>
+      (VectorCodec.maxSimExpr(sp.datatype, sp.metric, col(sp.col), m), true)
+    case SparseVector(i, x) =>
       (graft.functions.VectorFunctions.sparseDot(
-        col(s"$sc.indices"), col(s"$sc.values"), qi, qv), true)
-    case RecommendSparse(sc, strategy, pos, neg) =>
-      def sim(q: (Seq[Long], Seq[Double])): Column =
-        graft.functions.VectorFunctions.sparseDot(
-          col(s"$sc.indices"), col(s"$sc.values"), q._1, q._2)
-      strategy match {
-        case "average_vector" =>
-          val (qi, qv) = Search.recommendAvgSparseQuery(pos, neg)
-          (graft.functions.VectorFunctions.sparseDot(
-            col(s"$sc.indices"), col(s"$sc.values"), qi, qv), true)
-        case "best_score" =>
-          (Search.bestScoreCombine(pos.map(sim), neg.map(sim)), true)
-        case "sum_scores" =>
-          (Search.sumScoresCombine(pos.map(sim), neg.map(sim)), true)
-        case other =>
-          throw new IllegalArgumentException(s"unknown recommend strategy '$other'")
-      }
-    case RecommendMulti(vc, m, strategy, pos, neg) =>
-      def msim(q: Seq[Seq[Double]]): Column =
-        graft.functions.VectorFunctions.maxSim(m, col(vc), q)
-      strategy match {
-        case "average_vector" =>
-          (graft.functions.VectorFunctions.maxSim(m, col(vc),
-            Search.recommendAvgMultiQuery(pos, neg)), true)
-        case "best_score" =>
-          (Search.bestScoreCombine(pos.map(msim), neg.map(msim)), true)
-        case "sum_scores" =>
-          (Search.sumScoresCombine(pos.map(msim), neg.map(msim)), true)
-        case other =>
-          throw new IllegalArgumentException(s"unknown recommend strategy '$other'")
-      }
-    case DiscoverMulti(vc, m, target, pairs) =>
-      def msim(q: Seq[Seq[Double]]): Column =
-        graft.functions.VectorFunctions.maxSim(m, col(vc), q)
-      (Search.discoverCombine(msim(target),
-        pairs.map { case (p, n) => (msim(p), msim(n)) }), true)
-    case ContextMulti(vc, m, pairs) =>
-      def msim(q: Seq[Seq[Double]]): Column =
-        graft.functions.VectorFunctions.maxSim(m, col(vc), q)
-      (Search.contextCombine(
-        pairs.map { case (p, n) => (msim(p), msim(n)) }), true)
-    case FeedbackMulti(vc, m, target, fb, a, b, c) =>
-      def msim(q: Seq[Seq[Double]]): Column =
-        graft.functions.VectorFunctions.maxSim(m, col(vc), q)
-      (Search.feedbackNaiveCombine(msim(target),
-        fb.map { case (q, w) => (msim(q), w) }, a, b, c), true)
-    case DiscoverSparse(sc, target, pairs) =>
-      def sim(q: (Seq[Long], Seq[Double])): Column =
-        graft.functions.VectorFunctions.sparseDot(
-          col(s"$sc.indices"), col(s"$sc.values"), q._1, q._2)
-      (Search.discoverCombine(sim(target),
-        pairs.map { case (p, n) => (sim(p), sim(n)) }), true)
-    case ContextSparse(sc, pairs) =>
-      def sim(q: (Seq[Long], Seq[Double])): Column =
-        graft.functions.VectorFunctions.sparseDot(
-          col(s"$sc.indices"), col(s"$sc.values"), q._1, q._2)
-      (Search.contextCombine(
-        pairs.map { case (p, n) => (sim(p), sim(n)) }), true)
-    case other =>
-      throw new IllegalArgumentException(s"$other is not a scoring leaf")
+        col(s"${sp.col}.indices"), col(s"${sp.col}.values"), i, x), true)
+  }
+
+  /** The rows a node over `sp` with query-side vectors `vs` can rank, as
+    * a scan predicate. Sparse: rows sharing ≥ 1 dim with some query-side
+    * vector (qdrant's sparse search is a posting join, zero-overlap rows
+    * never appear). Dense and multivector: rows holding the vector
+    * (`test_optional_vectors.py`). */
+  private[graft] def candidates(sp: Space, vs: Seq[QueryVector]): Column = {
+    val dims = vs.collect { case SparseVector(i, _) => i }
+    if (dims.isEmpty) col(sp.col).isNotNull
+    else arrays_overlap(col(s"${sp.col}.indices"), typedLit(dims.flatten.distinct))
+  }
+
+  /** The `average_vector` recommend query (`avg_vectors` + the
+    * positive/negative merge, `recommendations.rs:34-130`), per kind:
+    * dense = avg(pos) + (avg(pos) − avg(neg)) elementwise; multivector =
+    * the positives' tokens, then the negatives' tokens negated
+    * (`:59-70,121-124`); sparse = 2·avg(pos) − avg(neg) per dim of the
+    * index union, each average over the union with missing = 0
+    * (`:55-58,87-91,119-120`). Driver-side: examples are few. */
+  def average(positives: Seq[QueryVector], negatives: Seq[QueryVector]): QueryVector = {
+    require(positives.nonEmpty,
+      "Positive vectors should not be empty with `average` strategy")
+    positives.head match {
+      case DenseVector(first) =>
+        def avg(vs: Seq[QueryVector]): Seq[Double] = {
+          val xs = vs.collect { case DenseVector(x) => x }
+          first.indices.map(i => xs.map(_(i)).sum / xs.length)
+        }
+        val p = avg(positives)
+        if (negatives.isEmpty) DenseVector(p)
+        else {
+          val n = avg(negatives)
+          DenseVector(first.indices.map(i => p(i) + (p(i) - n(i))))
+        }
+      case MultiVector(_) =>
+        def tokens(vs: Seq[QueryVector]) = vs.collect { case MultiVector(m) => m }.flatten
+        MultiVector(tokens(positives) ++ tokens(negatives).map(_.map(-_)))
+      case SparseVector(_, _) =>
+        def avg(vs: Seq[QueryVector]): Map[Long, Double] =
+          vs.collect { case SparseVector(is, xs) => is.zip(xs) }.flatten
+            .groupMapReduce(_._1)(_._2)(_ + _).view.mapValues(_ / vs.length).toMap
+        val p = avg(positives)
+        val merged =
+          if (negatives.isEmpty) p
+          else {
+            val n = avg(negatives)
+            (p.keySet ++ n.keySet).map(d =>
+              d -> (2 * p.getOrElse(d, 0.0) - n.getOrElse(d, 0.0))).toMap
+          }
+        val dims = merged.keys.toSeq.sorted
+        SparseVector(dims, dims.map(merged))
+    }
   }
 
   /** Execute a query DAG; returns (idCol, score) ranked. */
@@ -321,8 +331,6 @@ object PointQuery {
         df.join(candidateIds, Seq(idCol), "left_semi")
       }
 
-    def scoreExprOf(s: Scoring): (Column, Boolean) = scoringExpr(s)
-
     q.scoring match {
       // ---- rescore-over-prefetch nodes ----
       case FusionQ(kind, weights, rrfK) =>
@@ -352,7 +360,7 @@ object PointQuery {
               Fusion.Source(df.select(col(idCol),
                 row_number().over(Window.orderBy(ord: _*)).cast("double").as("score")),
                 largerBetter = false)
-            case Nearest(_, m, _) => Fusion.Source(df, m.largerBetter)
+            case n: Nearest => Fusion.Source(df, scoringExpr(n)._2)
             case ScrollById if kind == "dbsf" =>
               // scroll results carry constant score 1.0 (`scroll.rs:131`)
               Fusion.Source(df.select(col(idCol), lit(1.0d).as("score")))
@@ -399,11 +407,12 @@ object PointQuery {
         Search.scoredTopK(joined, idCol, expr, largerBetter = true,
           k = q.limit, offset = q.offset, scoreThreshold = q.scoreThreshold)
 
-      case MmrQ(vc, m, qv, lambda) =>
+      case MmrQ(sp, qv, lambda) =>
         require(q.prefetches.nonEmpty, "MMR rescore requires prefetches")
         val candidateIds = q.prefetches.map(inherited)
           .map(c => execute(spark, points, idCol, resolver, c).select(idCol))
           .reduce(_ union _).distinct()
+        val (score, largerBetter) = similarity(sp, qv, nearest = true)
         // Mmr.rerank breaks ties by first-seen input order, so the
         // candidates MUST arrive ranked best-first (the reference's MMR
         // receives the already-ranked search result, `mmr/mod.rs:42-170`).
@@ -415,66 +424,23 @@ object PointQuery {
         // `mmr/mod.rs:52-60`) — scoring a null vector would poison the
         // driver-side rerank
         val scoredCands = points.join(candidateIds, Seq(idCol), "left_semi")
-          .filter(col(vc).isNotNull)
-          .withColumn("score",
-            round(Search.scoreExpr(m, col(vc), typedLit(qv)), 6))
+          .filter(col(sp.col).isNotNull)
+          .withColumn("score", round(score, 6))
         // MMR-with-prefetches applies the root score_threshold at the
         // candidate-gathering Nearest rescore (shard-level RescoreParams,
         // `planned_query.rs:244-262`) — strict, per `check_threshold`.
         val thresholded = q.scoreThreshold.fold(scoredCands) { t =>
           scoredCands.filter(
-            if (m.largerBetter) col("score") > t else col("score") < t)
+            if (largerBetter) col("score") > t else col("score") < t)
         }
         val cands = thresholded
-          .select(col(idCol), col("score"), col(vc))
+          .select(col(idCol), col("score"), col(sp.col))
           .orderBy(
-            if (m.largerBetter) col("score").desc else col("score").asc,
+            if (largerBetter) col("score").desc else col("score").asc,
             col(idCol).asc)
         // `skip(offset).take(limit)` on the selection-ordered MMR output
         // (`query.rs:448-451`); `position` stays the global selection rank.
-        Mmr.rerank(spark, cands, idCol, vc, m, qv, lambda, q.offset + q.limit)
-          .filter(col("position") > q.offset)
-
-      case MmrMultiQ(vc, m, qm, lambda) =>
-        require(q.prefetches.nonEmpty, "MMR rescore requires prefetches")
-        val candidateIds = q.prefetches.map(inherited)
-          .map(c => execute(spark, points, idCol, resolver, c).select(idCol))
-          .reduce(_ union _).distinct()
-        // MaxSim relevance is larger-better for every metric; vectorless
-        // candidates drop like the reference's filter_map (`mmr/mod.rs:52-60`)
-        val scoredCands = points.join(candidateIds, Seq(idCol), "left_semi")
-          .filter(col(vc).isNotNull)
-          .withColumn("score", round(
-            graft.functions.VectorFunctions.maxSim(m, col(vc), qm), 6))
-        val thresholded = q.scoreThreshold.fold(scoredCands)(t =>
-          scoredCands.filter(col("score") > t))
-        val cands = thresholded
-          .select(col(idCol), col("score"), col(vc))
-          .orderBy(col("score").desc, col(idCol).asc)
-        Mmr.rerankMulti(spark, cands, idCol, vc, m, qm, lambda,
-          q.offset + q.limit)
-          .filter(col("position") > q.offset)
-
-      case MmrSparseQ(sc, qi, qv, lambda) =>
-        require(q.prefetches.nonEmpty, "MMR rescore requires prefetches")
-        val candidateIds = q.prefetches.map(inherited)
-          .map(c => execute(spark, points, idCol, resolver, c).select(idCol))
-          .reduce(_ union _).distinct()
-        // vectorless candidates drop (`mmr/mod.rs:52-60` filter_map)
-        val scoredCands = points.join(candidateIds, Seq(idCol), "left_semi")
-          .filter(col(sc).isNotNull)
-          .withColumn("score",
-            round(graft.functions.VectorFunctions.sparseDot(
-              col(s"$sc.indices"), col(s"$sc.values"), qi, qv), 6))
-        // sparse scores are always larger-better (dot); threshold strict
-        val thresholded = q.scoreThreshold.fold(scoredCands)(t =>
-          scoredCands.filter(col("score") > t))
-        val cands = thresholded
-          .select(col(idCol), col("score"),
-            col(s"$sc.indices").as("_qidx"), col(s"$sc.values").as("_qval"))
-          .orderBy(col("score").desc, col(idCol).asc)
-        Mmr.rerankSparse(spark, cands, idCol, qi, qv, lambda,
-          q.offset + q.limit)
+        graft.ops.Mmr.rerank(spark, cands, idCol, sp, qv, lambda, q.offset + q.limit)
           .filter(col("position") > q.offset)
 
       // ---- scroll leaves (as RESCORE parents the reference turns these
@@ -516,53 +482,13 @@ object PointQuery {
 
       // ---- scoring leaves (optionally rescoring prefetch candidates) ----
       case leaf =>
-        val (expr, largerBetter) = scoreExprOf(leaf)
-        // qdrant's sparse search only yields points with ≥ 1 matching dim
-        // (the posting-join candidate set); zero-overlap rows never appear.
-        val leafPred = leaf match {
+        val (expr, largerBetter) = scoringExpr(leaf)
+        val leafPred = (leaf match {
+          case s: VectorScoring => Some(candidates(s.space, s.vectors))
           case SparseDotQ(tc, terms) =>
-            val overlap = arrays_overlap(col(tc), typedLit(terms.map(_._1)))
-            Some(pred.fold(overlap)(_ && overlap))
-          case SparseStructQ(sc, qi, _) =>
-            val overlap = arrays_overlap(col(s"$sc.indices"), typedLit(qi))
-            Some(pred.fold(overlap)(_ && overlap))
-          case RecommendSparse(sc, _, pos, neg) =>
-            val allIdx = (pos ++ neg).flatMap(_._1).distinct
-            val overlap = arrays_overlap(col(s"$sc.indices"), typedLit(allIdx))
-            Some(pred.fold(overlap)(_ && overlap))
-          case DiscoverSparse(sc, target, pairs) =>
-            val allIdx = (target +: pairs.flatMap(pr => Seq(pr._1, pr._2)))
-              .flatMap(_._1).distinct
-            val overlap = arrays_overlap(col(s"$sc.indices"), typedLit(allIdx))
-            Some(pred.fold(overlap)(_ && overlap))
-          case ContextSparse(sc, pairs) =>
-            val allIdx = pairs.flatMap(pr => Seq(pr._1, pr._2))
-              .flatMap(_._1).distinct
-            val overlap = arrays_overlap(col(s"$sc.indices"), typedLit(allIdx))
-            Some(pred.fold(overlap)(_ && overlap))
-          case _ =>
-            // optional-vector exclusion at the scan: points without the
-            // scored vector never rank (`test_optional_vectors.py`)
-            val guard = leaf match {
-              case Nearest(vc, _, _) => Some(col(vc).isNotNull)
-              case RecommendAvg(vc, _, _, _) => Some(col(vc).isNotNull)
-              case RecommendBest(vc, _, _, _) => Some(col(vc).isNotNull)
-              case RecommendSum(vc, _, _, _) => Some(col(vc).isNotNull)
-              case DiscoverQ(vc, _, _, _) => Some(col(vc).isNotNull)
-              case ContextQ(vc, _, _) => Some(col(vc).isNotNull)
-              case MaxSimQ(vc, _, _) => Some(col(vc).isNotNull)
-              case RecommendMulti(vc, _, _, _, _) => Some(col(vc).isNotNull)
-              case DiscoverMulti(vc, _, _, _) => Some(col(vc).isNotNull)
-              case ContextMulti(vc, _, _) => Some(col(vc).isNotNull)
-              case FeedbackMulti(vc, _, _, _, _, _, _) => Some(col(vc).isNotNull)
-              case FeedbackQ(vc, _, _, _, _, _, _) => Some(col(vc).isNotNull)
-              case _ => None
-            }
-            guard match {
-              case Some(g) => Some(pred.fold(g)(_ && g))
-              case None => pred
-            }
-        }
+            Some(arrays_overlap(col(tc), typedLit(terms.map(_._1))))
+          case _ => None
+        }).map(c => pred.fold(c)(_ && c)).orElse(pred)
         Search.scoredTopK(withPrefetchCandidates(points), idCol, expr,
           largerBetter, leafPred,
           k = q.limit, offset = q.offset, scoreThreshold = q.scoreThreshold)

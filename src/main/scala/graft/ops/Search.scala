@@ -19,16 +19,6 @@ import graft.functions.VectorFunctions._
   */
 object Search {
 
-  /** Internal similarity (pre-postprocess), used by recommend/discover/context
-    * scoring. Euclid → −Σd², Manhattan → −Σ|d| (larger always better).
-    * Ref `lib/segment/src/spaces/simple.rs:36-121`. */
-  def simInternal(metric: Metric, v: Column, q: Column): Column = metric match {
-    case Dot       => dot(v, q)
-    case Cosine    => cosine(v, q)
-    case Euclid    => -graft.functions.VecKernels.l2sq(v, q)
-    case Manhattan => -manhattanDist(v, q)
-  }
-
   /** User-visible score (post-processed): Euclid → sqrt, Manhattan → abs. */
   def scoreExpr(metric: Metric, v: Column, q: Column): Column =
     graft.functions.VectorFunctions.score(metric, v, q)
@@ -156,62 +146,11 @@ object Search {
     batchRank(scored, queryIdCol, idCol, k, metric.largerBetter)
   }
 
-  /** Recommend, `avg_vector` strategy: search vector =
-    * avg(positives) + (avg(positives) − avg(negatives)), elementwise.
-    * Ref `lib/collection/src/recommendations.rs:34-130` (merge at :105).
-    * Vector arithmetic happens at the driver (inputs are tiny). */
-  def recommendAvgVector(positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]): Seq[Double] = {
-    require(positives.nonEmpty, "recommend requires at least one positive")
-    val dim = positives.head.length
-    def avg(vs: Seq[Seq[Double]]): Seq[Double] =
-      if (vs.isEmpty) Seq.fill(dim)(0.0)
-      else (0 until dim).map(i => vs.map(_(i)).sum / vs.length)
-    val p = avg(positives)
-    if (negatives.isEmpty) p
-    else {
-      val n = avg(negatives)
-      (0 until dim).map(i => p(i) + (p(i) - n(i)))
-    }
-  }
-
-  /** `average_vector` recommend over MULTIVECTORS (`avg_vectors` multi arm
-    * + `merge_positive_and_negative_avg`,
-    * `lib/collection/src/recommendations.rs:59-70,121-124`): the "average"
-    * of multi-dense examples is their CONCATENATION, and negatives append
-    * NEGATED — MaxSim then scores the merged matrix. */
-  def recommendAvgMultiQuery(
-      positives: Seq[Seq[Seq[Double]]],
-      negatives: Seq[Seq[Seq[Double]]]): Seq[Seq[Double]] = {
-    require(positives.nonEmpty,
-      "Positive vectors should not be empty with `average` strategy")
-    positives.flatten ++ negatives.flatten.map(_.map(-_))
-  }
-
-  /** `average_vector` recommend over SPARSE vectors (`avg_vectors` sparse
-    * arm + the sparse merge, `recommendations.rs:55-58,87-91,119-120`):
-    * values aggregate per dim over the index UNION (missing = 0), divide
-    * by example count, then merge as `2·avg_pos − avg_neg` per union dim. */
-  def recommendAvgSparseQuery(
-      positives: Seq[(Seq[Long], Seq[Double])],
-      negatives: Seq[(Seq[Long], Seq[Double])]): (Seq[Long], Seq[Double]) = {
-    require(positives.nonEmpty,
-      "Positive vectors should not be empty with `average` strategy")
-    def avg(vs: Seq[(Seq[Long], Seq[Double])]): Map[Long, Double] = {
-      val sums = vs.flatMap { case (is, xs) => is.zip(xs) }
-        .groupMapReduce(_._1)(_._2)(_ + _)
-      sums.view.mapValues(_ / vs.length).toMap
-    }
-    val p = avg(positives)
-    val merged =
-      if (negatives.isEmpty) p
-      else {
-        val n = avg(negatives)
-        (p.keySet ++ n.keySet).map(d =>
-          d -> (2 * p.getOrElse(d, 0.0) - n.getOrElse(d, 0.0))).toMap
-      }
-    val dims = merged.keys.toSeq.sorted
-    (dims, dims.map(merged))
-  }
+  /** Float32 similarity of `v` to a literal query — the per-example
+    * similarity of the raw-table forms below (PointQuery scores stored
+    * columns of every width through `PointQuery.similarity`). */
+  private def sim(metric: Metric, v: Column)(q: Seq[Double]): Column =
+    similarity(metric, v, typedLit(q))
 
   /** Recommend, `best_score`: if max(sim(pos)) > max(sim(neg)) then
     * σ(max_pos) else −σ(max_neg), with σ = scaled fast sigmoid; always
@@ -221,13 +160,12 @@ object Search {
       positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]): Column = {
     require(positives.nonEmpty || negatives.nonEmpty,
       "recommend requires at least one example")
-    bestScoreCombine(positives.map(p => simInternal(metric, v, typedLit(p))),
-      negatives.map(n => simInternal(metric, v, typedLit(n))))
+    bestScoreCombine(positives.map(sim(metric, v)), negatives.map(sim(metric, v)))
   }
 
-  /** The best_score combine over per-example similarity columns — shared
-    * by the dense metric form and the sparse-dot form (the reference's
-    * `RecoBestScoreQuery` is similarity-representation-agnostic).
+  /** The best_score combine over per-example similarity columns, whatever
+    * the vector kind (the reference's `RecoBestScoreQuery` is
+    * similarity-representation-agnostic).
     * positives are OPTIONAL (`test_recommendation_multivector.py::
     * test_multi_best_score_works_with_only_negatives`): with none, every
     * point scores −σ(max_neg) — ranked by least-bad negative match. */
@@ -245,8 +183,7 @@ object Search {
   def sumScoresExpr(
       metric: Metric, v: Column,
       positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]): Column =
-    sumScoresCombine(positives.map(p => simInternal(metric, v, typedLit(p))),
-      negatives.map(n => simInternal(metric, v, typedLit(n))))
+    sumScoresCombine(positives.map(sim(metric, v)), negatives.map(sim(metric, v)))
 
   /** The sum_scores combine over per-example similarity columns. */
   def sumScoresCombine(posSims: Seq[Column], negSims: Seq[Column]): Column =
@@ -259,13 +196,10 @@ object Search {
   def discoverExpr(
       metric: Metric, v: Column,
       target: Seq[Double], pairs: Seq[(Seq[Double], Seq[Double])]): Column =
-    discoverCombine(simInternal(metric, v, typedLit(target)),
-      pairs.map { case (p, n) =>
-        (simInternal(metric, v, typedLit(p)), simInternal(metric, v, typedLit(n)))
-      })
+    discoverCombine(sim(metric, v)(target),
+      pairs.map { case (p, n) => (sim(metric, v)(p), sim(metric, v)(n)) })
 
-  /** The discover combine over per-example similarity columns — shared by
-    * the dense metric form and the sparse-dot form. */
+  /** The discover combine over per-example similarity columns. */
   def discoverCombine(targetSim: Column,
       pairSims: Seq[(Column, Column)]): Column = {
     val rank = pairSims.map { case (sp, sn) =>
@@ -287,13 +221,10 @@ object Search {
       target: Seq[Double],
       feedback: Seq[(Seq[Double], Double)],
       a: Double, b: Double, c: Double): Column =
-    feedbackNaiveCombine(simInternal(metric, v, typedLit(target)),
-      feedback.map { case (fv, sc) =>
-        (simInternal(metric, v, typedLit(fv)), sc)
-      }, a, b, c)
+    feedbackNaiveCombine(sim(metric, v)(target),
+      feedback.map { case (fv, sc) => (sim(metric, v)(fv), sc) }, a, b, c)
 
-  /** The naive-feedback combine over per-example similarity columns —
-    * shared by the dense metric form and the multivector MaxSim form (the
+  /** The naive-feedback combine over per-example similarity columns (the
     * reference's custom queries are scorer-representation-agnostic,
     * `query_scorer/multi_custom_query_scorer.rs`). */
   def feedbackNaiveCombine(targetSim: Column,
@@ -316,9 +247,7 @@ object Search {
   def contextExpr(
       metric: Metric, v: Column,
       pairs: Seq[(Seq[Double], Seq[Double])]): Column =
-    contextCombine(pairs.map { case (p, n) =>
-      (simInternal(metric, v, typedLit(p)), simInternal(metric, v, typedLit(n)))
-    })
+    contextCombine(pairs.map { case (p, n) => (sim(metric, v)(p), sim(metric, v)(n)) })
 
   /** The context combine over per-pair similarity columns. */
   def contextCombine(pairSims: Seq[(Column, Column)]): Column =

@@ -411,7 +411,8 @@ object ApiQueries {
         e.filter(org.apache.spark.sql.functions.col("vec_id") =!= 7L),
         "vec_id", "embedding", qv, Dot,
         k = 50, extraCols = Seq("embedding"))
-      val hand = Mmr.rerank(s, cands, "vec_id", "embedding", Dot, qv,
+      val hand = Mmr.rerank(s, cands, "vec_id",
+          PointQuery.Space("embedding", Dot), PointQuery.DenseVector(qv),
           lambda = 0.5, limit = 10)
         .orderBy(col("position")).collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
@@ -545,10 +546,10 @@ object ApiQueries {
           |  "group_by": "label", "group_size": 2, "limit": 5,
           |  "with_lookup": {"collection": "embeddings"}
           |}""".stripMargin, ctx(s, dir))
-      val PointQuery.Nearest(vc, metric, qv) = spec.query.scoring: @unchecked
+      val PointQuery.Nearest(sp, PointQuery.DenseVector(qv)) = spec.query.scoring: @unchecked
       val grouped = graft.ops.GroupBy.groupBySearch(e, "vec_id",
-        graft.ops.Search.scoreExpr(metric, col(vc), typedLit(qv)),
-        largerBetter = metric.largerBetter,
+        graft.ops.Search.scoreExpr(sp.metric, col(sp.col), typedLit(qv)),
+        largerBetter = sp.metric.largerBetter,
         groupByField = spec.groupBy, resolver = new TypedResolver(e.schema, "vec_id"),
         filter = spec.query.filter,
         groupSize = spec.groupSize, groups = spec.groups, keepGroupRank = true)

@@ -236,7 +236,7 @@ object IndexQueries {
         s"""{"query": {"nearest": ${v7(s, dir).mkString("[", ",", "]")}},
            |  "limit": 10, "params": {"exact": true}}""".stripMargin, ctx)
       val qv = q.scoring match {
-        case PointQuery.Nearest(_, _, v) => v
+        case PointQuery.Nearest(_, PointQuery.DenseVector(v)) => v
         case other => sys.error(s"expected nearest, got $other")
       }
       val sp = q.params.getOrElse(PointQuery.SearchParams())
@@ -260,7 +260,7 @@ object IndexQueries {
           .stripMargin, ctx)
       val sp = q.params.get
       val qv = q.scoring match {
-        case PointQuery.Nearest(_, _, v) => v
+        case PointQuery.Nearest(_, PointQuery.DenseVector(v)) => v
         case other => sys.error(s"expected nearest, got $other")
       }
       val ann = coll.knn("", qv, k = q.limit,
@@ -604,10 +604,10 @@ object IndexQueries {
       val q = Query(
         scoring = FusionQ("rrf"),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, v7(s, dir)),
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))),
             filter = Some(Filter.mustAll(RangeCond("label", lt = Some(5)))),
             limit = 20),
-          Query(Nearest("embedding", Cosine, Tables.embeddingOf(s, dir, 42L)),
+          Query(Nearest(Space("embedding", Cosine), DenseVector(Tables.embeddingOf(s, dir, 42L))),
             limit = 20)),
         limit = 10)
       execute(s, e, "vec_id", new TypedResolver(e.schema, "vec_id"), q)
@@ -621,7 +621,8 @@ object IndexQueries {
       val e = emb(s, dir)
       val q = Query(
         scoring = OrderByField("label", asc = true),
-        prefetches = Seq(Query(Nearest("embedding", Dot, v7(s, dir)), limit = 20)),
+        prefetches = Seq(
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 20)),
         limit = 10)
       execute(s, e, "vec_id", new TypedResolver(e.schema, "vec_id"), q)
     }),
@@ -636,7 +637,7 @@ object IndexQueries {
       import PointQuery._
       val e = emb(s, dir)
       val r = new TypedResolver(e.schema, "vec_id")
-      val pre = Query(Nearest("embedding", Dot, v7(s, dir)), limit = 20)
+      val pre = Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 20)
       def page(offset: Int, limit: Int) =
         execute(s, e, "vec_id", r,
           Query(SampleRandom(seed = 42L), prefetches = Seq(pre),
@@ -660,10 +661,10 @@ object IndexQueries {
       val qv = v7(s, dir)
       val qtok = Seq(qv.slice(0, 32), qv.slice(32, 64))
       val q = Query(
-        scoring = MaxSimQ("vector_tok", Dot, qtok),
+        scoring = Nearest(Space("vector_tok", Dot), MultiVector(qtok)),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, v7(s, dir)), limit = 20),
-          Query(Nearest("embedding", Cosine, Tables.embeddingOf(s, dir, 42L)),
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 20),
+          Query(Nearest(Space("embedding", Cosine), DenseVector(Tables.embeddingOf(s, dir, 42L))),
             limit = 20)),
         limit = 10)
       execute(s, e, "vec_id", new TypedResolver(e.schema, "vec_id"), q)
@@ -672,8 +673,9 @@ object IndexQueries {
       import PointQuery._
       val e = emb(s, dir)
       val q = Query(
-        scoring = Nearest("embedding", Euclid, Tables.embeddingOf(s, dir, 13L)),
-        prefetches = Seq(Query(Nearest("embedding", Dot, v7(s, dir)), limit = 30)),
+        scoring = Nearest(Space("embedding", Euclid), DenseVector(Tables.embeddingOf(s, dir, 13L))),
+        prefetches = Seq(
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 30)),
         limit = 10)
       execute(s, e, "vec_id", new TypedResolver(e.schema, "vec_id"), q)
     }),
@@ -688,16 +690,16 @@ object IndexQueries {
       import PointQuery._
       val e = emb(s, dir)
       val m1 = Query(FusionQ("rrf"), prefetches = Seq(
-        Query(Nearest("embedding", Dot, v7(s, dir)),
+        Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))),
           filter = Some(Filter.mustAll(RangeCond("label", lt = Some(5)))),
           limit = 20),
-        Query(Nearest("embedding", Cosine, Tables.embeddingOf(s, dir, 42L)),
+        Query(Nearest(Space("embedding", Cosine), DenseVector(Tables.embeddingOf(s, dir, 42L))),
           limit = 20)),
         limit = 15)
       val m2 = Query(
-        Nearest("embedding", Euclid, Tables.embeddingOf(s, dir, 13L)),
+        Nearest(Space("embedding", Euclid), DenseVector(Tables.embeddingOf(s, dir, 13L))),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, Tables.embeddingOf(s, dir, 11L)),
+          Query(Nearest(Space("embedding", Dot), DenseVector(Tables.embeddingOf(s, dir, 11L))),
             limit = 30)),
         limit = 15)
       val l3 = Query(OrderByField("label", asc = true), limit = 15)
@@ -720,7 +722,7 @@ object IndexQueries {
           must = Seq(MatchValue("lang", "en")),
           mustNot = Seq(MatchValue("source", "src3")))),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, v7(s, dir)), limit = 20),
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 20),
           Query(SparseDotQ("toks", Seq("spark" -> 1.0, "vector" -> 2.0)),
             filter = Some(Filter.mustAll(RangeCond("n_chars", gte = Some(50L)))),
             limit = 20)),
@@ -740,7 +742,7 @@ object IndexQueries {
           Div(Constant(5.0), Sum(Seq(PayloadVar("label"), Constant(2.0))))))),
         filter = Some(Filter.mustAll(RangeCond("label", gte = Some(2)))),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, v7(s, dir)),
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))),
             filter = Some(Filter.mustAll(RangeCond("label", lt = Some(8)))),
             limit = 30)),
         limit = 10)
@@ -755,8 +757,8 @@ object IndexQueries {
       val q = Query(
         scoring = FusionQ("rrf"),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, v7(s, dir)), limit = 20),
-          Query(Nearest("embedding", Cosine, Tables.embeddingOf(s, dir, 42L)),
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 20),
+          Query(Nearest(Space("embedding", Cosine), DenseVector(Tables.embeddingOf(s, dir, 42L))),
             limit = 20)),
         limit = 10, offset = 2, scoreThreshold = Some(0.15))
       execute(s, e, "vec_id", new TypedResolver(e.schema, "vec_id"), q)
@@ -770,8 +772,8 @@ object IndexQueries {
       val q = Query(
         scoring = FusionQ("rrf"),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, v7(s, dir)), limit = 20),
-          Query(Nearest("embedding", Euclid, Tables.embeddingOf(s, dir, 13L)),
+          Query(Nearest(Space("embedding", Dot), DenseVector(v7(s, dir))), limit = 20),
+          Query(Nearest(Space("embedding", Euclid), DenseVector(Tables.embeddingOf(s, dir, 13L))),
             limit = 20)),
         limit = 10)
       execute(s, e, "vec_id", new TypedResolver(e.schema, "vec_id"), q)

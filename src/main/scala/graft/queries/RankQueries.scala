@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.filters.TypedResolver
 import graft.model._
-import graft.ops.{DistanceMatrix, Fusion, GroupBy, Mmr, Search}
+import graft.ops.{DistanceMatrix, Fusion, GroupBy, Mmr, PointQuery, Search}
 
 /** Recommend / discover / context / fusion / group-by / distance-matrix /
   * MMR query catalog (SURVEY.md §2.3-2.4) with DuckDB oracles.
@@ -24,6 +24,13 @@ object RankQueries {
   private def v(s: SparkSession, dir: String, id: Long): Seq[Double] =
     Tables.embeddingOf(s, dir, id)
 
+  /** The dense `average_vector` recommend query. */
+  private def avgVector(pos: Seq[Seq[Double]], neg: Seq[Seq[Double]]): Seq[Double] = {
+    val PointQuery.DenseVector(q) = PointQuery.average(
+      pos.map(PointQuery.DenseVector), neg.map(PointQuery.DenseVector)): @unchecked
+    q
+  }
+
   private def topDot7(s: SparkSession, dir: String, k: Int): DataFrame =
     Search.knn(emb(s, dir), "vec_id", "embedding", v(s, dir, 7L), Dot, k = k)
   private def topCos42(s: SparkSession, dir: String, k: Int): DataFrame =
@@ -37,9 +44,7 @@ object RankQueries {
       val lookup = emb(s, dir).filter(col("vec_id") < 100)
         .select((col("vec_id") + 10000).as("qid"), col("embedding").as("vec_alt"))
       def lv(id: Long) = Tables.embeddingFrom(lookup, "qid", "vec_alt", id)
-      val q = Search.recommendAvgVector(
-        positives = Seq(lv(10001L), lv(10002L)),
-        negatives = Seq(lv(10004L)))
+      val q = avgVector(Seq(lv(10001L), lv(10002L)), Seq(lv(10004L)))
       Search.knn(emb(s, dir), "vec_id", "embedding", q, Dot, k = 10)
     }),
     // lookup_from with NAMED-VECTOR selection in the foreign collection
@@ -54,9 +59,7 @@ object RankQueries {
           col("embedding").as("vec_a"),
           reverse(col("embedding")).as("vec_b"))
       def lv(id: Long) = Tables.embeddingFrom(lookup, "qid", "vec_b", id)
-      val q = Search.recommendAvgVector(
-        positives = Seq(lv(10001L), lv(10002L)),
-        negatives = Seq(lv(10004L)))
+      val q = avgVector(Seq(lv(10001L), lv(10002L)), Seq(lv(10004L)))
       Search.knn(emb(s, dir), "vec_id", "embedding", q, Dot, k = 10)
     }),
     // lookup_from with a SHARD-KEY selector (`ShardKeySelector`,
@@ -76,15 +79,11 @@ object RankQueries {
             col("embedding").as("vec")))
       def lv(id: Long) = Tables.embeddingFromShards(
         lookup, "shard_key", Seq("b"), "qid", "vec", id)
-      val q = Search.recommendAvgVector(
-        positives = Seq(lv(10001L), lv(10003L)),
-        negatives = Seq(lv(10005L)))
+      val q = avgVector(Seq(lv(10001L), lv(10003L)), Seq(lv(10005L)))
       Search.knn(emb(s, dir), "vec_id", "embedding", q, Dot, k = 10)
     }),
     "recommend_avg" -> ((s, dir) => {
-      val q = Search.recommendAvgVector(
-        positives = Seq(v(s, dir, 1), v(s, dir, 2), v(s, dir, 3)),
-        negatives = Seq(v(s, dir, 4)))
+      val q = avgVector(Seq(v(s, dir, 1), v(s, dir, 2), v(s, dir, 3)), Seq(v(s, dir, 4)))
       Search.knn(emb(s, dir), "vec_id", "embedding", q, Dot, k = 10)
     }),
     "recommend_best_score" -> ((s, dir) => {
@@ -125,7 +124,9 @@ object RankQueries {
         val q = v(s, dir, id)
         Seq(q.slice(0, 32), q.slice(32, 64))
       }
-      val merged = Search.recommendAvgMultiQuery(Seq(mv(7), mv(8)), Seq(mv(4)))
+      val PointQuery.MultiVector(merged) = PointQuery.average(
+        Seq(mv(7), mv(8)).map(PointQuery.MultiVector),
+        Seq(PointQuery.MultiVector(mv(4)))): @unchecked
       val expr = graft.functions.VectorFunctions.maxSim(Dot, col("vector_tok"), merged)
       Search.scoredTopK(stored, "vec_id", expr, largerBetter = true, k = 10)
     }),
@@ -262,7 +263,8 @@ object RankQueries {
     "mmr_rerank" -> ((s, dir) => {
       val cands = Search.knn(emb(s, dir), "vec_id", "embedding", v(s, dir, 7L), Dot,
         k = 50, extraCols = Seq("embedding"))
-      val res = Mmr.rerank(s, cands, "vec_id", "embedding", Dot, v(s, dir, 7L),
+      val res = Mmr.rerank(s, cands, "vec_id", PointQuery.Space("embedding", Dot),
+        PointQuery.DenseVector(v(s, dir, 7L)),
         lambda = 0.5, limit = 10)
       // bounded driver-side check: 50 candidate rows, 10 result rows
       val cRows = cands.select(col("vec_id"), col("score")).collect()

@@ -393,7 +393,7 @@ object SparseQueries {
     // Wire-level recommend over a SPARSE `using` space with BY-ID
     // examples: each id resolves to its stored sparse vector from that
     // space, then the average_vector merge — must reproduce the hand-built
-    // recommendAvgSparseQuery rows exactly (same oracle)
+    // `recommend_sparse_avg` rows exactly (same oracle)
     "api_recommend_sparse_ids" -> ((s, dir) => {
       sparseColl(s, dir).query(
         """{"query": {"recommend": {"positive": [7, 11], "negative": [4]}},
@@ -912,9 +912,10 @@ object SparseQueries {
     // example count, merge as 2·avg_pos − avg_neg — then ONE sparse dot
     // search with the merged query (negative dims rank points down).
     "recommend_sparse_avg" -> ((s, dir) => {
-      val (qi, qv) = graft.ops.Search.recommendAvgSparseQuery(
-        positives = Seq(sparseQ(s, dir, 7L), sparseQ(s, dir, 11L)),
-        negatives = Seq(sparseQ(s, dir, 4L)))
+      def sv(q: (Seq[Long], Seq[Double])) = graft.ops.PointQuery.SparseVector(q._1, q._2)
+      val graft.ops.PointQuery.SparseVector(qi, qv) = graft.ops.PointQuery.average(
+        Seq(sparseQ(s, dir, 7L), sparseQ(s, dir, 11L)).map(sv),
+        Seq(sv(sparseQ(s, dir, 4L)))): @unchecked
       sparseColl(s, dir).knnSparse("txt", qi, qv, k = 10)
     }),
     // `Collection.query` with a sparse wire body: `using` resolves the

@@ -98,7 +98,7 @@ object UuidQueries {
       val query = Query(
         scoring = FusionQ("rrf"),
         prefetches = Seq(
-          Query(Nearest("embedding", Dot, q), limit = 15),
+          Query(Nearest(Space("embedding", Dot), DenseVector(q)), limit = 15),
           Query(ScrollById, limit = 15)),
         limit = 10)
       PointQuery.execute(s, df, "id", new TypedResolver(df.schema, "id"), query)

@@ -59,9 +59,7 @@ final class Collection(
     config.vectors.filter(_.datatype != Float32).foldLeft(read()) { (df, vc) =>
       val c = config.vectorCol(vc.name)
       if (!df.columns.contains(c)) df
-      else if (vc.multivector)
-        df.withColumn(c, transform(col(c), v => VectorCodec.decode(vc.datatype, v)))
-      else df.withColumn(c, VectorCodec.decode(vc.datatype, col(c)))
+      else df.withColumn(c, VectorCodec.decoded(vc.datatype, vc.multivector, col(c)))
     }
 
   /** Encode incoming user vectors (`array<float|double>`) to each declared
@@ -756,7 +754,7 @@ final class Collection(
     * precomputes them in `IdfScopeStats`, `query_context.rs:278-300`); the
     * warm path loads the artifact with NO Spark jobs, and N counts only
     * points that HAVE the sparse vector (`indexed_vectors`, not the row
-    * count). */
+    * count). Runs as a sparse Nearest through the query executor. */
   def knnSparse(
       name: String,
       qIndices: Seq[Long],
@@ -765,8 +763,8 @@ final class Collection(
       k: Int = 10,
       offset: Int = 0,
       scoreThreshold: Option[Double] = None): DataFrame = {
-    val sc = config.sparse.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"unknown sparse vector '$name'"))
+    if (!config.sparse.exists(_.name == name))
+      throw new IllegalArgumentException(s"unknown sparse vector '$name'")
     // index order is the caller's choice (the reference sorts internally,
     // `sort_by_indices`, `data_types/vectors.rs:76`); the merge-intersect
     // kernel requires ascending — canonicalize here so direct API callers
@@ -776,21 +774,10 @@ final class Collection(
       "sparse values must be the same length as indices")
     require(qIndices.distinct.length == qIndices.length,
       "sparse indices must be unique")
-    val (qIdx, qVal0) = {
-      val sorted = qIndices.zip(qValues).sortBy(_._1)
-      (sorted.map(_._1), sorted.map(_._2))
-    }
-    val df = read()
-    val c = config.sparseCol(name)
-    val qv =
-      if (sc.modifier.contains("idf")) idfWeights(name, qIdx, qVal0) else qVal0
-    val score = graft.functions.VectorFunctions.sparseDot(
-      col(s"$c.indices"), col(s"$c.values"), qIdx, qv)
-    val pred = filter.map(f => new FilterCompiler(resolver(df)).compile(f))
-    val overlap = arrays_overlap(col(s"$c.indices"), typedLit(qIdx))
-    graft.ops.Search.scoredTopK(df, config.idCol, score, largerBetter = true,
-      Some(pred.fold(overlap)(_ && overlap)), k, offset,
-      scoreThreshold = scoreThreshold)
+    val sorted = qIndices.zip(qValues).sortBy(_._1)
+    executeDag(graft.ops.PointQuery.Query(graft.ops.PointQuery.Nearest(spaceOf(name),
+      graft.ops.PointQuery.SparseVector(sorted.map(_._1), sorted.map(_._2))),
+      filter = filter, limit = k, offset = offset, scoreThreshold = scoreThreshold))
   }
 
   /** IDF-weighted query values for a sparse vector:
@@ -842,70 +829,38 @@ final class Collection(
     * would be misleading (`query_context.rs:31-39`). Walks the node tree
     * (prefetches carry their own params). */
   private def verifyIdfParams(q: graft.ops.PointQuery.Query): Unit = {
-    import graft.ops.PointQuery._
-    def sparseName(c: String): Option[String] =
-      config.sparse.find(sc => config.sparseCol(sc.name) == c).map(_.name)
-    def denseName(c: String): Option[String] =
-      config.vectors.find(vc => config.vectorCol(vc.name) == c).map(_.name)
-    def vectorNameOf(s: Scoring): Option[String] = s match {
-      case SparseStructQ(c, _, _) => sparseName(c)
-      case RecommendSparse(c, _, _, _) => sparseName(c)
-      case DiscoverSparse(c, _, _) => sparseName(c)
-      case ContextSparse(c, _) => sparseName(c)
-      case MmrSparseQ(c, _, _, _) => sparseName(c)
-      case Nearest(c, _, _) => denseName(c)
-      case MaxSimQ(c, _, _) => denseName(c)
-      case RecommendAvg(c, _, _, _) => denseName(c)
-      case RecommendBest(c, _, _, _) => denseName(c)
-      case RecommendSum(c, _, _, _) => denseName(c)
-      case DiscoverQ(c, _, _, _) => denseName(c)
-      case ContextQ(c, _, _) => denseName(c)
-      case FeedbackQ(c, _, _, _, _, _, _) => denseName(c)
-      case MmrQ(c, _, _, _) => denseName(c)
+    val space = q.scoring match {
+      case s: graft.ops.PointQuery.VectorScoring => Some(s.space)
       case _ => None
     }
-    def isIdfSparse(s: Scoring): Boolean = s match {
-      case SparseStructQ(c, _, _) => sparseModifierIdf(c)
-      case RecommendSparse(c, _, _, _) => sparseModifierIdf(c)
-      case DiscoverSparse(c, _, _) => sparseModifierIdf(c)
-      case ContextSparse(c, _) => sparseModifierIdf(c)
-      case MmrSparseQ(c, _, _, _) => sparseModifierIdf(c)
-      case _ => false
-    }
-    def walk(node: Query): Unit = {
-      if (node.params.exists(_.idf.isDefined) && !isIdfSparse(node.scoring))
-        throw new IllegalArgumentException(
-          "search param `idf` requires a sparse vector with the `idf` " +
-            "modifier, which vector \"" +
-            vectorNameOf(node.scoring).getOrElse("") + "\" is not")
-      node.prefetches.foreach(walk)
-    }
-    walk(q)
+    if (q.params.exists(_.idf.isDefined) && !space.exists(_.modifier.contains("idf")))
+      throw new IllegalArgumentException(
+        "search param `idf` requires a sparse vector with the `idf` " +
+          "modifier, which vector \"" + space.fold("")(s => vectorName(s.col)) +
+          "\" is not")
+    q.prefetches.foreach(verifyIdfParams)
   }
 
-  private def sparseModifierIdf(scol: String): Boolean =
-    config.sparse.exists(sc =>
-      config.sparseCol(sc.name) == scol && sc.modifier.contains("idf"))
+  /** The declared name of a dense or sparse vector column. */
+  private def vectorName(c: String): String =
+    (config.vectors.map(_.name).filter(config.vectorCol(_) == c) ++
+      config.sparse.map(_.name).filter(config.sparseCol(_) == c)).headOption.getOrElse("")
 
   /** Config-routed multivector nearest-k: MaxSim (the reference's only
     * multivector comparator, `types.rs:2080-2082`) over a stored ragged
     * token list, with the declared element type decoded inside the fused
-    * per-token kernels ([[VectorCodec.maxSimExpr]]). */
+    * per-token kernels ([[VectorCodec.maxSimExpr]]). Runs as a multivector
+    * Nearest through the query executor. */
   def knnMultivec(
       vectorName: String,
       queryVecs: Seq[Seq[Double]],
       filter: Option[Filter] = None,
       k: Int = 10): DataFrame = {
-    val vc = config.vectorConfig(vectorName)
-    require(vc.multivector, s"vector '$vectorName' is not declared multivector")
-    val df = read()
-    val score = VectorCodec.maxSimExpr(
-      vc.datatype, vc.metric, col(config.vectorCol(vectorName)), queryVecs)
-    val guard = col(config.vectorCol(vectorName)).isNotNull
-    val pred = Some(filter.map(f => new FilterCompiler(resolver(df)).compile(f))
-      .fold(guard)(_ && guard))
-    graft.ops.Search.scoredTopK(df, config.idCol, score, vc.metric.largerBetter,
-      pred, k)
+    require(config.vectorConfig(vectorName).multivector,
+      s"vector '$vectorName' is not declared multivector")
+    executeDag(graft.ops.PointQuery.Query(graft.ops.PointQuery.Nearest(
+      spaceOf(vectorName), graft.ops.PointQuery.MultiVector(queryVecs)),
+      filter = filter, limit = k))
   }
 
   /** Config-routed batch nearest-k: one top-k per row of `queries`
@@ -968,10 +923,11 @@ final class Collection(
     val spaces =
       config.vectors.map(vc =>
         vc.name -> RequestCodec.VectorSpace(config.vectorCol(vc.name), vc.metric,
-          dim = Some(vc.dim), multivector = vc.multivector)).toMap ++
+          dim = Some(vc.dim), multivector = vc.multivector,
+          datatype = vc.datatype)).toMap ++
         config.sparse.map(sc =>
           sc.name -> RequestCodec.VectorSpace(config.sparseCol(sc.name),
-            graft.model.Dot, sparse = true)).toMap
+            graft.model.Dot, sparse = true, modifier = sc.modifier)).toMap
     RequestCodec.Ctx(spaces,
       shardKeyField = config.shardKeyCol,
       // this collection's catalog name (the Catalog lays data out as
@@ -987,6 +943,10 @@ final class Collection(
           else last)
       })
   }
+
+  /** The query space of a declared dense or sparse vector. */
+  private def spaceOf(name: String): graft.ops.PointQuery.Space =
+    wireCtx.space(Some(name)).space
 
   /** Space validation of a same-collection by-id reference, with the
     * reference's unknown-name error shapes. By-id examples resolve FROM
@@ -1120,7 +1080,7 @@ final class Collection(
     * vector inputs resolve against the `using` space ([[bulkResolve]]),
     * and wire `SearchParams` route a plain Nearest root through the
     * quantization-aware two-phase search; every other shape runs through
-    * the generic DAG executor over the decoded table. */
+    * the generic DAG executor over the stored table. */
   def query(json: String): DataFrame = query(json, None)
 
   /** [[query]] with `lookup_from` ids resolved against the sibling
@@ -1194,96 +1154,56 @@ final class Collection(
     q
   }
 
-  /** Execute an [[admitted]] request: a plain Nearest root on a
-    * quantized or IVF vector takes [[knn]], a sparse root without prefetch
-    * or `params.idf` takes [[knnSparse]], everything else the DAG
-    * executor. */
+  /** Execute an [[admitted]] request: a Nearest root on a quantized or
+    * IVF vector takes [[knn]], everything else [[executeDag]]. */
   private def executeParsed(q: graft.ops.PointQuery.Query): DataFrame = {
     import graft.ops.PointQuery
     (q.scoring, q.prefetches) match {
-      case (PointQuery.Nearest(vcol, _, qv), Nil)
+      case (PointQuery.Nearest(space, PointQuery.DenseVector(qv)), Nil)
           if config.vectors.exists(vc =>
-            config.vectorCol(vc.name) == vcol &&
+            config.vectorCol(vc.name) == space.col &&
               (vc.quantization.isDefined || vc.ann.isDefined)) =>
-        val name = config.vectors
-          .find(vc => config.vectorCol(vc.name) == vcol).get.name
         val sp = q.params.getOrElse(PointQuery.SearchParams())
-        knn(name, qv, q.filter, q.limit, q.offset, q.scoreThreshold,
+        knn(vectorName(space.col), qv, q.filter, q.limit, q.offset, q.scoreThreshold,
           quantized = !(sp.exact || sp.quantIgnore),
           oversampling = sp.oversampling.getOrElse(3.0),
           rescore = sp.rescore,
           exact = sp.exact,
           nprobe = sp.hnswEf)
-      case (PointQuery.SparseStructQ(scol, qi, qv), Nil)
-          if !q.params.exists(_.idf.exists(_.isDefined)) =>
-        val name = config.sparse
-          .find(sc => config.sparseCol(sc.name) == scol).get.name
-        knnSparse(name, qi, qv, q.filter, q.limit, q.offset, q.scoreThreshold)
-      case _ =>
-        val df = readDecoded()
-        graft.ops.PointQuery.execute(spark, df, config.idCol, resolver(df),
-          idfWeighted(q))
+      case _ => executeDag(q)
     }
+  }
+
+  /** The DAG executor over the stored table, every vector scored in its
+    * storage width ([[graft.ops.PointQuery.similarity]]). */
+  private def executeDag(q: graft.ops.PointQuery.Query): DataFrame = {
+    val df = read()
+    graft.ops.PointQuery.execute(spark, df, config.idCol, resolver(df), idfWeighted(q))
   }
 
   /** `q` with the IDF modifier folded into its query-side weights. The
     * modifier applies in EVERY sparse scoring context — root, prefetch
-    * leaves, rescore parents (`query_context.rs` remaps idf weights for the
-    * whole request) — so the declared modifier folds into the query
-    * weights BEFORE the request executes; stored weights stay raw. Both
-    * the DAG branch of [[executeParsed]] and [[queryGroups]] score the
-    * result. (The bare-sparse fast path weights inside [[knnSparse]]
-    * instead.) */
+    * leaves, rescore parents, and every example of a custom query
+    * (`query_context.rs` remaps every query-side sparse vector of the
+    * request) — so it folds into the query weights BEFORE the request
+    * executes; stored weights stay raw. A node-level `params.idf.corpus`
+    * re-scopes the statistics to the corpus filter's matches;
+    * "global"/absent uses the collection-wide sidecar stats. */
   private def idfWeighted(q: graft.ops.PointQuery.Query): graft.ops.PointQuery.Query = {
     import graft.ops.PointQuery
-    val idfCols = config.sparse.filter(_.modifier.contains("idf"))
-      .map(sc => config.sparseCol(sc.name) -> sc.name).toMap
-    def applyIdf(node: PointQuery.Query): PointQuery.Query = {
-      // a node-level `params.idf.corpus` re-scopes the statistics to
-      // the corpus filter's matches; "global"/absent uses the
-      // collection-wide sidecar stats
-      val corpus: Option[graft.model.Filter] =
-        node.params.flatMap(_.idf).flatten
-      def weigh(name: String, qi2: Seq[Long], qv2: Seq[Double]): Seq[Double] =
-        corpus match {
-          case Some(f) => corpusIdfWeights(name, f, qi2, qv2)
-          case None => idfWeights(name, qi2, qv2)
+    val scoring = q.scoring match {
+      case s: PointQuery.VectorScoring if s.space.modifier.contains("idf") =>
+        val name = vectorName(s.space.col)
+        val corpus = q.params.flatMap(_.idf).flatten
+        s.mapVectors {
+          case PointQuery.SparseVector(is, vs) =>
+            PointQuery.SparseVector(is, corpus.fold(idfWeights(name, is, vs))(
+              corpusIdfWeights(name, _, is, vs)))
+          case other => other
         }
-      val scoring = node.scoring match {
-        case PointQuery.SparseStructQ(sc2, qi2, qv2) if idfCols.contains(sc2) =>
-          PointQuery.SparseStructQ(sc2, qi2, weigh(idfCols(sc2), qi2, qv2))
-        case PointQuery.RecommendSparse(sc2, strat, pos, neg)
-            if idfCols.contains(sc2) =>
-          // recommend examples ARE query vectors — the modifier weights
-          // each before the strategy combine (`query_context.rs` remaps
-          // every query-side sparse vector of the request)
-          def w(q: (Seq[Long], Seq[Double])) =
-            (q._1, weigh(idfCols(sc2), q._1, q._2))
-          PointQuery.RecommendSparse(sc2, strat, pos.map(w), neg.map(w))
-        case PointQuery.DiscoverSparse(sc2, target, pairs)
-            if idfCols.contains(sc2) =>
-          def w(q: (Seq[Long], Seq[Double])) =
-            (q._1, weigh(idfCols(sc2), q._1, q._2))
-          PointQuery.DiscoverSparse(sc2, w(target),
-            pairs.map { case (p, n) => (w(p), w(n)) })
-        case PointQuery.ContextSparse(sc2, pairs)
-            if idfCols.contains(sc2) =>
-          def w(q: (Seq[Long], Seq[Double])) =
-            (q._1, weigh(idfCols(sc2), q._1, q._2))
-          PointQuery.ContextSparse(sc2,
-            pairs.map { case (p, n) => (w(p), w(n)) })
-        case PointQuery.MmrSparseQ(sc2, qi2, qv2, lam)
-            if idfCols.contains(sc2) =>
-          // the MMR relevance sims use the same weighted query as its
-          // candidate prefetch — stored pairwise sims stay raw (the
-          // modifier weights QUERY vectors only, `query_context.rs`)
-          PointQuery.MmrSparseQ(sc2, qi2,
-            weigh(idfCols(sc2), qi2, qv2), lam)
-        case other => other
-      }
-      node.copy(scoring = scoring, prefetches = node.prefetches.map(applyIdf))
+      case other => other
     }
-    if (idfCols.isEmpty) q else applyIdf(q)
+    q.copy(scoring = scoring, prefetches = q.prefetches.map(idfWeighted))
   }
 
   /** Legacy `POST /collections/{c}/points/search` (`SearchRequest`,
@@ -1364,11 +1284,11 @@ final class Collection(
     * is plain nearest (see [[queryBatch]]). */
   private def plainNearest(q: graft.ops.PointQuery.Query, o: org.json4s.JValue)
       : Option[(NearestGroupKey, Seq[Double])] = q.scoring match {
-    case graft.ops.PointQuery.Nearest(vcol, _, qv)
+    case graft.ops.PointQuery.Nearest(space, graft.ops.PointQuery.DenseVector(qv))
         if q.prefetches.isEmpty && q.offset == 0 && q.limit > 0 &&
           q.scoreThreshold.isEmpty && !wantsPayload(o) &&
           withVectorColsOf(o \ "with_vector").isEmpty =>
-      config.vectors.find(vc => config.vectorCol(vc.name) == vcol)
+      config.vectors.find(vc => config.vectorCol(vc.name) == space.col)
         .filter(vc => vc.datatype == Float32 && !vc.multivector &&
           vc.quantization.isEmpty)
         .map { vc =>
@@ -1689,9 +1609,10 @@ final class Collection(
 
   /** `POST /collections/{c}/points/query/groups`
     * (`QueryGroupsRequestInternal`): per-group top `group_size` hits over
-    * the scoring root, `limit` groups. Supported roots are the scorable
-    * leaves (nearest / sparse / multivector MaxSim); DAG-shaped roots
-    * (fusion/formula) reject loudly like the reference's validation.
+    * the scoring root, `limit` groups, scored over the stored table like
+    * the flat query. Supported roots are the vector query kinds and
+    * order_by; DAG-shaped roots (fusion/formula) reject loudly like the
+    * reference's validation.
     * `with_lookup` resolves through `lookupTable` (a catalog hook — tests
     * pass a sibling-collection loader); `lookup_from` (by-id example
     * resolution against a SIBLING collection — `QueryGroupsRequestInternal`
@@ -1710,7 +1631,7 @@ final class Collection(
     // every point yields ZERO groups, `test_query_full.py:993-1010`), the
     // `params.idf` gate and the IDF modifier
     val gq = idfWeighted(admitted(spec.query))
-    val df = readDecoded()
+    val df = read()
     // any scorable leaf can group (reference `query/groups` accepts the
     // full query surface: nearest / recommend / discover / context /
     // order_by — `test_query_full.py` test_{recommend,discover,order_by}

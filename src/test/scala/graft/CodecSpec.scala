@@ -97,14 +97,14 @@ class CodecSpec extends AnyFunSuite {
 
   test("query: raw-vector shorthand, defaults for limit/offset") {
     val q = RequestCodec.parseQueryRequest("""{"query": [0.1, 0.2, 0.3]}""", ctx)
-    assert(q == Query(Nearest("embedding", Dot, Seq(0.1, 0.2, 0.3))))
+    assert(q == Query(Nearest(Space("embedding", Dot), DenseVector(Seq(0.1, 0.2, 0.3)))))
     assert(q.limit == 10 && q.offset == 0)
   }
 
   test("query: nearest by id resolves through the ctx hook; using routes the space") {
     val q = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": 7}, "using": "img", "limit": 3}""", ctx)
-    assert(q.scoring == Nearest("img_vec", Cosine, Seq(1.0, 2.0)))
+    assert(q.scoring == Nearest(Space("img_vec", Cosine), DenseVector(Seq(1.0, 2.0))))
     assert(q.limit == 3)
   }
 
@@ -124,16 +124,18 @@ class CodecSpec extends AnyFunSuite {
         |  "prefetch": {"query": {"nearest": 7}, "limit": 5},
         |  "query": {"nearest": 7}, "limit": 3}""".stripMargin, lctx)
     // the root's own id resolves through the foreign collection...
-    assert(q.scoring == Nearest("embedding", Dot, Seq(9.0, 9.0)))
+    assert(q.scoring == Nearest(Space("embedding", Dot), DenseVector(Seq(9.0, 9.0))))
     // ...but the prefetch resolves against the CURRENT collection
-    assert(q.prefetches.head.scoring == Nearest("embedding", Dot, Seq(1.0, 2.0)))
+    assert(q.prefetches.head.scoring ==
+      Nearest(Space("embedding", Dot), DenseVector(Seq(1.0, 2.0))))
     // a prefetch WITH its own lookup_from still installs its own redirect
     val q2 = RequestCodec.parseQueryRequest(
       """{"prefetch": {"lookup_from": {"collection": "other"},
         |              "query": {"nearest": 7}, "limit": 5},
         |  "query": {"nearest": 7}, "limit": 3}""".stripMargin, lctx)
-    assert(q2.scoring == Nearest("embedding", Dot, Seq(1.0, 2.0)))
-    assert(q2.prefetches.head.scoring == Nearest("embedding", Dot, Seq(9.0, 9.0)))
+    assert(q2.scoring == Nearest(Space("embedding", Dot), DenseVector(Seq(1.0, 2.0))))
+    assert(q2.prefetches.head.scoring ==
+      Nearest(Space("embedding", Dot), DenseVector(Seq(9.0, 9.0))))
   }
 
   test("query: referenced ids collect as excludeIds — root, nested, lookup_from exemption") {
@@ -233,7 +235,8 @@ class CodecSpec extends AnyFunSuite {
   test("query: multi-dense matrix becomes MaxSim (the only multivector comparator)") {
     val q = RequestCodec.parseQueryRequest(
       """{"query": [[0.1, 0.2], [0.3, 0.4]]}""", ctx)
-    assert(q.scoring == MaxSimQ("embedding", Dot, Seq(Seq(0.1, 0.2), Seq(0.3, 0.4))))
+    assert(q.scoring ==
+      Nearest(Space("embedding", Dot), MultiVector(Seq(Seq(0.1, 0.2), Seq(0.3, 0.4)))))
   }
 
   test("query: a single dense vector over a multivector space is a 1-token MaxSim") {
@@ -245,15 +248,15 @@ class CodecSpec extends AnyFunSuite {
       "tok" -> VectorSpace("vector_tok", Dot, multivector = true)))
     val raw = RequestCodec.parseQueryRequest(
       """{"query": [0.1, 0.2], "using": "tok"}""", mctx)
-    assert(raw.scoring == MaxSimQ("vector_tok", Dot, Seq(Seq(0.1, 0.2))))
+    assert(raw.scoring == Nearest(Space("vector_tok", Dot), MultiVector(Seq(Seq(0.1, 0.2)))))
     val nearest = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": [0.1, 0.2]}, "using": "tok"}""", mctx)
-    assert(nearest.scoring == MaxSimQ("vector_tok", Dot, Seq(Seq(0.1, 0.2))))
+    assert(nearest.scoring == Nearest(Space("vector_tok", Dot), MultiVector(Seq(Seq(0.1, 0.2)))))
     val pf = RequestCodec.parseQueryRequest(
       """{"prefetch": [{"query": [0.3, 0.4], "using": "tok", "limit": 7}],
         |  "query": {"nearest": [0.1, 0.2]}, "using": "tok"}""".stripMargin, mctx)
     assert(pf.prefetches.head.scoring ==
-      MaxSimQ("vector_tok", Dot, Seq(Seq(0.3, 0.4))))
+      Nearest(Space("vector_tok", Dot), MultiVector(Seq(Seq(0.3, 0.4)))))
   }
 
   test("query: custom queries over a multivector space take matrix examples") {
@@ -268,49 +271,50 @@ class CodecSpec extends AnyFunSuite {
       """{"query": {"recommend": {"positive": [7, [0.1, 0.2]],
         |  "negative": [[[0.3, 0.4], [0.5, 0.6]]], "strategy": "best_score"}},
         |  "using": "tok"}""".stripMargin, mctx)
-    assert(rec.scoring == RecommendMulti("vector_tok", Dot, "best_score",
-      Seq(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), Seq(Seq(0.1, 0.2))),
-      Seq(Seq(Seq(0.3, 0.4), Seq(0.5, 0.6)))))
+    assert(rec.scoring == Recommend(Space("vector_tok", Dot), "best_score",
+      Seq(MultiVector(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))), MultiVector(Seq(Seq(0.1, 0.2)))),
+      Seq(MultiVector(Seq(Seq(0.3, 0.4), Seq(0.5, 0.6))))))
     assert(rec.excludeIds == Seq(7L))
     val disc = RequestCodec.parseQueryRequest(
       """{"query": {"discover": {"target": 7,
         |  "context": [{"positive": [0.1, 0.2], "negative": [0.3, 0.4]}]}},
         |  "using": "tok"}""".stripMargin, mctx)
-    assert(disc.scoring == DiscoverMulti("vector_tok", Dot,
-      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
-      Seq((Seq(Seq(0.1, 0.2)), Seq(Seq(0.3, 0.4))))))
+    assert(disc.scoring == Discover(Space("vector_tok", Dot),
+      MultiVector(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))),
+      Seq((MultiVector(Seq(Seq(0.1, 0.2))), MultiVector(Seq(Seq(0.3, 0.4)))))))
     val cx = RequestCodec.parseQueryRequest(
       """{"query": {"context": [{"positive": 7, "negative": [0.3, 0.4]}]},
         |  "using": "tok"}""".stripMargin, mctx)
-    assert(cx.scoring == ContextMulti("vector_tok", Dot,
-      Seq((Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)), Seq(Seq(0.3, 0.4))))))
+    assert(cx.scoring == Context(Space("vector_tok", Dot),
+      Seq((MultiVector(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))), MultiVector(Seq(Seq(0.3, 0.4)))))))
     val fb = RequestCodec.parseQueryRequest(
       """{"query": {"relevance_feedback": {"target": 7,
         |  "feedback": [{"example": [0.1, 0.2], "score": 0.9}],
         |  "strategy": {"naive": {"a": 1.0, "b": 2.0, "c": 0.5}}}},
         |  "using": "tok"}""".stripMargin, mctx)
-    assert(fb.scoring == FeedbackMulti("vector_tok", Dot,
-      Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
-      Seq((Seq(Seq(0.1, 0.2)), 0.9)), 1.0, 2.0, 0.5))
+    assert(fb.scoring == Feedback(Space("vector_tok", Dot),
+      MultiVector(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))),
+      Seq((MultiVector(Seq(Seq(0.1, 0.2))), 0.9)), 1.0, 2.0, 0.5))
     val mmr = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": [0.1, 0.2],
         |  "mmr": {"diversity": 0.8, "candidates_limit": 32}},
         |  "using": "tok", "limit": 5}""".stripMargin, mctx)
-    val MmrMultiQ(vc, m, qm, lambda) = mmr.scoring: @unchecked
+    val MmrQ(Space(vc, m, _, _), MultiVector(qm), lambda) = mmr.scoring: @unchecked
     assert(vc == "vector_tok" && m == Dot && qm == Seq(Seq(0.1, 0.2)))
     assert(math.abs(lambda - 0.2) < 1e-12)
     assert(mmr.prefetches ==
-      Seq(Query(MaxSimQ("vector_tok", Dot, Seq(Seq(0.1, 0.2))), limit = 32)))
+      Seq(Query(Nearest(Space("vector_tok", Dot), MultiVector(Seq(Seq(0.1, 0.2)))), limit = 32)))
   }
 
   test("query: nearest+mmr synthesizes the candidates prefetch, lambda = 1 - diversity") {
     val q = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": [1.0, 0.0], "mmr": {"diversity": 0.8, "candidates_limit": 64}},
         | "limit": 5}""".stripMargin, ctx)
-    val MmrQ(colName, m, v, lambda) = q.scoring: @unchecked
+    val MmrQ(Space(colName, m, _, _), DenseVector(v), lambda) = q.scoring: @unchecked
     assert(colName == "embedding" && m == Dot && v == Seq(1.0, 0.0))
     assert(math.abs(lambda - 0.2) < 1e-12)
-    assert(q.prefetches == Seq(Query(Nearest("embedding", Dot, Seq(1.0, 0.0)), limit = 64)))
+    assert(q.prefetches ==
+      Seq(Query(Nearest(Space("embedding", Dot), DenseVector(Seq(1.0, 0.0))), limit = 64)))
     assert(q.limit == 5)
   }
 
@@ -324,31 +328,36 @@ class CodecSpec extends AnyFunSuite {
     // `using` (`tests/openapi/test_query_full.py:1411-1421`)
     val bare = RequestCodec.parseQueryRequest(
       """{"query": 7, "using": "txt"}""", sctx)
-    assert(bare.scoring == SparseStructQ("sparse_txt", Seq(1, 3), Seq(0.5, 2.0)))
+    assert(bare.scoring ==
+      Nearest(Space("sparse_txt", Dot), SparseVector(Seq(1, 3), Seq(0.5, 2.0))))
     val tagged = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": 7}, "using": "txt"}""", sctx)
     assert(tagged.scoring == bare.scoring)
-    // sparse MMR: the root becomes MmrSparseQ and the synthesized
+    // sparse MMR: the root becomes a sparse MmrQ and the synthesized
     // candidates prefetch is the resolved sparse leaf
     val mmr = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": 7, "mmr": {"diversity": 0.7,
         |  "candidates_limit": 20}}, "using": "txt", "limit": 5}""".stripMargin,
       sctx)
-    val MmrSparseQ(c, qi, qv, lam) = mmr.scoring: @unchecked
+    val MmrQ(Space(c, _, _, _), SparseVector(qi, qv), lam) = mmr.scoring: @unchecked
     assert(c == "sparse_txt" && qi == Seq(1, 3) && qv == Seq(0.5, 2.0))
     assert(math.abs(lam - 0.3) < 1e-12)
     assert(mmr.prefetches ==
-      Seq(Query(SparseStructQ("sparse_txt", Seq(1, 3), Seq(0.5, 2.0)), limit = 20)))
+      Seq(Query(Nearest(Space("sparse_txt", Dot), SparseVector(Seq(1, 3), Seq(0.5, 2.0))),
+        limit = 20)))
   }
 
   test("query: recommend defaults to average_vector; sum_scores and best_score route") {
     def rec(strategy: String) = RequestCodec.parseQueryRequest(
       s"""{"query": {"recommend": {"positive": [[1.0]], "negative": [[2.0]]$strategy}}}""", ctx)
-    assert(rec("").scoring == RecommendAvg("embedding", Dot, Seq(Seq(1.0)), Seq(Seq(2.0))))
+    assert(rec("").scoring == Recommend(Space("embedding", Dot), "average_vector",
+      Seq(DenseVector(Seq(1.0))), Seq(DenseVector(Seq(2.0)))))
     assert(rec(""", "strategy": "best_score"""").scoring ==
-      RecommendBest("embedding", Dot, Seq(Seq(1.0)), Seq(Seq(2.0))))
+      Recommend(Space("embedding", Dot), "best_score",
+        Seq(DenseVector(Seq(1.0))), Seq(DenseVector(Seq(2.0)))))
     assert(rec(""", "strategy": "sum_scores"""").scoring ==
-      RecommendSum("embedding", Dot, Seq(Seq(1.0)), Seq(Seq(2.0))))
+      Recommend(Space("embedding", Dot), "sum_scores",
+        Seq(DenseVector(Seq(1.0))), Seq(DenseVector(Seq(2.0)))))
   }
 
   test("query: order_by bare-key and struct forms; sample needs the seeded ctx") {
@@ -432,7 +441,7 @@ class CodecSpec extends AnyFunSuite {
         | "with_lookup": "other"}""".stripMargin, ctx)
     assert(g.groupBy == "label" && g.groupSize == 2 && g.groups == 5)
     assert(g.lookupCollection.contains("other"))
-    assert(g.query.scoring == Nearest("embedding", Dot, Seq(1.0)))
+    assert(g.query.scoring == Nearest(Space("embedding", Dot), DenseVector(Seq(1.0))))
     val g2 = RequestCodec.parseGroupRequest(
       """{"query": [1.0], "group_by": "k", "with_lookup": {"collection": "c2"}}""", ctx)
     assert(g2.groupSize == 3 && g2.groups == 10 && g2.lookupCollection.contains("c2"))
@@ -502,7 +511,8 @@ class CodecSpec extends AnyFunSuite {
     val q = RequestCodec.parseQueryRequest(
       """{"query": {"indices": [5, 2], "values": [0.5, 1.0]},
         |  "using": "txt", "limit": 3}""".stripMargin, sctx)
-    assert(q.scoring == SparseStructQ("sparse_txt", Seq(2, 5), Seq(1.0, 0.5)))
+    assert(q.scoring ==
+      Nearest(Space("sparse_txt", Dot), SparseVector(Seq(2, 5), Seq(1.0, 0.5))))
     // uniqueness is a hard invariant (`validate_sparse_vector_impl`)
     assertThrows[IllegalArgumentException] {
       RequestCodec.parseQueryRequest(
@@ -527,7 +537,7 @@ class CodecSpec extends AnyFunSuite {
     // parent over sources); the synthesized Nearest only applies when no
     // prefetch is given
     assert(q.prefetches == Seq(
-      Query(Nearest("embedding", Dot, Seq(0.5, 0.5)), limit = 50)))
+      Query(Nearest(Space("embedding", Dot), DenseVector(Seq(0.5, 0.5))), limit = 50)))
   }
 
   test("query validation: no-query scroll, prefetch/threshold/order_by rules, limit >= 1") {
@@ -626,14 +636,15 @@ class CodecSpec extends AnyFunSuite {
   test("query: bare shorthands — id, uuid-form string rejection path, sparse object") {
     // `QueryInterface::Nearest(VectorInput)` is untagged (schema.rs:637-640)
     val q = RequestCodec.parseQueryRequest("""{"query": 7, "limit": 3}""", ctx)
-    assert(q.scoring == Nearest("embedding", Dot, Seq(1.0, 2.0)))
+    assert(q.scoring == Nearest(Space("embedding", Dot), DenseVector(Seq(1.0, 2.0))))
     val sctx = Ctx(spaces = Map(
       "" -> VectorSpace("embedding", Dot),
       "txt" -> VectorSpace("sparse_txt", Dot, sparse = true)))
     val sq = RequestCodec.parseQueryRequest(
       """{"query": {"indices": [2, 4], "values": [1.0, 2.0]},
         |  "using": "txt", "limit": 3}""".stripMargin, sctx)
-    assert(sq.scoring == SparseStructQ("sparse_txt", Seq(2, 4), Seq(1.0, 2.0)))
+    assert(sq.scoring ==
+      Nearest(Space("sparse_txt", Dot), SparseVector(Seq(2, 4), Seq(1.0, 2.0))))
     // bare id against a sparse space fails loudly
     assertThrows[IllegalArgumentException] {
       RequestCodec.parseQueryRequest("""{"query": 7, "using": "txt"}""", sctx)
@@ -695,7 +706,8 @@ class CodecSpec extends AnyFunSuite {
     val q = RequestCodec.parseQueryRequest(
       """{"query": {"nearest": {"indices": [3, 7], "values": [0.5, 1.5]}},
         |  "using": "txt", "limit": 5}""".stripMargin, sctx)
-    assert(q.scoring == SparseStructQ("sparse_txt", Seq(3, 7), Seq(0.5, 1.5)))
+    assert(q.scoring ==
+      Nearest(Space("sparse_txt", Dot), SparseVector(Seq(3, 7), Seq(0.5, 1.5))))
     // dense input into a sparse space fails loudly, both forms
     assertThrows[IllegalArgumentException] {
       RequestCodec.parseQueryRequest(

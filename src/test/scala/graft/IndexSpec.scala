@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.{IvfIndex, Quantization}
 import graft.model._
-import graft.ops.{Formula, Mmr, Search}
+import graft.ops.{Formula, Mmr, PointQuery, Search}
 
 /** ANN-vs-exact oracle pattern (the reference's load-bearing correctness
   * test, SURVEY.md §5.3: `exact_search_test.rs`) plus formula/MMR units. */
@@ -129,13 +129,14 @@ class IndexSpec extends SparkTestBase {
   test("MMR first pick is the most relevant; selection is diverse") {
     val cands = Search.knn(emb, "vec_id", "embedding", q7, Dot,
       k = 30, extraCols = Seq("embedding"))
-    val got = Mmr.rerank(spark, cands, "vec_id", "embedding", Dot, q7,
+    val space = PointQuery.Space("embedding", Dot)
+    val got = Mmr.rerank(spark, cands, "vec_id", space, PointQuery.DenseVector(q7),
       lambda = 0.5, limit = 5).collect()
     assert(got.length == 5)
     assert(got.head.getLong(0) == exactTop(1).head)
     assert(got.map(_.getInt(2)).toSeq == Seq(1, 2, 3, 4, 5))
     // λ=1 → pure relevance → equals exact order
-    val pure = Mmr.rerank(spark, cands, "vec_id", "embedding", Dot, q7,
+    val pure = Mmr.rerank(spark, cands, "vec_id", space, PointQuery.DenseVector(q7),
       lambda = 1.0, limit = 5).collect().map(_.getLong(0)).toSeq
     assert(pure == exactTop(5))
   }

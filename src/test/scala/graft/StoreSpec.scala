@@ -1661,4 +1661,135 @@ class StoreSpec extends SparkTestBase {
     assert(c6.sparseIdfStats("ttl") == ((4L, Map(2L -> 3L, 3L -> 1L))),
       "absent space must rebuild table-wide on its first read")
   }
+
+  /** (id, score) rows, the score read as a double whatever its column type
+    * (u8 Dot scores are BIGINT). */
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getAs[Number]("score").doubleValue)).toSeq
+
+  test("Uint8 Dot: wire query scores the stored bytes like knn (root, RRF leaf, groups)") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id", payloadCol = "payload",
+        vectors = Seq(VectorConfig("", 4, Dot, datatype = Uint8)),
+        payloadTypes = Map("g" -> LongType)),
+      Seq(
+        (1L, Seq(10f, 0f, 0f, 0f), """{"g":1}"""),
+        (2L, Seq(0f, 9f, 0f, 0f), """{"g":2}"""),
+        (3L, Seq(0f, 0f, 0f, 8f), """{"g":3}"""),
+        // scores 0 once the query is cast to u8 (0.9 → 0), 18.0 uncast
+        (4L, Seq(20f, 0f, 0f, 0f), """{"g":4}"""),
+      ).toDF("id", "vector", "payload"))
+    val q = "[0.9, 1.9, 0.0, -5.0]"
+    // the query casts to u8 [0, 1, 0, 0], as qdrant's byte scorer casts it
+    val knn = ranked(c.knn("", Seq(0.9, 1.9, 0.0, -5.0), k = 3))
+    assert(knn == Seq((2L, 9.0), (1L, 0.0), (3L, 0.0)), knn)
+    val root = ranked(c.query(s"""{"query": $q, "limit": 3}"""))
+    // RRF scores are rank-based: the fused order is the leaf's order
+    val fused = c.query(
+      s"""{"prefetch": [{"query": $q, "limit": 3}], "query": {"fusion": "rrf"},
+         |  "limit": 3}""".stripMargin).collect().map(_.getLong(0)).toSeq
+    val groups = c.queryGroups(
+      s"""{"query": $q, "group_by": "g", "group_size": 1, "limit": 3}""")
+      .collect().map(r => (r.getLong(1), r.getAs[Number]("score").doubleValue)).toSeq
+    val wrong = Seq(("root", root == knn, root), ("RRF leaf", fused == knn.map(_._1), fused),
+      ("groups", groups == knn, groups)).filterNot(_._2)
+    assert(wrong.isEmpty,
+      wrong.map { case (route, _, got) => s"$route $got" }.mkString("; ") + s" vs knn $knn")
+  }
+
+  test("Uint8 multivector wire query equals knnMultivec and exact u8 MaxSim") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id",
+        vectors = Seq(VectorConfig("tok", 3, Dot, multivector = true, datatype = Uint8))),
+      Seq(
+        (1L, Seq(Seq(90f, 0f, 10f), Seq(0f, 50f, 0f))),
+        (2L, Seq(Seq(3f, 200f, 1f))),
+        (3L, Seq(Seq(1f, 1f, 250f), Seq(40f, 2f, 0f)))
+      ).toDF("id", "vector_tok"))
+    val qs = Seq(Seq(100.7, 0.0, -3.0), Seq(0.5, 60.2, 0.0))
+    def u8(x: Double): Long = if (x <= 0) 0L else math.min(255.0, math.floor(x)).toLong
+    val stored = Map(1L -> Seq(Seq(90L, 0L, 10L), Seq(0L, 50L, 0L)),
+      2L -> Seq(Seq(3L, 200L, 1L)), 3L -> Seq(Seq(1L, 1L, 250L), Seq(40L, 2L, 0L)))
+    val expected = stored.toSeq.map { case (id, toks) =>
+      (id, qs.map(q => toks.map(t => t.zip(q).map { case (a, b) => a * u8(b) }.sum).max)
+        .sum.toDouble)
+    }.sortBy { case (id, sc) => (-sc, id) }
+    val knn = ranked(c.knnMultivec("tok", qs, k = 3))
+    assert(knn == expected, s"knnMultivec $knn vs $expected")
+    val wire = ranked(c.query(
+      """{"query": [[100.7, 0.0, -3.0], [0.5, 60.2, 0.0]], "using": "tok",
+        |  "limit": 3}""".stripMargin))
+    assert(wire == knn, s"wire $wire vs knnMultivec $knn")
+  }
+
+  test("Float16 wire nearest equals knn bit for bit") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id",
+        vectors = Seq(VectorConfig("", 4, Dot, datatype = Float16))),
+      Seq(
+        (1L, Seq(0.1f, 0.2f, 0.3f, 0.4f)),
+        (2L, Seq(0.7f, -0.1f, 0.33f, 0.01f)),
+        (3L, Seq(-0.6f, 0.9f, 0.123f, 0.5f))
+      ).toDF("id", "vector"))
+    val q = Seq(0.31, -0.77, 0.123456, 0.9)
+    val knn = c.knn("", q, k = 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val wire = c.query(s"""{"query": ${q.mkString("[", ",", "]")}, "limit": 3}""")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(wire.map(_._1) == knn.map(_._1), s"wire $wire vs knn $knn")
+    wire.zip(knn).foreach { case ((_, w), (_, k)) =>
+      assert(java.lang.Double.doubleToLongBits(w) == java.lang.Double.doubleToLongBits(k),
+        s"wire score $w vs knn $k")
+    }
+  }
+
+  test("an idf space weights every example of recommend/discover/context like a nearest") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id",
+        sparse = Seq(graft.sources.SparseVectorConfig("txt", modifier = Some("idf")))),
+      Seq(
+        (1L, (Seq(0, 1), Seq(1.0f, 0.5f))),
+        (2L, (Seq(0, 2), Seq(0.3f, 1.0f))),
+        (3L, (Seq(1, 3), Seq(2.0f, 0.7f))),
+        (4L, (Seq(0), Seq(0.8f))),
+        (5L, (Seq(2, 3), Seq(0.4f, 1.5f))),
+        (6L, (Seq(3, 4), Seq(0.2f, 1.0f)))
+      ).map { case (id, (i, v)) => (id, i, v) }.toDF("id", "i", "v")
+        .select(col("id"), struct(col("i").as("indices"), col("v").as("values"))
+          .as("sparse_txt")))
+    val (p, n, t) = ("""{"indices": [1, 2], "values": [1.0, 0.5]}""",
+      """{"indices": [0, 3], "values": [1.0, 0.5]}""",
+      """{"indices": [2, 4], "values": [1.0, 1.0]}""")
+    def scores(query: String): Map[Long, Double] =
+      ranked(c.query(s"""{"query": $query, "using": "txt", "limit": 10}""")).toMap
+    // each example's idf-weighted nearest score; rows sharing no dim score 0
+    def near(v: String): Long => Double = scores(v).getOrElse(_, 0.0)
+    val (sp, sn, st) = (near(p), near(n), near(t))
+    // the raw (unweighted) dots differ: a missing weighting cannot pass
+    assert(math.abs(sp(3L) - 2.0) > 1e-3, sp(3L))
+    def sigma(x: Double) = x / (1.0 + math.abs(x))
+    def scaled(x: Double) = 0.5 * (sigma(x) + 1.0)
+    def check(kind: String, query: String, expect: Long => Double): Unit = {
+      val got = scores(query)
+      assert(got.nonEmpty, kind)
+      got.foreach { case (id, s) =>
+        assert(math.abs(s - expect(id)) < 1e-5, s"$kind id $id: $s vs ${expect(id)}")
+      }
+    }
+    def rec(strategy: String) =
+      s"""{"recommend": {"positive": [$p], "negative": [$n], "strategy": "$strategy"}}"""
+    // average_vector: one nearest with 2·w(p) − w(n), linear in the dot
+    check("average_vector", rec("average_vector"), id => 2 * sp(id) - sn(id))
+    check("sum_scores", rec("sum_scores"), id => sp(id) - sn(id))
+    check("best_score", rec("best_score"),
+      id => if (sp(id) > sn(id)) scaled(sp(id)) else -scaled(sn(id)))
+    check("discover",
+      s"""{"discover": {"target": $t, "context": [{"positive": $p, "negative": $n}]}}""",
+      id => math.signum(sp(id) - sn(id)) + scaled(st(id)))
+    check("context", s"""{"context": [{"positive": $p, "negative": $n}]}""",
+      id => sigma(math.min(sp(id) - sn(id) - graft.ops.Search.ContextMargin, 0.0)))
+  }
 }

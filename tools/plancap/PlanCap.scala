@@ -7,13 +7,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * For each kind of perfbench's `ReadMix`: 2 warm-up requests, then 8
   * requests with fresh parameters (stream 7, n = 2..9), each answer checked
   * against the model; prints the median summed `executorCpuTime` and wall
-  * time per kind. The first measured `count_exact`, `scroll_filtered` and
-  * `recommend` requests also write their formatted plan, and `recommend`
-  * its generated code.
+  * time per kind. The first measured request of every kind also writes its
+  * formatted plan, with the collection path replaced by `<collection>`.
   *
-  * Args: `<outdir> <tag>`; writes `<kind>_<tag>.txt`,
-  * `recommend_codegen_<tag>.txt` and `cpu_<tag>.txt` into `<outdir>` and
-  * the collection under `<outdir>/collection_<tag>`. Run by `run.sh`. */
+  * Args: `<outdir> <tag>`; writes `<kind>_<tag>.txt` and `cpu_<tag>.txt`
+  * into `<outdir>` and the collection under `<outdir>/collection_<tag>`.
+  * Run by `run.sh`. */
 object PlanCap {
   def main(args: Array[String]): Unit = {
     val out = new java.io.File(args(0)); out.mkdirs()
@@ -30,7 +29,6 @@ object PlanCap {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null) cpu.addAndGet(e.taskMetrics.executorCpuTime)
     })
-    val planned = Set("count_exact", "scroll_filtered", "recommend")
     def write(name: String, txt: String): Unit =
       java.nio.file.Files.write(new java.io.File(out, name).toPath, txt.getBytes("UTF-8"))
     val rows = for ((k, ix) <- perfbench.ReadMix.Kinds.zipWithIndex) yield {
@@ -45,11 +43,8 @@ object PlanCap {
         val wall = (System.nanoTime() - t0) / 1e6
         org.apache.spark.PerfbenchBus.drain(spark.sparkContext)
         req.check(got).foreach(m => println(s"[plancap] WRONG $k: $m"))
-        if (i == 2 && planned(k)) {
-          write(s"${k}_$tag.txt", df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-          if (k == "recommend") write(s"${k}_codegen_$tag.txt",
-            org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan))
-        }
+        if (i == 2) write(s"${k}_$tag.txt", df.queryExecution
+          .explainString(ExplainMode.fromString("formatted")).replace(path, "<collection>"))
         (cpu.get() / 1e6, wall)
       }
       val cs = runs.map(_._1).sorted; val ws = runs.map(_._2).sorted
