@@ -144,11 +144,21 @@ object VectorCodec {
             acc + array_max(transform(stored, sv => f16Score(metric, sv, qv))))
       }
     case Uint8 =>
-      require(metric == Dot,
-        "u8 multivector MaxSim supports the Dot metric (exact integer domain)")
-      val qb = queryVecs.map(encodeU8)
-      aggregate(typedlit(qb), lit(0L), (acc, qv) =>
-        acc + array_max(transform(stored, sv => VecKernels.u8Dot(sv, qv))))
+      // per-token similarity over the u8-cast query tokens, larger-better
+      // (Euclid −Σd², Manhattan −Σ|d|): exact BIGINT sums except Cosine,
+      // which divides exact integers as [[scoreExpr]] does
+      val sim: (Column, Column) => Column = metric match {
+        case Dot       => VecKernels.u8Dot
+        case Euclid    => (sv, qv) => -VecKernels.u8L2Sq(sv, qv)
+        case Manhattan => (sv, qv) => -VecKernels.u8L1(sv, qv)
+        case Cosine    => (sv, qv) =>
+          VecKernels.u8Dot(sv, qv).cast("double") /
+            (sqrt(VecKernels.u8Dot(sv, sv).cast("double")) *
+              sqrt(VecKernels.u8Dot(qv, qv).cast("double")))
+      }
+      val zero = if (metric == Cosine) lit(0.0d) else lit(0L)
+      aggregate(typedlit(queryVecs.map(encodeU8)), zero, (acc, qv) =>
+        acc + array_max(transform(stored, sv => sim(sv, qv))))
   }
 
   /** Config-routed user-visible score of a stored vector against a literal

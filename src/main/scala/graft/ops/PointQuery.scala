@@ -360,7 +360,10 @@ object PointQuery {
               Fusion.Source(df.select(col(idCol),
                 row_number().over(Window.orderBy(ord: _*)).cast("double").as("score")),
                 largerBetter = false)
-            case n: Nearest => Fusion.Source(df, scoringExpr(n)._2)
+            // every vector kind ranks in its own orientation (an
+            // average_vector recommend on Euclid is a distance)
+            case s: VectorScoring if !s.isInstanceOf[MmrQ] =>
+              Fusion.Source(df, scoringExpr(s)._2)
             case ScrollById if kind == "dbsf" =>
               // scroll results carry constant score 1.0 (`scroll.rs:131`)
               Fusion.Source(df.select(col(idCol), lit(1.0d).as("score")))

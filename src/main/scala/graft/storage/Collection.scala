@@ -1650,7 +1650,14 @@ final class Collection(
         (obCol.cast("double"), !asc)
       case s => graft.ops.PointQuery.scoringExpr(s)
     }
-    val grouped = graft.ops.GroupBy.groupBySearch(df, config.idCol, scoreExpr,
+    // only the rows the flat query can rank (a Euclid point without the
+    // vector would otherwise lead with a null score)
+    val scoped = gq.scoring match {
+      case s: PointQuery.VectorScoring =>
+        df.filter(PointQuery.candidates(s.space, s.vectors))
+      case _ => df
+    }
+    val grouped = graft.ops.GroupBy.groupBySearch(scoped, config.idCol, scoreExpr,
       largerBetter, spec.groupBy, resolver(df), gq.filter,
       spec.groupSize, spec.groups, keepGroupRank = true)
     val looked = spec.lookupCollection match {

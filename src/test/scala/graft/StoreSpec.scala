@@ -1792,4 +1792,89 @@ class StoreSpec extends SparkTestBase {
     check("context", s"""{"context": [{"positive": $p, "negative": $n}]}""",
       id => sigma(math.min(sp(id) - sn(id) - graft.ops.Search.ContextMargin, 0.0)))
   }
+
+  test("Uint8 multivector wire query scores MaxSim under every metric") {
+    import spark.implicits._
+    // integer queries inside the u8 range: the u8 cast leaves them as is
+    val stored = Seq(1L -> Seq(Seq(3, 0), Seq(0, 4)), 2L -> Seq(Seq(1, 1)),
+      3L -> Seq(Seq(2, 5), Seq(6, 1)))
+    val qs = Seq(Seq(2, 1), Seq(0, 3))
+    def dot(a: Seq[Int], b: Seq[Int]) = a.zip(b).map { case (x, y) => x * y }.sum.toDouble
+    // per-token similarity, larger-better (Euclid −Σd², Manhattan −Σ|d|)
+    val sims: Seq[(Metric, (Seq[Int], Seq[Int]) => Double)] = Seq(
+      Dot -> dot,
+      Cosine -> ((s, q) => dot(s, q) / (math.sqrt(dot(s, s)) * math.sqrt(dot(q, q)))),
+      Euclid -> ((s, q) => -s.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum.toDouble),
+      Manhattan -> ((s, q) => -s.zip(q).map { case (x, y) => math.abs(x - y) }.sum.toDouble))
+    val df = stored.map { case (id, toks) => (id, toks.map(_.map(_.toFloat))) }
+      .toDF("id", "vector_tok")
+    sims.foreach { case (metric, sim) =>
+      val c = Collection.create(spark, tmpDir(),
+        CollectionConfig(idCol = "id", vectors =
+          Seq(VectorConfig("tok", 2, metric, multivector = true, datatype = Uint8))), df)
+      val expected = stored.map { case (id, toks) =>
+        (id, qs.map(q => toks.map(sim(_, q)).max).sum)
+      }.sortBy { case (id, sc) => (-sc, id) }
+      val wire = ranked(c.query(
+        """{"query": [[2, 1], [0, 3]], "using": "tok", "limit": 3}"""))
+      assert(wire.map(_._1) == expected.map(_._1), s"$metric: $wire vs $expected")
+      wire.zip(expected).foreach { case ((id, w), (_, e)) =>
+        assert(math.abs(w - e) < 1e-5, s"$metric id $id: $w vs $e")
+      }
+    }
+  }
+
+  test("a fusion parent ranks a Euclid recommend leaf nearest-first") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id", vectors = Seq(VectorConfig("", 2, Euclid))),
+      Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(5f, 5f))).toDF("id", "vector"))
+    def ids(json: String) = c.query(json).collect().map(_.getLong(0)).toSeq
+    val rec = """{"recommend": {"positive": [[1, 0]], "strategy": "average_vector"}}"""
+    val flat = ids(s"""{"query": $rec, "limit": 3}""")
+    assert(flat == Seq(1L, 2L, 3L), flat)
+    def rrf(leaf: String) = ids(
+      s"""{"prefetch": [{"query": $leaf, "limit": 3}], "query": {"fusion": "rrf"},
+         |  "limit": 3}""".stripMargin)
+    assert(rrf(rec) == flat, "RRF over the recommend leaf")
+    assert(rrf("[1, 0]") == flat, "RRF over the nearest leaf")
+  }
+
+  test("query/groups ranks only the rows the flat query ranks (dense and sparse)") {
+    import org.apache.spark.sql.Row
+    import spark.implicits._
+    def scored(df: org.apache.spark.sql.DataFrame, idAt: Int) =
+      df.collect().map(r => (r.getLong(idAt),
+        Option(r.getAs[Number]("score")).map(_.doubleValue))).toSeq
+    def groupsEqualFlat(c: Collection, q: String): Unit = {
+      val flat = scored(c.query(s"""{$q, "limit": 10}"""), 0)
+      val groups = scored(c.queryGroups(
+        s"""{$q, "group_by": "g", "group_size": 1, "limit": 10}"""), 1)
+      assert(groups == flat, s"groups $groups vs flat $flat")
+    }
+    // Euclid: point 3 lacks the vector (a null score would lead ascending)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("vector", ArrayType(FloatType)), StructField("payload", StringType)))
+    val dense = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id", vectors = Seq(VectorConfig("", 2, Euclid)),
+        payloadTypes = Map("g" -> LongType)),
+      spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, Array(1.0f, 0.0f), """{"g":1}"""),
+        Row(2L, Array(0.0f, 1.0f), """{"g":2}"""),
+        Row(3L, null, """{"g":3}""")), schema))
+    groupsEqualFlat(dense, """"query": [1, 0]""")
+    // sparse: point 3 shares no dim with the query
+    val sparse = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id",
+        sparse = Seq(graft.sources.SparseVectorConfig("txt")),
+        payloadTypes = Map("g" -> LongType)),
+      Seq((1L, Seq(0), Seq(1.0f), """{"g":1}"""),
+          (2L, Seq(0, 1), Seq(0.5f, 1.0f), """{"g":2}"""),
+          (3L, Seq(2), Seq(1.0f), """{"g":3}"""))
+        .toDF("id", "i", "v", "payload")
+        .select(col("id"), struct(col("i").as("indices"), col("v").as("values"))
+          .as("sparse_txt"), col("payload")))
+    groupsEqualFlat(sparse,
+      """"query": {"indices": [0], "values": [1.0]}, "using": "txt"""")
+  }
 }
