@@ -216,7 +216,9 @@ object IvfRecallProbe {
       // single-query latency: median over `singleReps` distinct queries,
       // after one warm-up (the reference bench's per-iteration regime)
       def one(q: Seq[Double]): Unit = {
-        IvfIndex.search(assigned, "id", "vec", model, q, Dot, np, Top).collect(): Unit
+        Search.nearest(assigned, "id", Search.scoreExpr(Dot, col("vec"), typedLit(q)),
+          Dot.largerBetter, cells = Some(Search.Cells("centroid_id", model.probe(q, np))),
+          k = Top).collect(): Unit
       }
       one(queries.head)
       val singles = queries.take(singleReps).map(q => time(() => one(q))).sorted

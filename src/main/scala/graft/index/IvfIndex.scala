@@ -3,12 +3,10 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.model._
-import graft.ops.Search
-
 /** IVF (inverted-file) approximate nearest neighbor: KMeans centroids as a
   * partition column, query-time probe pruning as a plain filter, exact
-  * scoring within probed cells.
+  * scoring within probed cells ([[graft.ops.Search.nearest]] scans the
+  * [[Model.probe]] cells).
   *
   * This replaces qdrant's HNSW for the bulk/batch regime (SURVEY.md §2.6,
   * §7.1 step 9): at 100 TB the assignment column becomes the table's
@@ -214,28 +212,4 @@ object IvfIndex {
       assigned: DataFrame, path: String,
       mode: org.apache.spark.sql.SaveMode = org.apache.spark.sql.SaveMode.Overwrite): Unit =
     assigned.write.mode(mode).partitionBy("centroid_id").parquet(path)
-
-  /** Probe-pruned exact search: filter to nprobe nearest cells, then the
-    * standard exact top-k. With nprobe = model.k this IS the exact search.
-    * `pred` is the payload filter of a FILTERED ANN request — it ANDs into
-    * the same scan as the cell prune (partition prune + data filter on one
-    * parquet scan; the reference serves this online via `payload_m`
-    * filtered subgraphs / ACORN, `types.rs:622`). */
-  def search(
-      assigned: DataFrame,
-      idCol: String,
-      vecCol: String,
-      model: Model,
-      query: Seq[Double],
-      metric: Metric,
-      nprobe: Int,
-      k: Int = 10,
-      pred: Option[Column] = None): DataFrame = {
-    val cells = model.probe(query, nprobe)
-    val cellPred = col("centroid_id").isin(cells: _*)
-    val pruned = assigned.filter(pred.fold(cellPred)(cellPred && _))
-    Search.scoredTopK(pruned, idCol,
-      Search.scoreExpr(metric, col(vecCol), typedLit(query)), metric.largerBetter,
-      k = k)
-  }
 }

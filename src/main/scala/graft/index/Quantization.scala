@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.model._
 import graft.ops.Search
 
-/** Vector compression transforms + two-phase (approx → exact rescore)
-  * search, mirroring qdrant's quantization configs (SURVEY.md §2.6;
+/** Vector compression transforms and the approx scores of the two-phase
+  * (approx → exact rescore) search [[Search.nearest]] runs, mirroring
+  * qdrant's quantization configs (SURVEY.md §2.6;
   * scalar int8 `types.rs:930-985`, binary `types.rs:1036-1120`, rescore +
   * oversampling `types.rs:573-618`).
   *
@@ -62,25 +63,6 @@ object Quantization {
     }
   }
 
-  /** Two-phase search: approx top k·oversampling on the quantized column,
-    * exact rescore of those candidates on the original vectors. */
-  def searchScalarRescore(
-      encoded: DataFrame, // original cols + "qvec" int8 column
-      idCol: String,
-      vecCol: String,
-      query: Seq[Double],
-      metric: Metric,
-      p: ScalarParams,
-      k: Int = 10,
-      oversampling: Double = 3.0): DataFrame = {
-    val approxK = math.max(k, (k * oversampling).toInt)
-    val approx = Search.scoredTopK(encoded, idCol,
-      scalarScore(metric, col("qvec"), query, p), metric.largerBetter, k = approxK)
-    val cands = encoded.join(approx.select(idCol), Seq(idCol), "left_semi")
-    Search.scoredTopK(cands, idCol,
-      Search.scoreExpr(metric, col(vecCol), typedLit(query)), metric.largerBetter, k = k)
-  }
-
   /** Binary quantization: sign bits packed into array<long> (dim/64 words).
     * Query encoded the same; approx distance = hamming. One codegen'd
     * packing loop ([[graft.functions.BinaryEncodeExpr]]). */
@@ -104,23 +86,6 @@ object Quantization {
   def hammingScore(bcol: Column, queryWords: Seq[Long]): Column =
     aggregate(zip_with(bcol, typedLit(queryWords), (a, b) =>
       bit_count(a.bitwiseXOR(b))), lit(0), (acc, x) => acc + x)
-
-  def searchBinaryRescore(
-      encoded: DataFrame, // original cols + "bvec" packed column
-      idCol: String,
-      vecCol: String,
-      query: Seq[Double],
-      metric: Metric,
-      k: Int = 10,
-      oversampling: Double = 4.0): DataFrame = {
-    val approxK = math.max(k, (k * oversampling).toInt)
-    val approx = Search.scoredTopK(encoded, idCol,
-      hammingScore(col("bvec"), binaryQueryLiteral(query)).cast("double"),
-      largerBetter = false, k = approxK)
-    val cands = encoded.join(approx.select(idCol), Seq(idCol), "left_semi")
-    Search.scoredTopK(cands, idCol,
-      Search.scoreExpr(metric, col(vecCol), typedLit(query)), metric.largerBetter, k = k)
-  }
 
   // ===== multi-bit binary encodings (`BinaryQuantizationEncoding`:
   // OneBit / TwoBits / OneAndHalfBits — `types.rs:1036-1062`; encoder
@@ -203,29 +168,6 @@ object Quantization {
     packBitsScala(ps.map(_._1) ++ b2)
   }
 
-  /** Two-phase search over any packed multi-bit encoding with a
-    * same-as-storage query: approx rank = XOR popcount over the extended
-    * bit layout (ranking-equivalent to `calculate_metric`'s dim − 2·xor for
-    * every metric orientation after the sign flip), exact rescore after. */
-  def searchBinaryEncodedRescore(
-      encoded: DataFrame, // original cols + `bvecCol` packed column
-      idCol: String,
-      vecCol: String,
-      bvecCol: String,
-      queryWords: Seq[Long],
-      query: Seq[Double],
-      metric: Metric,
-      k: Int = 10,
-      oversampling: Double = 4.0): DataFrame = {
-    val approxK = math.max(k, (k * oversampling).toInt)
-    val approx = Search.scoredTopK(encoded, idCol,
-      hammingScore(col(bvecCol), queryWords).cast("double"),
-      largerBetter = false, k = approxK)
-    val cands = encoded.join(approx.select(idCol), Seq(idCol), "left_semi")
-    Search.scoredTopK(cands, idCol,
-      Search.scoreExpr(metric, col(vecCol), typedLit(query)), metric.largerBetter, k = k)
-  }
-
   /** Asymmetric query encodings (`BinaryQuantizationQueryEncoding::
     * Scalar4bits/Scalar8bits`, `types.rs:1194`): the EXTENDED query (2-bit:
     * q++q; 1.5-bit: q ++ pairwise max — `encode_scalar_query_vector`
@@ -258,27 +200,6 @@ object Quantization {
         org.apache.spark.sql.GraftShim.expression(bvec),
         qs.map(q => (m - 2 * q).toDouble).toArray,
         qs.sum.toDouble, m, dim))
-  }
-
-  /** Two-phase search with an asymmetric scalar-encoded query over a 2-bit
-    * stored encoding. */
-  def searchBinaryAsymRescore(
-      encoded: DataFrame, // original cols + "b2vec" (TwoBits packed)
-      idCol: String,
-      vecCol: String,
-      query: Seq[Double],
-      metric: Metric,
-      bits: Int,
-      k: Int = 10,
-      oversampling: Double = 4.0): DataFrame = {
-    val qs = scalarQueryLiteral(extendQuery2(query), bits)
-    val approxK = math.max(k, (k * oversampling).toInt)
-    val approx = Search.scoredTopK(encoded, idCol,
-      asymmetricScore(col("b2vec"), qs, bits, query.length),
-      largerBetter = true, k = approxK)
-    val cands = encoded.join(approx.select(idCol), Seq(idCol), "left_semi")
-    Search.scoredTopK(cands, idCol,
-      Search.scoreExpr(metric, col(vecCol), typedLit(query)), metric.largerBetter, k = k)
   }
 
   // ===== Product quantization (ref `ProductQuantizationConfig`
@@ -360,23 +281,59 @@ object Quantization {
       graft.functions.PqAdcScoreExpr(
         org.apache.spark.sql.GraftShim.expression(codeCol), p.lut(query, metric)))
 
-  /** Two-phase PQ search: ADC approx top k·oversampling on the byte codes,
-    * exact rescore on the original vectors (`types.rs:573-618`). */
-  def searchPqRescore(
-      encoded: DataFrame, // original cols + "pqcode" binary column
-      idCol: String,
-      vecCol: String,
+  /** The approx phase ([[Search.Approx]]) of a declared quantization
+    * `spec` with fitted params `qp`, for `query` on the quantized column
+    * `qcol`: int8 scores the dequantized metric, binary the XOR popcount
+    * over its packed bit layout (ranking-equivalent to `calculate_metric`'s
+    * dim − 2·xor for every metric orientation), product the ADC sum. With
+    * `rescore = false` the approx scores are served, so they are mapped
+    * into the metric's orientation first (the reference converts quantized
+    * scores via `calculate_metric` before serving): a raw hamming distance
+    * is smaller-better, and a metric-space score threshold must not apply
+    * inverted. The one_bit ±1 mapping gives dot ≈ dim − 2·h,
+    * ‖a−b‖₂ ≈ 2√h and ‖a−b‖₁ ≈ 2h, order-preserving per metric, so only
+    * the served value and the threshold space change. */
+  def approx(
+      spec: graft.sources.QuantizationSpec,
+      qp: graft.storage.Collection.QuantParams,
+      qcol: Column,
       query: Seq[Double],
       metric: Metric,
-      p: PqParams,
-      k: Int = 10,
-      oversampling: Double = 4.0): DataFrame = {
-    val approxK = math.max(k, (k * oversampling).toInt)
-    val approx = Search.scoredTopK(encoded, idCol,
-      pqAdcScore(col("pqcode"), query, metric, p),
-      largerBetter = true, k = approxK)
-    val cands = encoded.join(approx.select(idCol), Seq(idCol), "left_semi")
-    Search.scoredTopK(cands, idCol,
-      Search.scoreExpr(metric, col(vecCol), typedLit(query)), metric.largerBetter, k = k)
+      oversampling: Double,
+      rescore: Boolean): Search.Approx = {
+    import graft.storage.Collection.{BinaryQP, PqQP, ScalarQP}
+    val (score, largerBetter) = (spec.kind, qp) match {
+      case ("scalar", ScalarQP(mn, mx)) =>
+        (scalarScore(metric, qcol, query, ScalarParams(mn, mx)), metric.largerBetter)
+      case ("binary", BinaryQP(mean, std)) =>
+        val words = spec.encoding match {
+          case "one_bit" => binaryQueryLiteral(query)
+          case "two_bits" =>
+            binary2QueryLiteral(query, BinaryStats(mean.toArray, std.toArray))
+          case "one_and_half_bits" =>
+            binary15QueryLiteral(query, BinaryStats(mean.toArray, std.toArray))
+          case other =>
+            throw new IllegalArgumentException(s"unknown binary encoding '$other'")
+        }
+        (hammingScore(qcol, words).cast("double"), false)
+      case ("product", pq: PqQP) =>
+        // ADC partials are dot (larger-better) or −distance for
+        // Euclid/Manhattan (`PqParams.lut`) — larger-better either way
+        (pqAdcScore(qcol, query, metric, pq.toParams), true)
+      case (k, p) =>
+        throw new IllegalArgumentException(s"quantization kind/params mismatch: $k / $p")
+    }
+    val (served, servedLb) =
+      if (rescore) (score, largerBetter)
+      else if (spec.kind == "binary") metric match {
+        case Dot | Cosine => (lit(query.length.toDouble) - lit(2.0) * score, true)
+        case Euclid => (lit(2.0) * sqrt(score), false)
+        case Manhattan => (lit(2.0) * score, false)
+      }
+      // ADC partials for Euclid/Manhattan are NEGATED distances — serve
+      // the (approximate) distance, smaller-better
+      else if (spec.kind == "product" && !metric.largerBetter) (-score, false)
+      else (score, largerBetter)
+    Search.Approx(served, servedLb, oversampling, rescore)
   }
 }

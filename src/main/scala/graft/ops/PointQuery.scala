@@ -123,10 +123,12 @@ object PointQuery {
     * ignore` bypass the quantized two-phase route, `quantization.rescore
     * = false` returns the approx ranking without the exact second phase,
     * `oversampling` sizes the approx candidate pool, and `hnsw_ef`
-    * overrides the declared IVF nprobe. `indexed_only` is accepted and
-    * ignored. Interpreted by the quantization- and IVF-aware route of a
-    * Nearest root (`storage/Collection.knn`); prefetch leaves and the
-    * other kinds always scan exactly. */
+    * overrides the declared IVF nprobe (`exact` also skips the IVF cell
+    * prune). `indexed_only` is accepted and ignored. Like the reference's,
+    * they apply to every dense Nearest node without prefetches, root or
+    * prefetch leaf: the collection turns them into the node's [[Query.cells]]
+    * and [[Query.approx]]. Rescore parents and the other kinds scan
+    * exactly. */
   final case class SearchParams(
       exact: Boolean = false,
       quantIgnore: Boolean = false,
@@ -162,7 +164,14 @@ object PointQuery {
         * `tests/openapi/test_query_full.py:160`). Kept OUT of [[filter]]
         * until [[resolveExclusion]] so the strict-mode gate counts only the
         * USER's conditions — the reference injects after verification. */
-      excludeIds: Seq[Any] = Nil)
+      excludeIds: Seq[Any] = Nil,
+      /** The declared IVF cells this node scans, probed by the collection
+        * from [[params]] (None = every cell). */
+      cells: Option[Search.Cells] = None,
+      /** The quantized approx phase this node searches in, from the
+        * collection's fitted params and [[params]] (None = one exact
+        * phase). */
+      approx: Option[Search.Approx] = None)
 
   /** Merge the collected referenced-id exclusion into the root filter
     * (ref `exclude_referenced_ids`, `collection_query.rs:523-531`). The
@@ -492,8 +501,8 @@ object PointQuery {
             Some(arrays_overlap(col(tc), typedLit(terms.map(_._1))))
           case _ => None
         }).map(c => pred.fold(c)(_ && c)).orElse(pred)
-        Search.scoredTopK(withPrefetchCandidates(points), idCol, expr,
-          largerBetter, leafPred,
+        Search.nearest(withPrefetchCandidates(points), idCol, expr,
+          largerBetter, leafPred, q.cells, q.approx,
           k = q.limit, offset = q.offset, scoreThreshold = q.scoreThreshold)
     }
   }

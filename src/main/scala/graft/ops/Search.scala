@@ -94,6 +94,57 @@ object Search {
       Some(pred.fold(guard)(_ && guard)), k, offset, scoreThreshold, extraCols)
   }
 
+  /** The IVF cells a nearest search scans: the table's cell column and
+    * the probed cell ids. */
+  final case class Cells(col: String, ids: Seq[Int])
+
+  /** The approximate first phase of a two-phase nearest search
+    * (`QuantizationSearchParams`, `types.rs:573-618`): `score` ranks the
+    * points, usually on a quantized column, in `largerBetter` orientation.
+    * With `rescore`, the top (k + offset)·`oversampling` are rescored
+    * exactly; without it, `score` is the served score and is in the
+    * metric's orientation. */
+  final case class Approx(score: Column, largerBetter: Boolean,
+      oversampling: Double, rescore: Boolean = true)
+
+  /** Nearest-k of the exact `score` over the `filter` rows of `points`,
+    * scanning only the probed IVF `cells` and, with `approx`, in two
+    * phases: approx top k·oversampling, then an exact rescore of those
+    * candidates, which a semi-join re-reads (with `approx.rescore` off,
+    * the approx ranking and scores are the result). With neither it is
+    * [[scoredTopK]]. The cell prune is a filter on the cell column: on a
+    * table partitioned by that column it lands in `PartitionFilters`, so
+    * unprobed cells are never listed; it ANDs with `filter` on one scan.
+    * IVF cells with a quantized approx phase are the IVFADC layout. */
+  def nearest(
+      points: DataFrame,
+      idCol: String,
+      score: Column,
+      largerBetter: Boolean,
+      filter: Option[Column] = None,
+      cells: Option[Cells] = None,
+      approx: Option[Approx] = None,
+      k: Int = 10,
+      offset: Int = 0,
+      scoreThreshold: Option[Double] = None): DataFrame = {
+    val cellPred = cells.map(c => col(c.col).isin(c.ids: _*))
+    val pred = (filter ++ cellPred).reduceOption(_ && _)
+    approx match {
+      case Some(a) if a.rescore =>
+        val fetch = k + offset
+        val approxTop = scoredTopK(points, idCol, a.score, a.largerBetter, pred,
+          k = math.max(fetch, (fetch * a.oversampling).toInt))
+        // the candidates live inside the probed cells: prune the rescore
+        // scan to them too, or the semi-join re-reads every cell
+        val cands = cellPred.fold(points)(points.filter)
+          .join(approxTop.select(idCol), Seq(idCol), "left_semi")
+        scoredTopK(cands, idCol, score, largerBetter, None, k, offset, scoreThreshold)
+      case _ =>
+        val (served, lb) = approx.fold((score, largerBetter))(a => (a.score, a.largerBetter))
+        scoredTopK(points, idCol, served, lb, pred, k, offset, scoreThreshold)
+    }
+  }
+
   /** Per-query top-k reduction over a scored (queryId, id, score) stream —
     * the batch-KNN merge stage. Map-side bounded either way: LongType ids
     * reduce through [[TopK.TopKAgg]] (ObjectHashAggregate partial combine —
@@ -146,26 +197,12 @@ object Search {
     batchRank(scored, queryIdCol, idCol, k, metric.largerBetter)
   }
 
-  /** Float32 similarity of `v` to a literal query — the per-example
-    * similarity of the raw-table forms below (PointQuery scores stored
-    * columns of every width through `PointQuery.similarity`). */
-  private def sim(metric: Metric, v: Column)(q: Seq[Double]): Column =
-    similarity(metric, v, typedLit(q))
-
-  /** Recommend, `best_score`: if max(sim(pos)) > max(sim(neg)) then
-    * σ(max_pos) else −σ(max_neg), with σ = scaled fast sigmoid; always
-    * larger-better. Ref `reco_query.rs:63-90`, `query_enum.rs:31-40`. */
-  def bestScoreExpr(
-      metric: Metric, v: Column,
-      positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]): Column = {
-    require(positives.nonEmpty || negatives.nonEmpty,
-      "recommend requires at least one example")
-    bestScoreCombine(positives.map(sim(metric, v)), negatives.map(sim(metric, v)))
-  }
-
-  /** The best_score combine over per-example similarity columns, whatever
-    * the vector kind (the reference's `RecoBestScoreQuery` is
-    * similarity-representation-agnostic).
+  /** Recommend, `best_score`, over per-example similarity columns: if
+    * max(sim(pos)) > max(sim(neg)) then σ(max_pos) else −σ(max_neg), with
+    * σ = scaled fast sigmoid; always larger-better, whatever the vector
+    * kind (the reference's `RecoBestScoreQuery` is
+    * similarity-representation-agnostic; `reco_query.rs:63-90`,
+    * `query_enum.rs:31-40`).
     * positives are OPTIONAL (`test_recommendation_multivector.py::
     * test_multi_best_score_works_with_only_negatives`): with none, every
     * point scores −σ(max_neg) — ranked by least-bad negative match. */
@@ -178,28 +215,16 @@ object Search {
       .otherwise(-scaledFastSigmoid(maxNeg))
   }
 
-  /** Recommend, `sum_scores`: Σ sim(pos) − Σ sim(neg).
-    * Ref `reco_query.rs` (`RecoSumScoresQuery`). */
-  def sumScoresExpr(
-      metric: Metric, v: Column,
-      positives: Seq[Seq[Double]], negatives: Seq[Seq[Double]]): Column =
-    sumScoresCombine(positives.map(sim(metric, v)), negatives.map(sim(metric, v)))
-
-  /** The sum_scores combine over per-example similarity columns. */
+  /** Recommend, `sum_scores`, over per-example similarity columns:
+    * Σ sim(pos) − Σ sim(neg) (`reco_query.rs`, `RecoSumScoresQuery`). */
   def sumScoresCombine(posSims: Seq[Column], negSims: Seq[Column]): Column =
     posSims.reduceOption(_ + _).getOrElse(lit(0.0d)) -
       negSims.reduceOption(_ + _).getOrElse(lit(0.0d))
 
-  /** Discover: Σ_pairs sign(sim(pos)−sim(neg)) + σ(sim(target)); integer rank
-    * dominates, target similarity tiebreaks within (0,1).
-    * Ref `discover_query.rs:44-74`. */
-  def discoverExpr(
-      metric: Metric, v: Column,
-      target: Seq[Double], pairs: Seq[(Seq[Double], Seq[Double])]): Column =
-    discoverCombine(sim(metric, v)(target),
-      pairs.map { case (p, n) => (sim(metric, v)(p), sim(metric, v)(n)) })
-
-  /** The discover combine over per-example similarity columns. */
+  /** Discover over per-example similarity columns:
+    * Σ_pairs sign(sim(pos)−sim(neg)) + σ(sim(target)); the integer rank
+    * dominates, target similarity tiebreaks within (0,1)
+    * (`discover_query.rs:44-74`). */
   def discoverCombine(targetSim: Column,
       pairSims: Seq[(Column, Column)]): Column = {
     val rank = pairSims.map { case (sp, sn) =>
@@ -208,25 +233,15 @@ object Search {
     rank.cast("double") + scaledFastSigmoid(targetSim)
   }
 
-  /** Relevance feedback, `naive` strategy:
-    * `a·sim(target) + Σ_pairs (Δscore^b · c)·(sim(pos) − sim(neg))` where
-    * pairs are all ordered feedback permutations with feedback-score
+  /** Relevance feedback, `naive` strategy, over per-example similarity
+    * columns: `a·sim(target) + Σ_pairs (Δscore^b · c)·(sim(pos) − sim(neg))`
+    * where pairs are all ordered feedback permutations with feedback-score
     * difference Δscore > 0 (margin 0). Pair extraction happens at the
-    * driver (feedback lists are tiny); the per-point score is one Catalyst
-    * expression. Ref `lib/segment/src/vector_storage/query/feedback_query.rs`
-    * (`extract_context_pairs` :118-145, `score_by` :195-230);
-    * `FeedbackStrategy::Naive` `collection_query.rs:202-220`. */
-  def feedbackNaiveExpr(
-      metric: Metric, v: Column,
-      target: Seq[Double],
-      feedback: Seq[(Seq[Double], Double)],
-      a: Double, b: Double, c: Double): Column =
-    feedbackNaiveCombine(sim(metric, v)(target),
-      feedback.map { case (fv, sc) => (sim(metric, v)(fv), sc) }, a, b, c)
-
-  /** The naive-feedback combine over per-example similarity columns (the
-    * reference's custom queries are scorer-representation-agnostic,
-    * `query_scorer/multi_custom_query_scorer.rs`). */
+    * driver (feedback lists are tiny). Ref `feedback_query.rs`
+    * (`extract_context_pairs` :118-145, `score_by` :195-230),
+    * `FeedbackStrategy::Naive` `collection_query.rs:202-220`; the
+    * reference's custom queries are scorer-representation-agnostic
+    * (`query_scorer/multi_custom_query_scorer.rs`). */
   def feedbackNaiveCombine(targetSim: Column,
       feedbackSims: Seq[(Column, Double)],
       a: Double, b: Double, c: Double): Column = {
@@ -242,14 +257,9 @@ object Search {
     * (`context_query.rs:54`). */
   val ContextMargin: Double = math.ulp(1.0f).toDouble
 
-  /** Context: Σ_pairs fastSigmoid(min(sim(pos)−sim(neg)−ε, 0)) — zero inside
-    * the "good zone", negative outside. Ref `context_query.rs:36-120`. */
-  def contextExpr(
-      metric: Metric, v: Column,
-      pairs: Seq[(Seq[Double], Seq[Double])]): Column =
-    contextCombine(pairs.map { case (p, n) => (sim(metric, v)(p), sim(metric, v)(n)) })
-
-  /** The context combine over per-pair similarity columns. */
+  /** Context over per-pair similarity columns:
+    * Σ_pairs fastSigmoid(min(sim(pos)−sim(neg)−ε, 0)) — zero inside the
+    * "good zone", negative outside (`context_query.rs:36-120`). */
   def contextCombine(pairSims: Seq[(Column, Column)]): Column =
     pairSims.map { case (sp, sn) =>
       val diff = sp - sn - lit(ContextMargin)

@@ -27,6 +27,10 @@ object IndexQueries {
   private def v7(s: SparkSession, dir: String): Seq[Double] =
     Tables.embeddingOf(s, dir, 7L)
 
+  /** The exact score of `q` on the Float32 `embedding` column. */
+  private def embScore(metric: Metric, q: Seq[Double]): Column =
+    Search.scoreExpr(metric, col("embedding"), typedLit(q))
+
   /** Derived oracle for lossy ANN paths: recall@k against the engine's own
     * exact scan, reported as a deterministic one-row summary the DuckDB
     * oracle asserts (`recall_ok = found >= min_required`). Turns the lossy
@@ -104,15 +108,17 @@ object IndexQueries {
       val e = emb(s, dir)
       val model = ivfModel(s, dir, 8)
       val assigned = IvfIndex.assign(e, "embedding", model)
-      IvfIndex.search(assigned, "vec_id", "embedding", model, v7(s, dir),
-        Dot, nprobe = model.k, k = 10)
+      Search.nearest(assigned, "vec_id", embScore(Dot, v7(s, dir)), Dot.largerBetter,
+        cells = Some(Search.Cells("centroid_id", model.probe(v7(s, dir), model.k))),
+        k = 10)
     }),
     "ivf_search_probe2" -> ((s, dir) => {
       val e = emb(s, dir)
       val model = ivfModel(s, dir, 8)
       val assigned = IvfIndex.assign(e, "embedding", model)
-      val ann = IvfIndex.search(assigned, "vec_id", "embedding", model, v7(s, dir),
-        Dot, nprobe = 2, k = 10)
+      val ann = Search.nearest(assigned, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter,
+        cells = Some(Search.Cells("centroid_id", model.probe(v7(s, dir), 2))), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 3)
@@ -127,8 +133,9 @@ object IndexQueries {
       val model = ivfModel(s, dir, 8)
       val assigned = IvfIndex.assign(e, "embedding", model)
       val pred = pmod(col("label"), lit(2)) === 0
-      val ann = IvfIndex.search(assigned, "vec_id", "embedding", model,
-        v7(s, dir), Dot, nprobe = 4, k = 10, pred = Some(pred))
+      val ann = Search.nearest(assigned, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter, filter = Some(pred),
+        cells = Some(Search.Cells("centroid_id", model.probe(v7(s, dir), 4))), k = 10)
       recallCheck(s, ann,
         Search.knn(e.filter(pred), "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 4)
@@ -137,8 +144,10 @@ object IndexQueries {
       val e = emb(s, dir)
       val p = scalarParams(s, dir)
       val enc = e.withColumn("qvec", Quantization.encodeScalar(col("embedding"), p))
-      val ann = Quantization.searchScalarRescore(enc, "vec_id", "embedding",
-        v7(s, dir), Dot, p, k = 10, oversampling = 3.0)
+      val ann = Search.nearest(enc, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter, approx = Some(Search.Approx(
+          Quantization.scalarScore(Dot, col("qvec"), v7(s, dir), p), Dot.largerBetter,
+          oversampling = 3.0)), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 8)
@@ -146,8 +155,11 @@ object IndexQueries {
     "quantized_binary_rescore" -> ((s, dir) => {
       val e = emb(s, dir)
       val enc = e.withColumn("bvec", Quantization.encodeBinary(col("embedding"), 64))
-      val ann = Quantization.searchBinaryRescore(enc, "vec_id", "embedding",
-        v7(s, dir), Cosine, k = 10, oversampling = 4.0)
+      val ann = Search.nearest(enc, "vec_id", embScore(Cosine, v7(s, dir)),
+        Cosine.largerBetter, approx = Some(Search.Approx(
+          Quantization.hammingScore(col("bvec"),
+            Quantization.binaryQueryLiteral(v7(s, dir))).cast("double"),
+          largerBetter = false, oversampling = 4.0)), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Cosine, k = 10),
         "vec_id", k = 10, minRequired = 1)
@@ -160,9 +172,11 @@ object IndexQueries {
       val st = binStats(s, dir)
       val enc = e.withColumn("b2vec",
         Quantization.encodeBinary2(col("embedding"), st))
-      val ann = Quantization.searchBinaryEncodedRescore(enc, "vec_id",
-        "embedding", "b2vec", Quantization.binary2QueryLiteral(v7(s, dir), st),
-        v7(s, dir), Dot, k = 10, oversampling = 4.0)
+      val ann = Search.nearest(enc, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter, approx = Some(Search.Approx(
+          Quantization.hammingScore(col("b2vec"),
+            Quantization.binary2QueryLiteral(v7(s, dir), st)).cast("double"),
+          largerBetter = false, oversampling = 4.0)), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 9)
@@ -174,9 +188,11 @@ object IndexQueries {
       val st = binStats(s, dir)
       val enc = e.withColumn("b15vec",
         Quantization.encodeBinary15(col("embedding"), st))
-      val ann = Quantization.searchBinaryEncodedRescore(enc, "vec_id",
-        "embedding", "b15vec", Quantization.binary15QueryLiteral(v7(s, dir), st),
-        v7(s, dir), Dot, k = 10, oversampling = 4.0)
+      val ann = Search.nearest(enc, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter, approx = Some(Search.Approx(
+          Quantization.hammingScore(col("b15vec"),
+            Quantization.binary15QueryLiteral(v7(s, dir), st)).cast("double"),
+          largerBetter = false, oversampling = 4.0)), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 5)
@@ -189,8 +205,12 @@ object IndexQueries {
       val st = binStats(s, dir)
       val enc = e.withColumn("b2vec",
         Quantization.encodeBinary2(col("embedding"), st))
-      val ann = Quantization.searchBinaryAsymRescore(enc, "vec_id",
-        "embedding", v7(s, dir), Dot, bits = 8, k = 10, oversampling = 4.0)
+      val qs = Quantization.scalarQueryLiteral(
+        Quantization.extendQuery2(v7(s, dir)), bits = 8)
+      val ann = Search.nearest(enc, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter, approx = Some(Search.Approx(
+          Quantization.asymmetricScore(col("b2vec"), qs, bits = 8, v7(s, dir).length),
+          largerBetter = true, oversampling = 4.0)), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 9)
@@ -226,46 +246,19 @@ object IndexQueries {
     // hash-matches the plain exact scan — a PRECISE oracle, not a recall
     // contract. Proves the routing knob, parsed off the request body,
     // actually reaches the executor.
-    "api_query_params_exact" -> ((s, dir) => {
-      import graft.api.RequestCodec
-      import graft.ops.PointQuery
-      val coll = scalarQuantColl(s, dir)
-      val ctx = RequestCodec.Ctx(spaces =
-        Map("" -> RequestCodec.VectorSpace("vector", Dot)))
-      val q = RequestCodec.parseQueryRequest(
+    "api_query_params_exact" -> ((s, dir) =>
+      scalarQuantColl(s, dir).query(
         s"""{"query": {"nearest": ${v7(s, dir).mkString("[", ",", "]")}},
-           |  "limit": 10, "params": {"exact": true}}""".stripMargin, ctx)
-      val qv = q.scoring match {
-        case PointQuery.Nearest(_, PointQuery.DenseVector(v)) => v
-        case other => sys.error(s"expected nearest, got $other")
-      }
-      val sp = q.params.getOrElse(PointQuery.SearchParams())
-      coll.knn("", qv, k = q.limit,
-        quantized = !(sp.exact || sp.quantIgnore),
-        oversampling = sp.oversampling.getOrElse(3.0), rescore = sp.rescore)
-    }),
+           |  "limit": 10, "params": {"exact": true}}""".stripMargin)),
     // Wire `params.quantization = {oversampling, rescore: false}`: the
     // approx ranking IS the result (no exact second phase) — recall
     // contract against the exact scan.
     "api_query_params_quantized" -> ((s, dir) => {
-      import graft.api.RequestCodec
-      import graft.ops.PointQuery
-      val coll = scalarQuantColl(s, dir)
-      val ctx = RequestCodec.Ctx(spaces =
-        Map("" -> RequestCodec.VectorSpace("vector", Dot)))
-      val q = RequestCodec.parseQueryRequest(
+      val ann = scalarQuantColl(s, dir).query(
         s"""{"query": {"nearest": ${v7(s, dir).mkString("[", ",", "]")}},
            |  "limit": 10,
            |  "params": {"quantization": {"oversampling": 4.0, "rescore": false}}}"""
-          .stripMargin, ctx)
-      val sp = q.params.get
-      val qv = q.scoring match {
-        case PointQuery.Nearest(_, PointQuery.DenseVector(v)) => v
-        case other => sys.error(s"expected nearest, got $other")
-      }
-      val ann = coll.knn("", qv, k = q.limit,
-        quantized = !(sp.exact || sp.quantIgnore),
-        oversampling = sp.oversampling.getOrElse(3.0), rescore = sp.rescore)
+          .stripMargin)
       recallCheck(s, ann,
         Search.knn(emb(s, dir), "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 8)
@@ -479,8 +472,10 @@ object IndexQueries {
       val e = emb(s, dir)
       val p = pqParams(s, dir)
       val enc = e.withColumn("pqcode", Quantization.encodePq(col("embedding"), p))
-      val ann = Quantization.searchPqRescore(enc, "vec_id", "embedding",
-        v7(s, dir), Dot, p, k = 10, oversampling = 4.0)
+      val ann = Search.nearest(enc, "vec_id", embScore(Dot, v7(s, dir)),
+        Dot.largerBetter, approx = Some(Search.Approx(
+          Quantization.pqAdcScore(col("pqcode"), v7(s, dir), Dot, p),
+          largerBetter = true, oversampling = 4.0)), k = 10)
       recallCheck(s, ann,
         Search.knn(e, "vec_id", "embedding", v7(s, dir), Dot, k = 10),
         "vec_id", k = 10, minRequired = 6)
@@ -798,8 +793,8 @@ object IndexQueries {
       val exact = Search.knn(e, "vec_id", "embedding", q, Dot, k = 10)
         .select("vec_id")
       Seq(1, 2, 4, 8).map { np =>
-        val ann = IvfIndex.search(assigned, "vec_id", "embedding", model, q,
-          Dot, nprobe = np, k = 10)
+        val ann = Search.nearest(assigned, "vec_id", embScore(Dot, q), Dot.largerBetter,
+          cells = Some(Search.Cells("centroid_id", model.probe(q, np))), k = 10)
         (np, ann.select("vec_id").join(exact, "vec_id").count())
       }.toDF("nprobe", "found")
     }),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -23,6 +23,14 @@ object RankQueries {
     Tables.load(s, dir, "embeddings")
   private def v(s: SparkSession, dir: String, id: Long): Seq[Double] =
     Tables.embeddingOf(s, dir, id)
+
+  /** The Float32 embeddings column as a Dot query space. */
+  private val Emb = PointQuery.Space("embedding", Dot)
+  private def dense(x: Seq[Double]): PointQuery.QueryVector = PointQuery.DenseVector(x)
+  /** A custom query kind's score over [[Emb]], combined from per-example
+    * similarities like the query executor's. */
+  private def embScore(q: PointQuery.VectorScoring): Column =
+    PointQuery.scoringExpr(q)._1
 
   /** The dense `average_vector` recommend query. */
   private def avgVector(pos: Seq[Seq[Double]], neg: Seq[Seq[Double]]): Seq[Double] = {
@@ -88,9 +96,9 @@ object RankQueries {
     }),
     "recommend_best_score" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.bestScoreExpr(Dot, col("embedding"),
-        positives = Seq(v(s, dir, 1), v(s, dir, 2), v(s, dir, 3)),
-        negatives = Seq(v(s, dir, 4)))
+      val expr = embScore(PointQuery.Recommend(Emb, "best_score",
+        positives = Seq(v(s, dir, 1), v(s, dir, 2), v(s, dir, 3)).map(dense),
+        negatives = Seq(dense(v(s, dir, 4)))))
       Search.scoredTopK(e, "vec_id", expr, largerBetter = true, k = 10)
     }),
     // best_score with ONLY negatives (`test_recommendation_multivector.py::
@@ -99,8 +107,8 @@ object RankQueries {
     // −σ(max_neg) — ranked by least-bad negative match, all in (−1, 0).
     "recommend_best_only_negatives" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.bestScoreExpr(Dot, col("embedding"),
-        positives = Nil, negatives = Seq(v(s, dir, 4), v(s, dir, 11)))
+      val expr = embScore(PointQuery.Recommend(Emb, "best_score",
+        positives = Nil, negatives = Seq(v(s, dir, 4), v(s, dir, 11)).map(dense)))
       Search.scoredTopK(e, "vec_id", expr, largerBetter = true, k = 10)
     }),
     // Multivector `average_vector` recommend (`recommendations.rs:59-70,
@@ -132,30 +140,31 @@ object RankQueries {
     }),
     "recommend_sum_scores" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.sumScoresExpr(Dot, col("embedding"),
-        positives = Seq(v(s, dir, 1), v(s, dir, 2), v(s, dir, 3)),
-        negatives = Seq(v(s, dir, 4)))
+      val expr = embScore(PointQuery.Recommend(Emb, "sum_scores",
+        positives = Seq(v(s, dir, 1), v(s, dir, 2), v(s, dir, 3)).map(dense),
+        negatives = Seq(dense(v(s, dir, 4)))))
       Search.scoredTopK(e, "vec_id", expr, largerBetter = true, k = 10)
     }),
     "discover" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.discoverExpr(Dot, col("embedding"),
-        target = v(s, dir, 5),
-        pairs = Seq((v(s, dir, 10), v(s, dir, 20)), (v(s, dir, 30), v(s, dir, 40))))
+      val expr = embScore(PointQuery.Discover(Emb, target = dense(v(s, dir, 5)),
+        pairs = Seq((dense(v(s, dir, 10)), dense(v(s, dir, 20))),
+          (dense(v(s, dir, 30)), dense(v(s, dir, 40))))))
       Search.scoredTopK(e, "vec_id", expr, largerBetter = true, k = 10)
     }),
     "context" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.contextExpr(Dot, col("embedding"),
-        pairs = Seq((v(s, dir, 10), v(s, dir, 20)), (v(s, dir, 30), v(s, dir, 40))))
+      val expr = embScore(PointQuery.Context(Emb,
+        pairs = Seq((dense(v(s, dir, 10)), dense(v(s, dir, 20))),
+          (dense(v(s, dir, 30)), dense(v(s, dir, 40))))))
       Search.scoredTopK(e, "vec_id", expr, largerBetter = true, k = 10)
     }),
     "feedback_naive" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.feedbackNaiveExpr(Dot, col("embedding"),
-        target = v(s, dir, 5),
-        feedback = Seq((v(s, dir, 10), 0.9), (v(s, dir, 20), 0.4), (v(s, dir, 30), 0.1)),
-        a = 1.0, b = 2.0, c = 0.5)
+      val expr = embScore(PointQuery.Feedback(Emb, target = dense(v(s, dir, 5)),
+        feedback = Seq((dense(v(s, dir, 10)), 0.9), (dense(v(s, dir, 20)), 0.4),
+          (dense(v(s, dir, 30)), 0.1)),
+        a = 1.0, b = 2.0, c = 0.5))
       Search.scoredTopK(e, "vec_id", expr, largerBetter = true, k = 10)
     }),
     "fusion_rrf" -> ((s, dir) => {
@@ -188,9 +197,8 @@ object RankQueries {
     // ranking runs on the discover score expression, same two-window plan.
     "group_by_discover" -> ((s, dir) => {
       val e = emb(s, dir)
-      val expr = Search.discoverExpr(Dot, col("embedding"),
-        target = v(s, dir, 5),
-        pairs = Seq((v(s, dir, 10), v(s, dir, 20))))
+      val expr = embScore(PointQuery.Discover(Emb, target = dense(v(s, dir, 5)),
+        pairs = Seq((dense(v(s, dir, 10)), dense(v(s, dir, 20))))))
       GroupBy.groupBySearch(e, "vec_id", expr, largerBetter = true,
         groupByField = "label", resolver = new TypedResolver(e.schema, "vec_id"),
         groupSize = 2, groups = 4)

@@ -640,7 +640,9 @@ final class Collection(
     * default; `QuantizationSearchParams.ignore` opts out,
     * `types.rs:573-618`), search is TWO-PHASE: approx top
     * k·oversampling on the ingest-materialized quantized column →
-    * exact rescore of those candidates on the original vectors. */
+    * exact rescore of those candidates on the original vectors. Runs as a
+    * dense Nearest through the query executor, the knobs being its wire
+    * `SearchParams` ([[withIndexes]]). */
   def knn(
       vectorName: String,
       query: Seq[Double],
@@ -654,78 +656,20 @@ final class Collection(
         * skip the exact second phase — the approx ranking and its scores
         * ARE the result (the reference serves quantized scores then). */
       rescore: Boolean = true,
-      /** `SearchParams.exact = true`: bypass the declared ANN index (and
-        * quantization, which the caller controls via `quantized`) — full
-        * exact scan. */
+      /** `SearchParams.exact = true`: bypass the declared ANN index and
+        * quantization — full exact scan. */
       exact: Boolean = false,
       /** Per-request nprobe override for a declared [[graft.sources.IvfSpec]]
         * (`SearchParams.hnsw_ef` — the recall knob). */
       nprobe: Option[Int] = None): DataFrame = {
+    import graft.ops.PointQuery
     val vc = config.vectorConfig(vectorName)
-    val df = read()
-    val score = VectorCodec.scoreExpr(
-      vc.datatype, vc.metric, col(config.vectorCol(vectorName)), query)
-    val guard = col(config.vectorCol(vectorName)).isNotNull
-    // declared IVF + not-exact: the probe prune is a filter on the table's
-    // PARTITION column, so it lands in PartitionFilters — unprobed cells
-    // are pruned at the directory listing, never scanned. It ANDs with the
-    // payload filter on the same scan, and composes with the quantized
-    // two-phase below (probe-pruned ADC + exact rescore = IVFADC).
-    val annPred: Option[Column] = probedCells(vectorName, query, exact, nprobe)
-      .map(cells => col(config.cellCol(vectorName)).isin(cells: _*))
-    val pred = Some(annPred.foldLeft(
-      filter.map(f => new FilterCompiler(resolver(df)).compile(f))
-        .fold(guard)(_ && guard))(_ && _))
-    val qc = config.quantCol(vectorName)
-    (if (quantized) vc.quantization else None) match {
-      case Some(spec) if df.columns.contains(qc) =>
-        val qp = quantParams.getOrElse(vectorName,
-          throw new IllegalStateException(
-            s"quantization declared for '$vectorName' but no fitted params at ${quantSidecar.path}"))
-        val (approxScore, approxLargerBetter) =
-          Collection.quantApproxScore(spec, qp, col(qc), query, vc.metric)
-        if (!rescore) {
-          // Served approx scores must be METRIC-oriented (the reference
-          // converts quantized scores via `calculate_metric` before
-          // serving): a raw hamming distance is smaller-better, so a
-          // metric-space scoreThreshold would apply inverted. The one_bit
-          // ±1 mapping gives dot ≈ dim − 2·h, ‖a−b‖₂ ≈ 2√h, ‖a−b‖₁ ≈ 2h —
-          // order-preserving per metric, so the ranking is unchanged;
-          // only the served value and the threshold space change.
-          val (served, servedLb) =
-            if (spec.kind == "binary") {
-              import graft.model._
-              vc.metric match {
-                case Dot | Cosine =>
-                  ((lit(vc.dim.toDouble) - lit(2.0) * approxScore), true)
-                case Euclid => (lit(2.0) * sqrt(approxScore), false)
-                case Manhattan => (lit(2.0) * approxScore, false)
-              }
-            } else if (spec.kind == "product" && !vc.metric.largerBetter)
-              // ADC partials for Euclid/Manhattan are NEGATED distances —
-              // serve the (approximate) distance, smaller-better
-              (-approxScore, false)
-            else (approxScore, approxLargerBetter)
-          graft.ops.Search.scoredTopK(df, config.idCol, served,
-            servedLb, pred, k, offset, scoreThreshold)
-        }
-        else {
-          val approxK = math.max(k + offset, ((k + offset) * oversampling).toInt)
-          val approx = graft.ops.Search.scoredTopK(df, config.idCol,
-            approxScore, approxLargerBetter, pred, k = approxK)
-          // rescore candidates live inside the probed cells by construction
-          // — prune the second scan to the same partitions (without this
-          // the rescore semi-join re-lists and re-reads EVERY cell)
-          val rescanBase = annPred.fold(df)(df.filter)
-          val cands = rescanBase.join(
-            approx.select(config.idCol), Seq(config.idCol), "left_semi")
-          graft.ops.Search.scoredTopK(cands, config.idCol, score,
-            vc.metric.largerBetter, None, k, offset, scoreThreshold)
-        }
-      case _ =>
-        graft.ops.Search.scoredTopK(df, config.idCol, score, vc.metric.largerBetter,
-          pred, k, offset, scoreThreshold)
-    }
+    executeDag(PointQuery.Query(PointQuery.Nearest(
+      PointQuery.Space(config.vectorCol(vectorName), vc.metric, vc.datatype),
+      PointQuery.DenseVector(query)),
+      filter = filter, limit = k, offset = offset, scoreThreshold = scoreThreshold,
+      params = Some(PointQuery.SearchParams(exact = exact, quantIgnore = !quantized,
+        rescore = rescore, oversampling = Some(oversampling), hnswEf = nprobe))))
   }
 
   /** The IVF cells a nearest search probes on a declared-IVF vector: the
@@ -1078,9 +1022,9 @@ final class Collection(
     * collection's declared schema and execute it. Spaces come from the
     * config (dense named/unnamed + sparse + shard-key column), by-id
     * vector inputs resolve against the `using` space ([[bulkResolve]]),
-    * and wire `SearchParams` route a plain Nearest root through the
-    * quantization-aware two-phase search; every other shape runs through
-    * the generic DAG executor over the stored table. */
+    * and the DAG executor runs it over the stored table, every dense
+    * Nearest node searching through the declared indexes its own
+    * `SearchParams` select ([[withIndexes]]). */
   def query(json: String): DataFrame = query(json, None)
 
   /** [[query]] with `lookup_from` ids resolved against the sibling
@@ -1088,7 +1032,7 @@ final class Collection(
     * by a host that owns a table catalog ([[Catalog.query]]). */
   def query(json: String, siblings: Option[String => Collection]): DataFrame = {
     val q = bulkResolve(siblings)(graft.api.RequestCodec.parseQueryRequest(json, _))
-    enrich(executeParsed(admitted(q)), org.json4s.jackson.JsonMethods.parse(json))
+    enrich(executeDag(admitted(q)), org.json4s.jackson.JsonMethods.parse(json))
   }
 
   /** A request's `with_payload` asks for payload (the query API default
@@ -1154,31 +1098,12 @@ final class Collection(
     q
   }
 
-  /** Execute an [[admitted]] request: a Nearest root on a quantized or
-    * IVF vector takes [[knn]], everything else [[executeDag]]. */
-  private def executeParsed(q: graft.ops.PointQuery.Query): DataFrame = {
-    import graft.ops.PointQuery
-    (q.scoring, q.prefetches) match {
-      case (PointQuery.Nearest(space, PointQuery.DenseVector(qv)), Nil)
-          if config.vectors.exists(vc =>
-            config.vectorCol(vc.name) == space.col &&
-              (vc.quantization.isDefined || vc.ann.isDefined)) =>
-        val sp = q.params.getOrElse(PointQuery.SearchParams())
-        knn(vectorName(space.col), qv, q.filter, q.limit, q.offset, q.scoreThreshold,
-          quantized = !(sp.exact || sp.quantIgnore),
-          oversampling = sp.oversampling.getOrElse(3.0),
-          rescore = sp.rescore,
-          exact = sp.exact,
-          nprobe = sp.hnswEf)
-      case _ => executeDag(q)
-    }
-  }
-
   /** The DAG executor over the stored table, every vector scored in its
     * storage width ([[graft.ops.PointQuery.similarity]]). */
   private def executeDag(q: graft.ops.PointQuery.Query): DataFrame = {
     val df = read()
-    graft.ops.PointQuery.execute(spark, df, config.idCol, resolver(df), idfWeighted(q))
+    graft.ops.PointQuery.execute(spark, df, config.idCol, resolver(df),
+      withIndexes(idfWeighted(q), df.columns))
   }
 
   /** `q` with the IDF modifier folded into its query-side weights. The
@@ -1204,6 +1129,38 @@ final class Collection(
       case other => other
     }
     q.copy(scoring = scoring, prefetches = q.prefetches.map(idfWeighted))
+  }
+
+  /** `q` with every dense Nearest node without prefetches, root or
+    * prefetch leaf, given the declared index data it searches through,
+    * from its own `params` (the reference plans each prefetch as a full
+    * search with its own `SearchParams`, `planned_query.rs:306-340`): its
+    * probed IVF cells ([[probedCells]]; none when `exact`) and the approx
+    * phase of its declared quantization ([[graft.index.Quantization.approx]];
+    * none when `exact` or `quantization.ignore`). A vector that declares
+    * neither reads no sidecar. `columns` are the stored table's. */
+  private def withIndexes(q: graft.ops.PointQuery.Query,
+      columns: Seq[String]): graft.ops.PointQuery.Query = {
+    import graft.ops.PointQuery
+    val indexed = (q.scoring, q.prefetches) match {
+      case (PointQuery.Nearest(space, PointQuery.DenseVector(x)), Nil) =>
+        config.vectors.find(vc => config.vectorCol(vc.name) == space.col)
+          .fold(q) { vc =>
+            val sp = q.params.getOrElse(PointQuery.SearchParams())
+            val qc = config.quantCol(vc.name)
+            q.copy(
+              cells = probedCells(vc.name, x, sp.exact, sp.hnswEf)
+                .map(graft.ops.Search.Cells(config.cellCol(vc.name), _)),
+              approx = (if (sp.exact || sp.quantIgnore || !columns.contains(qc)) None
+                else vc.quantization)
+                .map(spec => graft.index.Quantization.approx(spec,
+                  quantParams.getOrElse(vc.name, throw new IllegalStateException(
+                    s"quantization declared for '${vc.name}' but no fitted params at ${quantSidecar.path}")),
+                  col(qc), x, vc.metric, sp.oversampling.getOrElse(3.0), sp.rescore)))
+          }
+      case _ => q
+    }
+    indexed.copy(prefetches = indexed.prefetches.map(withIndexes(_, columns)))
   }
 
   /** Legacy `POST /collections/{c}/points/search` (`SearchRequest`,
@@ -1330,7 +1287,7 @@ final class Collection(
     val grouped = groups.flatMap(_._2.map(_._1)).toSet
     // a single search's rows arrive in rank order; the id keeps that order
     val singles = qs.indices.filterNot(grouped).map(req =>
-      req -> enrich(executeParsed(qs(req)), wire(req))
+      req -> enrich(executeDag(qs(req)), wire(req))
         .withColumn("req", lit(req))
         .withColumn("_rank", monotonically_increasing_id()))
     val shared = groups.map { case (key, members) =>
@@ -2960,35 +2917,6 @@ object Collection {
       }
       case ("product", pq: PqQP) =>
         Quantization.encodePq(v, pq.toParams)
-      case (k, p) =>
-        throw new IllegalArgumentException(s"quantization kind/params mismatch: $k / $p")
-    }
-  }
-
-  /** (approx score column, largerBetter) on the quantized column. */
-  private[storage] def quantApproxScore(
-      spec: graft.sources.QuantizationSpec, qp: QuantParams,
-      qcol: Column, query: Seq[Double], metric: graft.model.Metric): (Column, Boolean) = {
-    import graft.index.Quantization
-    (spec.kind, qp) match {
-      case ("scalar", ScalarQP(mn, mx)) =>
-        (Quantization.scalarScore(metric, qcol, query,
-          Quantization.ScalarParams(mn, mx)), metric.largerBetter)
-      case ("binary", BinaryQP(mean, std)) =>
-        val words = spec.encoding match {
-          case "one_bit" => Quantization.binaryQueryLiteral(query)
-          case "two_bits" => Quantization.binary2QueryLiteral(query,
-            Quantization.BinaryStats(mean.toArray, std.toArray))
-          case "one_and_half_bits" => Quantization.binary15QueryLiteral(query,
-            Quantization.BinaryStats(mean.toArray, std.toArray))
-          case other =>
-            throw new IllegalArgumentException(s"unknown binary encoding '$other'")
-        }
-        (Quantization.hammingScore(qcol, words).cast("double"), false)
-      case ("product", pq: PqQP) =>
-        // ADC partials are dot (larger-better) or −distance for
-        // Euclid/Manhattan (`PqParams.lut`) — larger-better either way
-        (Quantization.pqAdcScore(qcol, query, metric, pq.toParams), true)
       case (k, p) =>
         throw new IllegalArgumentException(s"quantization kind/params mismatch: $k / $p")
     }

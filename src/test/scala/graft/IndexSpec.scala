@@ -14,6 +14,9 @@ class IndexSpec extends SparkTestBase {
   private lazy val emb = Tables.load(spark, sf, "embeddings")
   private lazy val q7 = Tables.embeddingOf(spark, sf, 7L)
 
+  private def score(metric: Metric): org.apache.spark.sql.Column =
+    Search.scoreExpr(metric, col("embedding"), typedLit(q7))
+
   private def exactTop(k: Int): Seq[Long] =
     Search.knn(emb, "vec_id", "embedding", q7, Dot, k = k)
       .collect().map(_.getLong(0)).toSeq
@@ -21,8 +24,9 @@ class IndexSpec extends SparkTestBase {
   test("IVF with all probes equals exact search") {
     val model = IvfIndex.build(emb, "embedding", k = 8)
     val assigned = IvfIndex.assign(emb, "embedding", model)
-    val got = IvfIndex.search(assigned, "vec_id", "embedding", model, q7,
-      Dot, nprobe = model.k, k = 10).collect().map(_.getLong(0)).toSeq
+    val got = Search.nearest(assigned, "vec_id", score(Dot), Dot.largerBetter,
+      cells = Some(Search.Cells("centroid_id", model.probe(q7, model.k))), k = 10)
+      .collect().map(_.getLong(0)).toSeq
     assert(got == exactTop(10))
   }
 
@@ -31,16 +35,19 @@ class IndexSpec extends SparkTestBase {
     val assigned = IvfIndex.assign(emb, "embedding", model).cache()
     val probed = model.probe(q7, 2)
     assert(probed.length == 2)
-    val got = IvfIndex.search(assigned, "vec_id", "embedding", model, q7,
-      Dot, nprobe = 2, k = 10).collect().map(_.getLong(0)).toSet
+    val got = Search.nearest(assigned, "vec_id", score(Dot), Dot.largerBetter,
+      cells = Some(Search.Cells("centroid_id", probed)), k = 10)
+      .collect().map(_.getLong(0)).toSet
     assert(got.intersect(exactTop(10).toSet).size >= 5)
   }
 
   test("scalar quantization rescore recovers exact top-k at high oversampling") {
     val p = Quantization.fitScalar(emb, "embedding")
     val enc = emb.withColumn("qvec", Quantization.encodeScalar(col("embedding"), p))
-    val got = Quantization.searchScalarRescore(enc, "vec_id", "embedding", q7,
-      Dot, p, k = 10, oversampling = 10.0).collect().map(_.getLong(0)).toSeq
+    val got = Search.nearest(enc, "vec_id", score(Dot), Dot.largerBetter,
+      approx = Some(Search.Approx(Quantization.scalarScore(Dot, col("qvec"), q7, p),
+        Dot.largerBetter, oversampling = 10.0)), k = 10)
+      .collect().map(_.getLong(0)).toSeq
     assert(got == exactTop(10))
   }
 
@@ -101,8 +108,11 @@ class IndexSpec extends SparkTestBase {
 
   test("binary quantization rescore has nonzero overlap with exact") {
     val enc = emb.withColumn("bvec", Quantization.encodeBinary(col("embedding"), 64))
-    val got = Quantization.searchBinaryRescore(enc, "vec_id", "embedding", q7,
-      Cosine, k = 10, oversampling = 8.0).collect().map(_.getLong(0)).toSet
+    val got = Search.nearest(enc, "vec_id", score(Cosine), Cosine.largerBetter,
+      approx = Some(Search.Approx(Quantization.hammingScore(col("bvec"),
+        Quantization.binaryQueryLiteral(q7)).cast("double"), largerBetter = false,
+        oversampling = 8.0)), k = 10)
+      .collect().map(_.getLong(0)).toSet
     val exact = Search.knn(emb, "vec_id", "embedding", q7, Cosine, k = 10)
       .collect().map(_.getLong(0)).toSet
     assert(got.intersect(exact).nonEmpty)
@@ -115,8 +125,10 @@ class IndexSpec extends SparkTestBase {
     // codes: one byte per subspace, values < 2^nbits
     val code = enc.select("pqcode").head().getAs[Array[Byte]](0)
     assert(code.length == 16 && code.forall(b => (b & 0xff) < 16))
-    val got = Quantization.searchPqRescore(enc, "vec_id", "embedding", q7,
-      Dot, p, k = 10, oversampling = 8.0).collect().map(_.getLong(0)).toSeq
+    val got = Search.nearest(enc, "vec_id", score(Dot), Dot.largerBetter,
+      approx = Some(Search.Approx(Quantization.pqAdcScore(col("pqcode"), q7, Dot, p),
+        largerBetter = true, oversampling = 8.0)), k = 10)
+      .collect().map(_.getLong(0)).toSeq
     assert(got.toSet.intersect(exactTop(10).toSet).size >= 7,
       s"PQ recall too low: $got vs ${exactTop(10)}")
     // rescored scores are exact: the returned ordering must be the exact

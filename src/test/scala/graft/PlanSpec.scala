@@ -66,9 +66,10 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("multivec recommend is one scan + TakeOrdered with the exclusion pushed") {
-    // the wire RecommendMulti root (by-id example → excluded) must keep the
-    // dense plan shape: MaxSim per example is a codegen'd projection, the
-    // injected must_not HasId reaches the scan, and no exchange appears
+    // a wire Recommend root on a multivector space (by-id example →
+    // excluded) must keep the dense plan shape: MaxSim per example is a
+    // codegen'd projection, the injected must_not HasId reaches the scan,
+    // and no exchange appears
     import graft.api.RequestCodec
     import graft.api.RequestCodec.{Ctx, VectorSpace}
     import graft.ops.PointQuery
@@ -257,14 +258,16 @@ class PlanSpec extends SparkTestBase {
     graft.index.IvfIndex.writePartitioned(assigned, path)
     val indexed = spark.read.parquet(path)
     val q = Tables.embeddingOf(spark, sf, 7L)
-    val probed = graft.index.IvfIndex.search(indexed, "vec_id", "embedding",
-      model, q, Dot, nprobe = 1, k = 5)
+    val score = Search.scoreExpr(Dot, col("embedding"), typedLit(q))
+    val cells = Some(Search.Cells("centroid_id", model.probe(q, 1)))
+    val probed = Search.nearest(indexed, "vec_id", score, Dot.largerBetter,
+      cells = cells, k = 5)
     val p = plan(probed)
     assert(p.contains("PartitionFilters: [") && p.contains("centroid_id"),
       "probe filter did not become a partition filter:\n" + p.takeRight(900))
     // results equal the in-memory filter path
-    val expect = graft.index.IvfIndex.search(assigned, "vec_id", "embedding",
-      model, q, Dot, nprobe = 1, k = 5).collect().map(_.getLong(0)).toSeq
+    val expect = Search.nearest(assigned, "vec_id", score, Dot.largerBetter,
+      cells = cells, k = 5).collect().map(_.getLong(0)).toSeq
     assert(probed.collect().map(_.getLong(0)).toSeq == expect)
   }
 

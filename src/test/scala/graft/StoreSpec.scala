@@ -1877,4 +1877,56 @@ class StoreSpec extends SparkTestBase {
     groupsEqualFlat(sparse,
       """"query": {"indices": [0], "values": [1.0]}, "using": "txt"""")
   }
+
+  test("a dense prefetch leaf searches with its own params like knn (IVF + PQ)") {
+    import graft.sources.{IvfSpec, QuantizationSpec}
+    val sf = "/root/testdata/sf0.001"
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "vec_id", vectors = Seq(VectorConfig("", 64, Dot,
+        quantization = Some(QuantizationSpec("product")),
+        ann = Some(IvfSpec(cells = 8, nprobe = 3))))),
+      Tables.load(spark, sf, "embeddings")
+        .select(col("vec_id"), col("embedding").as("vector")))
+    val q = Tables.embeddingOf(spark, sf, 7L)
+    val qj = q.mkString("[", ",", "]")
+    // wire `params` → the knn knobs they map to
+    val cases = Seq(
+      """{"hnsw_ef": 1}""" -> c.knn("", q, nprobe = Some(1)),
+      """{"exact": true}""" -> c.knn("", q, exact = true),
+      "{}" -> c.knn("", q),
+      """{"quantization": {"rescore": false}}""" -> c.knn("", q, rescore = false),
+      """{"quantization": {"oversampling": 1.5}}""" -> c.knn("", q, oversampling = 1.5),
+      """{"hnsw_ef": 8, "quantization": {"ignore": true}}""" ->
+        c.knn("", q, nprobe = Some(8), quantized = false))
+    for ((params, knn) <- cases) {
+      val want = ranked(knn)
+      val root = ranked(c.query(s"""{"query": $qj, "limit": 10, "params": $params}"""))
+      assert(root == want, s"root $params: $root vs knn $want")
+      val fused = c.query(
+        s"""{"prefetch": [{"query": $qj, "limit": 10, "params": $params}],
+           |  "query": {"fusion": "rrf"}, "limit": 10}""".stripMargin)
+        .collect().map(_.getLong(0)).toSeq
+      assert(fused == want.map(_._1), s"RRF leaf $params: $fused vs knn ${want.map(_._1)}")
+    }
+  }
+
+  test("a prefetch leaf with quantization.rescore = false ranks and scores like knn") {
+    import spark.implicits._
+    val c = Collection.create(spark, tmpDir(),
+      CollectionConfig(idCol = "id", vectors = Seq(VectorConfig("", 4, Dot,
+        quantization = Some(graft.sources.QuantizationSpec("scalar"))))),
+      (1L to 40L).map(i =>
+        (i, Seq.tabulate(4)(d => math.sin(i * 0.37 + d * 1.3).toFloat)))
+        .toDF("id", "vector"))
+    val q = Seq(0.3, -0.2, 0.9, 0.1)
+    val knn = ranked(c.knn("", q, k = 5, rescore = false))
+    // the served int8 scores are not the exact ones
+    assert(knn != ranked(c.knn("", q, k = 5, quantized = false)))
+    // a formula parent serves each candidate's leaf score
+    val leaf = ranked(c.query(
+      s"""{"prefetch": [{"query": ${q.mkString("[", ",", "]")}, "limit": 5,
+         |  "params": {"quantization": {"rescore": false}}}],
+         |  "query": {"formula": "$$score"}, "limit": 5}""".stripMargin))
+    assert(leaf == knn, s"leaf $leaf vs knn $knn")
+  }
 }

@@ -10,8 +10,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * time per kind. The first measured request of every kind also writes its
   * formatted plan, with the collection path replaced by `<collection>`.
   *
-  * Args: `<outdir> <tag>`; writes `<kind>_<tag>.txt` and `cpu_<tag>.txt`
-  * into `<outdir>` and the collection under `<outdir>/collection_<tag>`.
+  * It then writes the formatted plans of `Collection.knn` and of the
+  * equivalent wire nearest root on a Uint8, an IVF and an IVF+PQ collection
+  * of 4,000 synthetic points.
+  *
+  * Args: `<outdir> <tag>`; writes `<kind>_<tag>.txt`, `cpu_<tag>.txt` and
+  * `{knn,root}_{u8,ivf,ivfpq}_<tag>.txt` into `<outdir>` and the
+  * collections under `<outdir>/collection_*<tag>`.
   * Run by `run.sh`. */
 object PlanCap {
   def main(args: Array[String]): Unit = {
@@ -50,6 +55,30 @@ object PlanCap {
       val cs = runs.map(_._1).sorted; val ws = runs.map(_._2).sorted
       f"$k%-20s task_cpu_ms median ${cs(cs.length / 2)}%.0f (min ${cs.head}%.0f max ${cs.last}%.0f)" +
         f" wall_ms median ${ws(ws.length / 2)}%.0f"
+    }
+    // knn and the equivalent wire root on a Uint8, an IVF and an IVF+PQ
+    // collection (4,000 synthetic points, dim 32)
+    import graft.sources.{CollectionConfig, IvfSpec, QuantizationSpec, VectorConfig}
+    import graft.model.{Dot, Uint8}
+    val dim = 32
+    val pts = spark.createDataFrame((0L until 4000L).map(i =>
+      (i, Seq.tabulate(dim)(d => ((i * 31 + d * 17) % 256).toFloat)))).toDF("id", "vector")
+    val q = Seq.tabulate(dim)(d => 128.0 + 100.0 * math.cos(d * 0.7))
+    val ivf = Some(IvfSpec(cells = 8, nprobe = 2))
+    for ((name, vc) <- Seq(
+        "u8" -> VectorConfig("", dim, Dot, datatype = Uint8),
+        "ivf" -> VectorConfig("", dim, Dot, ann = ivf),
+        "ivfpq" -> VectorConfig("", dim, Dot, ann = ivf,
+          quantization = Some(QuantizationSpec("product"))))) {
+      val cpath = new java.io.File(out, s"collection_${name}_$tag").getAbsolutePath
+      val c = graft.storage.Collection.create(spark, cpath,
+        CollectionConfig(vectors = Seq(vc)), pts)
+      for ((how, df) <- Seq("knn" -> c.knn("", q, k = 10),
+          "root" -> c.query(s"""{"query": ${q.mkString("[", ",", "]")}, "limit": 10}"""))) {
+        df.collect()
+        write(s"${how}_${name}_$tag.txt", df.queryExecution
+          .explainString(ExplainMode.fromString("formatted")).replace(cpath, "<collection>"))
+      }
     }
     val txt = rows.mkString("\n")
     println(txt)
